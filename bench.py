@@ -1,7 +1,7 @@
 """Headline benchmark — one JSON line for the driver (BENCH_r{N}.json).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/
-sf0.1) on local[$SPARK_GRAFT_CPUS] and prints:
+sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the usable cores) and prints:
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": ...}
 
@@ -178,11 +178,9 @@ EXTENDED = [
     "text_js_divergence_sources",
     "sample_downweight_duplicates",
     # round-10 tier (incl. the artifact-serving closure consumers)
-    "dedup_cluster_canonical",
     "dedup_cluster_size_profile",
     "sample_effective_size",
     "corpus_dedup_savings",
-    "corpus_cross_source_dup",
     "ts_periodogram_fixed",
     "ts_event_gaps",
     "stats_welch_ttest",

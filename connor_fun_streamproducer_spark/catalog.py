@@ -18,10 +18,13 @@ import hashlib
 import os
 import shutil
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # The driver's canonical tables (TESTDATA.md / FIXTURES.md §B).
 TABLES: tuple[str, ...] = (
@@ -133,6 +136,33 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for SQL-form operators."""
     for name in TABLES:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def literal_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: T.StructType | str
+) -> DataFrame:
+    """A small driver-built table, planned as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(<python list>, schema)`` plans as ``Scan
+    ExistingRDD`` over pickled rows sliced across the default
+    parallelism: every action that reads it runs a job to deserialize
+    them, and a broadcast of it re-runs that job in every micro-batch of
+    a stream-static join. Rows handed over as one Arrow table become a
+    ``LocalRelation`` instead: the optimizer folds projections and
+    filters into it, and a broadcast of it collects on the driver with no
+    job. ``schema`` (a StructType or DDL string) is kept exactly — names,
+    types and nullability — also for zero rows. Rows are positional
+    tuples in schema order.
+    """
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 # (min epoch, max epoch) of events.ts per fixture state — the "era span

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from connor_fun_streamproducer_spark.catalog import dim_window, load
+from connor_fun_streamproducer_spark.catalog import dim_window, literal_frame, load
 from connor_fun_streamproducer_spark.registry import op
 
 EMB_DIM = 64  # fixture embedding width (TESTDATA.md)
@@ -611,8 +611,8 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             if pending == 3:
                 cur = cur.localCheckpoint()
                 pending = 0
-    return spark.createDataFrame(
-        picked, "sel_round bigint, vec_id bigint, dist2 bigint"
+    return literal_frame(
+        spark, picked, "sel_round bigint, vec_id bigint, dist2 bigint"
     )
 
 

@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from connor_fun_streamproducer_spark.catalog import load
+from connor_fun_streamproducer_spark.catalog import literal_frame, load
 from connor_fun_streamproducer_spark.registry import op
 
 K = 5
@@ -516,8 +516,8 @@ def _exact_topk_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "neighbor_id")
             .collect()
         ]
-    return spark.createDataFrame(
-        _EXACT_TOPK_CACHE[fp], "query_id bigint, neighbor_id bigint"
+    return literal_frame(
+        spark, _EXACT_TOPK_CACHE[fp], "query_id bigint, neighbor_id bigint"
     ).withColumn("hit", F.lit(True))
 
 
@@ -589,7 +589,7 @@ def _routed_query_frame(
 ) -> tuple[DataFrame, list[int]]:
     """The routed query set as a broadcast-ready literal DataFrame plus
     its probed-cell list, cached per (session, corpus fingerprint): the
-    10·n_probe-row createDataFrame pickle is a pure function of both keys
+    10·n_probe-row literal frame is a pure function of both keys
     and cost a py4j round-trip storm on EVERY serving call (VERDICT r14
     #1). ``q_emb`` is declared ARRAY<DOUBLE>: the Python floats are exact
     float32 values read from the fixture, so this equals the old
@@ -600,9 +600,10 @@ def _routed_query_frame(
     hit = per_session.get(fp)
     if hit is None:
         probes = _routed_queries(spark, sf_dir)
-        q = spark.createDataFrame(
+        q = literal_frame(
+            spark,
             probes,
-            schema="query_id bigint, cell int, q_emb array<double>, q_norm double",
+            "query_id bigint, cell int, q_emb array<double>, q_norm double",
         )
         hit = (q, sorted({cell for _, cell, _, _ in probes}))
         per_session[fp] = hit
@@ -1269,9 +1270,10 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 row.append(acc)
             tables.append(row)
         q_data.append((int(r["vec_id"]), *tables, _fold_norm(qv)))
-    q_df = spark.createDataFrame(
+    q_df = literal_frame(
+        spark,
         q_data,
-        schema="query_id bigint, "
+        "query_id bigint, "
         + ", ".join(f"t{m} array<double>" for m in range(PQ_M))
         + ", q_norm double",
     )

@@ -21,6 +21,7 @@ from pyspark.sql.window import Window
 from connor_fun_streamproducer_spark.catalog import (
     bounded_series,
     epoch_div,
+    literal_frame,
     load,
     register_views,
 )
@@ -800,8 +801,8 @@ def agg_quantiles_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         cuts_key=rank_cuts_key(sf_dir, "orders", "pricecents"),
     )
     n = ranked.agg(F.count("*").alias("n"))
-    pcts = c.sparkSession.createDataFrame(
-        [(p,) for p in _QDIST_PCTS], "pct int"
+    pcts = literal_frame(
+        c.sparkSession, [(p,) for p in _QDIST_PCTS], "pct int"
     )
     sel = (
         ranked.crossJoin(F.broadcast(n))

@@ -23,6 +23,7 @@ from connor_fun_streamproducer_spark.catalog import (
     dim_window,
     epoch_seconds,
     fixture_fingerprint,
+    literal_frame,
     load,
     materialize_once,
     table_path,
@@ -220,8 +221,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge_rows = e.collect()  # ≤ |types|² rows
     node_rows = sorted(r["node"] for r in nodes_df.collect())
 
-    nodes = spark.createDataFrame([(n,) for n in node_rows], "node string")
-    local_e = spark.createDataFrame(
+    nodes = literal_frame(spark, [(n,) for n in node_rows], "node string")
+    local_e = literal_frame(
+        spark,
         [(r["src"], r["dst"], r["p"]) for r in edge_rows], "src string, dst string, p double"
     )
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
@@ -1918,7 +1920,8 @@ def graph_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]  # 1-row probe: club size literal
     n, k = int(nn["n"]), max(2, int(nn["k0"]))
     if n < 2:  # degenerate graph: densities undefined (oracle: WHERE n >= 2)
-        return spark.createDataFrame(
+        return literal_frame(
+            spark,
             [],
             "n_nodes bigint, club_size bigint, club_edges bigint,"
             " club_density double, graph_density double",

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from connor_fun_streamproducer_spark.catalog import epoch_div, epoch_seconds, load
+from connor_fun_streamproducer_spark.catalog import epoch_div, epoch_seconds, literal_frame, load
 from connor_fun_streamproducer_spark.registry import op
 
 
@@ -142,7 +142,7 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale path is bucketizing the range key into an equi-join key.
     """
     o = load(spark, sf_dir, "orders")
-    tiers = spark.createDataFrame(_TIERS, schema="tier string, lo double, hi double")
+    tiers = literal_frame(spark, _TIERS, "tier string, lo double, hi double")
     cond = (F.col("o_totalprice") >= F.col("lo")) & (F.col("o_totalprice") <= F.col("hi"))
     return (
         o.join(F.broadcast(tiers), cond)

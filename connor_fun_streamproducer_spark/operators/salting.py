@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from connor_fun_streamproducer_spark.catalog import load
+from connor_fun_streamproducer_spark.catalog import literal_frame, load
 from connor_fun_streamproducer_spark.registry import op
 
 @op(
@@ -47,7 +47,8 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     SALTS = 8
     ev = load(spark, sf_dir, "events")
-    dim = spark.createDataFrame(
+    dim = literal_frame(
+        spark,
         [("click", 1.0), ("view", 0.1), ("purchase", 10.0), ("signup", 5.0), ("error", 0.0)],
         "event_type string, weight double",
     )

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from connor_fun_streamproducer_spark.catalog import load
+from connor_fun_streamproducer_spark.catalog import literal_frame, load
 from connor_fun_streamproducer_spark.registry import op
 
 # KLL accuracy knob: k=200 gives ~1.65% normalized rank error (published
@@ -422,8 +422,8 @@ def agg_count_min(spark: SparkSession, sf_dir: str, with_exact: bool = True) -> 
         .groupBy("d", "c")
         .agg(F.count("*").alias("n"))
     )
-    probe_keys = spark.createDataFrame(
-        [(int(k),) for k in CMS_PROBES], "l_partkey bigint"
+    probe_keys = literal_frame(
+        spark, [(int(k),) for k in CMS_PROBES], "l_partkey bigint"
     )
     probes = probe_keys.select(
         "l_partkey", F.explode(depths).alias("d")

@@ -17,9 +17,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle partitions: match local core count; on a real cluster this would be
-# ~2-3x total executor cores (and AQE coalesces the excess at runtime).
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Shuffle partitions: match local core count (the cores this process may
+# run on, unless SPARK_GRAFT_CPUS says otherwise); on a real cluster this
+# would be ~2-3x total executor cores (and AQE coalesces the excess at
+# runtime).
+_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "connor_fun_spark", cpus: str | None = None) -> SparkSession:

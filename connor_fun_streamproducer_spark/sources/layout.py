@@ -21,7 +21,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from connor_fun_streamproducer_spark.catalog import load
+from connor_fun_streamproducer_spark.catalog import literal_frame, load
 from connor_fun_streamproducer_spark.registry import op
 
 PRUNE_KEY = "click"
@@ -956,7 +956,7 @@ def bloom_candidate_files(spark: SparkSession, root: str, probes: list[int]) -> 
     the driver; no false negatives are possible (same xxhash64 on both
     sides), false positives only cost an extra file read."""
     need = (
-        spark.createDataFrame([(k,) for k in probes], "k bigint")
+        literal_frame(spark, [(k,) for k in probes], "k bigint")
         .select(
             "k",
             F.explode(
@@ -1026,8 +1026,8 @@ def sink_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep, _total = bloom_candidate_files(spark, root, _BLOOM_PROBES)
     probes_lit = [F.lit(p) for p in _BLOOM_PROBES]
     if not keep:  # absent-only probe sets prune everything
-        return spark.createDataFrame(
-            [], "l_orderkey bigint, n_items bigint, revenue_cents bigint"
+        return literal_frame(
+            spark, [], "l_orderkey bigint, n_items bigint, revenue_cents bigint"
         )
     return (
         spark.read.parquet(*keep)

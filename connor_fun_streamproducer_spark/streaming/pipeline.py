@@ -26,6 +26,12 @@ event side. At 100 TB of events the plan stays shuffle-free up to the
 windowed count, which aggregates partially map-side before one exchange on
 (window, region) — the same "partial counts per source, merge in monitor"
 structure the reference hand-rolled with atomics.
+
+The locations dim is a local relation (``catalog.literal_frame``), not a
+parallelized RDD: a stream-static join re-plans and re-broadcasts its
+static side in every micro-batch, so an RDD-backed dim would cost one
+Spark job per trigger whatever the batch size. A local relation
+broadcasts from the driver with no job.
 """
 
 from __future__ import annotations
@@ -34,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from connor_fun_streamproducer_spark.catalog import load
+from connor_fun_streamproducer_spark.catalog import literal_frame, load
 from connor_fun_streamproducer_spark.registry import op
 
 # The reference's region dim (locations.json:1-23), embedded as the same
@@ -76,8 +82,12 @@ _LAT_EXPR = "25 + (event_id * 13) % 25"
 
 
 def locations_df(spark: SparkSession) -> DataFrame:
-    """The static region dimension (src_config_scan's output shape)."""
-    return spark.createDataFrame(REGION_BOXES, schema=LOCATIONS_SCHEMA)
+    """The static region dimension (src_config_scan's output shape).
+
+    Planned as a ``LocalTableScan``: ``enrich`` broadcasts it in every
+    micro-batch of a stream, and a local relation broadcasts without a
+    Spark job (``catalog.literal_frame``)."""
+    return literal_frame(spark, REGION_BOXES, LOCATIONS_SCHEMA)
 
 
 def with_coords(events: DataFrame) -> DataFrame:
@@ -164,9 +174,10 @@ def enrich_region_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cx in range(math.floor(lo / GRID), math.floor(hi / GRID) + 1):
             for cy in range(math.floor(south / GRID), math.floor(north / GRID) + 1):
                 cover.append((cx, cy, rid, north, east, south, west))
-    cells = spark.createDataFrame(
+    cells = literal_frame(
+        spark,
         cover,
-        schema="cx int, cy int, region_id string, north double, east double, "
+        "cx int, cy int, region_id string, north double, east double, "
         "south double, west double",
     )
     events = with_coords(load(spark, sf_dir, "events")).withColumns(

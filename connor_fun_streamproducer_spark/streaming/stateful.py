@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from connor_fun_streamproducer_spark.catalog import load
+from connor_fun_streamproducer_spark.catalog import literal_frame, load
 from connor_fun_streamproducer_spark.registry import op
 
 _OUTPUT_SCHEMA = T.StructType(
@@ -293,7 +293,8 @@ def rate_stagger(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
         q.awaitTermination()
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         [(len(seen), sum(n for _, n in seen))], "n_batches bigint, n_rows bigint"
     )
 

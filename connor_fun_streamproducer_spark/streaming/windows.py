@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from connor_fun_streamproducer_spark.catalog import literal_frame
 from connor_fun_streamproducer_spark.registry import op
 from connor_fun_streamproducer_spark.sources.streams import events_stream, run_to_memory
 
@@ -406,8 +407,8 @@ def stream_health_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         (qid, st.progress_count, st.total_rows, st.stalled)
         for qid, st in mon.state.items()
     ]
-    return spark.createDataFrame(
-        rows, schema="query_id string, n_progress long, rows_seen long, stalled boolean"
+    return literal_frame(
+        spark, rows, "query_id string, n_progress long, rows_seen long, stalled boolean"
     )
 
 

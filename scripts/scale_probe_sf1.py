@@ -197,7 +197,7 @@ def timed(fn, spark, sf_dir) -> tuple[float, int]:
 
 
 def main() -> None:
-    spark = get_spark("sf1-probe", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("sf1-probe")  # SPARK_GRAFT_CPUS, else the usable cores
     registry._ensure_loaded()
     build_probe(spark)
 

@@ -14,6 +14,7 @@ from connor_fun_streamproducer_spark.plans.explain import (
     assert_not_in_plan,
     count_in_plan,
     formatted_plan,
+    plan_snapshot,
 )
 from tests.conftest import SF_DIR
 
@@ -186,6 +187,17 @@ def test_enrich_region_grid_is_hash_join(spark):
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_region_dim_broadcasts_a_local_relation(spark):
+    """The locations dim must broadcast straight from a LocalTableScan: an
+    RDD-backed dim (Scan ExistingRDD) costs a Spark job per broadcast,
+    i.e. per micro-batch of the stream-static enrich."""
+    for key in ("enrich_region", "agg_window_count"):
+        lines = [l.lstrip(" :+-") for l in plan_snapshot(_q(key, spark)).splitlines()]
+        built = [nxt for cur, nxt in zip(lines, lines[1:]) if cur == "BroadcastExchange"]
+        assert built == ["LocalTableScan"], (key, lines)
+        assert not any("ExistingRDD" in l for l in lines), (key, lines)
 
 
 def test_sim_search_ivf_scan_is_partition_pruned(spark):

@@ -492,3 +492,51 @@ def test_append_mode_finalizes_window_ending_exactly_at_watermark(spark, tmp_pat
     out = run_to_memory(agg, output_mode="append")
     got = {(str(r["ws"]), r["n"]) for r in out.select(F.col("w.start").alias("ws"), "n").collect()}
     assert ("2024-01-01 00:00:00", 2) in got, got
+
+
+def test_stream_static_enrich_broadcasts_local_relation(spark, scratch):
+    """Every micro-batch of the stream-static enrich re-plans its
+    broadcast of the locations dim; the dim must stay a LocalTableScan
+    there (no Spark job per trigger), and the stream must tag the same
+    rows as the batch enrich over the same files."""
+    from connor_fun_streamproducer_spark.streaming.pipeline import (
+        enrich,
+        locations_df,
+        with_coords,
+    )
+
+    src = scratch + "/src"
+    for b in range(2):
+        _write_batch(
+            spark,
+            src,
+            [Row(event_id=50 * b + i, ts=_ts("2024-01-01 10:00:00"), user_id=1) for i in range(50)],
+        )
+    sdf = (
+        spark.readStream.schema("event_id long, ts timestamp, user_id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    name = f"enrich_{uuid.uuid4().hex[:8]}"
+    q = (
+        enrich(with_coords(sdf), locations_df(spark))
+        .select("event_id", "region_id")
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", scratch + "/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert len(batches) >= 2, q.recentProgress
+        plan = q._jsq.explainInternal(False)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        static = enrich(with_coords(spark.read.parquet(src)), locations_df(spark))
+        got = sorted(tuple(r) for r in spark.table(name).collect())
+        assert got == sorted(tuple(r) for r in static.select("event_id", "region_id").collect())
+        assert got, "no event fell inside a region box"
+    finally:
+        q.stop()
+        spark.catalog.dropTempView(name)
