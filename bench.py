@@ -20,7 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from connor_fun_streamproducer_spark import registry
+from connor_fun_streamproducer_spark import catalog, registry
 from connor_fun_streamproducer_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -319,8 +319,9 @@ def _time_keys(
     label: str = "",
     reps: int = 3,
     stat: str = "median",
-) -> tuple[dict[str, float], dict[str, float]]:
-    """Per-key wall time at sf_dir: returns (stat_timings, min_timings).
+) -> tuple[dict[str, float], dict[str, float], dict[str, int]]:
+    """Per-key wall time at sf_dir: returns (stat_timings, min_timings,
+    build_jobs).
 
     ``stat="median"`` is the REPORTED number since r11 (verdict r10 #3:
     min-of-N still let one quiet-vs-throttled host window distort a round
@@ -328,16 +329,28 @@ def _time_keys(
     re-run because a single fast or slow outlier can't move it). The
     per-key min travels in the sidecar for continuity with the r1-r10
     anchors. One untimed warmup run absorbs codegen/classload when WARMUP
-    is on."""
+    is on; ``build_jobs`` holds the Spark jobs its ``fn(spark, sf_dir)``
+    submitted (construction-time jobs: schema inference, probes, artifact
+    builds), counted through a job group."""
     timings: dict[str, float] = {}
     mins: dict[str, float] = {}
+    build_jobs: dict[str, int] = {}
+    sc = spark.sparkContext
     for key in keys:
         fn = BENCH_FN.get(key, registry.OPS[key].fn)
         if WARMUP:
             # One untimed run to absorb codegen/classload costs (one-time
             # per JVM in production; this container's Janino compile is
             # pathologically slow and would otherwise dominate).
-            fn(spark, sf_dir).count()
+            group = f"bench-build:{label}{key}"
+            sc.setJobGroup(group, key)
+            try:
+                df = fn(spark, sf_dir)
+            finally:
+                sc._jsc.clearJobGroup()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            build_jobs[key] = len(sc.statusTracker().getJobIdsForGroup(group))
+            df.count()
         samples, n = [], 0
         for _ in range(reps):
             t0 = time.perf_counter()
@@ -354,10 +367,11 @@ def _time_keys(
         timings[key] = round(med if stat == "median" else samples[0], 3)
         mins[key] = round(samples[0], 3)
         print(
-            f"# {label}{key}: {timings[key]:.3f}s (min {mins[key]:.3f}) rows={n}",
+            f"# {label}{key}: {timings[key]:.3f}s (min {mins[key]:.3f}) rows={n}"
+            f" build_jobs={build_jobs.get(key, '-')}",
             file=sys.stderr,
         )
-    return timings, mins
+    return timings, mins, build_jobs
 
 
 def main() -> None:
@@ -367,6 +381,11 @@ def main() -> None:
     ext_keys = [k for k in EXTENDED if k in registry.OPS]
     # Warm the JVM + parquet footer cache with a trivial action.
     spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
+    # Infer every table's schema once, as a session does at start-up
+    # (catalog.read_parquet), so a key's build_jobs count only the jobs
+    # its own construction submits.
+    for name in catalog.TABLES:
+        catalog.load(spark, SF_DIR, name)
 
     # Headline: MEDIAN-of-5 timed runs since r11 (verdict r10 #3; min
     # travels in the sidecar for r1-r10 anchor continuity). The reps=5
@@ -374,8 +393,10 @@ def main() -> None:
     # over ~4-5 executions, so fewer reps sampled the ramp. Extended tier
     # trimmed to ONE timed run (after warmup) to keep total bench wall
     # inside the driver budget now the registry is 350+ keys.
-    timings, min_timings = _time_keys(spark, keys, SF_DIR, reps=5)
-    ext_timings, _ = _time_keys(spark, ext_keys, SF_DIR, label="ext ", reps=1)
+    timings, min_timings, build_jobs = _time_keys(spark, keys, SF_DIR, reps=5)
+    ext_timings, _, ext_build_jobs = _time_keys(
+        spark, ext_keys, SF_DIR, label="ext ", reps=1
+    )
 
     # Second-scale pass (VERDICT r5 item 3): the 2x bar measured at ONE
     # sf can hide a superlinear op forever. Re-run every query at a 10x
@@ -389,7 +410,7 @@ def main() -> None:
         if os.path.isdir(SF2_DIR) and os.path.realpath(SF2_DIR) != os.path.realpath(SF_DIR):
             # ratios are coarse (order-of-magnitude signal): min-of-2 halves the
             # pass cost without moving any conclusion
-            second, _ = _time_keys(
+            second, _, _ = _time_keys(
                 spark, keys + ext_keys, SF2_DIR, label="sf2 ", reps=2, stat="min"
             )
             big = {**timings, **ext_timings}
@@ -467,6 +488,9 @@ def main() -> None:
     # per-key MIN of the headline reps: the r1-r10 anchors reported min,
     # so the sidecar keeps both statistics comparable across rounds
     detail["headline_min_queries"] = min_timings
+    # Spark jobs each key's warmup build submitted at SF_DIR (headline and
+    # extended); a construction-time job shows up here as a non-zero.
+    detail["build_jobs"] = {**build_jobs, **ext_build_jobs}
     if stream_rows_per_sec is not None:
         detail["stream_rows_per_sec"] = stream_rows_per_sec
     if skew is not None:

@@ -2,10 +2,11 @@
 
 The reference's only "catalog" is a hard-coded path to ./locations.json
 (/root/reference/regionSpout.go:169-184: open, read-all, unmarshal, panic on
-error). Ours is a thin registry over a scale-factor directory of parquet
-tables with explicit, checked schemas — schema-on-read with verification
-instead of the reference's schema-oblivious payload handling
-(regionSpout.go:152 marshals tweets without ever reading a field).
+error), read once at start-up. Ours is a thin registry over a scale-factor
+directory of parquet tables whose schemas are read from the files, once:
+``read_parquet`` memoizes the schema Spark infers per session and per file
+identity, so the thousands of ``load()`` calls a session makes pay the
+schema-inference job once per file, not once per call.
 
 All reads go through ``spark.read.parquet`` so Catalyst gets column pruning
 and predicate pushdown for free; at 100 TB these tables would be
@@ -18,6 +19,7 @@ import hashlib
 import os
 import shutil
 import uuid
+import weakref
 from collections.abc import Callable, Sequence
 
 import pyarrow as pa
@@ -25,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+
+from connor_fun_streamproducer_spark.registry import ensure_session_confs
 
 # The driver's canonical tables (TESTDATA.md / FIXTURES.md §B).
 TABLES: tuple[str, ...] = (
@@ -42,13 +46,58 @@ TABLES: tuple[str, ...] = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# events.ts physical-encoding probe results, keyed by (path, mtime, size)
-# — see load().
-_TS_FLAVOR_CACHE: dict[tuple[str, int, int], str] = {}
+# The parquet schemas Spark inferred, per session and per file identity —
+# see read_parquet(). A WeakKeyDictionary so a stopped session's memo dies
+# with it.
+_SCHEMA_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, T.StructType]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring its schema once per session.
+
+    Without a schema, every ``spark.read.parquet`` runs a Spark job that
+    reads the footer to infer one; with the schema given, the read builds
+    its relation with no job. The first read of a file in a session infers
+    and memoizes the ``StructType``; later reads pass it back. Only the
+    schema is kept, never a DataFrame: every call builds a fresh relation
+    with fresh attribute ids, so two reads of one file still self-join.
+
+    The memo is keyed per file identity (``file_identity``: path, mtime,
+    size and a content probe), so a file rewritten under the same path —
+    say in another timestamp encoding — is inferred again. It is keyed per
+    session because the inferred schema also depends on session confs
+    that shape parquet schema inference (``nanosAsLong``,
+    ``inferTimestampNTZ.enabled``, ``binaryAsString`` and the like).
+    ``registry.ensure_session_confs`` pins the ones the fixtures depend on
+    once per session, before the first read, so within one session the
+    schema is a function of the file alone. A path that cannot be
+    stat'ed (missing, or not on the local file system) is read plainly, so
+    a missing file raises Spark's own error.
+    """
+    return _read_parquet(spark, path)[0]
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, T.StructType]:
+    """``read_parquet``, also returning the schema without a py4j call."""
+    ensure_session_confs(spark)
+    try:
+        key = file_identity(path)
+    except OSError:
+        df = spark.read.parquet(path)
+        return df, df.schema
+    memo = _SCHEMA_MEMO.setdefault(spark, {})
+    schema = memo.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = memo[key] = df.schema
+        return df, schema
+    return spark.read.schema(schema).parquet(path), schema
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -60,31 +109,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (surfacing as TIMESTAMP_NTZ). Both normalize here to microsecond
     TIMESTAMP_LTZ — identical to what DuckDB reads from the same file
     under the pinned UTC session zone, so oracle timestamps match and
-    every downstream op sees one timestamp flavor.
+    every downstream op sees one timestamp flavor. The encoding is read
+    off the memoized schema (``read_parquet``).
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    path = table_path(sf_dir, name)
-    df = spark.read.parquet(path)
-    if name == "events":
-        # The ts physical-encoding probe (df.dtypes — a schema fetch over
-        # py4j) depends only on the file bytes: cache it per fixture
-        # state so the thousands of load() calls a bench/test session
-        # makes pay it once per fixture, not once per call
-        # (OPTIMIZATION_r14 driver-side rule).
-        try:
-            st = os.stat(path)
-            key = (path, st.st_mtime_ns, st.st_size)
-        except OSError:
-            key = None
-        ts_type = _TS_FLAVOR_CACHE.get(key) if key is not None else None
-        if ts_type is None:
-            ts_type = dict(df.dtypes).get("ts") or "none"
-            if key is not None:
-                _TS_FLAVOR_CACHE[key] = ts_type
-        if ts_type == "bigint":
+    df, schema = _read_parquet(spark, table_path(sf_dir, name))
+    if name == "events" and "ts" in schema.names:
+        ts_type = schema["ts"].dataType
+        if isinstance(ts_type, T.LongType):
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif ts_type == "timestamp_ntz":
+        elif isinstance(ts_type, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ltz"))
     return df
 
@@ -145,12 +180,15 @@ def literal_frame(
 
     ``spark.createDataFrame(<python list>, schema)`` plans as ``Scan
     ExistingRDD`` over pickled rows sliced across the default
-    parallelism: every action that reads it runs a job to deserialize
-    them, and a broadcast of it re-runs that job in every micro-batch of
-    a stream-static join. Rows handed over as one Arrow table become a
-    ``LocalRelation`` instead: the optimizer folds projections and
-    filters into it, and a broadcast of it collects on the driver with no
-    job. ``schema`` (a StructType or DDL string) is kept exactly — names,
+    parallelism: every action that reads it runs a job that unpickles
+    them, one task per slice, and a broadcast of it re-runs that job in
+    every micro-batch of a stream-static join. Rows handed over as
+    one Arrow table become a ``LocalRelation`` instead, and the optimizer
+    folds projections and filters into it. A broadcast of it still runs
+    a job (``LocalTableScanExec`` does not override
+    ``executeCollectIterator``), but one over rows the driver already
+    holds: at most as many tasks as rows, with no Python workers.
+    ``schema`` (a StructType or DDL string) is kept exactly — names,
     types and nullability — also for zero rows. Rows are positional
     tuples in schema order.
     """
@@ -284,11 +322,18 @@ def bounded_series(arr: F.Column, cap: int = SERIES_CAP, what: str = "series") -
 
 
 def fixture_fingerprint(sf_dir: str, table: str) -> str:
-    """Identity of one fixture table: absolute path + mtime + size + a
-    cheap content probe (first/last 4 KiB of the file).
+    """Identity of one fixture table (``file_identity`` of its path)."""
+    return file_identity(table_path(sf_dir, table))
 
-    Keys on-disk materialized artifacts (shared-stage indexes), so a
-    fixture that changes under the same path rebuilds instead of silently
+
+def file_identity(path: str) -> str:
+    """Identity of one parquet file or Spark-written directory: absolute
+    path + mtime + size + a cheap content probe (first/last 4 KiB of the
+    file).
+
+    Keys on-disk materialized artifacts (shared-stage indexes) and
+    ``read_parquet``'s schema memo, so a fixture that changes under the
+    same path rebuilds (or is inferred again) instead of silently
     serving stale derived frames — similarity._corpus_fingerprint's rule,
     generalized to any table. The content probe (r10 ADVICE) covers the
     timestamp-preserving replace case (cp -p / rsync -a / archive extract
@@ -304,7 +349,7 @@ def fixture_fingerprint(sf_dir: str, table: str) -> str:
     never touched. Without the split, the first r11 prune draft deleted
     the other scale factor's artifact on every bench second-sf pass —
     measured as a 2× extended-tier blowup before the fix."""
-    p = os.path.abspath(table_path(sf_dir, table))
+    p = os.path.abspath(path)
     st = os.stat(p)
     h = hashlib.sha1(f"{st.st_mtime_ns}|{st.st_size}|".encode())
     if os.path.isdir(p):
@@ -386,7 +431,7 @@ def materialize_once(
             # the process-unique staging dir — it is garbage either way.
             shutil.rmtree(staging, ignore_errors=True)
         _prune_superseded(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def _strip_rev(tag_suffix: str) -> str | None:

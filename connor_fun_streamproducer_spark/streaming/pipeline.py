@@ -29,9 +29,12 @@ structure the reference hand-rolled with atomics.
 
 The locations dim is a local relation (``catalog.literal_frame``), not a
 parallelized RDD: a stream-static join re-plans and re-broadcasts its
-static side in every micro-batch, so an RDD-backed dim would cost one
-Spark job per trigger whatever the batch size. A local relation
-broadcasts from the driver with no job.
+static side in every micro-batch, so the dim's broadcast costs one Spark
+job per trigger whatever the batch size. Over a parallelized RDD that
+job unpickled the rows, one task per slice of the default parallelism;
+over a local relation it reads rows the driver already holds, in at most
+as many tasks as rows (two for the reference dim), with no Python
+workers.
 """
 
 from __future__ import annotations
@@ -85,8 +88,9 @@ def locations_df(spark: SparkSession) -> DataFrame:
     """The static region dimension (src_config_scan's output shape).
 
     Planned as a ``LocalTableScan``: ``enrich`` broadcasts it in every
-    micro-batch of a stream, and a local relation broadcasts without a
-    Spark job (``catalog.literal_frame``)."""
+    micro-batch of a stream, and the broadcast of a local relation runs
+    a job of at most as many tasks as rows, with no Python workers
+    (``catalog.literal_frame``)."""
     return literal_frame(spark, REGION_BOXES, LOCATIONS_SCHEMA)
 
 
