@@ -7,7 +7,8 @@ value-hash → CORRECTNESS_r{N}.json).
 
 All real logic lives in ``connor_fun_streamproducer_spark``; this module is
 a thin adapter over its operator registry (registry.py), which carries one
-entry per implemented op key from SURVEY.md §2.
+entry per implemented op key from SURVEY.md §2. The dicts list keys in
+registration order, which is import order and carries no meaning.
 """
 
 from __future__ import annotations

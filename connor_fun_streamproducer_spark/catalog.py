@@ -391,6 +391,20 @@ def construction_rev(*fns: Callable) -> str:
     return h.hexdigest()[:8]
 
 
+# The checkout this package lives in. Scratch output and on-disk artifacts
+# go under it (never under the read-only fixture directories), so two
+# checkouts never share a file, a layout or a streaming checkpoint.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def scratch_dir(sf_dir: str, *parts: str) -> str:
+    """``REPO_ROOT/.scratch/<sf tag>/<parts...>``, the scratch location of
+    output derived from the fixtures in ``sf_dir`` (tag = its basename,
+    e.g. ``sf0.1``)."""
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    return os.path.join(REPO_ROOT, ".scratch", tag, *parts)
+
+
 def materialize_once(
     spark: SparkSession,
     path: str,

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from connor_fun_streamproducer_spark.catalog import (
+    REPO_ROOT,
     fixture_fingerprint,
     load,
     materialize_once,
@@ -167,10 +168,7 @@ def kmeans_assignments(
 # label join) read the parquet (vec_id, cluster, dist) frame. At 100 TB the
 # assignment IS the curation table every downstream sampler joins against —
 # exactly the artifact you'd persist, not recompute.
-_KM_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".kmeans_index",
-)
+_KM_ROOT = os.path.join(REPO_ROOT, ".kmeans_index")
 
 
 def kmeans_assignment_table(spark: SparkSession, sf_dir: str) -> DataFrame:

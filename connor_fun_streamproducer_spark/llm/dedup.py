@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from connor_fun_streamproducer_spark.catalog import (
+    REPO_ROOT,
     dim_window,
     fixture_fingerprint,
     load,
@@ -1154,10 +1155,7 @@ def _minhash_banded_pipeline(d: DataFrame) -> DataFrame:
 # raw tables, which is exactly what makes the artifact contents themselves
 # externally hash-verified through their consumers.
 
-_NDI_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".neardup_index",
-)
+_NDI_ROOT = os.path.join(REPO_ROOT, ".neardup_index")
 # version tags name the artifact KIND; the construction revision is
 # derived from the contributing functions' source (catalog.construction_rev,
 # r10 ADVICE) so a rule edit can never miss a bump — an index written under

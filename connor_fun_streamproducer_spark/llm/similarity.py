@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from connor_fun_streamproducer_spark.catalog import literal_frame, load
+from connor_fun_streamproducer_spark.catalog import REPO_ROOT, literal_frame, load
 from connor_fun_streamproducer_spark.registry import op
 
 K = 5
@@ -299,12 +299,8 @@ def _corpus_rows(spark: SparkSession, sf_dir: str) -> int:
         _CORPUS_ROWS_CACHE[fp] = load(spark, sf_dir, "embeddings").count()
     return _CORPUS_ROWS_CACHE[fp]
 
-# On-disk inverted files live under the repo root, one directory per corpus
-# fingerprint (never under /root/testdata, which is read-only).
-_INDEX_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".ivf_index",
-)
+# On-disk inverted files, one directory per corpus fingerprint.
+_INDEX_ROOT = os.path.join(REPO_ROOT, ".ivf_index")
 
 
 def _corpus_fingerprint(sf_dir: str) -> str:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from connor_fun_streamproducer_spark.catalog import (
+    REPO_ROOT,
     dim_window,
     epoch_seconds,
     fixture_fingerprint,
@@ -39,10 +40,7 @@ N_ITERS = 5
 # every call re-ran the bucket build (and the iterative rounds) from the
 # raw events scan. Keyed by the events fixture fingerprint + a
 # construction-version tag, so a changed fixture or rule rebuilds.
-_GRAPH_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".graph_index",
-)
+_GRAPH_ROOT = os.path.join(REPO_ROOT, ".graph_index")
 
 
 _GRAPH_REV: str | None = None

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from connor_fun_streamproducer_spark.catalog import epoch_seconds, load
+from connor_fun_streamproducer_spark.catalog import epoch_seconds, load, scratch_dir
 from connor_fun_streamproducer_spark.registry import op
 
 # Session gap threshold (seconds). Fixture events average ~1/day/user, so
@@ -228,8 +228,7 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join("/root/repo/.scratch", tag, "cdc_merge")
+    root = scratch_dir(sf_dir, "cdc_merge")
     shutil.rmtree(root, ignore_errors=True)
     feed_dir = os.path.join(root, "feed")
     snap_dir = os.path.join(root, "snap")
@@ -596,12 +595,9 @@ def daily_revenue_rollup_path(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per sf_dir) the daily revenue rollup — the MV."""
     import os
 
-    from connor_fun_streamproducer_spark.sources.layout import (
-        _atomic_write,
-        _scratch_path,
-    )
+    from connor_fun_streamproducer_spark.sources.layout import _atomic_write
 
-    path = _scratch_path(sf_dir, "lineitem_daily_rollup")
+    path = scratch_dir(sf_dir, "lineitem_daily_rollup")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         daily = (
             load(spark, sf_dir, "lineitem")

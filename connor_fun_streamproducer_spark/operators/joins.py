@@ -411,9 +411,7 @@ def join_asof_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same merge-sort carry-forward tape as join_asof_sorted — the only
     change is dropping the null filter, which is exactly why the tape
     form is the right 100 TB shape: inner vs left semantics is a final
-    map-side filter decision, not a different join strategy. Registered
-    behind the round-4 window (round-5 rotation); locally oracle-green
-    on every test run.
+    map-side filter decision, not a different join strategy.
     """
     carried = _asof_carry_tape(spark, sf_dir)
     return carried.select(

@@ -1,9 +1,4 @@
-"""Hot-key join salting — the manual skew cure as a first-class operator.
-
-Split out of scale_patterns so the round-3 addition registers at the END
-of the registry (new ops rotate into the external verification window next
-round; tests/test_oracle.py checks it on every local run regardless).
-"""
+"""Hot-key join salting — the manual skew cure as a first-class operator."""
 
 from __future__ import annotations
 

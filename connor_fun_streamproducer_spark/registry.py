@@ -11,6 +11,9 @@ Every implemented op key registers here with:
                 approximate sketches) → driver records a rows-only check.
 - ``tags``:     free-form labels ("ref", "ext", "streaming", "llm", ...).
 
+Keys register in module import order (``_ensure_loaded``); that order
+carries no meaning and nothing reads it.
+
 Conventions that keep the oracle hash-compare honest (driver sorts columns
 by name, hashes values order-insensitively):
 
@@ -41,7 +44,6 @@ class Op:
     fn: QueryFn
     oracle: str | None = None
     tags: tuple[str, ...] = field(default_factory=tuple)
-    doc: str = ""
 
 
 OPS: dict[str, Op] = {}
@@ -100,7 +102,7 @@ def op(key: str, oracle: str | None = None, tags: tuple[str, ...] = ()) -> Calla
             ensure_session_confs(spark)
             return fn(spark, sf_dir, **kwargs)
 
-        OPS[key] = Op(key=key, fn=wrapped, oracle=oracle, tags=tuple(tags), doc=fn.__doc__ or "")
+        OPS[key] = Op(key=key, fn=wrapped, oracle=oracle, tags=tuple(tags))
         return wrapped
 
     return deco
@@ -125,30 +127,14 @@ def _ensure_loaded() -> None:
     if _LOADED:
         return
     # Imports are side-effectful (decorator registration); keep the list
-    # explicit so coverage is auditable.
-    #
-    # COMPLETE verification lives in THIS repo: tests/test_oracle.py runs
-    # every registered op against its DuckDB oracle (or a materialization
-    # smoke) on every test run, so no op is ever unguarded regardless of
-    # what any external harness samples.
-    #
-    # Registration order is still meaningful for the external driver,
-    # which checks ops in registration order with a bounded (first-50)
-    # window. Since round 4 the order is controlled at KEY level by
-    # _WINDOW_PRIORITY below (module import order alone could not front
-    # never-verified keys living in already-verified modules); the
-    # freshness rule applies every round: (1) keys never externally
-    # checked, (2) keys changed this round, (3) keys NEW this round
-    # (inside the window since round 10, so new work is externally
-    # proven the round it lands), (4) the stalest externally-green
-    # tier. tests/test_registry_order.py pins the resulting window.
+    # explicit so coverage is auditable. tests/test_oracle.py runs every
+    # registered op against its DuckDB oracle on every test run.
     from connor_fun_streamproducer_spark.llm import text  # noqa: F401
     from connor_fun_streamproducer_spark.streaming import stateful  # noqa: F401
     from connor_fun_streamproducer_spark.sources import streams as _sources_streams  # noqa: F401
     from connor_fun_streamproducer_spark.operators import pipelines  # noqa: F401
     from connor_fun_streamproducer_spark.llm import dedup  # noqa: F401
     from connor_fun_streamproducer_spark.operators import scale_patterns  # noqa: F401
-    # Stalest external tier next (r01-green, unchanged since):
     from connor_fun_streamproducer_spark.operators import (  # noqa: F401
         relational,
         joins,
@@ -165,7 +151,6 @@ def _ensure_loaded() -> None:
         strings,
     )
     from connor_fun_streamproducer_spark.sources import batch as _sources_batch  # noqa: F401
-    # Externally re-verified most recently (r02-green, unchanged):
     from connor_fun_streamproducer_spark.streaming import (  # noqa: F401
         pipeline,
         windows as stream_windows,
@@ -173,10 +158,6 @@ def _ensure_loaded() -> None:
     from connor_fun_streamproducer_spark.sources import config_scan as _config_scan  # noqa: F401
     from connor_fun_streamproducer_spark.llm import multimodal, similarity  # noqa: F401
     from connor_fun_streamproducer_spark.operators import udfs  # noqa: F401
-    # NEW in round 3 (corpus-prep tier + SQL front door), registered after
-    # this round's window by the freshness rule — they are oracle-checked
-    # on every local test run (tests/test_oracle.py) and rotate to the
-    # front of the external window next round as "changed" ops.
     from connor_fun_streamproducer_spark.llm import (  # noqa: F401
         clustering,
         corpus,
@@ -199,501 +180,7 @@ def _ensure_loaded() -> None:
     )
     from connor_fun_streamproducer_spark.functions import urls  # noqa: F401
     from connor_fun_streamproducer_spark.sources import layout as _sources_layout  # noqa: F401
-    # NEW in round 5 session 5 (splits/profiling/lakehouse tier) — behind
-    # the window by the freshness rule; first in line for the r06 rotation
     from connor_fun_streamproducer_spark.llm import splits  # noqa: F401
     from connor_fun_streamproducer_spark.operators import profiling  # noqa: F401
 
-    _apply_window_priority()
     _LOADED = True
-
-
-# Explicit registration-order priority for the external driver's bounded
-# (first-50) correctness window. The rotation rule (stable since r10,
-# restated for r13 — this replaces the historical r10 arithmetic that an
-# r12 ADVICE item flagged as stale): each round the window carries, in
-# order, (1) the STALEST externally-green keys (the head of the previous
-# round's behind-window order — external evidence ages out oldest-first),
-# (2) keys whose build CHANGED this round (the external check re-proves
-# the refactor), (3) keys NEW this round (no external row yet). Behind
-# the window the order is staleness-ascending (latest external check,
-# oldest first) so the next rotation's input is pinned, never
-# import-order luck; tests/test_registry_order.py pins each tier.
-#
-# Round-13 window: 10 stalest (the r4-vintage tier VERDICT r12 pinned as
-# STALEST_FRONT_R13) + 16 changed (the pca promotion, the sharded
-# frontier, the three distributed-rank Gini ops, the HITS edge artifact,
-# the eval-rev fix, and the nine era ops that now share the cached span
-# probe) + 24 new = 50. The next four r4-vintage keys (sample_stratified
-# ... corpus_pack) lead the behind-window order instead.
-_WINDOW_PRIORITY = [
-    # -- (1) stalest externally-green tier: the pinned r14 rotation input
-    #    (STALEST_FRONT_R14, r4 vintage) plus the next-stalest fill --
-    "sample_stratified",
-    "corpus_stats",
-    "tfidf_top_terms",
-    "corpus_pack",
-    "text_pii_scrub",
-    "text_boilerplate",
-    "text_normalize",
-    "embedding_pool",
-    "embedding_quantize",
-    "fn_url",
-    "graph_pagerank",
-    "win_range_interval",
-    "win_sessionize",
-    "merge_upsert",
-    "stream_cdc_merge",
-    "agg_histogram",
-    "join_runtime_filter",
-    "pipeline_nation_volume",
-    "pipeline_promo_share",
-    "pipeline_large_volume_orders",
-    "pipeline_dormant_accounts",
-    "pipeline_late_shipment_priority",
-    "dedup_ngram_jaccard",
-    "graph_pagerank_dist",
-    "pipeline_product_profit",
-    "pipeline_disjunctive_revenue",
-    "merge_scd2",
-    "pipeline_top_supplier",
-    "win_distribution",
-    "agg_stats_moments",
-    "fn_conditional",
-    "join_asof_sorted",
-    "stream_topk_windows",
-    "corpus_decontaminate",
-    # -- (2) changed this round (r13 ADVICE fixes + probe reroutes) --
-    "sample_weighted_topk_es",
-    "embedding_pca_project",
-    "embedding_covariance",
-    "embedding_prefix_variance",
-    "text_vocab_growth_heaps",
-    "text_ngram_entropy_rate",
-    "corpus_mix_kl_drift",
-    "ts_periodogram_fixed",
-    "ts_cross_correlation",
-    "ts_spectral_entropy",
-    # -- (3) new this round --
-    "text_gopher_rules",
-    "text_vocab_chao1",
-    "stats_dunn_posthoc",
-    "corpus_perplexity_buckets",
-    "stats_cvm_eras",
-    "multimodal_gain_normalize",
-    # -- behind the window: staleness-ascending (head = the r15
-    #    rotation input); the freshest (r13/r14-checked) keys last --
-    "text_perplexity_proxy",
-    "sample_mix_target",
-    "join_asof_left",
-    "agg_bitmap_distinct",
-    "win_fill_forward",
-    "fn_geo_haversine",
-    "sink_compaction",
-    "ivm_delta_agg",
-    "agg_mode_per_key",
-    "join_null_safe",
-    "pipeline_customer_distribution",
-    "pipeline_mincost_supplier",
-    "pipeline_important_part_share",
-    "pipeline_supplier_part_counts",
-    "pipeline_small_qty_revenue",
-    "pipeline_promotion_suppliers",
-    "pipeline_waiting_suppliers",
-    "pipeline_market_share",
-    "multimodal_decode",
-    "sink_partition_prune",
-    "src_socket",
-    "pipeline_forecast_revenue",
-    "pipeline_shipmode_priority",
-    "ts_resample",
-    "ts_interpolate_linear",
-    "win_ewma",
-    "sink_zorder",
-    "agg_linreg_trend",
-    "win_anomaly_zscore",
-    "fn_bitwise",
-    "agg_heavy_hitters",
-    "pipeline_funnel_conversion",
-    "pipeline_basket_affinity",
-    "graph_triangle_count",
-    "graph_bfs_distance",
-    "join_fuzzy_blocked",
-    "snapshot_diff",
-    "win_cumulative_distinct",
-    "win_rolling_stats",
-    "sample_reservoir",
-    "pipeline_rfm_segments",
-    "sample_temperature",
-    "scan_schema_merge",
-    "pipeline_abc_pareto",
-    "graph_degree_distribution",
-    "corpus_quality_gate",
-    "sample_group_holdout",
-    "sample_kfold",
-    "dedup_chunk_exact",
-    "stats_table_profile",
-    "sink_versioned_manifest",
-    "scan_text_roundtrip",
-    "join_asof_nearest",
-    "pipeline_yoy_growth",
-    "pipeline_attribution_touch",
-    "text_tokens_bpe_est",
-    "corpus_shuffle_shard",
-    "scan_csv_permissive",
-    "embedding_normalize_l2",
-    "join_stream_stream_outer",
-    "multimodal_audio_energy",
-    "mv_answer_from_rollup",
-    "win_median_rolling",
-    "agg_corr_pairs",
-    "stream_available_now",
-    "fn_try_arith",
-    "join_point_in_time",
-    "sample_bootstrap",
-    "text_entropy_source",
-    "pipeline_event_transitions",
-    "graph_kcore",
-    "fn_surrogate_key",
-    "scan_json_multiline",
-    "stats_join_cardinality",
-    "text_syllable_density",
-    "scan_parquet",
-    "scan_json",
-    "scan_csv",
-    "sink_parquet",
-    "scan_binaryfile",
-    "fn_string",
-    "fn_math",
-    "fn_date",
-    "ts_ohlc_candles",
-    "pipeline_interpurchase_time",
-    "win_pattern_rises",
-    "scan_file_stats_pruning",
-    "sink_delete_vectors",
-    "sink_partition_evolution",
-    "dedup_substring_window",
-    "fn_timestamp_format",
-    "graph_top_similar_user",
-    "multimodal_phash_dedup",
-    "join_asof_tolerance",
-    "sample_negative_pairs",
-    "win_clamped_cumsum",
-    "sink_exactly_once_commitlog",
-    "pipeline_session_paths",
-    "agg_weighted_percentile",
-    "stats_profile_drift",
-    "graph_jaccard_neighbors",
-    "agg_kll_quantile",
-    "agg_theta_setops",
-    "agg_approx",
-    "agg_sketch_merge",
-    "stream_watermark",
-    "stream_late_policy",
-    "fn_array",
-    "fn_json",
-    "fn_map",
-    "set_union",
-    "agg_window_count",
-    "enrich_region",
-    "fanout_union",
-    "join_stream_static",
-    "multimodal_cols",
-    "proj_serialize",
-    "route_by_key",
-    "sim_search_topk",
-    "src_config_scan",
-    "stream_dedup",
-    "stream_session",
-    "stream_sliding",
-    "stream_tumbling",
-    "udaf_grouped",
-    "udf_scalar",
-    "udtf_table",
-    "agg_collect",
-    "agg_distinct",
-    "agg_grouping_sets",
-    "agg_hash",
-    "agg_skew_salted",
-    "ts_autocorr",
-    "dedup_url_canonical",
-    "sink_bloom_index",
-    "stats_benford_profile",
-    "ts_seasonal_index",
-    "stats_mad_outliers",
-    "graph_clustering_coefficient",
-    "win_drawdown",
-    "ts_changepoint_cusum",
-    "text_bigram_mi",
-    "stats_ks_eras",
-    "stats_chi2_independence",
-    "embedding_outlier_distance",
-    "dedup_cdc_chunks",
-    "corpus_dedup_pipeline",
-    "sample_class_weights",
-    "agg_extremal_by",
-    "corpus_budget_apportion",
-    "scan_agg_pushdown",
-    "graph_assortativity",
-    "win_rolling_corr",
-    "corpus_vocab_coverage",
-    "text_hashing_vectorizer",
-    "ts_sma_crossover",
-    "stats_psi_stability",
-    "sink_snapshot_expire",
-    "text_zipf_alpha",
-    "graph_reciprocity",
-    "stats_cramers_v",
-    "pipeline_backfill_incremental",
-    "pipeline_event_trigrams",
-    "win_time_weighted_avg",
-    "scan_corrupt_quarantine",
-    "pipeline_audience_overlap",
-    "stats_ab_proportions",
-    "pipeline_skyline_frontier",
-    "sink_write_audit_publish",
-    "embedding_label_distances",
-    "embedding_knn_label_purity",
-    "pipeline_segment_migration",
-    "corpus_dup_rate_by_source",
-    "stats_key_integrity",
-    "agg_count_min",
-    "sample_kcenter_coreset",
-    "corpus_epoch_plan",
-    "stats_mutual_info_cat",
-    "ts_holt_forecast",
-    "sample_neyman_alloc",
-    "stats_capture_recapture",
-    "sample_walk_pairs",
-    "text_ngram_novelty",
-    "pipeline_new_returning_users",
-    "ts_seasonal_residual_anomaly",
-    "stats_label_impurity",
-    "stats_runs_test",
-    "sim_search_pq",
-    "dedup_embedding",
-    "sim_search_ivf",
-    "sim_search_lsh",
-    "filter_pred",
-    "project_select",
-    "limit_topk",
-    "sort_global",
-    "dedup_exact",
-    "sort_within",
-    "topk_per_group",
-    "join_broadcast",
-    "join_sortmerge",
-    "join_shuffle_hash",
-    "join_theta_range",
-    "join_semi",
-    "join_anti",
-    "join_asof",
-    "join_range_bucketed",
-    "agg_percentile",
-    "agg_rollup",
-    "agg_cube",
-    "agg_pivot",
-    "agg_unpivot",
-    "text_tokens",
-    "text_quality",
-    "text_langid",
-    "text_fingerprint",
-    "join_bucketed",
-    "rollup_time_hierarchy",
-    "pipeline_shipping_priority",
-    "dedup_simhash_banded",
-    "dedup_threshold_sweep",
-    "sim_search_hamming",
-    "embedding_dim_profile",
-    "corpus_lang_confusion",
-    "stats_ljung_box",
-    "ts_peak_concurrency",
-    "ts_croston",
-    "stats_trimmed_mean",
-    "sample_systematic",
-    "corpus_split_leakage",
-    "pipeline_order_lead_time",
-    "pipeline_revenue_hhi",
-    "ts_dow_effects",
-    "embedding_cluster_label_mix",
-    "ts_theil_sen",
-    "ts_forecast_backtest",
-    "text_js_divergence_sources",
-    "sample_downweight_duplicates",
-    "dedup_minhash_banded",
-    "dedup_cluster_canonical",
-    "corpus_cross_source_dup",
-    "dedup_minhash_cluster",
-    "embedding_cluster_kmeans",
-    "dedup_minhash_estimate",
-    "graph_connected_components",
-    "graph_label_propagation",
-    "graph_modularity",
-    "dedup_cluster_size_profile",
-    "sample_effective_size",
-    "corpus_dedup_savings",
-    "ts_event_gaps",
-    "stats_srm_check",
-    "pipeline_part_velocity",
-    "text_ttr_by_source",
-    "embedding_norm_profile",
-    "ts_mann_kendall",
-    "ts_var_es",
-    "win_ratio_to_report",
-    "dedup_exact_normalized",
-    "sample_ipw_weights",
-    "ts_pacf",
-    "pipeline_discount_depth",
-    "pipeline_returns_rate",
-    "graph_component_sizes",
-    "sim_margin_profile",
-    "text_readability_fk",
-    "ts_outage_windows",
-    "dedup_vector_exact",
-    "dedup_containment_prefix",
-    "sink_socket_roundtrip",
-    "pipeline_order_aging",
-    "pipeline_dau_mau_stickiness",
-    "pipeline_cohort_ltv",
-    "pipeline_retention_cohort",
-    "win_islands_consecutive",
-    "join_interval_overlap",
-    "pipeline_repeat_buyers",
-    "text_word_length_profile",
-    "sim_doc_topk_minhash",
-    "embedding_cluster_separation",
-    "win_active_streak_latest",
-    "ts_hour_of_week_profile",
-    "graph_two_hop_reach",
-    "ts_bollinger_breakout",
-    "sample_pps_systematic",
-    "text_hapax_rate",
-    "pipeline_price_volume_bridge",
-    "pipeline_discount_elasticity",
-    "stats_quantile_ci",
-    "ts_seasonality_strength",
-    "ts_dispersion_index",
-    "corpus_source_overlap_jaccard",
-    "graph_rich_club_coefficient",
-    "embedding_isotropy_pairs",
-    "ts_seasonal_naive_error",
-    "sim_search_radius",
-    "join_asof_forward",
-    "stats_kendall_tau_binned",
-    "sink_kafka",
-    "src_rate",
-    "src_stream_geo",
-    "stream_health_monitor",
-    "dedup_near_minhash",
-    "dedup_simhash",
-    "pipeline_local_supplier_volume",
-    "pipeline_returned_items",
-    "fn_array_explode",
-    "fn_date_bucket",
-    "fn_json_roundtrip",
-    "fn_map_entries",
-    "enrich_region_grid",
-    "sink_foreachbatch",
-    "set_intersect",
-    "set_except",
-    "set_except_all",
-    "set_intersect_all",
-    "set_union_all",
-    "pipeline_shipping_priority_bucketed",
-    "rate_stagger",
-    "stream_stateful",
-    "stream_stateful_tws",
-    "win_analytic",
-    "win_frame",
-    "win_rank",
-    "join_stream_stream",
-    "embedding_centroid_drift",
-    "graph_degree_gini",
-    "corpus_quality_token_curve",
-    "stats_anova_oneway",
-    "stats_jarque_bera",
-    "stats_spearman_binned",
-    "ts_turning_points",
-    "ts_burstiness",
-    "ts_records_count",
-    "pipeline_backlog_burndown",
-    "pipeline_nation_trade_balance",
-    "pipeline_fill_rate",
-    "pipeline_brand_supplier_hhi",
-    "sample_balanced_downsample",
-    "sample_horvitz_thompson",
-    "embedding_triplet_violation",
-    "text_prefix_template_rate",
-    "dedup_band_occupancy",
-    "fn_binary_codec",
-    "fn_struct_ops",
-    "agg_geometric_mean",
-    "graph_edge_locality",
-    "graph_knn_degree_curve",
-    "scan_orc",
-    "sql_api",
-    "sim_search_topk_arrow",
-    "join_skew_salted",
-    "multimodal_framesample",
-    "multimodal_resize",
-    "fn_xml_roundtrip",
-    "text_chunk",
-    "text_repetition",
-    "sample_split",
-    "stats_event_lateness",
-    "agg_gini_concentration",
-    "win_lorenz_deciles",
-    "corpus_doc_length_gini",
-    "graph_hits",
-    "dedup_eval_tiers",
-    "stats_welch_ttest",
-    "stats_cohens_d_eras",
-    "stats_brown_forsythe",
-    "stats_mood_median",
-    "stats_mann_whitney",
-    "stats_cliff_delta",
-    "stats_power_mde",
-    "stats_cohens_h",
-    "stats_trend_proportions",
-    "stats_kruskal_wallis",
-    "stats_theil_u",
-    "stats_gk_lambda",
-    "stats_mcnemar",
-    "stats_wilcoxon_signed_rank",
-    "ts_page_hinkley",
-    "ts_sample_entropy",
-    "ts_hurst_rs",
-    "pipeline_price_dispersion",
-    "pipeline_new_vs_repeat_revenue",
-    "agg_hll_manual",
-    "dedup_cluster_source_purity",
-    "multimodal_silence_runs",
-    "graph_adamic_adar",
-    "graph_harmonic_centrality",
-    "agg_median_distributed",
-    "graph_ego_density",
-    "pipeline_vendor_consolidation_savings",
-    "stats_permutation_shift",
-    "agg_quantiles_distributed",
-    # NEW in round 14 after the window sealed: behind-window this round
-    # (oracle-proven locally every run); front r15 as never-checked tier-1.
-    "stats_friedman",
-    "stats_page_trend",
-    "stats_jonckheere_terpstra",
-    "corpus_kn_bigram_xent",
-    "multimodal_shot_boundary",
-    "stats_cochran_q",
-    "embedding_whiten",
-    "graph_betweenness_sampled",
-    "stats_mantel_haenszel",
-    "stats_cohens_kappa",
-]
-
-
-def _apply_window_priority() -> None:
-    """Rebuild OPS so _WINDOW_PRIORITY keys register first, in order."""
-    front = {k: OPS[k] for k in _WINDOW_PRIORITY if k in OPS}
-    rest = {k: v for k, v in OPS.items() if k not in front}
-    OPS.clear()
-    OPS.update(front)
-    OPS.update(rest)

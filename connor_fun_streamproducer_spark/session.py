@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from connor_fun_streamproducer_spark.catalog import REPO_ROOT
+
 # Shuffle partitions: match local core count (the cores this process may
 # run on, unless SPARK_GRAFT_CPUS says otherwise); on a real cluster this
 # would be ~2-3x total executor cores (and AQE coalesces the excess at
@@ -69,7 +71,7 @@ def get_spark(app_name: str = "connor_fun_spark", cpus: str | None = None) -> Sp
         # Managed tables (bucketed-join layouts) land in scratch, not the
         # repo root; the in-memory catalog forgets them between sessions,
         # so writers must clean stale locations (operators/scale_patterns).
-        .config("spark.sql.warehouse.dir", "/root/repo/.scratch/spark-warehouse")
+        .config("spark.sql.warehouse.dir", os.path.join(REPO_ROOT, ".scratch", "spark-warehouse"))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

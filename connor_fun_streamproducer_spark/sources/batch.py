@@ -19,10 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from connor_fun_streamproducer_spark.catalog import load
+from connor_fun_streamproducer_spark.catalog import load, scratch_dir
 from connor_fun_streamproducer_spark.registry import op
-
-_SCRATCH = "/root/repo/.scratch"
 
 _EVENT_SUBSET_SCHEMA = T.StructType(
     [
@@ -31,11 +29,6 @@ _EVENT_SUBSET_SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType()),
     ]
 )
-
-
-def _scratch_dir(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_SCRATCH, tag, name)
 
 
 @op(
@@ -73,7 +66,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     Writes the events subset as JSON once per call, reads it back
     schema'd; matching the parquet-backed oracle proves the round-trip.
     """
-    path = _scratch_dir(sf_dir, "events_json")
+    path = scratch_dir(sf_dir, "events_json")
     src = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     src.write.mode("overwrite").json(path)
     back = spark.read.schema(_EVENT_SUBSET_SCHEMA).json(path)
@@ -87,7 +80,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV scan with header + explicit schema (no inferSchema pass)."""
-    path = _scratch_dir(sf_dir, "events_csv")
+    path = scratch_dir(sf_dir, "events_csv")
     src = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     src.write.mode("overwrite").option("header", "true").csv(path)
     back = spark.read.schema(_EVENT_SUBSET_SCHEMA).option("header", "true").csv(path)
@@ -110,7 +103,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-prune on. The read-back equals the oracle's direct
     aggregation, proving the sink round-trip.
     """
-    path = _scratch_dir(sf_dir, "orders_agg_parquet")
+    path = scratch_dir(sf_dir, "orders_agg_parquet")
     agg = (
         load(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")
@@ -152,7 +145,7 @@ def scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     file, ``pathGlobFilter``/partition dirs prune, and content flows to
     mapInPandas extractors without leaving Arrow.
     """
-    path = _scratch_dir(sf_dir, "binary_docs")
+    path = scratch_dir(sf_dir, "binary_docs")
     marker = os.path.join(path, "_done")
     if not os.path.exists(marker):
         rows = (
@@ -199,7 +192,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushdown, column pruning, vectorized reader — so a
     warehouse standardized on ORC loses nothing running this engine.
     """
-    path = _scratch_dir(sf_dir, "events_orc")
+    path = scratch_dir(sf_dir, "events_orc")
     src = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     src.write.mode("overwrite").orc(path)
     back = spark.read.schema(_EVENT_SUBSET_SCHEMA).orc(path)
@@ -248,7 +241,7 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corrupt column requires caching the parsed frame — a
     documented Spark caveat — while the two-scan form stays stateless.)
     """
-    path = _scratch_dir(sf_dir, "events_csv_dirty")
+    path = scratch_dir(sf_dir, "events_csv_dirty")
     marker = os.path.join(path, "_done")
     if not os.path.exists(marker):
         src = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
@@ -299,7 +292,7 @@ def scan_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
 
     d = load(spark, sf_dir, "documents")
-    path = _scratch_dir(sf_dir, "documents_json_array")
+    path = scratch_dir(sf_dir, "documents_json_array")
     marker = os.path.join(path, "_done")
     if not os.path.exists(marker):
         os.makedirs(path, exist_ok=True)
@@ -436,7 +429,7 @@ def scan_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the surviving files are unchanged — resilience costs nothing on the
     good path.
     """
-    path = _scratch_dir(sf_dir, "events_parquet_torn")
+    path = scratch_dir(sf_dir, "events_parquet_torn")
     marker = os.path.join(path, "_done")
     if not os.path.exists(marker):
         ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from connor_fun_streamproducer_spark.catalog import scratch_dir
 from connor_fun_streamproducer_spark.registry import op
 from connor_fun_streamproducer_spark.streaming.pipeline import REGION_BOXES
 
@@ -40,8 +41,7 @@ LOCATIONS_JSON_SCHEMA = T.StructType(
 
 def write_locations_json(sf_dir: str) -> str:
     """Materialize the reference-shaped locations file (JSON lines)."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dir_ = os.path.join("/root/repo/.scratch", tag, "locations_json")
+    dir_ = scratch_dir(sf_dir, "locations_json")
     os.makedirs(dir_, exist_ok=True)
     path = os.path.join(dir_, "locations.json")
     with open(path, "w") as f:

@@ -21,17 +21,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from connor_fun_streamproducer_spark.catalog import literal_frame, load
+from connor_fun_streamproducer_spark.catalog import literal_frame, load, scratch_dir
 from connor_fun_streamproducer_spark.registry import op
 
 PRUNE_KEY = "click"
 
 _EVENT_COLS = ["event_id", "ts", "user_id", "value", "event_type"]
-
-
-def _scratch_path(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join("/root/repo/.scratch", tag, name)
 
 
 def _atomic_write(writer, path: str) -> None:
@@ -64,7 +59,7 @@ def _events_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per sf_dir) the events table partitioned by type."""
-    path = _scratch_path(sf_dir, "events_by_type")
+    path = scratch_dir(sf_dir, "events_by_type")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         _atomic_write(
             lambda p: _events_projection(spark, sf_dir)
@@ -123,8 +118,8 @@ COMPACT_TARGET = 2    # compacted file count for the fixture volume
 def compacted_events_path(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write (once per sf_dir) a fragmented copy of events and its
     compacted rewrite; returns (fragmented_path, compacted_path)."""
-    frag = _scratch_path(sf_dir, "events_fragmented")
-    comp = _scratch_path(sf_dir, "events_compacted")
+    frag = scratch_dir(sf_dir, "events_fragmented")
+    comp = scratch_dir(sf_dir, "events_compacted")
     frag_rebuilt = not os.path.exists(os.path.join(frag, "_SUCCESS"))
     if frag_rebuilt:
         # The small-file problem, induced: a streaming ingest writing every
@@ -221,7 +216,7 @@ def zorder_events_path(spark: SparkSession, sf_dir: str) -> str:
     partitioning can't give (partitionBy(partkey) does nothing for a
     suppkey predicate; Z-order bounds BOTH).
     """
-    path = _scratch_path(sf_dir, "lineitem_zorder")
+    path = scratch_dir(sf_dir, "lineitem_zorder")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         li = load(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
@@ -357,7 +352,7 @@ def scan_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layout-version tag in the dir name: the cached scratch layout is
     # reused across calls, so any change to the batch split or schemas
     # below must bump the tag rather than silently reading a stale build
-    root = _scratch_path(sf_dir, "docs_evolved_v1")
+    root = scratch_dir(sf_dir, "docs_evolved_v1")
 
     def _write(staging: str) -> None:
         d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.parquet(
@@ -410,7 +405,7 @@ def versioned_orders_root(spark: SparkSession, sf_dir: str) -> str:
     so they always see a complete snapshot — never a half-appended
     table — and old manifests keep serving time-travel reads of v1.
     """
-    root = _scratch_path(sf_dir, "orders_versioned_v1")
+    root = scratch_dir(sf_dir, "orders_versioned_v1")
     if not os.path.isfile(os.path.join(root, "_SUCCESS")):
         o = load(spark, sf_dir, "orders")
 
@@ -582,7 +577,7 @@ def scan_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     other splittable source.
     """
     d = load(spark, sf_dir, "documents")
-    path = _scratch_path(sf_dir, "documents_lines")
+    path = scratch_dir(sf_dir, "documents_lines")
     if not os.path.isfile(os.path.join(path, "_SUCCESS")):
         _atomic_write(
             lambda p: d.select(
@@ -618,7 +613,7 @@ def range_files_root(spark: SparkSession, sf_dir: str) -> str:
     driver-side, bounded by file count) — exactly what a table format
     stores per data file at commit time so readers never open the file
     to learn its range."""
-    root = _scratch_path(sf_dir, "orders_range_files")
+    root = scratch_dir(sf_dir, "orders_range_files")
     if not os.path.isfile(os.path.join(root, "_SUCCESS")):
         o = load(spark, sf_dir, "orders")
 
@@ -733,7 +728,7 @@ def delete_vectors_root(spark: SparkSession, sf_dir: str) -> str:
     delete commit writes only the key list, the merge-on-read pattern
     (Delta deletion vectors / Iceberg positional deletes reduced to a
     key-valued DV)."""
-    root = _scratch_path(sf_dir, "orders_delete_vectors")
+    root = scratch_dir(sf_dir, "orders_delete_vectors")
     if not os.path.isfile(os.path.join(root, "_SUCCESS")):
         o = load(spark, sf_dir, "orders")
 
@@ -809,7 +804,7 @@ def evolved_partitions_root(spark: SparkSession, sf_dir: str) -> str:
     from the cut on under spec-v2 (``year=/o_orderstatus=``) — the
     Iceberg partition-evolution contract: a spec change applies to NEW
     data only; old files are never rewritten."""
-    root = _scratch_path(sf_dir, "orders_evolved_spec")
+    root = scratch_dir(sf_dir, "orders_evolved_spec")
     if not os.path.isfile(os.path.join(root, "_SUCCESS")):
         o = load(spark, sf_dir, "orders").withColumn(
             "year", F.year("o_orderdate").cast("int")
@@ -899,7 +894,7 @@ def bloom_files_root(spark: SparkSession, sf_dir: str) -> str:
     key-hash bits — the compressed membership summary a manifest carries
     per data file (Parquet's own optional bloom filters / Delta
     stats-skipping, reduced to an explicit sidecar)."""
-    root = _scratch_path(sf_dir, "lineitem_bloom_files")
+    root = scratch_dir(sf_dir, "lineitem_bloom_files")
     if not os.path.isfile(os.path.join(root, "_SUCCESS")):
         li = load(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice"
@@ -1070,7 +1065,7 @@ def _gc_orders_root(spark: SparkSession, sf_dir: str) -> str:
     in ``GC_STATS`` at build time so repeated calls — the bench loop,
     the correctness driver — observe the identical one-shot result.
     """
-    root = _scratch_path(sf_dir, "orders_gc_v1")
+    root = scratch_dir(sf_dir, "orders_gc_v1")
     if not os.path.isfile(os.path.join(root, "_SUCCESS")):
         o = load(spark, sf_dir, "orders")
 
@@ -1184,7 +1179,7 @@ def _wap_root(spark: SparkSession, sf_dir: str) -> str:
     delta (all-NULL keys) staged, FAILED by the audit, and discarded —
     VERSION must still read 2 and the bad files must never be
     reachable from any manifest."""
-    root = _scratch_path(sf_dir, "orders_wap_v1")
+    root = scratch_dir(sf_dir, "orders_wap_v1")
     if not os.path.isfile(os.path.join(root, "_SUCCESS")):
         o = load(spark, sf_dir, "orders")
 

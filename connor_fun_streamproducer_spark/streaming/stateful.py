@@ -20,7 +20,6 @@ max(intervals seen) == distinct active weeks.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterable
 
 import pandas as pd
@@ -30,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from connor_fun_streamproducer_spark.catalog import literal_frame, load
+from connor_fun_streamproducer_spark.catalog import literal_frame, load, scratch_dir
 from connor_fun_streamproducer_spark.registry import op
 
 _OUTPUT_SCHEMA = T.StructType(
@@ -81,8 +80,7 @@ def day_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     writes exactly one file per week directory — with maxFilesPerTrigger=1
     the stream then replays one week per micro-batch.
     """
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join("/root/repo/.scratch", tag, "events_by_day")
+    path = scratch_dir(sf_dir, "events_by_day")
     (
         load(spark, sf_dir, "events")
         .select("event_id", "ts", "user_id", F.date_format(F.date_trunc("week", "ts"), "yyyy-MM-dd").alias("day"))

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from connor_fun_streamproducer_spark.catalog import literal_frame
+from connor_fun_streamproducer_spark.catalog import literal_frame, scratch_dir
 from connor_fun_streamproducer_spark.registry import op
 from connor_fun_streamproducer_spark.sources.streams import events_stream, run_to_memory
 
@@ -324,8 +324,7 @@ def sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil as _shutil
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir))
-    out_dir = _os.path.join("/root/repo/.scratch", tag, "foreachbatch_out")
+    out_dir = scratch_dir(sf_dir, "foreachbatch_out")
     _shutil.rmtree(out_dir, ignore_errors=True)
 
     sdf = events_stream(spark, sf_dir).select("event_id", "event_type", "value")
@@ -493,7 +492,6 @@ def stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum hash-match the batch oracle, proving termination happened
     only after EVERYTHING available was processed.
     """
-    import os as _os
     import uuid as _uuid
 
     sdf = events_stream(spark, sf_dir)
@@ -502,8 +500,7 @@ def stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("event_id").cast("bigint").alias("id_sum"),
     )
     name = f"available_now_{_uuid.uuid4().hex[:8]}"
-    tag = _os.path.basename(_os.path.normpath(sf_dir))
-    ckpt = _os.path.join("/root/repo/.scratch", tag, "ckpt", name)
+    ckpt = scratch_dir(sf_dir, "ckpt", name)
     q = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -548,8 +545,7 @@ def sink_exactly_once_commitlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os as _os
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir))
-    out_dir = _os.path.join("/root/repo/.scratch", tag, "exactly_once_out")
+    out_dir = scratch_dir(sf_dir, "exactly_once_out")
     import shutil as _shutil
 
     _shutil.rmtree(out_dir, ignore_errors=True)

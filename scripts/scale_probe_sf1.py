@@ -38,11 +38,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from connor_fun_streamproducer_spark import registry  # noqa: E402
+from connor_fun_streamproducer_spark.catalog import REPO_ROOT  # noqa: E402
 from connor_fun_streamproducer_spark.session import get_spark  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DST = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   ".scratch", "sf1_probe")
+DST = os.path.join(REPO_ROOT, ".scratch", "sf1_probe")
 REPLICAS = 10
 OFF = 100_000_000  # key offset per replica — far above any fixture key
 
@@ -217,9 +217,7 @@ def main() -> None:
             # build and report a meaningless 30x "ratio"
             for d in (".neardup_index", ".graph_index", ".kmeans_index",
                       ".ivf_index"):
-                shutil.rmtree(os.path.join(os.path.dirname(
-                    os.path.dirname(os.path.abspath(__file__))), d),
-                    ignore_errors=True)
+                shutil.rmtree(os.path.join(REPO_ROOT, d), ignore_errors=True)
         base, rows_base = timed(fn, spark, SRC)  # cold build for artifact ops
         cold, rows_cold = timed(fn, spark, DST)  # 10x, artifact build included
         warm = timed(fn, spark, DST)[0] if has_artifact else None

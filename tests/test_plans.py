@@ -1548,11 +1548,11 @@ def test_corrupt_quarantine_survives_and_counts(spark):
     proving the tolerance did not leak into the session."""
     import pytest as _pytest
 
-    from connor_fun_streamproducer_spark.sources.batch import _scratch_dir
+    from connor_fun_streamproducer_spark.catalog import scratch_dir
 
     row = _q("scan_corrupt_quarantine", spark).collect()[0]
     assert row.n_files_total == 3 and row.n_files_corrupt == 1
-    path = _scratch_dir(SF_DIR, "events_parquet_torn")
+    path = scratch_dir(SF_DIR, "events_parquet_torn")
     with _pytest.raises(Exception):
         spark.read.parquet(path).count()
 
