@@ -375,19 +375,39 @@ def _codebook(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     return cents
 
 
-def _cell_sims(cents: list[list[float]]) -> Column:
-    """ARRAY<STRUCT<sim,cell>> of dot products against every centroid —
-    one JVM-side expression; struct ordering makes array_max an argmax.
-    The sim is ROUNDED to 6 dp before it enters the struct: argmax on
-    raw doubles would flip cells on last-ulp drift between engines,
-    while (round(sim,6) desc, cell desc — array_max's lexicographic
-    tie) is a total order a SQL oracle replays exactly."""
-    sims = []
-    for i, c in enumerate(cents):
-        arr = "array(" + ", ".join(f"{v!r}D" for v in c) + ")"
-        d = F.expr(_dot_sql(_dbl_sql("embedding"), arr))
-        sims.append(F.struct(F.round(d, 6).alias("sim"), F.lit(i).alias("cell")))
-    return F.array(*sims)
+def _assign_cells(e: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """``e`` plus its IVF ``cell`` and ``norm`` columns.
+
+    ``cell`` is the argmax over the codebook's dot products, one JVM-side
+    expression over ONE codebook literal (an array of centroid arrays):
+    ``array_max(transform(codebook, (c, i) -> struct(round(dot, 6) AS sim,
+    i AS cell))).cell`` — struct ordering makes array_max an argmax. The
+    sim is ROUNDED to 6 dp before it enters the struct: argmax on raw
+    doubles would flip cells on last-ulp drift between engines, while
+    (round(sim,6) desc, cell desc — array_max's lexicographic tie) is a
+    total order a SQL oracle replays exactly.
+
+    The double cast of ``embedding`` is hoisted into its own projection
+    (the ``_brute_pairs`` discipline) and feeds both the dot products and
+    the L2 norm. Referenced twice, it stays one projection: Catalyst's
+    CollapseProject inlines a non-cheap expression only into a single
+    consumer, and inlined into the lambda it would be re-cast once per
+    centroid per row. The hoist changes no value: the folds see the same
+    doubles in the same order as a cast inside each dot product."""
+    book = "array(" + ", ".join(
+        "array(" + ", ".join(f"{v!r}D" for v in c) + ")" for c in cents
+    ) + ")"
+    cell = (
+        f"array_max(transform({book}, (c, i) -> "
+        f"struct(round({_dot_sql('_ed', 'c')}, 6) AS sim, i AS cell))).cell"
+    )
+    return e.withColumn("_ed", _dbl("embedding")).select(
+        *e.columns,
+        F.expr(cell).alias("cell"),
+        # precomputed L2 norm: serving divides by it instead of
+        # re-aggregating 64 squares per candidate per query
+        F.expr("sqrt(aggregate(_ed, 0.0D, (acc, x) -> acc + x * x))").alias("norm"),
+    )
 
 
 def ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -417,7 +437,7 @@ def ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derived codebook cardinality (n_cells_for) must rebuild the layout,
     # not serve a stale one written under the old geometry. The trailing
     # version tag is the ASSIGNMENT-RULE identity — v2 = rounded argmax
-    # (see _cell_sims) — so an index written under an older rule can
+    # (see _assign_cells) — so an index written under an older rule can
     # never be served to code expecting the new one.
     path = os.path.join(
         _INDEX_ROOT, f"{_corpus_fingerprint(sf_dir)}-c{len(cents)}-v2"
@@ -432,10 +452,7 @@ def ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         staging = f"{path}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         try:
             (
-                e.withColumn("cell", F.array_max(_cell_sims(cents)).getField("cell"))
-                # precomputed L2 norm: serving divides by it instead of
-                # re-aggregating 64 squares per candidate per query
-                .withColumn("norm", norm_expr("embedding"))
+                _assign_cells(e, cents)
                 # one output file per cell at fixture scale (at 100 TB: drop
                 # this and let each cell hold many executor-sized files)
                 .repartition("cell")
@@ -669,7 +686,7 @@ def _ivf_oracle() -> str:
     (top-n_probe cells, rounded-dot desc / cell asc), pruned candidate
     re-rank, and the exact-top-k recall companions. Possible only
     because every float on the Spark/Python side is produced in the
-    same fold order the SQL computes (_fold_norm/_round6/_cell_sims)
+    same fold order the SQL computes (_fold_norm/_round6/_assign_cells)
     and every ordering decision happens on round(·,6) with an integer
     tie-break."""
     return _ivf_cellmap_ctes() + f""", probes AS (

@@ -192,9 +192,13 @@ def run_to_memory(
     streaming pays a per-state-store-instance commit cost every
     micro-batch, so the instance count should track the cluster's core
     count, not the batch-side shuffle width. This runner is the LOCAL
-    verification harness, so it defaults low (measured best-of-3 on
-    stream_tumbling at sf0.1: 32→8 was 2.2× faster, 8→4 another ~14%,
-    4→2 flat — 4 is the local sweet spot); production queries size it to
+    verification harness, so it defaults low. Measured on
+    stream_tumbling at sf0.1, 4-core host, median of 7 builds: 32, 8, 4
+    and 2 instances took 1.72, 1.16, 1.11 and 1.17 s (32→8 1.5× faster,
+    8→4→2 within noise — 4 stays the local default). Those figures are
+    with the session's FileSystem checkpoint manager; under Spark's
+    FileContext default (see ``get_spark``) the same sweep read 2.54,
+    1.49, 1.33 and 1.44 s. Production queries size it to
     executors × cores at first start (it is immutable per checkpoint
     afterwards). ``None`` inherits the session setting.
 

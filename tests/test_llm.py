@@ -156,6 +156,22 @@ def test_ivf_ann_recall_and_structure(spark):
     assert all(len(v) <= 5 for v in per_q.values())
 
 
+def test_ivf_cell_assignment_casts_embedding_once(spark):
+    """The index build's argmax over the codebook reads ONE double copy of
+    each embedding: its optimized plan holds a single cast, not one per
+    centroid (a singly-referenced cast would be inlined into the
+    per-centroid lambda). Plan only, no job beyond the codebook sample."""
+    from connor_fun_streamproducer_spark.catalog import load
+    from connor_fun_streamproducer_spark.llm import similarity
+
+    cents = similarity._codebook(spark, SF_DIR)
+    built = similarity._assign_cells(load(spark, SF_DIR, "embeddings"), cents)
+    plan = built._jdf.queryExecution().optimizedPlan().toString()
+    assert len(cents) >= 8
+    assert built.columns[-2:] == ["cell", "norm"]
+    assert plan.count("as double)") == 1, plan
+
+
 def test_ppm_decode_roundtrip_and_header_grammar(spark):
     from connor_fun_streamproducer_spark.llm.multimodal import decode_image, encode_ppm
 

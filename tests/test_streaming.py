@@ -540,3 +540,81 @@ def test_stream_static_enrich_broadcasts_local_relation(spark, scratch):
     finally:
         q.stop()
         spark.catalog.dropTempView(name)
+
+
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
+
+
+def test_checkpoint_files_go_through_filesystem_manager(spark, tmp_path):
+    """The session routes every streaming checkpoint write through Spark's
+    FileSystem-based manager (one create + rename per file), not the
+    FileContext default, whose local-FS calls start Hadoop shell commands
+    when libhadoop is absent. Resolves the manager the way every query
+    does; submits no job."""
+    jvm = spark._jvm
+    mgr = getattr(jvm, _CHECKPOINTING).CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert mgr.getClass().getName() == f"{_CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+
+
+def test_stateful_restart_recovers_state_written_by_checkpoint_manager(spark, scratch):
+    """A complete-mode count restarted from its checkpoint must resume from
+    the state deltas the checkpoint manager wrote: after a third file
+    arrives, the restarted query's counts equal a batch count over all
+    three files, which a query that lost its state (and counted only the
+    third file) cannot produce. Every delta and offsets file keeps its
+    integrity companions: Spark's ``<v>.delta.crc`` and Hadoop's ``.<f>.crc``."""
+    import glob
+    import os
+
+    src, ckpt = scratch + "/src", scratch + "/ckpt"
+    files = [[1, 2, 2, 3], [2, 3, 3, 4, 5], [1, 5, 5, 6, 6, 6]]
+
+    def write(i):
+        spark.createDataFrame([(k,) for k in files[i]], "k long").coalesce(1).write.parquet(
+            f"{src}/f{i}"
+        )
+
+    def run():
+        name = f"st_{uuid.uuid4().hex[:8]}"
+        q = (
+            spark.readStream.schema("k long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src + "/*")
+            .groupBy("k")
+            .count()
+            .writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(120)
+            assert q.exception() is None, q.exception()
+            return {r["k"]: r["count"] for r in spark.table(name).collect()}
+        finally:
+            q.stop()
+            spark.catalog.dropTempView(name)
+
+    write(0)
+    write(1)
+    first = run()
+    assert first == {1: 1, 2: 3, 3: 3, 4: 1, 5: 1}, first
+    write(2)
+    restarted = run()
+    batch = spark.read.parquet(src + "/*").groupBy("k").count().collect()
+    assert restarted == {r["k"]: r["count"] for r in batch}, restarted
+
+    offsets = glob.glob(ckpt + "/offsets/[0-9]*")
+    assert sorted(os.path.basename(f) for f in offsets) == ["0", "1", "2"], offsets
+    deltas = glob.glob(ckpt + "/state/0/[0-9]*/*.delta")
+    assert {os.path.basename(f) for f in deltas} == {"1.delta", "2.delta", "3.delta"}, deltas
+    for f in offsets + deltas:
+        head, base = os.path.split(f)
+        assert os.path.isfile(f"{head}/.{base}.crc"), f
+    for f in deltas:
+        assert os.path.isfile(f + ".crc"), f
