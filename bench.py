@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from connor_fun_streamproducer_spark import catalog, registry
-from connor_fun_streamproducer_spark.session import get_spark
+from connor_fun_streamproducer_spark.session import get_spark, py4j_commands
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Second scale point for the per-query scaling map (set empty to skip).
@@ -319,9 +319,9 @@ def _time_keys(
     label: str = "",
     reps: int = 3,
     stat: str = "median",
-) -> tuple[dict[str, float], dict[str, float], dict[str, int]]:
+) -> tuple[dict[str, float], dict[str, float], dict[str, int], dict[str, int]]:
     """Per-key wall time at sf_dir: returns (stat_timings, min_timings,
-    build_jobs).
+    build_jobs, build_py4j_cmds).
 
     ``stat="median"`` is the REPORTED number since r11 (verdict r10 #3:
     min-of-N still let one quiet-vs-throttled host window distort a round
@@ -331,10 +331,13 @@ def _time_keys(
     anchors. One untimed warmup run absorbs codegen/classload when WARMUP
     is on; ``build_jobs`` holds the Spark jobs its ``fn(spark, sf_dir)``
     submitted (construction-time jobs: schema inference, probes, artifact
-    builds), counted through a job group."""
+    builds), counted through a job group, and ``build_py4j_cmds`` the
+    py4j commands the same build sent (its Python-side construction
+    cost)."""
     timings: dict[str, float] = {}
     mins: dict[str, float] = {}
     build_jobs: dict[str, int] = {}
+    build_py4j: dict[str, int] = {}
     sc = spark.sparkContext
     for key in keys:
         fn = BENCH_FN.get(key, registry.OPS[key].fn)
@@ -345,9 +348,11 @@ def _time_keys(
             group = f"bench-build:{label}{key}"
             sc.setJobGroup(group, key)
             try:
-                df = fn(spark, sf_dir)
+                with py4j_commands(spark) as sent:
+                    df = fn(spark, sf_dir)
             finally:
                 sc._jsc.clearJobGroup()
+            build_py4j[key] = sent[0]
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             build_jobs[key] = len(sc.statusTracker().getJobIdsForGroup(group))
             df.count()
@@ -368,10 +373,11 @@ def _time_keys(
         mins[key] = round(samples[0], 3)
         print(
             f"# {label}{key}: {timings[key]:.3f}s (min {mins[key]:.3f}) rows={n}"
-            f" build_jobs={build_jobs.get(key, '-')}",
+            f" build_jobs={build_jobs.get(key, '-')}"
+            f" build_py4j_cmds={build_py4j.get(key, '-')}",
             file=sys.stderr,
         )
-    return timings, mins, build_jobs
+    return timings, mins, build_jobs, build_py4j
 
 
 def main() -> None:
@@ -393,8 +399,10 @@ def main() -> None:
     # over ~4-5 executions, so fewer reps sampled the ramp. Extended tier
     # trimmed to ONE timed run (after warmup) to keep total bench wall
     # inside the driver budget now the registry is 350+ keys.
-    timings, min_timings, build_jobs = _time_keys(spark, keys, SF_DIR, reps=5)
-    ext_timings, _, ext_build_jobs = _time_keys(
+    timings, min_timings, build_jobs, build_py4j = _time_keys(
+        spark, keys, SF_DIR, reps=5
+    )
+    ext_timings, _, ext_build_jobs, ext_build_py4j = _time_keys(
         spark, ext_keys, SF_DIR, label="ext ", reps=1
     )
 
@@ -410,7 +418,7 @@ def main() -> None:
         if os.path.isdir(SF2_DIR) and os.path.realpath(SF2_DIR) != os.path.realpath(SF_DIR):
             # ratios are coarse (order-of-magnitude signal): min-of-2 halves the
             # pass cost without moving any conclusion
-            second, _, _ = _time_keys(
+            second, _, _, _ = _time_keys(
                 spark, keys + ext_keys, SF2_DIR, label="sf2 ", reps=2, stat="min"
             )
             big = {**timings, **ext_timings}
@@ -491,6 +499,8 @@ def main() -> None:
     # Spark jobs each key's warmup build submitted at SF_DIR (headline and
     # extended); a construction-time job shows up here as a non-zero.
     detail["build_jobs"] = {**build_jobs, **ext_build_jobs}
+    # py4j commands the same warmup build sent (construction cost).
+    detail["build_py4j_cmds"] = {**build_py4j, **ext_build_py4j}
     if stream_rows_per_sec is not None:
         detail["stream_rows_per_sec"] = stream_rows_per_sec
     if skew is not None:

@@ -167,12 +167,6 @@ def dim_window(spec, bound: str):
     return spec
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for SQL-form operators."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def literal_frame(
     spark: SparkSession, rows: Sequence[Sequence], schema: T.StructType | str
 ) -> DataFrame:

@@ -23,8 +23,8 @@ from connor_fun_streamproducer_spark.catalog import (
     epoch_div,
     literal_frame,
     load,
-    register_views,
 )
+from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, spark_sql
 from connor_fun_streamproducer_spark.registry import op
 
 
@@ -206,18 +206,17 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op(
-    "agg_grouping_sets",
-    oracle="""
-    SELECT coalesce(o_orderstatus, '(all)')   AS status,
-           coalesce(o_orderpriority, '(all)') AS priority,
-           count(*)                           AS n,
-           round(sum(o_totalprice), 4)        AS total
-    FROM orders
-    GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    """,
-    tags=("ext", "agg"),
-)
+_GROUPING_SETS_SQL = """
+SELECT coalesce(o_orderstatus, '(all)')   AS status,
+       coalesce(o_orderpriority, '(all)') AS priority,
+       count(*)                           AS n,
+       round(sum(o_totalprice), 4)        AS total
+FROM {orders}
+GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+"""
+
+
+@op("agg_grouping_sets", oracle=duckdb_sql(_GROUPING_SETS_SQL), tags=("ext", "agg"))
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS: by-status, by-priority, and grand total in one pass.
 
@@ -226,16 +225,8 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels. Group keys are coalesced to '(all)' on both sides (no real
     NULLs in these columns) so the subtotal marker hashes identically.
     """
-    register_views(spark, sf_dir)
     return spark.sql(
-        """
-        SELECT coalesce(o_orderstatus, '(all)')   AS status,
-               coalesce(o_orderpriority, '(all)') AS priority,
-               count(*)                           AS n,
-               round(sum(o_totalprice), 4)        AS total
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
+        spark_sql(_GROUPING_SETS_SQL), orders=load(spark, sf_dir, "orders")
     )
 
 

@@ -33,6 +33,7 @@ from connor_fun_streamproducer_spark.catalog import (
     events_era_mid,
     load,
 )
+from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, spark_sql
 from connor_fun_streamproducer_spark.registry import op
 
 PROFILE_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
@@ -1931,28 +1932,35 @@ def pipeline_revenue_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Welch two-sample t-test between time eras (per event type)
-# ---------------------------------------------------------------------------
-
-# two-sided 5% critical value for the normal approximation (the Welch dof
-# on these series is large; both engines compare the ROUNDED statistic
-# against this fixed literal)
-_WELCH_CRIT = 1.959964
-
-_WELCH_ORACLE = f"""
+# The era split every rank-based era op starts from: each (type, event)
+# cents row with its era, 0 before the boundary {mid} and 1 from it on.
+_ERA_ROWS = """
 WITH b AS (
-    SELECT event_type,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), span AS (
-    SELECT (min(te) + max(te)) // 2 AS mid FROM b
+    SELECT event_type, event_id, {te} AS te,
+           CAST(floor(value * 100 + 0.5e0) AS BIGINT) AS cents
+    FROM {events}
+), e AS (
+    SELECT event_type, event_id, cents,
+           CASE WHEN te < {mid} THEN 0 ELSE 1 END AS era
+    FROM b
+)"""
+
+# Per-(type, era) integer cents moments, pivoted to one row per type with
+# both eras of at least 2 events: welch, cohens_d and power_mde start here.
+# The sums are DECIMAL(38,0) so that Spark, whose sum of BIGINT is BIGINT,
+# stays exact as far as DuckDB's HUGEINT sum does.
+_ERA_MOMENTS = """
+WITH b AS (
+    SELECT event_type, {te} AS te,
+           CAST(floor(value * 100 + 0.5e0) AS BIGINT) AS cents
+    FROM {events}
 ), m AS (
     SELECT event_type,
-           CASE WHEN te < mid THEN 0 ELSE 1 END AS era,
-           count(*) AS n, sum(cents) AS s1, sum(cents * cents) AS s2
-    FROM b CROSS JOIN span GROUP BY 1, 2
+           CASE WHEN te < {mid} THEN 0 ELSE 1 END AS era,
+           count(*) AS n,
+           sum(CAST(cents AS DECIMAL(38,0))) AS s1,
+           sum(CAST(cents * cents AS DECIMAL(38,0))) AS s2
+    FROM b GROUP BY 1, 2
 ), p AS (
     SELECT event_type,
            max(CASE WHEN era = 0 THEN n END) AS na,
@@ -1964,7 +1972,31 @@ WITH b AS (
     FROM m GROUP BY 1
     HAVING max(CASE WHEN era = 0 THEN n END) >= 2
        AND max(CASE WHEN era = 1 THEN n END) >= 2
-), t AS (
+)"""
+
+
+def _eras(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Run a two-era text (``sql_front`` placeholders) over ``events``.
+
+    Each op written as one ``_..._SQL`` text below is this one call. The
+    era boundary ``{mid}`` is the fingerprint-cached
+    ``catalog.events_era_mid`` literal, so the plan scans ``events`` once
+    per use of ``b`` and carries no span probe of its own (the oracle
+    computes it as a scalar subquery).
+    """
+    return spark.sql(
+        spark_sql(text, mid=events_era_mid(spark, sf_dir)),
+        events=load(spark, sf_dir, "events"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Welch two-sample t-test between time eras (per event type)
+# ---------------------------------------------------------------------------
+
+# The verdict compares the ROUNDED t against the two-sided 5% normal
+# critical value 1.959964 (the Welch dof on these series is large).
+_WELCH_SQL = _ERA_MOMENTS + """, t AS (
     SELECT event_type, na, nb,
            (CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb)
            / nullif(sqrt(
@@ -1973,19 +2005,19 @@ WITH b AS (
                    / (na - 1)
              + (CAST(qb AS DOUBLE) / nb
                 - (CAST(sb AS DOUBLE) / nb) * (CAST(sb AS DOUBLE) / nb))
-                   / (nb - 1)), 0.0) AS tstat
+                   / (nb - 1)), 0e0) AS tstat
     FROM p
 )
 SELECT event_type,
        CAST(na AS BIGINT) AS n_era_a,
        CAST(nb AS BIGINT) AS n_era_b,
-       round(tstat, 6) + 0.0 AS t_stat,
-       abs(round(tstat, 6)) > {_WELCH_CRIT} AS reject_equal_means
+       round(tstat, 6) + 0e0 AS t_stat,
+       abs(round(tstat, 6)) > 1.959964e0 AS reject_equal_means
 FROM t
 """
 
 
-@op("stats_welch_ttest", oracle=_WELCH_ORACLE, tags=("ext", "stats"))
+@op("stats_welch_ttest", oracle=duckdb_sql(_WELCH_SQL), tags=("ext", "stats"))
 def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch two-sample t-test of event values between the first and
     second half of the observed time span, per event type — the
@@ -2010,46 +2042,7 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → (type, era) hash agg with map-side partials
     (the span probe is a 1-row agg); output is |types| rows.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    span = events_era_mid(spark, sf_dir)  # fingerprint-cached 1-row probe
-    m = b.select(
-        "event_type",
-        F.when(F.col("te") < F.lit(span), F.lit(0)).otherwise(F.lit(1)).alias("era"),
-        "cents",
-    ).groupBy("event_type", "era").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("cents").cast("decimal(38,0)")).alias("s1"),
-        F.sum((F.col("cents") * F.col("cents")).cast("decimal(38,0)")).alias("s2"),
-    )
-    p = (
-        m.groupBy("event_type")
-        .agg(
-            *[
-                F.max(F.when(F.col("era") == e, F.col(c))).alias(f"{a}{t}")
-                for e, t in ((0, "a"), (1, "b"))
-                for c, a in (("n", "n"), ("s1", "s"), ("s2", "q"))
-            ]
-        )
-        .filter((F.col("na") >= 2) & (F.col("nb") >= 2))
-    )
-    ma = F.col("sa").cast("double") / F.col("na")
-    mb = F.col("sb").cast("double") / F.col("nb")
-    va = (F.col("qa").cast("double") / F.col("na") - ma * ma) / (F.col("na") - 1)
-    vb = (F.col("qb").cast("double") / F.col("nb") - mb * mb) / (F.col("nb") - 1)
-    tstat = (ma - mb) / F.nullif(F.sqrt(va + vb), F.lit(0.0))
-    return p.select(
-        "event_type",
-        F.col("na").cast("bigint").alias("n_era_a"),
-        F.col("nb").cast("bigint").alias("n_era_b"),
-        (F.round(tstat, 6) + F.lit(0.0)).alias("t_stat"),
-        (F.abs(F.round(tstat, 6)) > F.lit(_WELCH_CRIT)).alias(
-            "reject_equal_means"
-        ),
-    )
+    return _eras(spark, sf_dir, _WELCH_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2134,55 +2127,30 @@ def stats_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Era effect size (Cohen's d) per event type — the welch companion
 # ---------------------------------------------------------------------------
 
-# |d| magnitude thresholds (Cohen 1988), compared against the ROUNDED d
-_COHEN_SMALL, _COHEN_MEDIUM, _COHEN_LARGE = 0.2, 0.5, 0.8
-
-_COHEN_ORACLE = f"""
-WITH b AS (
-    SELECT event_type,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), span AS (
-    SELECT (min(te) + max(te)) // 2 AS mid FROM b
-), m AS (
-    SELECT event_type,
-           CASE WHEN te < mid THEN 0 ELSE 1 END AS era,
-           count(*) AS n, sum(cents) AS s1, sum(cents * cents) AS s2
-    FROM b CROSS JOIN span GROUP BY 1, 2
-), p AS (
-    SELECT event_type,
-           max(CASE WHEN era = 0 THEN n END) AS na,
-           max(CASE WHEN era = 0 THEN s1 END) AS sa,
-           max(CASE WHEN era = 0 THEN s2 END) AS qa,
-           max(CASE WHEN era = 1 THEN n END) AS nb,
-           max(CASE WHEN era = 1 THEN s1 END) AS sb,
-           max(CASE WHEN era = 1 THEN s2 END) AS qb
-    FROM m GROUP BY 1
-    HAVING max(CASE WHEN era = 0 THEN n END) >= 2
-       AND max(CASE WHEN era = 1 THEN n END) >= 2
-), d AS (
+# |d| magnitude bands (Cohen 1988: 0.2 / 0.5 / 0.8), compared against the
+# ROUNDED d.
+_COHEN_SQL = _ERA_MOMENTS + """, d AS (
     SELECT event_type, na, nb,
            (CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb)
            / nullif(sqrt(
                ((CAST(qa AS DOUBLE) - CAST(sa AS DOUBLE) * sa / na)
               + (CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE) * sb / nb))
-               / (na + nb - 2)), 0.0) AS dv
+               / (na + nb - 2)), 0e0) AS dv
     FROM p
 )
 SELECT event_type,
        CAST(na AS BIGINT) AS n_era_a,
        CAST(nb AS BIGINT) AS n_era_b,
-       round(dv, 6) + 0.0 AS cohens_d,
-       CASE WHEN abs(round(dv, 6)) >= {_COHEN_LARGE} THEN 'large'
-            WHEN abs(round(dv, 6)) >= {_COHEN_MEDIUM} THEN 'medium'
-            WHEN abs(round(dv, 6)) >= {_COHEN_SMALL} THEN 'small'
+       round(dv, 6) + 0e0 AS cohens_d,
+       CASE WHEN abs(round(dv, 6)) >= 0.8e0 THEN 'large'
+            WHEN abs(round(dv, 6)) >= 0.5e0 THEN 'medium'
+            WHEN abs(round(dv, 6)) >= 0.2e0 THEN 'small'
             ELSE 'negligible' END AS magnitude
 FROM d
 """
 
 
-@op("stats_cohens_d_eras", oracle=_COHEN_ORACLE, tags=("ext", "stats"))
+@op("stats_cohens_d_eras", oracle=duckdb_sql(_COHEN_SQL), tags=("ext", "stats"))
 def stats_cohens_d_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's d standardized effect size of event value between the
     first and second half of the observed span, per event type — the
@@ -2201,73 +2169,16 @@ def stats_cohens_d_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → (type, era) hash agg with map-side partials; the
     era boundary is a 1-row probe; output is |types| rows.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    span = events_era_mid(spark, sf_dir)  # fingerprint-cached 1-row probe
-    m = b.select(
-        "event_type",
-        F.when(F.col("te") < F.lit(span), F.lit(0)).otherwise(F.lit(1)).alias("era"),
-        "cents",
-    ).groupBy("event_type", "era").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("cents").cast("decimal(38,0)")).alias("s1"),
-        F.sum((F.col("cents") * F.col("cents")).cast("decimal(38,0)")).alias("s2"),
-    )
-    p = (
-        m.groupBy("event_type")
-        .agg(
-            *[
-                F.max(F.when(F.col("era") == e, F.col(c))).alias(f"{a}{t}")
-                for e, t in ((0, "a"), (1, "b"))
-                for c, a in (("n", "n"), ("s1", "s"), ("s2", "q"))
-            ]
-        )
-        .filter((F.col("na") >= 2) & (F.col("nb") >= 2))
-    )
-    ma = F.col("sa").cast("double") / F.col("na")
-    mb = F.col("sb").cast("double") / F.col("nb")
-    ssa = F.col("qa").cast("double") - F.col("sa").cast("double") * F.col("sa") / F.col("na")
-    ssb = F.col("qb").cast("double") - F.col("sb").cast("double") * F.col("sb") / F.col("nb")
-    dv = (ma - mb) / F.nullif(
-        F.sqrt((ssa + ssb) / (F.col("na") + F.col("nb") - 2)), F.lit(0.0)
-    )
-    rd = F.round(dv, 6)
-    return p.select(
-        "event_type",
-        F.col("na").cast("bigint").alias("n_era_a"),
-        F.col("nb").cast("bigint").alias("n_era_b"),
-        (rd + F.lit(0.0)).alias("cohens_d"),
-        F.when(F.abs(rd) >= _COHEN_LARGE, F.lit("large"))
-        .when(F.abs(rd) >= _COHEN_MEDIUM, F.lit("medium"))
-        .when(F.abs(rd) >= _COHEN_SMALL, F.lit("small"))
-        .otherwise(F.lit("negligible"))
-        .alias("magnitude"),
-    )
+    return _eras(spark, sf_dir, _COHEN_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Brown–Forsythe spread test between time eras (per event type)
 # ---------------------------------------------------------------------------
 
-# F(1, inf) 5% critical value = z²; both engines compare the ROUNDED F
-_BF_CRIT = 3.841459
-
-_BF_ORACLE = f"""
-WITH b AS (
-    SELECT event_type, event_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), span AS (
-    SELECT (min(te) + max(te)) // 2 AS mid FROM b
-), e AS (
-    SELECT event_type, event_id, cents,
-           CASE WHEN te < mid THEN 0 ELSE 1 END AS era
-    FROM b CROSS JOIN span
-), r AS (
+# F(1, inf) 5% critical value = z² = 3.841459; the verdict compares the
+# ROUNDED F.
+_BF_SQL = _ERA_ROWS + """, r AS (
     SELECT event_type, era, cents,
            row_number() OVER (PARTITION BY event_type, era
                               ORDER BY cents, event_id) AS rk,
@@ -2279,7 +2190,9 @@ WITH b AS (
                        OVER (PARTITION BY event_type, era)) AS zv
     FROM r
 ), m AS (
-    SELECT event_type, era, count(*) AS n, sum(zv) AS sz, sum(zv * zv) AS qz
+    SELECT event_type, era, count(*) AS n,
+           sum(CAST(zv AS DECIMAL(38,0))) AS sz,
+           sum(CAST(zv * zv AS DECIMAL(38,0))) AS qz
     FROM z GROUP BY 1, 2
 ), p AS (
     SELECT event_type,
@@ -2300,20 +2213,20 @@ WITH b AS (
             + nb * pow(CAST(sb AS DOUBLE) / nb
                        - (CAST(sa AS DOUBLE) + sb) / (na + nb), 2))
            / nullif((CAST(qa AS DOUBLE) - CAST(sa AS DOUBLE) * sa / na)
-                  + (CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE) * sb / nb), 0.0)
+                  + (CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE) * sb / nb), 0e0)
                AS fstat
     FROM p
 )
 SELECT event_type,
        CAST(na AS BIGINT) AS n_era_a,
        CAST(nb AS BIGINT) AS n_era_b,
-       round(fstat, 6) + 0.0 AS bf_stat,
-       round(fstat, 6) > {_BF_CRIT} AS reject_equal_spread
+       round(fstat, 6) + 0e0 AS bf_stat,
+       round(fstat, 6) > 3.841459e0 AS reject_equal_spread
 FROM f
 """
 
 
-@op("stats_brown_forsythe", oracle=_BF_ORACLE, tags=("ext", "stats"))
+@op("stats_brown_forsythe", oracle=duckdb_sql(_BF_SQL), tags=("ext", "stats"))
 def stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown–Forsythe test of equal SPREAD of event values between the
     first and second half of the observed span, per event type — the
@@ -2335,94 +2248,16 @@ def stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg with map-side partials; the era boundary is a 1-row probe;
     output is |types| rows.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    span = events_era_mid(spark, sf_dir)  # fingerprint-cached 1-row probe
-    e = b.select(
-        "event_type",
-        "event_id",
-        "cents",
-        F.when(F.col("te") < F.lit(span), F.lit(0)).otherwise(F.lit(1)).alias("era"),
-    )
-    wp = Window.partitionBy("event_type", "era")
-    r = e.select(
-        "event_type",
-        "era",
-        "cents",
-        F.row_number()
-        .over(wp.orderBy(F.col("cents").asc(), F.col("event_id").asc()))
-        .alias("rk"),
-        F.count("*").over(wp).alias("ne"),
-    )
-    z = r.select(
-        "event_type",
-        "era",
-        F.abs(
-            F.col("cents")
-            - F.min(
-                F.when(F.col("rk") == F.expr("(ne + 1) div 2"), F.col("cents"))
-            ).over(wp)
-        ).alias("zv"),
-    )
-    m = z.groupBy("event_type", "era").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("zv").cast("decimal(38,0)")).alias("sz"),
-        F.sum((F.col("zv") * F.col("zv")).cast("decimal(38,0)")).alias("qz"),
-    )
-    p = (
-        m.groupBy("event_type")
-        .agg(
-            *[
-                F.max(F.when(F.col("era") == er, F.col(c))).alias(f"{a}{t}")
-                for er, t in ((0, "a"), (1, "b"))
-                for c, a in (("n", "n"), ("sz", "s"), ("qz", "q"))
-            ]
-        )
-        .filter((F.col("na") >= 2) & (F.col("nb") >= 2))
-    )
-    na, nb = F.col("na"), F.col("nb")
-    sa_d = F.col("sa").cast("double")
-    sb_d = F.col("sb").cast("double")
-    grand = (sa_d + F.col("sb")) / (na + nb)
-    between = na * F.pow(sa_d / na - grand, 2) + nb * F.pow(sb_d / nb - grand, 2)
-    within = (F.col("qa").cast("double") - sa_d * F.col("sa") / na) + (
-        F.col("qb").cast("double") - sb_d * F.col("sb") / nb
-    )
-    fstat = (na + nb - 2) * between / F.nullif(within, F.lit(0.0))
-    rf = F.round(fstat, 6)
-    return p.select(
-        "event_type",
-        na.cast("bigint").alias("n_era_a"),
-        nb.cast("bigint").alias("n_era_b"),
-        (rf + F.lit(0.0)).alias("bf_stat"),
-        (rf > F.lit(_BF_CRIT)).alias("reject_equal_spread"),
-    )
+    return _eras(spark, sf_dir, _BF_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Mood's median test between time eras (per event type)
 # ---------------------------------------------------------------------------
 
-# chi-square(1 df) 95% critical value; both engines compare the ROUNDED stat
-_MOOD_CRIT = 3.841459
-
-_MOOD_ORACLE = f"""
-WITH b AS (
-    SELECT event_type, event_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), span AS (
-    SELECT (min(te) + max(te)) // 2 AS mid FROM b
-), e AS (
-    SELECT event_type, event_id, cents,
-           CASE WHEN te < mid THEN 0 ELSE 1 END AS era
-    FROM b CROSS JOIN span
-), r AS (
+# chi-square(1 df) 95% critical value 3.841459; the verdict compares the
+# ROUNDED statistic.
+_MOOD_SQL = _ERA_ROWS + """, r AS (
     SELECT event_type, era, cents,
            row_number() OVER (PARTITION BY event_type
                               ORDER BY cents, event_id) AS rk,
@@ -2449,7 +2284,7 @@ WITH b AS (
            * (CAST(a AS DOUBLE) * d - CAST(b2 AS DOUBLE) * c2)
            * (CAST(a AS DOUBLE) * d - CAST(b2 AS DOUBLE) * c2)
            / nullif(CAST(a + b2 AS DOUBLE) * (c2 + d) * (a + c2) * (b2 + d),
-                    0.0) AS chi2
+                    0e0) AS chi2
     FROM c
 )
 SELECT event_type,
@@ -2457,13 +2292,13 @@ SELECT event_type,
        CAST(b2 + d AS BIGINT) AS n_era_b,
        CAST(a AS BIGINT) AS n_above_a,
        CAST(b2 AS BIGINT) AS n_above_b,
-       round(chi2, 6) + 0.0 AS mood_chi2,
-       round(chi2, 6) > {_MOOD_CRIT} AS reject_equal_medians
+       round(chi2, 6) + 0e0 AS mood_chi2,
+       round(chi2, 6) > 3.841459e0 AS reject_equal_medians
 FROM f
 """
 
 
-@op("stats_mood_median", oracle=_MOOD_ORACLE, tags=("ext", "stats"))
+@op("stats_mood_median", oracle=duckdb_sql(_MOOD_SQL), tags=("ext", "stats"))
 def stats_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mood's median test of event values between the first and second
     half of the observed span, per event type — the nonparametric
@@ -2485,91 +2320,19 @@ def stats_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → a per-type rank window (one exchange) → hash agg
     with map-side partials; output is |types| rows.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    span = events_era_mid(spark, sf_dir)  # fingerprint-cached 1-row probe
-    e = b.select(
-        "event_type",
-        "event_id",
-        "cents",
-        F.when(F.col("te") < F.lit(span), F.lit(0)).otherwise(F.lit(1)).alias("era"),
-    )
-    wt = Window.partitionBy("event_type")
-    r = e.select(
-        "event_type",
-        "era",
-        "cents",
-        F.row_number()
-        .over(wt.orderBy(F.col("cents").asc(), F.col("event_id").asc()))
-        .alias("rk"),
-        F.count("*").over(wt).alias("nt"),
-    )
-    cl = r.select(
-        "event_type",
-        "era",
-        (
-            F.col("cents")
-            > F.min(
-                F.when(F.col("rk") == F.expr("(nt + 1) div 2"), F.col("cents"))
-            ).over(wt)
-        )
-        .cast("int")
-        .alias("above"),
-    )
-    c = (
-        cl.groupBy("event_type")
-        .agg(
-            F.sum(F.when((F.col("era") == 0) & (F.col("above") == 1), 1).otherwise(0)).alias("a"),
-            F.sum(F.when((F.col("era") == 0) & (F.col("above") == 0), 1).otherwise(0)).alias("c2"),
-            F.sum(F.when((F.col("era") == 1) & (F.col("above") == 1), 1).otherwise(0)).alias("b2"),
-            F.sum(F.when((F.col("era") == 1) & (F.col("above") == 0), 1).otherwise(0)).alias("d"),
-        )
-        .filter((F.col("a") + F.col("c2") >= 2) & (F.col("b2") + F.col("d") >= 2))
-    )
-    a, b2, c2, d = F.col("a"), F.col("b2"), F.col("c2"), F.col("d")
-    det = a.cast("double") * d - b2.cast("double") * c2
-    chi2 = (
-        (a + b2 + c2 + d).cast("double")
-        * det
-        * det
-        / F.nullif((a + b2).cast("double") * (c2 + d) * (a + c2) * (b2 + d), F.lit(0.0))
-    )
-    rc = F.round(chi2, 6)
-    return c.select(
-        "event_type",
-        (a + c2).cast("bigint").alias("n_era_a"),
-        (b2 + d).cast("bigint").alias("n_era_b"),
-        a.cast("bigint").alias("n_above_a"),
-        b2.cast("bigint").alias("n_above_b"),
-        (rc + F.lit(0.0)).alias("mood_chi2"),
-        (rc > F.lit(_MOOD_CRIT)).alias("reject_equal_medians"),
-    )
+    return _eras(spark, sf_dir, _MOOD_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Mann–Whitney rank-sum test between time eras (per event type)
 # ---------------------------------------------------------------------------
 
-# normal 5% two-sided critical value; both engines compare the ROUNDED z
-_MW_CRIT = 1.959964
-
-_MW_ORACLE = f"""
-WITH b AS (
-    SELECT event_type, event_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), span AS (
-    SELECT (min(te) + max(te)) // 2 AS mid FROM b
-), e AS (
-    SELECT event_type, event_id, cents,
-           CASE WHEN te < mid THEN 0 ELSE 1 END AS era
-    FROM b CROSS JOIN span
-), rk AS (
+# The tie group's min/max/count come from the PEER frame of a cents-ordered
+# RANGE window: it keeps the rank window's event_type partitioning, so the
+# whole rank+tie stage is ONE exchange (a (type, cents) PARTITION BY would
+# force a second). The verdict compares the ROUNDED z against the
+# two-sided 5% normal critical value 1.959964.
+_MW_SQL = _ERA_ROWS + """, rk AS (
     SELECT event_type, era, cents,
            row_number() OVER (PARTITION BY event_type
                               ORDER BY cents, event_id) AS r
@@ -2596,24 +2359,24 @@ WITH b AS (
     SELECT event_type, na, nb,
            ra2 - na * (na + 1) AS u2,
            (CAST(ra2 - na * (na + 1) AS DOUBLE) - CAST(na AS DOUBLE) * nb)
-           / nullif(2.0 * sqrt(
-               CAST(na AS DOUBLE) * nb / 12.0
+           / nullif(2e0 * sqrt(
+               CAST(na AS DOUBLE) * nb / 12e0
                * ((na + nb + 1)
                   - CAST(tie3 AS DOUBLE)
-                    / (CAST(na + nb AS DOUBLE) * (na + nb - 1)))), 0.0) AS zs
+                    / (CAST(na + nb AS DOUBLE) * (na + nb - 1)))), 0e0) AS zs
     FROM g
 )
 SELECT event_type,
        CAST(na AS BIGINT) AS n_era_a,
        CAST(nb AS BIGINT) AS n_era_b,
        CAST(u2 AS BIGINT) AS u_doubled,
-       round(zs, 6) + 0.0 AS z_stat,
-       abs(round(zs, 6)) > {_MW_CRIT} AS reject_equal_location
+       round(zs, 6) + 0e0 AS z_stat,
+       abs(round(zs, 6)) > 1.959964e0 AS reject_equal_location
 FROM z
 """
 
 
-@op("stats_mann_whitney", oracle=_MW_ORACLE, tags=("ext", "stats"))
+@op("stats_mann_whitney", oracle=duckdb_sql(_MW_SQL), tags=("ext", "stats"))
 def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann–Whitney U (Wilcoxon rank-sum) test of event values between
     the first and second half of the observed span, per event type —
@@ -2643,94 +2406,17 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats_cliff_delta deliberately uses n ≥ 1 instead: δ is a plain
     probability difference, well-defined from a single observation.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    span = events_era_mid(spark, sf_dir)  # fingerprint-cached 1-row probe
-    e = b.select(
-        "event_type",
-        "event_id",
-        "cents",
-        F.when(F.col("te") < F.lit(span), F.lit(0)).otherwise(F.lit(1)).alias("era"),
-    )
-    wt = Window.partitionBy("event_type")
-    rk = e.select(
-        "event_type",
-        "era",
-        "cents",
-        F.row_number()
-        .over(wt.orderBy(F.col("cents").asc(), F.col("event_id").asc()))
-        .alias("r"),
-    )
-    # tie-group min/max/count via the PEER frame of a cents-ordered RANGE
-    # window — same event_type partitioning as the rank window, so the
-    # whole rank+tie stage is ONE exchange (a (type, cents) partitionBy
-    # would force a second)
-    wg = wt.orderBy("cents").rangeBetween(Window.currentRow, Window.currentRow)
-    r = rk.select(
-        "event_type",
-        "era",
-        (F.min("r").over(wg) + F.max("r").over(wg)).alias("r2"),
-        F.count("*").over(wg).alias("t"),
-    )
-    g = (
-        r.groupBy("event_type")
-        .agg(
-            F.sum(F.when(F.col("era") == 0, 1).otherwise(0)).alias("na"),
-            F.sum(F.when(F.col("era") == 1, 1).otherwise(0)).alias("nb"),
-            F.sum(F.when(F.col("era") == 0, F.col("r2")).otherwise(0)).alias("ra2"),
-            F.sum(F.col("t") * F.col("t") - 1).alias("tie3"),
-        )
-        .filter((F.col("na") >= 2) & (F.col("nb") >= 2))
-    )
-    na, nb = F.col("na"), F.col("nb")
-    u2 = F.col("ra2") - na * (na + 1)
-    zs = (u2.cast("double") - na.cast("double") * nb) / F.nullif(
-        F.lit(2.0)
-        * F.sqrt(
-            na.cast("double") * nb / F.lit(12.0)
-            * (
-                (na + nb + 1)
-                - F.col("tie3").cast("double")
-                / ((na + nb).cast("double") * (na + nb - 1))
-            )
-        ),
-        F.lit(0.0),
-    )
-    rz = F.round(zs, 6)
-    return g.select(
-        "event_type",
-        na.cast("bigint").alias("n_era_a"),
-        nb.cast("bigint").alias("n_era_b"),
-        u2.cast("bigint").alias("u_doubled"),
-        (rz + F.lit(0.0)).alias("z_stat"),
-        (F.abs(rz) > F.lit(_MW_CRIT)).alias("reject_equal_location"),
-    )
+    return _eras(spark, sf_dir, _MW_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Cliff's delta ordinal effect size between time eras (per event type)
 # ---------------------------------------------------------------------------
 
-# |delta| magnitude thresholds (Romano et al. 2006), vs the ROUNDED delta
-_CLIFF_SMALL, _CLIFF_MEDIUM, _CLIFF_LARGE = 0.147, 0.33, 0.474
-
-_CLIFF_ORACLE = f"""
-WITH b AS (
-    SELECT event_type, event_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), span AS (
-    SELECT (min(te) + max(te)) // 2 AS mid FROM b
-), e AS (
-    SELECT event_type, event_id, cents,
-           CASE WHEN te < mid THEN 0 ELSE 1 END AS era
-    FROM b CROSS JOIN span
-), rk AS (
+# |delta| magnitude bands (Romano et al. 2006: 0.147 / 0.33 / 0.474),
+# compared against the ROUNDED delta; ties via the PEER frame, as in
+# stats_mann_whitney (one exchange).
+_CLIFF_SQL = _ERA_ROWS + """, rk AS (
     SELECT event_type, era, cents,
            row_number() OVER (PARTITION BY event_type
                               ORDER BY cents, event_id) AS r
@@ -2759,16 +2445,16 @@ WITH b AS (
 SELECT event_type,
        CAST(na AS BIGINT) AS n_era_a,
        CAST(nb AS BIGINT) AS n_era_b,
-       round(dv, 6) + 0.0 AS cliff_delta,
-       CASE WHEN abs(round(dv, 6)) >= {_CLIFF_LARGE} THEN 'large'
-            WHEN abs(round(dv, 6)) >= {_CLIFF_MEDIUM} THEN 'medium'
-            WHEN abs(round(dv, 6)) >= {_CLIFF_SMALL} THEN 'small'
+       round(dv, 6) + 0e0 AS cliff_delta,
+       CASE WHEN abs(round(dv, 6)) >= 0.474e0 THEN 'large'
+            WHEN abs(round(dv, 6)) >= 0.33e0 THEN 'medium'
+            WHEN abs(round(dv, 6)) >= 0.147e0 THEN 'small'
             ELSE 'negligible' END AS magnitude
 FROM d
 """
 
 
-@op("stats_cliff_delta", oracle=_CLIFF_ORACLE, tags=("ext", "stats"))
+@op("stats_cliff_delta", oracle=duckdb_sql(_CLIFF_SQL), tags=("ext", "stats"))
 def stats_cliff_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cliff's delta ordinal effect size of event values between the
     first and second half of the observed span, per event type — the
@@ -2795,60 +2481,7 @@ def stats_cliff_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     well-defined at a single observation, while the rank-sum z needs
     a variance and is not. The asymmetry is a choice, not an oversight.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    span = events_era_mid(spark, sf_dir)  # fingerprint-cached 1-row probe
-    e = b.select(
-        "event_type",
-        "event_id",
-        "cents",
-        F.when(F.col("te") < F.lit(span), F.lit(0)).otherwise(F.lit(1)).alias("era"),
-    )
-    wt = Window.partitionBy("event_type")
-    rk = e.select(
-        "event_type",
-        "era",
-        "cents",
-        F.row_number()
-        .over(wt.orderBy(F.col("cents").asc(), F.col("event_id").asc()))
-        .alias("r"),
-    )
-    # PEER-frame tie handling — see stats_mann_whitney: one exchange
-    wg = wt.orderBy("cents").rangeBetween(Window.currentRow, Window.currentRow)
-    r = rk.select(
-        "event_type",
-        "era",
-        (F.min("r").over(wg) + F.max("r").over(wg)).alias("r2"),
-    )
-    g = (
-        r.groupBy("event_type")
-        .agg(
-            F.sum(F.when(F.col("era") == 0, 1).otherwise(0)).alias("na"),
-            F.sum(F.when(F.col("era") == 1, 1).otherwise(0)).alias("nb"),
-            F.sum(F.when(F.col("era") == 0, F.col("r2")).otherwise(0)).alias("ra2"),
-        )
-        .filter((F.col("na") >= 1) & (F.col("nb") >= 1))
-    )
-    na, nb = F.col("na"), F.col("nb")
-    dv = (F.col("ra2") - na * (na + 1) - na * nb).cast("double") / (
-        na.cast("double") * nb
-    )
-    rd = F.round(dv, 6)
-    return g.select(
-        "event_type",
-        na.cast("bigint").alias("n_era_a"),
-        nb.cast("bigint").alias("n_era_b"),
-        (rd + F.lit(0.0)).alias("cliff_delta"),
-        F.when(F.abs(rd) >= _CLIFF_LARGE, F.lit("large"))
-        .when(F.abs(rd) >= _CLIFF_MEDIUM, F.lit("medium"))
-        .when(F.abs(rd) >= _CLIFF_SMALL, F.lit("small"))
-        .otherwise(F.lit("negligible"))
-        .alias("magnitude"),
-    )
+    return _eras(spark, sf_dir, _CLIFF_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2959,34 +2592,8 @@ def stats_quantile_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Minimum detectable effect for the era mean test (experimental design)
 # ---------------------------------------------------------------------------
 
-# two-sided 5% + 80% power: z_{alpha/2} + z_{beta}
-_MDE_Z = 1.959964 + 0.841621
-
-_MDE_ORACLE = f"""
-WITH b AS (
-    SELECT event_type,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), span AS (
-    SELECT (min(te) + max(te)) // 2 AS mid FROM b
-), m AS (
-    SELECT event_type,
-           CASE WHEN te < mid THEN 0 ELSE 1 END AS era,
-           count(*) AS n, sum(cents) AS s1, sum(cents * cents) AS s2
-    FROM b CROSS JOIN span GROUP BY 1, 2
-), p AS (
-    SELECT event_type,
-           max(CASE WHEN era = 0 THEN n END) AS na,
-           max(CASE WHEN era = 0 THEN s1 END) AS sa,
-           max(CASE WHEN era = 0 THEN s2 END) AS qa,
-           max(CASE WHEN era = 1 THEN n END) AS nb,
-           max(CASE WHEN era = 1 THEN s1 END) AS sb,
-           max(CASE WHEN era = 1 THEN s2 END) AS qb
-    FROM m GROUP BY 1
-    HAVING max(CASE WHEN era = 0 THEN n END) >= 2
-       AND max(CASE WHEN era = 1 THEN n END) >= 2
-), d AS (
+# two-sided 5% + 80% power: z_{alpha/2} + z_beta = 1.959964 + 0.841621
+_MDE_SQL = _ERA_MOMENTS + """, d AS (
     SELECT event_type, na, nb,
            sqrt((CAST(qa AS DOUBLE) / na
                  - (CAST(sa AS DOUBLE) / na) * (CAST(sa AS DOUBLE) / na))
@@ -2999,13 +2606,13 @@ WITH b AS (
 SELECT event_type,
        CAST(na AS BIGINT) AS n_era_a,
        CAST(nb AS BIGINT) AS n_era_b,
-       round(se, 4) + 0.0 AS se_cents,
-       round({_MDE_Z} * se, 4) + 0.0 AS mde_cents
+       round(se, 4) + 0e0 AS se_cents,
+       round(2.801585e0 * se, 4) + 0e0 AS mde_cents
 FROM d
 """
 
 
-@op("stats_power_mde", oracle=_MDE_ORACLE, tags=("ext", "stats"))
+@op("stats_power_mde", oracle=duckdb_sql(_MDE_SQL), tags=("ext", "stats"))
 def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minimum detectable effect of the era mean comparison, per event
     type: the smallest true mean shift (in cents) the welch test would
@@ -3014,7 +2621,7 @@ def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE trusting a quiet verdict. stats_welch_ttest saying "no move"
     means nothing if the MDE is $40; this is the column that turns a
     non-rejection into a statement ("any move bigger than X would have
-    been caught"). MDE = (z_{{α/2}} + z_β)·SE with the welch standard
+    been caught"). MDE = (z_{α/2} + z_β)·SE with the welch standard
     error — the standard two-sample power inversion.
 
     Exact: the same per-era integer cents moments as the welch op; SE
@@ -3024,44 +2631,7 @@ def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → (type, era) hash agg with map-side partials +
     the 1-row span probe; output is |types| rows.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    span = events_era_mid(spark, sf_dir)  # fingerprint-cached 1-row probe
-    m = b.select(
-        "event_type",
-        F.when(F.col("te") < F.lit(span), F.lit(0)).otherwise(F.lit(1)).alias("era"),
-        "cents",
-    ).groupBy("event_type", "era").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("cents").cast("decimal(38,0)")).alias("s1"),
-        F.sum((F.col("cents") * F.col("cents")).cast("decimal(38,0)")).alias("s2"),
-    )
-    p = (
-        m.groupBy("event_type")
-        .agg(
-            *[
-                F.max(F.when(F.col("era") == e, F.col(c))).alias(f"{a}{t}")
-                for e, t in ((0, "a"), (1, "b"))
-                for c, a in (("n", "n"), ("s1", "s"), ("s2", "q"))
-            ]
-        )
-        .filter((F.col("na") >= 2) & (F.col("nb") >= 2))
-    )
-    ma = F.col("sa").cast("double") / F.col("na")
-    mb = F.col("sb").cast("double") / F.col("nb")
-    va = (F.col("qa").cast("double") / F.col("na") - ma * ma) / (F.col("na") - 1)
-    vb = (F.col("qb").cast("double") / F.col("nb") - mb * mb) / (F.col("nb") - 1)
-    se = F.sqrt(va + vb)
-    return p.select(
-        "event_type",
-        F.col("na").cast("bigint").alias("n_era_a"),
-        F.col("nb").cast("bigint").alias("n_era_b"),
-        (F.round(se, 4) + F.lit(0.0)).alias("se_cents"),
-        (F.round(F.lit(_MDE_Z) * se, 4) + F.lit(0.0)).alias("mde_cents"),
-    )
+    return _eras(spark, sf_dir, _MDE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -3432,21 +3002,8 @@ def stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests)
 # ---------------------------------------------------------------------------
 
-_H_SMALL, _H_MEDIUM, _H_LARGE = 0.2, 0.5, 0.8
-
-_COHENS_H_ORACLE = """
-WITH b AS (
-    SELECT event_type, event_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), span AS (
-    SELECT (min(te) + max(te)) // 2 AS mid FROM b
-), e AS (
-    SELECT event_type, event_id, cents,
-           CASE WHEN te < mid THEN 0 ELSE 1 END AS era
-    FROM b CROSS JOIN span
-), r AS (
+# |h| magnitude bands (Cohen: 0.2 / 0.5 / 0.8) on the rounded h.
+_COHENS_H_SQL = _ERA_ROWS + """, r AS (
     SELECT event_type, era, cents,
            row_number() OVER (PARTITION BY event_type
                               ORDER BY cents, event_id) AS rk,
@@ -3470,7 +3027,7 @@ WITH b AS (
 ), f AS (
     SELECT event_type, na, nb, xa, xb,
            round(2 * asin(sqrt(CAST(xb AS DOUBLE) / nb))
-                 - 2 * asin(sqrt(CAST(xa AS DOUBLE) / na)), 6) + 0.0 AS h
+                 - 2 * asin(sqrt(CAST(xa AS DOUBLE) / na)), 6) + 0e0 AS h
     FROM c
 )
 SELECT event_type,
@@ -3479,15 +3036,15 @@ SELECT event_type,
        CAST(xa * 10000 // na AS BIGINT) AS p_above_a_bp,
        CAST(xb * 10000 // nb AS BIGINT) AS p_above_b_bp,
        h AS cohens_h,
-       CASE WHEN abs(h) >= 0.8 THEN 'large'
-            WHEN abs(h) >= 0.5 THEN 'medium'
-            WHEN abs(h) >= 0.2 THEN 'small'
+       CASE WHEN abs(h) >= 0.8e0 THEN 'large'
+            WHEN abs(h) >= 0.5e0 THEN 'medium'
+            WHEN abs(h) >= 0.2e0 THEN 'small'
             ELSE 'negligible' END AS magnitude
 FROM f
 """
 
 
-@op("stats_cohens_h", oracle=_COHENS_H_ORACLE, tags=("ext", "stats"))
+@op("stats_cohens_h", oracle=duckdb_sql(_COHENS_H_SQL), tags=("ext", "stats"))
 def stats_cohens_h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's h effect size of the era shift in the ABOVE-POOLED-MEDIAN
     proportion, per event type — it SIZES what stats_mood_median TESTS,
@@ -3511,69 +3068,7 @@ def stats_cohens_h(spark: SparkSession, sf_dir: str) -> DataFrame:
     Support floor: n ≥ 1 per era — h, like cliff's δ, is a plain
     function of proportions and is well-defined from one observation.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    span = events_era_mid(spark, sf_dir)  # fingerprint-cached 1-row probe
-    e = b.select(
-        "event_type",
-        "event_id",
-        "cents",
-        F.when(F.col("te") < F.lit(span), F.lit(0)).otherwise(F.lit(1)).alias("era"),
-    )
-    wt = Window.partitionBy("event_type")
-    r = e.select(
-        "event_type",
-        "era",
-        "cents",
-        F.row_number()
-        .over(wt.orderBy(F.col("cents").asc(), F.col("event_id").asc()))
-        .alias("rk"),
-        F.count("*").over(wt).alias("nt"),
-    )
-    cl = r.select(
-        "event_type",
-        "era",
-        (
-            F.col("cents")
-            > F.min(
-                F.when(F.col("rk") == F.expr("(nt + 1) div 2"), F.col("cents"))
-            ).over(wt)
-        )
-        .cast("int")
-        .alias("above"),
-    )
-    c = (
-        cl.groupBy("event_type")
-        .agg(
-            F.sum(F.when(F.col("era") == 0, 1).otherwise(0)).alias("na"),
-            F.sum(F.when(F.col("era") == 1, 1).otherwise(0)).alias("nb"),
-            F.sum(F.when(F.col("era") == 0, F.col("above")).otherwise(0)).alias("xa"),
-            F.sum(F.when(F.col("era") == 1, F.col("above")).otherwise(0)).alias("xb"),
-        )
-        .filter((F.col("na") >= 1) & (F.col("nb") >= 1))
-    )
-    h = F.round(
-        2 * F.asin(F.sqrt(F.col("xb").cast("double") / F.col("nb")))
-        - 2 * F.asin(F.sqrt(F.col("xa").cast("double") / F.col("na"))),
-        6,
-    ) + F.lit(0.0)
-    return c.select(
-        "event_type",
-        F.col("na").cast("bigint").alias("n_era_a"),
-        F.col("nb").cast("bigint").alias("n_era_b"),
-        F.expr("xa * 10000 div na").cast("bigint").alias("p_above_a_bp"),
-        F.expr("xb * 10000 div nb").cast("bigint").alias("p_above_b_bp"),
-        h.alias("cohens_h"),
-        F.when(F.abs(h) >= _H_LARGE, F.lit("large"))
-        .when(F.abs(h) >= _H_MEDIUM, F.lit("medium"))
-        .when(F.abs(h) >= _H_SMALL, F.lit("small"))
-        .otherwise(F.lit("negligible"))
-        .alias("magnitude"),
-    )
+    return _eras(spark, sf_dir, _COHENS_H_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -4203,22 +3698,18 @@ def stats_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
 # McNemar's paired-eras activity test (per event type, round 13)
 # ---------------------------------------------------------------------------
 
-_MCNEMAR_CRIT = 3.841459  # chi-square(1) 95%
-
-_MCNEMAR_ORACLE = f"""
+# chi-square(1) 95% critical value 3.841459 on the rounded statistic.
+_MCNEMAR_SQL = """
 WITH b AS (
-    SELECT event_type, user_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te
-    FROM events
-), span AS (
-    SELECT (min(te) + max(te)) // 2 AS mid FROM b
+    SELECT event_type, user_id, {te} AS te
+    FROM {events}
 ), uni AS (
     SELECT count(DISTINCT user_id) AS n_users FROM b
 ), flags AS (
     SELECT event_type, user_id,
-           max(CASE WHEN te <  mid THEN 1 ELSE 0 END) AS fa,
-           max(CASE WHEN te >= mid THEN 1 ELSE 0 END) AS fb
-    FROM b CROSS JOIN span
+           max(CASE WHEN te <  {mid} THEN 1 ELSE 0 END) AS fa,
+           max(CASE WHEN te >= {mid} THEN 1 ELSE 0 END) AS fb
+    FROM b
     GROUP BY event_type, user_id
 ), d AS (
     SELECT event_type,
@@ -4233,15 +3724,15 @@ SELECT event_type,
        CAST(n01 AS BIGINT) AS n_active_b_only,
        CAST(n11 AS BIGINT) AS n_active_both,
        round(CAST((n10 - n01) * (n10 - n01) AS DOUBLE)
-             / nullif(n10 + n01, 0), 6) + 0.0 AS chi2,
+             / nullif(n10 + n01, 0), 6) + 0e0 AS chi2,
        round(CAST((n10 - n01) * (n10 - n01) AS DOUBLE)
-             / nullif(n10 + n01, 0), 6) > {_MCNEMAR_CRIT}
+             / nullif(n10 + n01, 0), 6) > 3.841459e0
            AS reject_symmetric_change
 FROM d CROSS JOIN uni u
 """
 
 
-@op("stats_mcnemar", oracle=_MCNEMAR_ORACLE, tags=("ext", "stats"))
+@op("stats_mcnemar", oracle=duckdb_sql(_MCNEMAR_SQL), tags=("ext", "stats"))
 def stats_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """McNemar's test of PAIRED activity change per event type: each
     user is their own control — was the user active in era A, in era
@@ -4259,78 +3750,44 @@ def stats_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → (type, user) presence agg with map-side partials
     → |types| rows; the user universe is a 1-row companion aggregate.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type", "user_id", epoch_seconds("ts").alias("te")
-    )
-    span = events_era_mid(spark, sf_dir)  # fingerprint-cached 1-row probe
-    flags = b.groupBy("event_type", "user_id").agg(
-        F.max(F.when(F.col("te") < F.lit(span), 1).otherwise(0)).alias("fa"),
-        F.max(F.when(F.col("te") >= F.lit(span), 1).otherwise(0)).alias("fb"),
-    )
-    uni = b.agg(F.countDistinct("user_id").alias("n_users"))
-    d = flags.groupBy("event_type").agg(
-        F.sum(F.when((F.col("fa") == 1) & (F.col("fb") == 0), 1).otherwise(0)).alias(
-            "n10"
-        ),
-        F.sum(F.when((F.col("fa") == 0) & (F.col("fb") == 1), 1).otherwise(0)).alias(
-            "n01"
-        ),
-        F.sum(F.when((F.col("fa") == 1) & (F.col("fb") == 1), 1).otherwise(0)).alias(
-            "n11"
-        ),
-    )
-    chi2 = F.round(
-        ((F.col("n10") - F.col("n01")) * (F.col("n10") - F.col("n01"))).cast(
-            "double"
-        )
-        / F.nullif(F.col("n10") + F.col("n01"), F.lit(0)),
-        6,
-    )
-    return d.crossJoin(F.broadcast(uni)).select(
-        "event_type",
-        F.col("n_users").cast("bigint").alias("n_users"),
-        F.col("n10").cast("bigint").alias("n_active_a_only"),
-        F.col("n01").cast("bigint").alias("n_active_b_only"),
-        F.col("n11").cast("bigint").alias("n_active_both"),
-        (chi2 + F.lit(0.0)).alias("chi2"),
-        (chi2 > F.lit(_MCNEMAR_CRIT)).alias("reject_symmetric_change"),
-    )
+    return _eras(spark, sf_dir, _MCNEMAR_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Wilcoxon signed-rank test on paired per-user era totals (round 13)
 # ---------------------------------------------------------------------------
 
-_WSR_CRIT = 1.959964  # standard normal 95% two-sided
-
-_WSR_ORACLE = f"""
+# Tie groups via the PEER frame of an |d|-ordered RANGE window (one
+# exchange with the rank window, as in stats_mann_whitney). The verdict
+# compares the ROUNDED z against the two-sided 5% normal critical value
+# 1.959964.
+_WSR_SQL = """
 WITH b AS (
-    SELECT event_type, user_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), span AS (
-    SELECT (min(te) + max(te)) // 2 AS mid FROM b
+    SELECT event_type, user_id, {te} AS te,
+           CAST(floor(value * 100 + 0.5e0) AS BIGINT) AS cents
+    FROM {events}
 ), pair AS (
     SELECT event_type, user_id,
-           sum(CASE WHEN te >= mid THEN cents ELSE 0 END)
-         - sum(CASE WHEN te <  mid THEN cents ELSE 0 END) AS d
-    FROM b CROSS JOIN span
+           sum(CASE WHEN te >= {mid} THEN cents ELSE 0 END)
+         - sum(CASE WHEN te <  {mid} THEN cents ELSE 0 END) AS d
+    FROM b
     GROUP BY event_type, user_id
 ), nz AS (
     SELECT event_type, user_id, d, abs(d) AS ad
     FROM pair WHERE d <> 0
 ), rk AS (
-    SELECT event_type, d,
+    SELECT event_type, d, ad,
            row_number() OVER (PARTITION BY event_type
-                              ORDER BY ad, user_id) AS r,
-           ad
+                              ORDER BY ad, user_id) AS r
     FROM nz
 ), tg AS (
     SELECT event_type, d,
-           min(r) OVER (PARTITION BY event_type, ad)
-         + max(r) OVER (PARTITION BY event_type, ad) AS r2,
-           count(*) OVER (PARTITION BY event_type, ad) AS t
+           min(r) OVER (PARTITION BY event_type ORDER BY ad
+                        RANGE BETWEEN CURRENT ROW AND CURRENT ROW)
+         + max(r) OVER (PARTITION BY event_type ORDER BY ad
+                        RANGE BETWEEN CURRENT ROW AND CURRENT ROW) AS r2,
+           count(*) OVER (PARTITION BY event_type ORDER BY ad
+                          RANGE BETWEEN CURRENT ROW AND CURRENT ROW) AS t
     FROM rk
 ), g AS (
     SELECT event_type,
@@ -4339,23 +3796,23 @@ WITH b AS (
            sum(t * t - 1) AS tie3
     FROM tg GROUP BY event_type
     HAVING count(*) >= 2
+), z AS (
+    SELECT event_type, n, w2p,
+           round((CAST(w2p AS DOUBLE) / 2 - CAST(n AS DOUBLE) * (n + 1) / 4)
+                 / nullif(sqrt(CAST(n AS DOUBLE) * (n + 1) * (2 * n + 1) / 24
+                               - CAST(tie3 AS DOUBLE) / 48), 0e0), 6) AS rz
+    FROM g
 )
 SELECT event_type,
        CAST(n AS BIGINT) AS n_nonzero,
        CAST(w2p AS BIGINT) AS w_plus_doubled,
-       round((CAST(w2p AS DOUBLE) / 2 - CAST(n AS DOUBLE) * (n + 1) / 4)
-             / nullif(sqrt(CAST(n AS DOUBLE) * (n + 1) * (2 * n + 1) / 24
-                           - CAST(tie3 AS DOUBLE) / 48), 0.0), 6) + 0.0
-           AS z_stat,
-       abs(round((CAST(w2p AS DOUBLE) / 2 - CAST(n AS DOUBLE) * (n + 1) / 4)
-             / nullif(sqrt(CAST(n AS DOUBLE) * (n + 1) * (2 * n + 1) / 24
-                           - CAST(tie3 AS DOUBLE) / 48), 0.0), 6))
-           > {_WSR_CRIT} AS reject_no_shift
-FROM g
+       rz + 0e0 AS z_stat,
+       abs(rz) > 1.959964e0 AS reject_no_shift
+FROM z
 """
 
 
-@op("stats_wilcoxon_signed_rank", oracle=_WSR_ORACLE, tags=("ext", "stats"))
+@op("stats_wilcoxon_signed_rank", oracle=duckdb_sql(_WSR_SQL), tags=("ext", "stats"))
 def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wilcoxon signed-rank test on PAIRED per-user era totals, per
     event type: each user's era-B cents total minus their era-A total
@@ -4376,64 +3833,7 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows (one exchange, both key on event_type first) → |types|
     rows. Support floor n ≥ 2 (variance degenerate below).
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        "user_id",
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    span = events_era_mid(spark, sf_dir)  # fingerprint-cached 1-row probe
-    pair = b.groupBy("event_type", "user_id").agg(
-        (
-            F.sum(F.when(F.col("te") >= F.lit(span), F.col("cents")).otherwise(0))
-            - F.sum(F.when(F.col("te") < F.lit(span), F.col("cents")).otherwise(0))
-        ).alias("d")
-    )
-    nz = pair.filter(F.col("d") != 0).select(
-        "event_type", "user_id", "d", F.abs("d").alias("ad")
-    )
-    wt = Window.partitionBy("event_type")
-    rk = nz.select(
-        "event_type",
-        "d",
-        "ad",
-        F.row_number().over(wt.orderBy("ad", "user_id")).alias("r"),
-    )
-    wg = wt.orderBy("ad").rangeBetween(Window.currentRow, Window.currentRow)
-    tg = rk.select(
-        "event_type",
-        "d",
-        (F.min("r").over(wg) + F.max("r").over(wg)).alias("r2"),
-        F.count("*").over(wg).alias("t"),
-    )
-    g = (
-        tg.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(F.col("d") > 0, F.col("r2")).otherwise(0)).alias("w2p"),
-            F.sum(F.col("t") * F.col("t") - 1).alias("tie3"),
-        )
-        .filter(F.col("n") >= 2)
-    )
-    nd = F.col("n").cast("double")
-    z = F.round(
-        (F.col("w2p").cast("double") / 2 - nd * (F.col("n") + 1) / 4)
-        / F.nullif(
-            F.sqrt(
-                nd * (F.col("n") + 1) * (2 * F.col("n") + 1) / 24
-                - F.col("tie3").cast("double") / 48
-            ),
-            F.lit(0.0),
-        ),
-        6,
-    )
-    return g.select(
-        "event_type",
-        F.col("n").cast("bigint").alias("n_nonzero"),
-        F.col("w2p").cast("bigint").alias("w_plus_doubled"),
-        (z + F.lit(0.0)).alias("z_stat"),
-        (F.abs(z) > F.lit(_WSR_CRIT)).alias("reject_no_shift"),
-    )
+    return _eras(spark, sf_dir, _WSR_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -4764,21 +4164,7 @@ def stats_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Asymptotic 5% critical value of the two-sample CvM statistic T
 # (Anderson 1962: T converges to the one-sample omega^2 limiting
 # distribution; P(T > 0.461) ~= 0.05).
-_CVM_CRIT = 0.461
-
-_CVM_ORACLE = f"""
-WITH b AS (
-    SELECT event_type, event_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), span AS (
-    SELECT (min(te) + max(te)) // 2 AS mid FROM b
-), e AS (
-    SELECT event_type, event_id, cents,
-           CASE WHEN te < mid THEN 0 ELSE 1 END AS era
-    FROM b CROSS JOIN span
-), rk AS (
+_CVM_SQL = _ERA_ROWS + """, rk AS (
     SELECT event_type, era, cents,
            row_number() OVER (PARTITION BY event_type
                               ORDER BY cents, event_id) AS r,
@@ -4807,21 +4193,21 @@ WITH b AS (
        AND sum(CASE WHEN era = 1 THEN 1 ELSE 0 END) >= 2
 ), tv AS (
     SELECT event_type, na, nb,
-           CAST(s0 AS DOUBLE) / (4.0 * nb * (na + nb))
-         + CAST(s1 AS DOUBLE) / (4.0 * na * (na + nb))
-         - (4.0 * na * nb - 1) / (6.0 * (na + nb)) AS t_stat
+           CAST(s0 AS DOUBLE) / (4e0 * nb * (na + nb))
+         + CAST(s1 AS DOUBLE) / (4e0 * na * (na + nb))
+         - (4e0 * na * nb - 1) / (6e0 * (na + nb)) AS t_stat
     FROM g
 )
 SELECT event_type,
        CAST(na AS BIGINT) AS n_era_a,
        CAST(nb AS BIGINT) AS n_era_b,
-       round(t_stat, 6) + 0.0 AS t_cvm,
-       round(t_stat, 6) > {_CVM_CRIT} AS reject_equal_dist
+       round(t_stat, 6) + 0e0 AS t_cvm,
+       round(t_stat, 6) > 0.461e0 AS reject_equal_dist
 FROM tv
 """
 
 
-@op("stats_cvm_eras", oracle=_CVM_ORACLE, tags=("ext", "stats"))
+@op("stats_cvm_eras", oracle=duckdb_sql(_CVM_SQL), tags=("ext", "stats"))
 def stats_cvm_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Cramér–von Mises test of event values between the
     first and second half of the observed span, per event type — the
@@ -4850,68 +4236,8 @@ def stats_cvm_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     Support floor: n, m ≥ 2 per era (the MW convention; T is defined
     but uninformative below that).
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    span = events_era_mid(spark, sf_dir)  # fingerprint-cached 1-row probe
-    e = b.select(
-        "event_type",
-        "event_id",
-        "cents",
-        F.when(F.col("te") < F.lit(span), F.lit(0)).otherwise(F.lit(1)).alias("era"),
-    )
-    wt = Window.partitionBy("event_type")
-    we = Window.partitionBy("event_type", "era")
-    rk = e.select(
-        "event_type",
-        "era",
-        "cents",
-        F.row_number()
-        .over(wt.orderBy(F.col("cents").asc(), F.col("event_id").asc()))
-        .alias("r"),
-        F.row_number()
-        .over(we.orderBy(F.col("cents").asc(), F.col("event_id").asc()))
-        .alias("i"),
-    )
-    wg = wt.orderBy("cents").rangeBetween(Window.currentRow, Window.currentRow)
-    r = rk.select(
-        "event_type",
-        "era",
-        "i",
-        (F.min("r").over(wg) + F.max("r").over(wg)).alias("r2"),
-    )
-    dev2 = (F.col("r2") - 2 * F.col("i")) * (F.col("r2") - 2 * F.col("i"))
-    g = (
-        r.groupBy("event_type")
-        .agg(
-            F.sum(F.when(F.col("era") == 0, 1).otherwise(0)).alias("na"),
-            F.sum(F.when(F.col("era") == 1, 1).otherwise(0)).alias("nb"),
-            F.sum(F.when(F.col("era") == 0, dev2).otherwise(0))
-            .cast("bigint")
-            .alias("s0"),
-            F.sum(F.when(F.col("era") == 1, dev2).otherwise(0))
-            .cast("bigint")
-            .alias("s1"),
-        )
-        .filter((F.col("na") >= 2) & (F.col("nb") >= 2))
-    )
-    na, nb = F.col("na"), F.col("nb")
-    t_stat = (
-        F.col("s0").cast("double") / (F.lit(4.0) * nb * (na + nb))
-        + F.col("s1").cast("double") / (F.lit(4.0) * na * (na + nb))
-        - (F.lit(4.0) * na * nb - 1) / (F.lit(6.0) * (na + nb))
-    )
-    rt = F.round(t_stat, 6)
-    return g.select(
-        "event_type",
-        na.cast("bigint").alias("n_era_a"),
-        nb.cast("bigint").alias("n_era_b"),
-        (rt + F.lit(0.0)).alias("t_cvm"),
-        (rt > F.lit(_CVM_CRIT)).alias("reject_equal_dist"),
-    )
+    return _eras(spark, sf_dir, _CVM_SQL)
+
 
 # ---------------------------------------------------------------------------
 # Friedman test over (day block x event-type treatment) cells (round 14)

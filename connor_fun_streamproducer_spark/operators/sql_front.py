@@ -1,10 +1,39 @@
-"""The SQL front door: the engine accepts ANSI SQL strings directly.
+"""The SQL front door: one SQL text per op, rendered for each engine.
 
-Everything else in the package declares plans through the DataFrame API;
-this module proves the equivalent ``spark.sql(...)`` surface — the entry
-point BI tools and ad-hoc users actually hit. ONE query string drives both
-the engine and the oracle (modulo nothing — the text is identical), so the
-check certifies dialect-compatible SQL ingestion, not just result parity.
+Everything else in the package declares plans through the DataFrame API.
+The ops built on this module (``sql_api`` here, ``agg_grouping_sets``
+in ``aggregates`` and the two-era statistics suite in ``profiling``) are
+written ONCE, as a SQL text with a few ``{placeholders}``, and two
+renderers turn that text into each engine's dialect:
+
+- ``duckdb_sql(text)`` runs once, at registration, and gives the op's
+  ``oracle=`` string.
+- ``spark_sql(text, **literals)`` gives the text an op hands to
+  ``spark.sql(rendered, <table>=<DataFrame>, ...)``. PySpark registers
+  each DataFrame argument as a temp view for that one call and drops it
+  again, so an op leaves no view behind in the caller's session.
+
+Placeholders:
+
+- ``{<table>}`` for any fixture table: DuckDB gets the view name; Spark
+  keeps the placeholder for ``spark.sql``'s DataFrame argument of that
+  name.
+- ``{te}``: epoch seconds of ``events.ts`` as BIGINT. DuckDB gets
+  ``CAST(floor(epoch(ts)) AS BIGINT)``; Spark casts through
+  TIMESTAMP_LTZ (``catalog.epoch_seconds``'s rule).
+- ``{mid}``: the two-era boundary. DuckDB gets a scalar subquery over
+  the text's ``b`` CTE, which must carry ``te``; Spark gets the literal
+  the caller passes (``catalog.events_era_mid``, a fingerprint-cached
+  probe), so the Spark plan scans ``events`` once per use of ``b``.
+
+Dialect rules the renderers enforce:
+
+- ``//`` is DuckDB's integer division; Spark gets `` div ``. Write ``//``
+  only between integers: DuckDB's ``7.0 // 2`` is 3.5.
+- Spark parses a bare decimal literal such as ``4.0`` as DECIMAL, which
+  moves float results in the last digits. Double literals are written in
+  exponent form (``4e0``, ``0.5e0``), and both renderers raise on a bare
+  decimal literal.
 
 The reference has no query language at all (SURVEY.md §3); this is part of
 the EXT "what its downstream analytics would run" surface.
@@ -12,14 +41,55 @@ the EXT "what its downstream analytics would run" surface.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
-from connor_fun_streamproducer_spark.catalog import load
+from connor_fun_streamproducer_spark.catalog import TABLES, load
 from connor_fun_streamproducer_spark.registry import op
 
-# Written once, run verbatim on BOTH engines. Constraints that keep it
-# dialect-portable: EXTRACT (not year()), explicit casts where engine
-# default types differ (EXTRACT → int vs BIGINT), aliased aggregates.
+_BARE_DECIMAL = re.compile(r"(?<![\w.])(?:\d+\.\d*|\.\d+)(?![\w.])")
+
+_FRAGMENTS = {
+    "duckdb": {
+        "te": "CAST(floor(epoch(ts)) AS BIGINT)",
+        "mid": "(SELECT (min(te) + max(te)) // 2 FROM b)",
+        **{t: t for t in TABLES},
+    },
+    "spark": {
+        "te": "CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT)",
+        **{t: "{%s}" % t for t in TABLES},
+    },
+}
+
+
+def _render(text: str, engine: str, literals: dict) -> str:
+    bad = _BARE_DECIMAL.search(text)
+    if bad:
+        raise ValueError(
+            f"bare decimal literal {bad.group()!r}: Spark reads it as DECIMAL;"
+            " write doubles in exponent form (e.g. 4e0)"
+        )
+    if engine == "spark":
+        text = text.replace("//", " div ")
+    return text.format(**_FRAGMENTS[engine], **literals)
+
+
+def duckdb_sql(text: str) -> str:
+    """``text`` in DuckDB's dialect, over the fixture views."""
+    return _render(text, "duckdb", {})
+
+
+def spark_sql(text: str, **literals) -> str:
+    """``text`` in Spark's dialect, table placeholders left for
+    ``spark.sql``'s DataFrame arguments; ``literals`` fill the rest
+    (``mid=``)."""
+    return _render(text, "spark", literals)
+
+
+# Constraints that keep it dialect-portable: EXTRACT (not year()),
+# explicit casts where engine default types differ (EXTRACT → int vs
+# BIGINT), aliased aggregates.
 _SQL = """
 SELECT n_name,
        CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS yr,
@@ -32,23 +102,16 @@ GROUP BY n_name, EXTRACT(YEAR FROM o_orderdate)
 """
 
 
-@op(
-    "sql_api",
-    oracle=_SQL.format(orders="orders", customer="customer", nation="nation"),
-    tags=("ext", "sql"),
-)
+@op("sql_api", oracle=duckdb_sql(_SQL), tags=("ext", "sql"))
 def sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run a multi-join aggregate through ``spark.sql`` over temp views.
+    """Run a multi-join aggregate through ``spark.sql``.
 
-    The SAME string the oracle executes (table names substituted) goes
-    through Spark's SQL parser → Catalyst → the identical physical
-    machinery as the DataFrame ops: broadcast of the 25-row nation dim,
-    shuffled customer join, partial+final aggregation. Registering views
-    is idempotent (createOrReplaceTempView), so repeated calls on a
-    shared session don't accumulate state.
+    The text the oracle executes goes through Spark's SQL parser →
+    Catalyst → the identical physical machinery as the DataFrame ops:
+    broadcast of the 25-row nation dim, shuffled customer join,
+    partial+final aggregation.
     """
-    for t in ("orders", "customer", "nation"):
-        load(spark, sf_dir, t).createOrReplaceTempView(f"v_sql_{t}")
     return spark.sql(
-        _SQL.format(orders="v_sql_orders", customer="v_sql_customer", nation="v_sql_nation")
+        spark_sql(_SQL),
+        **{t: load(spark, sf_dir, t) for t in ("orders", "customer", "nation")},
     )

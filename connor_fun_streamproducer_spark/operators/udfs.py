@@ -111,11 +111,11 @@ def udtf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (w,)
 
     spark.udtf.register("split_words", SplitWords)
-    load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
         """
         SELECT d.doc_id, s.word
-        FROM documents d, LATERAL split_words(d.text) s
+        FROM {documents} d, LATERAL split_words(d.text) s
         WHERE d.doc_id < 50
-        """
+        """,
+        documents=load(spark, sf_dir, "documents"),
     )

@@ -13,6 +13,7 @@ error. Here the "clients" are one SparkSession and failures raise normally.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -106,3 +107,22 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+@contextlib.contextmanager
+def py4j_commands(spark: SparkSession):
+    """Count the py4j commands Python sends to the JVM inside the
+    block; yields a one-cell list that holds the count. Around an op's
+    ``fn(spark, sf_dir)`` it is the op's construction cost."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, [0]
+
+    def counting(*args, **kwargs):
+        sent[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        client.send_command = send

@@ -8,6 +8,8 @@ these make the plans right.
 
 from __future__ import annotations
 
+import pytest
+
 from connor_fun_streamproducer_spark import registry
 from connor_fun_streamproducer_spark.plans.explain import (
     assert_in_plan,
@@ -1939,6 +1941,36 @@ def test_rank_sum_pair_single_exchange(spark):
         assert count_in_plan(df, "Exchange") == 1, key
         plan = formatted_plan(df)
         assert plan.count("Sort ") <= 1, (key, plan)
+
+
+# (exchanges, parquet scans) of each two-era op: the per-type aggregate or
+# window stage(s) over ONE events scan, the era boundary a plan literal.
+# stats_mcnemar's second scan feeds its user-universe count.
+_ERA_PLAN_SHAPE = {
+    "stats_welch_ttest": (2, 1),
+    "stats_cohens_d_eras": (2, 1),
+    "stats_brown_forsythe": (2, 1),
+    "stats_mood_median": (1, 1),
+    "stats_mann_whitney": (1, 1),
+    "stats_cliff_delta": (1, 1),
+    "stats_power_mde": (2, 1),
+    "stats_cohens_h": (1, 1),
+    "stats_mcnemar": (4, 2),
+    "stats_wilcoxon_signed_rank": (2, 1),
+    "stats_cvm_eras": (1, 1),
+}
+
+
+@pytest.mark.parametrize("key", sorted(_ERA_PLAN_SHAPE))
+def test_era_ops_scan_events_once_per_use(spark, key):
+    """The two-era ops run one SQL text on both engines; the Spark
+    rendering takes the era boundary as a literal, not the oracle's
+    scalar subquery, so no span scan or exchange joins the plan."""
+    df = _q(key, spark)
+    assert (
+        count_in_plan(df, "Exchange"),
+        count_in_plan(df, "Scan parquet"),
+    ) == _ERA_PLAN_SHAPE[key], formatted_plan(df)
 
 
 def test_brand_pipelines_broadcast_part(spark):

@@ -1,0 +1,62 @@
+"""The one-text-per-op SQL surface (operators/sql_front.py).
+
+The two-era statistics ops run one SQL text on both engines, so the
+oracle test alone cannot catch a renderer fault that both renderings
+share; the Python replays in test_properties.py are the independent
+check. These tests pin what the renderers promise: dialect rules,
+construction cost and a caller's session left as it was.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from connor_fun_streamproducer_spark import registry
+from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, spark_sql
+from connor_fun_streamproducer_spark.session import py4j_commands
+from tests.conftest import SF_DIR
+from tests.test_plans import _ERA_PLAN_SHAPE
+
+registry._ensure_loaded()
+
+
+def test_bare_decimal_literal_raises_exponent_form_renders_unchanged():
+    for render in (duckdb_sql, spark_sql):
+        with pytest.raises(ValueError, match="4.0"):
+            render("SELECT 4.0 * x FROM t")
+        assert render("SELECT 4e0 * x FROM t") == "SELECT 4e0 * x FROM t"
+        assert render("SELECT 0.5e0 + x.y1 FROM t") == "SELECT 0.5e0 + x.y1 FROM t"
+
+
+def test_renderers_apply_each_dialect():
+    text = "SELECT {te} // 2 FROM {events} WHERE {te} < {mid}"
+    assert duckdb_sql(text) == (
+        "SELECT CAST(floor(epoch(ts)) AS BIGINT) // 2 FROM events"
+        " WHERE CAST(floor(epoch(ts)) AS BIGINT) < (SELECT (min(te) + max(te)) // 2 FROM b)"
+    )
+    assert spark_sql(text, mid=7) == (
+        "SELECT CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT)  div  2 FROM {events}"
+        " WHERE CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT) < 7"
+    )
+
+
+@pytest.mark.parametrize("key", sorted(_ERA_PLAN_SHAPE))
+def test_era_op_build_sends_few_py4j_commands(spark, key):
+    """Building an era op is one ``spark.sql`` call: well under 500 py4j
+    commands once the schema memo and the era boundary are warm."""
+    fn = registry.OPS[key].fn
+    fn(spark, SF_DIR)
+    with py4j_commands(spark) as sent:
+        fn(spark, SF_DIR)
+    assert sent[0] < 500, (key, sent[0])
+
+
+def test_sql_ops_leave_no_session_views(spark):
+    """sql_api, agg_grouping_sets and udtf_table pass their tables as
+    ``spark.sql`` DataFrame arguments, whose views live for one call; a
+    fresh session (no views from other tests) still lists none after."""
+    s = spark.newSession()
+    before = sorted(t.name for t in s.catalog.listTables())
+    for key in ("sql_api", "agg_grouping_sets", "udtf_table"):
+        assert registry.OPS[key].fn(s, SF_DIR).count() > 0, key
+    assert sorted(t.name for t in s.catalog.listTables()) == before
