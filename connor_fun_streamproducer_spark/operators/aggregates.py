@@ -24,7 +24,7 @@ from connor_fun_streamproducer_spark.catalog import (
     literal_frame,
     load,
 )
-from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, spark_sql
+from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, run_sql
 from connor_fun_streamproducer_spark.registry import op
 
 
@@ -225,9 +225,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels. Group keys are coalesced to '(all)' on both sides (no real
     NULLs in these columns) so the subtotal marker hashes identically.
     """
-    return spark.sql(
-        spark_sql(_GROUPING_SETS_SQL), orders=load(spark, sf_dir, "orders")
-    )
+    return run_sql(spark, sf_dir, _GROUPING_SETS_SQL)
 
 
 @op(

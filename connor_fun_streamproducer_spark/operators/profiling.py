@@ -33,7 +33,7 @@ from connor_fun_streamproducer_spark.catalog import (
     events_era_mid,
     load,
 )
-from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, spark_sql
+from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, run_sql
 from connor_fun_streamproducer_spark.registry import op
 
 PROFILE_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
@@ -245,30 +245,38 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CARD_ORACLE = """
+# Exact integer division on BOTH engines: Spark's integral `div` matches
+# DuckDB's `//` bit-for-bit (double division then cast would round
+# half-away in DuckDB but truncate in Spark whenever the estimator has
+# real error — which is the op's entire purpose). nullif-guards make the
+# degenerate profiles explicit: a zero-row side has NDV=0 (and
+# actual=0), where DuckDB's `//` yields NULL but Spark's ANSI `div`
+# would throw DIVIDE_BY_ZERO — NULL on both is the pinned contract
+# (tests/test_properties.py).
+_CARD_SQL = """
 WITH s AS (
     SELECT CAST(count(*) AS BIGINT) AS n_orders,
            CAST(count(DISTINCT o_custkey) AS BIGINT) AS ndv_orders
-    FROM orders
+    FROM {orders}
 ), c AS (
     SELECT CAST(count(*) AS BIGINT) AS n_cust,
            CAST(count(DISTINCT c_custkey) AS BIGINT) AS ndv_cust
-    FROM customer
+    FROM {customer}
 ), a AS (
     SELECT CAST(count(*) AS BIGINT) AS actual
-    FROM orders o JOIN customer cu ON cu.c_custkey = o.o_custkey
+    FROM {orders} o JOIN {customer} cu ON o.o_custkey = cu.c_custkey
 )
-SELECT s.n_orders, s.ndv_orders, c.n_cust, c.ndv_cust,
-       CAST(s.n_orders * c.n_cust // greatest(s.ndv_orders, c.ndv_cust)
-            AS BIGINT)                                        AS estimated,
-       a.actual,
-       CAST(abs(s.n_orders * c.n_cust // greatest(s.ndv_orders, c.ndv_cust)
-                - a.actual) * 10000 // a.actual AS BIGINT)    AS err_bp
-FROM s, c, a
+SELECT n_orders, ndv_orders, n_cust, ndv_cust,
+       CAST(n_orders * n_cust // nullif(greatest(ndv_orders, ndv_cust), 0)
+            AS BIGINT) AS estimated,
+       actual,
+       CAST(abs(n_orders * n_cust // nullif(greatest(ndv_orders, ndv_cust), 0)
+                - actual) * 10000 // nullif(actual, 0) AS BIGINT) AS err_bp
+FROM s CROSS JOIN c CROSS JOIN a
 """
 
 
-@op("stats_join_cardinality", oracle=_CARD_ORACLE, tags=("ext", "agg", "stats", "scale"))
+@op("stats_join_cardinality", oracle=duckdb_sql(_CARD_SQL), tags=("ext", "agg", "stats", "scale"))
 def stats_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-cardinality estimation from column statistics, validated
     against the actual join — the selectivity formula every cost-based
@@ -289,49 +297,7 @@ def stats_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the estimator costs only the stats lookups) and a 1-row
     cross-product of the three single-row frames.
     """
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    s = o.agg(
-        F.count("*").cast("bigint").alias("n_orders"),
-        F.count_distinct("o_custkey").cast("bigint").alias("ndv_orders"),
-    )
-    cu = c.agg(
-        F.count("*").cast("bigint").alias("n_cust"),
-        F.count_distinct("c_custkey").cast("bigint").alias("ndv_cust"),
-    )
-    a = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .agg(F.count("*").cast("bigint").alias("actual"))
-    )
-    # Exact integer division on BOTH engines: Spark's integral `div`
-    # matches DuckDB's `//` bit-for-bit (double division then cast would
-    # round half-away in DuckDB but truncate in Spark whenever the
-    # estimator has real error — which is the op's entire purpose).
-    # nullif-guards make the degenerate profiles explicit: a zero-row
-    # side has NDV=0 (and actual=0), where DuckDB's `//` yields NULL but
-    # Spark's ANSI `div` would throw DIVIDE_BY_ZERO — NULL on both is
-    # the pinned contract (tests/test_properties.py).
-    est = F.expr(
-        "n_orders * n_cust div nullif(greatest(ndv_orders, ndv_cust), 0)"
-    ).cast("bigint")
-    return (
-        s.crossJoin(cu)
-        .crossJoin(a)
-        .select(
-            "n_orders",
-            "ndv_orders",
-            "n_cust",
-            "ndv_cust",
-            est.alias("estimated"),
-            "actual",
-            F.expr(
-                "abs(n_orders * n_cust div nullif(greatest(ndv_orders, ndv_cust), 0)"
-                " - actual) * 10000 div nullif(actual, 0)"
-            )
-            .cast("bigint")
-            .alias("err_bp"),
-        )
-    )
+    return run_sql(spark, sf_dir, _CARD_SQL)
 
 
 _LORENZ_ORACLE = """
@@ -442,33 +408,29 @@ def win_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DRIFT_CUT = "1998-01-01"  # same mid-range cut as sink_partition_evolution
 
-_DRIFT_COLS = {
-    "total_cents": "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)",
-    "custkey": "CAST(o_custkey AS BIGINT)",
-}
+_DRIFT_SQL = f"""
+SELECT col_name, era,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(count(DISTINCT v) AS BIGINT) AS ndv,
+       CAST(min(v) AS BIGINT) AS min_v,
+       CAST(max(v) AS BIGINT) AS max_v,
+       CAST(count(DISTINCT v) * 10000 // count(*) AS BIGINT) AS distinct_share_bp
+FROM (
+    SELECT 'total_cents' AS col_name,
+           CASE WHEN o_orderdate < '{_DRIFT_CUT}' THEN 'a' ELSE 'b' END AS era,
+           CAST(floor(o_totalprice * 100 + 0.5e0) AS BIGINT) AS v
+    FROM {{orders}}
+    UNION ALL
+    SELECT 'custkey' AS col_name,
+           CASE WHEN o_orderdate < '{_DRIFT_CUT}' THEN 'a' ELSE 'b' END AS era,
+           CAST(o_custkey AS BIGINT) AS v
+    FROM {{orders}}
+) cols
+GROUP BY col_name, era
+"""
 
 
-def _drift_oracle() -> str:
-    parts = []
-    for name, expr in _DRIFT_COLS.items():
-        parts.append(f"""
-        SELECT '{name}' AS col_name, era,
-               CAST(count(*) AS BIGINT)            AS n,
-               CAST(count(DISTINCT v) AS BIGINT)   AS ndv,
-               CAST(min(v) AS BIGINT)              AS min_v,
-               CAST(max(v) AS BIGINT)              AS max_v,
-               CAST(count(DISTINCT v) * 10000 // count(*) AS BIGINT)
-                                                   AS distinct_share_bp
-        FROM (SELECT {expr} AS v,
-                     CASE WHEN o_orderdate < TIMESTAMP '{_DRIFT_CUT} 00:00:00'
-                          THEN 'a' ELSE 'b' END AS era
-              FROM orders)
-        GROUP BY era
-        """)
-    return " UNION ALL ".join(parts)
-
-
-@op("stats_profile_drift", oracle=_drift_oracle(), tags=("ext", "agg", "stats", "scale"))
+@op("stats_profile_drift", oracle=duckdb_sql(_DRIFT_SQL), tags=("ext", "agg", "stats", "scale"))
 def stats_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-profile DRIFT between two eras of the same table (pre/post
     a cut date): per (column, era) the row count, exact NDV, min/max,
@@ -486,38 +448,7 @@ def stats_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-share ratio uses integral division (engine-wide
     discipline) so drift thresholds compare exactly.
     """
-    o = load(spark, sf_dir, "orders")
-    era = F.when(F.col("o_orderdate") < _DRIFT_CUT, F.lit("a")).otherwise(F.lit("b"))
-    branches = []
-    for name, expr in _DRIFT_COLS.items():
-        branches.append(
-            o.select(
-                F.lit(name).alias("col_name"),
-                era.alias("era"),
-                F.expr(expr).alias("v"),
-            )
-        )
-    longf = branches[0]
-    for b in branches[1:]:
-        longf = longf.unionByName(b)
-    return (
-        longf.groupBy("col_name", "era")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.count_distinct("v").cast("bigint").alias("ndv"),
-            F.min("v").cast("bigint").alias("min_v"),
-            F.max("v").cast("bigint").alias("max_v"),
-        )
-        .select(
-            "col_name",
-            "era",
-            "n",
-            "ndv",
-            "min_v",
-            "max_v",
-            F.expr("ndv * 10000 div n").cast("bigint").alias("distinct_share_bp"),
-        )
-    )
+    return run_sql(spark, sf_dir, _DRIFT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1583,13 +1514,14 @@ def stats_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Label impurity per group (Gini impurity of the lang mix per source)
 # ---------------------------------------------------------------------------
 
-_IMPURITY_ORACLE = """
+# {wide} moments: n²·10⁴ passes int64 at ~960k docs/source.
+_IMPURITY_SQL = """
 WITH cells AS (
-    SELECT source, lang, count(*) AS c FROM documents GROUP BY 1, 2
+    SELECT source, lang, count(*) AS c FROM {documents} GROUP BY source, lang
 ), m AS (
     SELECT source,
-           sum(c) AS n,
-           sum(c * c) AS ss,
+           CAST(sum(c) AS {wide}) AS n,
+           sum(CAST(c AS {wide}) * c) AS ss,
            count(*) AS n_langs
     FROM cells GROUP BY source
 )
@@ -1601,7 +1533,7 @@ FROM m
 """
 
 
-@op("stats_label_impurity", oracle=_IMPURITY_ORACLE, tags=("ext", "stats", "profile"))
+@op("stats_label_impurity", oracle=duckdb_sql(_IMPURITY_SQL), tags=("ext", "stats", "profile"))
 def stats_label_impurity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini impurity of each source's language mix: 1 − Σp² in basis
     points, computed as the exact integer identity (n² − Σc²)·10⁴ div n²
@@ -1614,25 +1546,7 @@ def stats_label_impurity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → |sources|×|langs|-bounded cell agg → 3-moment
     rollup per source. Pure integers end to end.
     """
-    cells = (
-        load(spark, sf_dir, "documents")
-        .groupBy("source", "lang")
-        .agg(F.count("*").alias("c"))
-    )
-    # decimal(38,0) moments: n²·10⁴ passes int64 at ~960k docs/source
-    # while the DuckDB oracle silently rides HUGEINT — the
-    # embedding_outlier_distance asymmetry, pre-empted the same way.
-    m = cells.groupBy("source").agg(
-        F.sum("c").cast("decimal(38,0)").alias("n"),
-        F.sum(F.col("c").cast("decimal(19,0)") * F.col("c")).alias("ss"),
-        F.count("*").alias("n_langs"),
-    )
-    return m.select(
-        "source",
-        F.col("n").cast("bigint").alias("n_docs"),
-        F.col("n_langs").cast("bigint").alias("n_langs"),
-        F.expr("(n * n - ss) * 10000 div (n * n)").cast("bigint").alias("impurity_bp"),
-    )
+    return run_sql(spark, sf_dir, _IMPURITY_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1975,21 +1889,6 @@ WITH b AS (
 )"""
 
 
-def _eras(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    """Run a two-era text (``sql_front`` placeholders) over ``events``.
-
-    Each op written as one ``_..._SQL`` text below is this one call. The
-    era boundary ``{mid}`` is the fingerprint-cached
-    ``catalog.events_era_mid`` literal, so the plan scans ``events`` once
-    per use of ``b`` and carries no span probe of its own (the oracle
-    computes it as a scalar subquery).
-    """
-    return spark.sql(
-        spark_sql(text, mid=events_era_mid(spark, sf_dir)),
-        events=load(spark, sf_dir, "events"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Welch two-sample t-test between time eras (per event type)
 # ---------------------------------------------------------------------------
@@ -2042,7 +1941,7 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → (type, era) hash agg with map-side partials
     (the span probe is a 1-row agg); output is |types| rows.
     """
-    return _eras(spark, sf_dir, _WELCH_SQL)
+    return run_sql(spark, sf_dir, _WELCH_SQL, mid=events_era_mid(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2169,7 +2068,7 @@ def stats_cohens_d_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → (type, era) hash agg with map-side partials; the
     era boundary is a 1-row probe; output is |types| rows.
     """
-    return _eras(spark, sf_dir, _COHEN_SQL)
+    return run_sql(spark, sf_dir, _COHEN_SQL, mid=events_era_mid(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2248,7 +2147,7 @@ def stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg with map-side partials; the era boundary is a 1-row probe;
     output is |types| rows.
     """
-    return _eras(spark, sf_dir, _BF_SQL)
+    return run_sql(spark, sf_dir, _BF_SQL, mid=events_era_mid(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2320,7 +2219,7 @@ def stats_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → a per-type rank window (one exchange) → hash agg
     with map-side partials; output is |types| rows.
     """
-    return _eras(spark, sf_dir, _MOOD_SQL)
+    return run_sql(spark, sf_dir, _MOOD_SQL, mid=events_era_mid(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2406,7 +2305,7 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats_cliff_delta deliberately uses n ≥ 1 instead: δ is a plain
     probability difference, well-defined from a single observation.
     """
-    return _eras(spark, sf_dir, _MW_SQL)
+    return run_sql(spark, sf_dir, _MW_SQL, mid=events_era_mid(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2481,31 +2380,28 @@ def stats_cliff_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     well-defined at a single observation, while the rank-sum z needs
     a variance and is not. The asymmetry is a choice, not an oversight.
     """
-    return _eras(spark, sf_dir, _CLIFF_SQL)
+    return run_sql(spark, sf_dir, _CLIFF_SQL, mid=events_era_mid(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
 # Distribution-free median confidence interval per event type
 # ---------------------------------------------------------------------------
 
-# normal 5% two-sided critical value for the order-statistic rank formula
-_QCI_Z = 1.959964
-
-_QCI_ORACLE = f"""
-WITH b AS (
-    SELECT event_type, event_id,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), r AS (
+# 1.959964 is the normal 5% two-sided critical value for the
+# order-statistic rank formula.
+_QCI_SQL = """
+WITH r AS (
     SELECT event_type, cents,
            row_number() OVER (PARTITION BY event_type
                               ORDER BY cents, event_id) AS rk,
            count(*) OVER (PARTITION BY event_type) AS n
-    FROM b
+    FROM (SELECT event_type, event_id,
+                 CAST(floor(value * 100 + 0.5e0) AS BIGINT) AS cents
+          FROM {events}) b
 ), k AS (
     SELECT event_type, cents, rk, n,
-           greatest(1, CAST(floor((n - {_QCI_Z} * sqrt(n)) / 2)
-                            AS BIGINT)) AS lo
+           greatest(1, CAST(floor((n - 1.959964e0 * sqrt(n)) / 2) AS BIGINT))
+               AS lo
     FROM r
 )
 SELECT event_type,
@@ -2515,11 +2411,11 @@ SELECT event_type,
        CAST(min(CASE WHEN rk = lo THEN cents END) AS BIGINT) AS ci_lo_cents,
        CAST(min(CASE WHEN rk = least(n, n + 1 - lo) THEN cents END) AS BIGINT)
            AS ci_hi_cents
-FROM k GROUP BY 1 HAVING max(n) >= 2
+FROM k GROUP BY event_type HAVING max(n) >= 2
 """
 
 
-@op("stats_quantile_ci", oracle=_QCI_ORACLE, tags=("ext", "stats"))
+@op("stats_quantile_ci", oracle=duckdb_sql(_QCI_SQL), tags=("ext", "stats"))
 def stats_quantile_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-free ~95% confidence interval for the median of
     event value, per event type — the error bar every median in every
@@ -2539,53 +2435,7 @@ def stats_quantile_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → one per-type rank window (one exchange) → hash
     agg; output is |types| rows.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    wt = Window.partitionBy("event_type")
-    r = b.select(
-        "event_type",
-        "cents",
-        F.row_number()
-        .over(wt.orderBy(F.col("cents").asc(), F.col("event_id").asc()))
-        .alias("rk"),
-        F.count("*").over(wt).alias("n"),
-    )
-    k = r.select(
-        "event_type",
-        "cents",
-        "rk",
-        "n",
-        F.greatest(
-            F.lit(1),
-            F.floor((F.col("n") - _QCI_Z * F.sqrt(F.col("n"))) / 2).cast("bigint"),
-        ).alias("lo"),
-    )
-    return (
-        k.groupBy("event_type")
-        .agg(
-            F.max("n").cast("bigint").alias("n"),
-            F.min(
-                F.when(F.col("rk") == F.expr("(n + 1) div 2"), F.col("cents"))
-            )
-            .cast("bigint")
-            .alias("median_cents"),
-            F.min(F.when(F.col("rk") == F.col("lo"), F.col("cents")))
-            .cast("bigint")
-            .alias("ci_lo_cents"),
-            F.min(
-                F.when(
-                    F.col("rk") == F.least(F.col("n"), F.col("n") + 1 - F.col("lo")),
-                    F.col("cents"),
-                )
-            )
-            .cast("bigint")
-            .alias("ci_hi_cents"),
-        )
-        .filter(F.col("n") >= 2)
-    )
+    return run_sql(spark, sf_dir, _QCI_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2631,7 +2481,7 @@ def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → (type, era) hash agg with map-side partials +
     the 1-row span probe; output is |types| rows.
     """
-    return _eras(spark, sf_dir, _MDE_SQL)
+    return run_sql(spark, sf_dir, _MDE_SQL, mid=events_era_mid(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -3068,7 +2918,7 @@ def stats_cohens_h(spark: SparkSession, sf_dir: str) -> DataFrame:
     Support floor: n ≥ 1 per era — h, like cliff's δ, is a plain
     function of proportions and is well-defined from one observation.
     """
-    return _eras(spark, sf_dir, _COHENS_H_SQL)
+    return run_sql(spark, sf_dir, _COHENS_H_SQL, mid=events_era_mid(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -3627,29 +3477,30 @@ def stats_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Goodman–Kruskal lambda (all-integer predictive association, round 13)
 # ---------------------------------------------------------------------------
 
-_GK_ORACLE = """
+_GK_SQL = """
 WITH o AS (
     SELECT lang AS a, source AS b, count(*) AS obs
-    FROM documents GROUP BY 1, 2
-), n AS (SELECT sum(obs) AS n FROM o),
-maxa AS (SELECT max(r) AS m FROM (SELECT sum(obs) AS r FROM o GROUP BY a)),
-maxb AS (SELECT max(c) AS m FROM (SELECT sum(obs) AS c FROM o GROUP BY b)),
-rowmax AS (SELECT sum(m) AS s FROM (SELECT max(obs) AS m FROM o GROUP BY b)),
-colmax AS (SELECT sum(m) AS s FROM (SELECT max(obs) AS m FROM o GROUP BY a))
-SELECT CAST(n.n AS BIGINT) AS n_total,
-       CAST(rowmax.s AS BIGINT) AS sum_colwise_modal,
-       CAST(colmax.s AS BIGINT) AS sum_rowwise_modal,
-       CAST(maxa.m AS BIGINT) AS modal_lang,
-       CAST(maxb.m AS BIGINT) AS modal_source,
-       CAST((rowmax.s - maxa.m) * 10000 // nullif(n.n - maxa.m, 0) AS BIGINT)
+    FROM {documents} GROUP BY lang, source
+), tot AS (SELECT sum(obs) AS n FROM o),
+maxa AS (SELECT max(r) AS ma FROM (SELECT sum(obs) AS r FROM o GROUP BY a) x),
+maxb AS (SELECT max(c) AS mb FROM (SELECT sum(obs) AS c FROM o GROUP BY b) x),
+rowmax AS (SELECT sum(m) AS sr FROM (SELECT max(obs) AS m FROM o GROUP BY b) x),
+colmax AS (SELECT sum(m) AS sc FROM (SELECT max(obs) AS m FROM o GROUP BY a) x)
+SELECT /*+ BROADCAST(maxa, maxb, rowmax, colmax) */
+       CAST(n AS BIGINT) AS n_total,
+       CAST(sr AS BIGINT) AS sum_colwise_modal,
+       CAST(sc AS BIGINT) AS sum_rowwise_modal,
+       CAST(ma AS BIGINT) AS modal_lang,
+       CAST(mb AS BIGINT) AS modal_source,
+       CAST((sr - ma) * 10000 // nullif(n - ma, 0) AS BIGINT)
            AS lambda_lang_given_source_bp,
-       CAST((colmax.s - maxb.m) * 10000 // nullif(n.n - maxb.m, 0) AS BIGINT)
+       CAST((sc - mb) * 10000 // nullif(n - mb, 0) AS BIGINT)
            AS lambda_source_given_lang_bp
-FROM n, maxa, maxb, rowmax, colmax
+FROM tot CROSS JOIN maxa CROSS JOIN maxb CROSS JOIN rowmax CROSS JOIN colmax
 """
 
 
-@op("stats_gk_lambda", oracle=_GK_ORACLE, tags=("ext", "stats", "profile"))
+@op("stats_gk_lambda", oracle=duckdb_sql(_GK_SQL), tags=("ext", "stats", "profile"))
 def stats_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Goodman–Kruskal lambda between documents' lang and source: the
     proportional-reduction-in-error measure — "guessing the modal
@@ -3663,35 +3514,7 @@ def stats_gk_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → bounded cell frame → four bounded aggregations.
     Output is 1 row.
     """
-    o = (
-        load(spark, sf_dir, "documents")
-        .groupBy(F.col("lang").alias("a"), F.col("source").alias("b"))
-        .agg(F.count("*").alias("obs"))
-    )
-    n = o.agg(F.sum("obs").alias("n"))
-    maxa = o.groupBy("a").agg(F.sum("obs").alias("r")).agg(F.max("r").alias("ma"))
-    maxb = o.groupBy("b").agg(F.sum("obs").alias("c")).agg(F.max("c").alias("mb"))
-    rowmax = o.groupBy("b").agg(F.max("obs").alias("m")).agg(F.sum("m").alias("sr"))
-    colmax = o.groupBy("a").agg(F.max("obs").alias("m")).agg(F.sum("m").alias("sc"))
-    j = (
-        n.crossJoin(F.broadcast(maxa))
-        .crossJoin(F.broadcast(maxb))
-        .crossJoin(F.broadcast(rowmax))
-        .crossJoin(F.broadcast(colmax))
-    )
-    return j.select(
-        F.col("n").cast("bigint").alias("n_total"),
-        F.col("sr").cast("bigint").alias("sum_colwise_modal"),
-        F.col("sc").cast("bigint").alias("sum_rowwise_modal"),
-        F.col("ma").cast("bigint").alias("modal_lang"),
-        F.col("mb").cast("bigint").alias("modal_source"),
-        F.expr("(sr - ma) * 10000 div nullif(n - ma, 0)")
-        .cast("bigint")
-        .alias("lambda_lang_given_source_bp"),
-        F.expr("(sc - mb) * 10000 div nullif(n - mb, 0)")
-        .cast("bigint")
-        .alias("lambda_source_given_lang_bp"),
-    )
+    return run_sql(spark, sf_dir, _GK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -3750,7 +3573,7 @@ def stats_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → (type, user) presence agg with map-side partials
     → |types| rows; the user universe is a 1-row companion aggregate.
     """
-    return _eras(spark, sf_dir, _MCNEMAR_SQL)
+    return run_sql(spark, sf_dir, _MCNEMAR_SQL, mid=events_era_mid(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -3833,7 +3656,7 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows (one exchange, both key on event_type first) → |types|
     rows. Support floor n ≥ 2 (variance degenerate below).
     """
-    return _eras(spark, sf_dir, _WSR_SQL)
+    return run_sql(spark, sf_dir, _WSR_SQL, mid=events_era_mid(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -4236,7 +4059,7 @@ def stats_cvm_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     Support floor: n, m ≥ 2 per era (the MW convention; T is defined
     but uninformative below that).
     """
-    return _eras(spark, sf_dir, _CVM_SQL)
+    return run_sql(spark, sf_dir, _CVM_SQL, mid=events_era_mid(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -5079,12 +4902,14 @@ _KAPPA_LEN_MIN = 300  # gate A: document length floor (chars)
 # gate B: chars-per-token (incl. separators) >= 5.5, as the INTEGER
 # predicate 2*n_chars >= 11*n_tokens -- no float threshold to jitter.
 
-_KAPPA_ORACLE = f"""
+# n_tokens is the ' '-split piece count, i.e. the number of spaces + 1.
+_KAPPA_SQL = f"""
 WITH d AS (
     SELECT CASE WHEN n_chars >= {_KAPPA_LEN_MIN} THEN 1 ELSE 0 END AS ga,
-           CASE WHEN 2 * n_chars >= 11 * len(string_split(text, ' '))
+           CASE WHEN 2 * n_chars
+                     >= 11 * (length(text) - length(replace(text, ' ', '')) + 1)
                 THEN 1 ELSE 0 END AS gb
-    FROM documents
+    FROM {{documents}}
 ), c AS (
     SELECT CAST(count(*) AS BIGINT) AS n,
            CAST(sum(ga * gb) AS BIGINT) AS n11,
@@ -5103,12 +4928,12 @@ WITH d AS (
 SELECT n AS n_docs, n11 AS both_pass, n00 AS both_fail,
        n10 AS only_length, n01 AS only_wordlen,
        (n11 + n00) * 10000 // n AS agreement_bp,
-       round((po - pe) / nullif(1.0 - pe, 0.0), 6) + 0.0 AS kappa
+       round((po - pe) / nullif(1e0 - pe, 0e0), 6) + 0e0 AS kappa
 FROM s
 """
 
 
-@op("stats_cohens_kappa", oracle=_KAPPA_ORACLE, tags=("ext", "stats", "llm"))
+@op("stats_cohens_kappa", oracle=duckdb_sql(_KAPPA_SQL), tags=("ext", "stats", "llm"))
 def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between two independent document quality gates -
     the length floor (n_chars >= 300, _KAPPA_LEN_MIN) and the
@@ -5134,35 +4959,4 @@ def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     (regionSpout.go:151-163); this is the meta-measurement a pipeline
     adds the day it runs TWO quality filters.
     """
-    d = load(spark, sf_dir, "documents").select(
-        F.when(F.col("n_chars") >= _KAPPA_LEN_MIN, 1).otherwise(0).alias("ga"),
-        F.when(
-            2 * F.col("n_chars") >= 11 * F.size(F.split("text", " ")), 1
-        ).otherwise(0).alias("gb"),
-    )
-    c = d.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(F.col("ga") * F.col("gb")).cast("bigint").alias("n11"),
-        F.sum(F.col("ga") * (1 - F.col("gb"))).cast("bigint").alias("n10"),
-        F.sum((1 - F.col("ga")) * F.col("gb")).cast("bigint").alias("n01"),
-        F.sum((1 - F.col("ga")) * (1 - F.col("gb"))).cast("bigint").alias("n00"),
-    )
-    nd = F.col("n").cast("double")
-    po = (F.col("n11") + F.col("n00")).cast("double") / F.col("n")
-    pe = ((F.col("n11") + F.col("n10")).cast("double") / F.col("n")) * (
-        (F.col("n11") + F.col("n01")).cast("double") / F.col("n")
-    ) + ((F.col("n01") + F.col("n00")).cast("double") / F.col("n")) * (
-        (F.col("n10") + F.col("n00")).cast("double") / F.col("n")
-    )
-    return c.select(
-        F.col("n").alias("n_docs"),
-        F.col("n11").alias("both_pass"),
-        F.col("n00").alias("both_fail"),
-        F.col("n10").alias("only_length"),
-        F.col("n01").alias("only_wordlen"),
-        F.expr("(n11 + n00) * 10000 div n").alias("agreement_bp"),
-        (
-            F.round((po - pe) / F.nullif(F.lit(1.0) - pe, F.lit(0.0)), 6)
-            + F.lit(0.0)
-        ).alias("kappa"),
-    )
+    return run_sql(spark, sf_dir, _KAPPA_SQL)

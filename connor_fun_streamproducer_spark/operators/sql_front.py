@@ -1,10 +1,26 @@
 """The SQL front door: one SQL text per op, rendered for each engine.
 
-Everything else in the package declares plans through the DataFrame API.
-The ops built on this module (``sql_api`` here, ``agg_grouping_sets``
-in ``aggregates`` and the two-era statistics suite in ``profiling``) are
-written ONCE, as a SQL text with a few ``{placeholders}``, and two
-renderers turn that text into each engine's dialect:
+Most of the package declares plans through the DataFrame API. The ops
+built on this module are written ONCE, as a SQL text with a few
+``{placeholders}``:
+
+- ``sql_api`` here and ``agg_grouping_sets`` in ``aggregates``;
+- the two-era statistics suite in ``profiling`` (the eleven ops that
+  split ``events`` at ``{mid}``);
+- the contingency/rank statistics in ``profiling``
+  (``stats_join_cardinality``, ``stats_profile_drift``,
+  ``stats_label_impurity``, ``stats_quantile_ci``, ``stats_gk_lambda``,
+  ``stats_cohens_kappa``);
+- the event time-series battery in ``timeseries``: the ACF family
+  (``ts_autocorr``, ``stats_ljung_box``, ``ts_pacf``, one shared moment
+  fragment) and ``ts_changepoint_cusum``, ``ts_sma_crossover``,
+  ``ts_event_gaps``, ``ts_mann_kendall``, ``ts_var_es``,
+  ``ts_outage_windows``, ``ts_hour_of_week_profile``,
+  ``ts_dispersion_index``, ``ts_seasonal_naive_error``,
+  ``ts_turning_points``.
+
+Two renderers turn a text into each engine's dialect, and one runner
+executes it on Spark:
 
 - ``duckdb_sql(text)`` runs once, at registration, and gives the op's
   ``oracle=`` string.
@@ -12,6 +28,9 @@ renderers turn that text into each engine's dialect:
   ``spark.sql(rendered, <table>=<DataFrame>, ...)``. PySpark registers
   each DataFrame argument as a temp view for that one call and drops it
   again, so an op leaves no view behind in the caller's session.
+- ``run_sql(spark, sf_dir, text, **literals)`` is that call: it loads
+  every fixture table the text names and passes each as the DataFrame
+  argument of its placeholder. Every op above is this one call.
 
 Placeholders:
 
@@ -21,6 +40,11 @@ Placeholders:
 - ``{te}``: epoch seconds of ``events.ts`` as BIGINT. DuckDB gets
   ``CAST(floor(epoch(ts)) AS BIGINT)``; Spark casts through
   TIMESTAMP_LTZ (``catalog.epoch_seconds``'s rule).
+- ``{wide}``: the exact 38-digit integer type that moment sums ride so
+  they cannot overflow. Spark gets ``DECIMAL(38,0)``; DuckDB gets
+  ``HUGEINT``, because its ``//`` on a DECIMAL divides as DOUBLE
+  (``7 // 2`` over DECIMAL(38,0) is 3.5) and HUGEINT is what its
+  ``sum(BIGINT)`` returns anyway.
 - ``{mid}``: the two-era boundary. DuckDB gets a scalar subquery over
   the text's ``b`` CTE, which must carry ``te``; Spark gets the literal
   the caller passes (``catalog.events_era_mid``, a fingerprint-cached
@@ -30,6 +54,8 @@ Dialect rules the renderers enforce:
 
 - ``//`` is DuckDB's integer division; Spark gets `` div ``. Write ``//``
   only between integers: DuckDB's ``7.0 // 2`` is 3.5.
+- A broadcast hint is written ``/*+ BROADCAST(t) */``; DuckDB reads it
+  as a comment.
 - Spark parses a bare decimal literal such as ``4.0`` as DECIMAL, which
   moves float results in the last digits. Double literals are written in
   exponent form (``4e0``, ``0.5e0``), and both renderers raise on a bare
@@ -49,15 +75,18 @@ from connor_fun_streamproducer_spark.catalog import TABLES, load
 from connor_fun_streamproducer_spark.registry import op
 
 _BARE_DECIMAL = re.compile(r"(?<![\w.])(?:\d+\.\d*|\.\d+)(?![\w.])")
+_PLACEHOLDER = re.compile(r"\{(\w+)\}")
 
 _FRAGMENTS = {
     "duckdb": {
         "te": "CAST(floor(epoch(ts)) AS BIGINT)",
+        "wide": "HUGEINT",
         "mid": "(SELECT (min(te) + max(te)) // 2 FROM b)",
         **{t: t for t in TABLES},
     },
     "spark": {
         "te": "CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT)",
+        "wide": "DECIMAL(38,0)",
         **{t: "{%s}" % t for t in TABLES},
     },
 }
@@ -87,6 +116,16 @@ def spark_sql(text: str, **literals) -> str:
     return _render(text, "spark", literals)
 
 
+def run_sql(spark: SparkSession, sf_dir: str, text: str, **literals) -> DataFrame:
+    """Run ``text`` through ``spark.sql``: each fixture table it names
+    is loaded from ``sf_dir`` and passed as its placeholder's DataFrame
+    argument; ``literals`` fill the rest (``mid=``)."""
+    tables = sorted({t for t in _PLACEHOLDER.findall(text) if t in TABLES})
+    return spark.sql(
+        spark_sql(text, **literals), **{t: load(spark, sf_dir, t) for t in tables}
+    )
+
+
 # Constraints that keep it dialect-portable: EXTRACT (not year()),
 # explicit casts where engine default types differ (EXTRACT → int vs
 # BIGINT), aliased aggregates.
@@ -111,7 +150,4 @@ def sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of the 25-row nation dim, shuffled customer join,
     partial+final aggregation.
     """
-    return spark.sql(
-        spark_sql(_SQL),
-        **{t: load(spark, sf_dir, t) for t in ("orders", "customer", "nation")},
-    )
+    return run_sql(spark, sf_dir, _SQL)

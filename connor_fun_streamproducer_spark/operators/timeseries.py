@@ -31,6 +31,12 @@ Scale notes (100 TB):
   the (1-α)^(-i) prefix-scan trick which overflows past ~700 rows), so
   it needs only row_number + one weighted sum — no recursion, no UDF,
   whole-stage codegen end to end.
+
+Thirteen ops of the statistics battery below (the ACF family
+ts_autocorr / stats_ljung_box / ts_pacf and the gap, trend, tail and
+seasonality tests that ``sql_front``'s docstring lists) are written as
+one SQL text each, with ``sql_front`` placeholders: the text is the
+DuckDB oracle and, through ``sql_front.run_sql``, the Spark plan.
 """
 
 from __future__ import annotations
@@ -46,6 +52,7 @@ from connor_fun_streamproducer_spark.catalog import (
     events_epoch_span,
     load,
 )
+from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, run_sql
 from connor_fun_streamproducer_spark.registry import op
 
 _EWMA_ALPHA = 0.2
@@ -459,70 +466,37 @@ def ts_ohlc_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Lag autocorrelation (exact integer moments, basis points)
 # ---------------------------------------------------------------------------
 
-_ACF_LAGS = 3
-
-
-def _acf_moment_frame(ev: DataFrame) -> DataFrame:
-    """(event_type, lag, n, sx, sy, sxx, syy, sxy) — the exact integer
-    lag-pair moments. ONE Spark build shared by ts_autocorr and
-    stats_ljung_box, mirroring the shared _ACF_MOMENTS_SQL the two
-    oracles consume (r9 self-review: only the SQL side had been
-    factored; an edit to one Spark copy would have silently desynced
-    the other from the shared oracle fragment)."""
-    c = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-    w = Window.partitionBy("event_type").orderBy(epoch_seconds("ts"), "event_id")
-    led = ev.select(
-        "event_type",
-        c.alias("c"),
-        *[F.lead(c, k).over(w).alias(f"y{k}") for k in range(1, _ACF_LAGS + 1)],
-    )
-    pairs = led.select(
-        "event_type",
-        "c",
-        F.expr("stack(3, 1L, y1, 2L, y2, 3L, y3) AS (lag, y)"),
-    ).filter(F.col("y").isNotNull())
-    d38 = lambda col: F.sum(col.cast("decimal(38,0)"))  # noqa: E731
-    return pairs.groupBy("event_type", "lag").agg(
-        F.count("*").alias("n"),
-        d38(F.col("c")).alias("sx"),
-        d38(F.col("y")).alias("sy"),
-        d38(F.col("c") * F.col("c")).alias("sxx"),
-        d38(F.col("y") * F.col("y")).alias("syy"),
-        d38(F.col("c") * F.col("y")).alias("sxy"),
-    )
-
-# Lag-pair moment CTEs (base -> pairs -> m) shared by _AUTOCORR_ORACLE
-# and _LJUNG_BOX_ORACLE — one definition of the ACF moment stream, the
-# graph-oracle _PAIR_EDGES_SQL discipline.
-_ACF_MOMENTS_SQL = """base AS (
+# The exact integer lag-pair moments (event_type, lag, n, sx, sy, sxx,
+# syy, sxy) for lags 1..3, ONE fragment shared by ts_autocorr,
+# stats_ljung_box and ts_pacf. The three leads share one window frame;
+# the lag unpivot is a cross join with the 3-row VALUES list (a
+# broadcast nested-loop join, no exchange) rather than a UNION ALL that
+# would re-read the window output once per lag.
+_ACF_MOMENTS = """base AS (
     SELECT event_type,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS c,
-           lead(CAST(floor(value * 100 + 0.5) AS BIGINT), 1) OVER w AS y1,
-           lead(CAST(floor(value * 100 + 0.5) AS BIGINT), 2) OVER w AS y2,
-           lead(CAST(floor(value * 100 + 0.5) AS BIGINT), 3) OVER w AS y3
-    FROM events
-    WINDOW w AS (PARTITION BY event_type
-                 ORDER BY CAST(floor(epoch(ts)) AS BIGINT), event_id)
-),
-pairs AS (
-    SELECT event_type, 1 AS lag, c AS x, y1 AS y FROM base WHERE y1 IS NOT NULL
-    UNION ALL
-    SELECT event_type, 2, c, y2 FROM base WHERE y2 IS NOT NULL
-    UNION ALL
-    SELECT event_type, 3, c, y3 FROM base WHERE y3 IS NOT NULL
-),
-m AS (
+           CAST(floor(value * 100 + 0.5e0) AS BIGINT) AS c,
+           lead(CAST(floor(value * 100 + 0.5e0) AS BIGINT), 1) OVER w AS y1,
+           lead(CAST(floor(value * 100 + 0.5e0) AS BIGINT), 2) OVER w AS y2,
+           lead(CAST(floor(value * 100 + 0.5e0) AS BIGINT), 3) OVER w AS y3
+    FROM {events}
+    WINDOW w AS (PARTITION BY event_type ORDER BY {te}, event_id)
+), pairs AS (
+    SELECT event_type, lag, c AS x,
+           CASE lag WHEN 1 THEN y1 WHEN 2 THEN y2 ELSE y3 END AS y
+    FROM base CROSS JOIN (VALUES (1), (2), (3)) AS l(lag)
+), m AS (
     SELECT event_type, lag, count(*) AS n,
-           sum(x) AS sx, sum(y) AS sy,
-           sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy
-    FROM pairs GROUP BY 1, 2
+           sum(CAST(x AS {wide})) AS sx, sum(CAST(y AS {wide})) AS sy,
+           sum(CAST(x * x AS {wide})) AS sxx, sum(CAST(y * y AS {wide})) AS syy,
+           sum(CAST(x * y AS {wide})) AS sxy
+    FROM pairs WHERE y IS NOT NULL GROUP BY event_type, lag
 )"""
 
-_AUTOCORR_ORACLE = "WITH " + _ACF_MOMENTS_SQL + """
+_AUTOCORR_SQL = "WITH " + _ACF_MOMENTS + """
 SELECT event_type, CAST(lag AS BIGINT) AS lag, CAST(n AS BIGINT) AS n_pairs,
-       CAST(floor(CAST(n * sxy - sx * sy AS DOUBLE) * 10000 /
-                  nullif(sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                         * sqrt(CAST(n * syy - sy * sy AS DOUBLE)), 0.0))
+       CAST(floor(CAST(n * sxy - sx * sy AS DOUBLE) * 10000
+                  / nullif(sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
+                           * sqrt(CAST(n * syy - sy * sy AS DOUBLE)), 0e0))
             AS BIGINT) AS r_bp
 FROM m
 """
@@ -530,7 +504,7 @@ FROM m
 
 @op(
     "ts_autocorr",
-    oracle=_AUTOCORR_ORACLE,
+    oracle=duckdb_sql(_AUTOCORR_SQL),
     tags=("ext", "timeseries", "agg", "stats"),
 )
 def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -547,28 +521,12 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero tolerance.
 
     Plan shape: ONE window pass per series (a single (event_type)
-    exchange; the 3 leads share the frame), a stack() unpivot (codegen,
-    no shuffle), and a 15-key hash agg with map-side partials. At
-    100 TB the exchange carries only series keys — the ACF of a series
-    never leaves its partition.
+    exchange; the 3 leads share the frame), a cross join with the 3-row
+    lag list (broadcast nested loop, no shuffle), and a 15-key hash agg
+    with map-side partials. At 100 TB the exchange carries only series
+    keys — the ACF of a series never leaves its partition.
     """
-    m = _acf_moment_frame(load(spark, sf_dir, "events"))
-    return m.select(
-        "event_type",
-        F.col("lag").cast("bigint").alias("lag"),
-        F.col("n").cast("bigint").alias("n_pairs"),
-        F.floor(
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-            * 10000
-            / F.nullif(
-                F.sqrt((F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double"))
-                * F.sqrt((F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")),
-                F.lit(0.0),
-            )
-        )
-        .cast("bigint")
-        .alias("r_bp"),
-    )
+    return run_sql(spark, sf_dir, _AUTOCORR_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -650,47 +608,44 @@ def ts_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CUSUM changepoint (exact scaled integer cumulative deviation)
 # ---------------------------------------------------------------------------
 
-_CUSUM_ORACLE = """
+_CUSUM_SQL = """
 WITH base AS (
     SELECT event_type, ts, event_id,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-),
-tot AS (
-    SELECT event_type, count(*) AS n_tot, sum(cents) AS s_tot
-    FROM base GROUP BY 1
-),
-pre AS (
-    SELECT b.event_type, b.ts, t.n_tot, t.s_tot,
-           row_number() OVER w AS i,
-           sum(b.cents) OVER w AS prefix
-    FROM base b JOIN tot t USING (event_type)
-    WINDOW w AS (
-        PARTITION BY b.event_type ORDER BY b.ts, b.event_id
-        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-    )
-),
-s AS (
-    SELECT event_type, ts, i, n_tot,
-           n_tot * prefix - i * s_tot AS cusum_scaled,
-           row_number() OVER (
-               PARTITION BY event_type
-               ORDER BY abs(n_tot * prefix - i * s_tot) DESC, ts ASC
-           ) AS rn
-    FROM pre
+           CAST(floor(value * 100 + 0.5e0) AS BIGINT) AS cents
+    FROM {events}
+), tot AS (
+    SELECT event_type, count(*) AS n_tot, sum(CAST(cents AS {wide})) AS s_tot
+    FROM base GROUP BY event_type
+), pre AS (
+    SELECT event_type, ts,
+           row_number() OVER (PARTITION BY event_type
+                              ORDER BY ts, event_id) AS i,
+           sum(CAST(cents AS {wide})) OVER (
+               PARTITION BY event_type ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prefix
+    FROM base
+), s AS (
+    SELECT /*+ BROADCAST(t) */ pre.event_type, ts, i, n_tot,
+           n_tot * prefix - i * s_tot AS cusum_scaled
+    FROM pre JOIN tot t ON pre.event_type = t.event_type
+), top AS (
+    SELECT event_type, ts, i, n_tot, cusum_scaled,
+           row_number() OVER (PARTITION BY event_type
+                              ORDER BY abs(cusum_scaled) DESC, ts ASC) AS rn
+    FROM s
 )
 SELECT event_type,
        CAST(n_tot AS BIGINT) AS n,
        CAST(i AS BIGINT) AS cp_index,
        ts AS cp_ts,
        CAST(abs(cusum_scaled) AS BIGINT) AS cusum_scaled_abs
-FROM s WHERE rn = 1
+FROM top WHERE rn = 1
 """
 
 
 @op(
     "ts_changepoint_cusum",
-    oracle=_CUSUM_ORACLE,
+    oracle=duckdb_sql(_CUSUM_SQL),
     tags=("ext", "timeseries", "agg", "stats"),
 )
 def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -711,79 +666,38 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame and its sort), a broadcast totals join, and a top-1 window on
     the same series partitioning — the argmax never collects the series.
     """
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_type",
-        "ts",
-        "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    tot = base.groupBy("event_type").agg(
-        F.count("*").alias("n_tot"),
-        F.sum(F.col("cents").cast("decimal(38,0)")).alias("s_tot"),
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pre = base.select(
-        "event_type",
-        "ts",
-        F.row_number().over(Window.partitionBy("event_type").orderBy("ts", "event_id")).alias("i"),
-        F.sum(F.col("cents").cast("decimal(38,0)")).over(w).alias("prefix"),
-    ).join(F.broadcast(tot), "event_type")
-    s = pre.select(
-        "event_type",
-        "ts",
-        "i",
-        "n_tot",
-        (F.col("n_tot") * F.col("prefix") - F.col("i") * F.col("s_tot")).alias("cusum_scaled"),
-    )
-    top = Window.partitionBy("event_type").orderBy(
-        F.abs(F.col("cusum_scaled")).desc(), F.col("ts").asc()
-    )
-    return (
-        s.withColumn("rn", F.row_number().over(top))
-        .filter(F.col("rn") == 1)
-        .select(
-            "event_type",
-            F.col("n_tot").cast("bigint").alias("n"),
-            F.col("i").cast("bigint").alias("cp_index"),
-            F.col("ts").alias("cp_ts"),
-            F.abs(F.col("cusum_scaled")).cast("bigint").alias("cusum_scaled_abs"),
-        )
-    )
+    return run_sql(spark, sf_dir, _CUSUM_SQL)
 
 
 # ---------------------------------------------------------------------------
 # SMA crossover detection (exact cross-multiplied integer sums)
 # ---------------------------------------------------------------------------
 
-_SMA_FAST = 3
-_SMA_SLOW = 7
-
-_SMA_CROSS_ORACLE = f"""
+# SMA(3) vs SMA(7), compared as 7·sum₃ vs 3·sum₇. The window orders by
+# o_orderdate itself: order dates are whole days, so this is the order
+# of their epoch seconds.
+_SMA_CROSS_SQL = """
 WITH o AS (
-    SELECT o_custkey, o_orderkey,
-           CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-           CAST(floor(epoch(o_orderdate)) AS BIGINT) AS sec
-    FROM orders
+    SELECT o_custkey, o_orderkey, o_orderdate,
+           CAST(floor(o_totalprice * 100 + 0.5e0) AS BIGINT) AS cents
+    FROM {orders}
 ), s AS (
     SELECT o_custkey, o_orderkey,
-           row_number() OVER w AS rid,
-           sum(cents) OVER (w ROWS BETWEEN {_SMA_FAST - 1} PRECEDING
-                            AND CURRENT ROW) AS sum_fast,
-           sum(cents) OVER (w ROWS BETWEEN {_SMA_SLOW - 1} PRECEDING
-                            AND CURRENT ROW) AS sum_slow
+           row_number() OVER (PARTITION BY o_custkey
+                              ORDER BY o_orderdate, o_orderkey) AS rid,
+           sum(cents) OVER (PARTITION BY o_custkey
+                            ORDER BY o_orderdate, o_orderkey
+                            ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS sum_fast,
+           sum(cents) OVER (PARTITION BY o_custkey
+                            ORDER BY o_orderdate, o_orderkey
+                            ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS sum_slow
     FROM o
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY sec, o_orderkey)
 ), c AS (
     SELECT o_custkey, o_orderkey, rid, sum_fast, sum_slow,
-           {_SMA_SLOW} * sum_fast - {_SMA_FAST} * sum_slow AS cmp,
-           lag({_SMA_SLOW} * sum_fast - {_SMA_FAST} * sum_slow)
+           7 * sum_fast - 3 * sum_slow AS cmp,
+           lag(7 * sum_fast - 3 * sum_slow)
                OVER (PARTITION BY o_custkey ORDER BY rid) AS prev_cmp
-    FROM s WHERE rid >= {_SMA_SLOW}
+    FROM s WHERE rid >= 7
 )
 SELECT o_custkey, o_orderkey, CAST(rid AS BIGINT) AS rid,
        CAST(sum_fast AS BIGINT) AS sum_fast,
@@ -795,7 +709,7 @@ WHERE prev_cmp IS NOT NULL
 """
 
 
-@op("ts_sma_crossover", oracle=_SMA_CROSS_ORACLE, tags=("ext", "timeseries"))
+@op("ts_sma_crossover", oracle=duckdb_sql(_SMA_CROSS_SQL), tags=("ext", "timeseries"))
 def ts_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fast/slow moving-average crossover events per customer — the
     classic trend-shift detector (spend accelerating through its own
@@ -807,7 +721,7 @@ def ts_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     moving AVERAGES float never happens, so the crossover predicate is
     exact cents arithmetic on both engines. Partial frames are excluded
     (rid ≥ 7) rather than averaged over shorter windows; ordering is
-    totally tie-broken by (epoch-sec, orderkey).
+    totally tie-broken by (orderdate, orderkey).
 
     Scale: one (custkey) exchange serves the shared window sort; both
     trailing sums and the lag read the same WindowExec buffer, O(1)
@@ -815,49 +729,7 @@ def ts_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-not-series output shape is what keeps a 100 TB detector's
     sink small.
     """
-    o = load(spark, sf_dir, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-        epoch_seconds("o_orderdate").alias("sec"),
-    )
-    w = Window.partitionBy("o_custkey").orderBy("sec", "o_orderkey")
-    s = o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.row_number().over(w).alias("rid"),
-        F.sum("cents")
-        .over(w.rowsBetween(-(_SMA_FAST - 1), Window.currentRow))
-        .alias("sum_fast"),
-        F.sum("cents")
-        .over(w.rowsBetween(-(_SMA_SLOW - 1), Window.currentRow))
-        .alias("sum_slow"),
-    ).filter(F.col("rid") >= _SMA_SLOW)
-    cmp = F.lit(_SMA_SLOW) * F.col("sum_fast") - F.lit(_SMA_FAST) * F.col("sum_slow")
-    wl = Window.partitionBy("o_custkey").orderBy("rid")
-    c = s.select(
-        "o_custkey",
-        "o_orderkey",
-        "rid",
-        "sum_fast",
-        "sum_slow",
-        cmp.alias("cmp"),
-        F.lag(cmp).over(wl).alias("prev_cmp"),
-    )
-    return c.filter(
-        F.col("prev_cmp").isNotNull()
-        & (
-            ((F.col("cmp") > 0) & (F.col("prev_cmp") <= 0))
-            | ((F.col("cmp") < 0) & (F.col("prev_cmp") >= 0))
-        )
-    ).select(
-        "o_custkey",
-        "o_orderkey",
-        F.col("rid").cast("bigint").alias("rid"),
-        F.col("sum_fast").cast("bigint").alias("sum_fast"),
-        F.col("sum_slow").cast("bigint").alias("sum_slow"),
-        F.when(F.col("cmp") > 0, F.lit("golden")).otherwise(F.lit("dead")).alias("cross_type"),
-    )
+    return run_sql(spark, sf_dir, _SMA_CROSS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1071,56 +943,51 @@ def ts_seasonal_residual_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Ljung-Box portmanteau whiteness test (composes the ACF moments)
 # ---------------------------------------------------------------------------
 
-# chi-square(3 df) 95% critical value — the fixed literal both engines
-# compare the ROUNDED Q statistic against.
-_LB_CRIT_3DF = 7.814728
-
 # rho is the STANDARD ACF estimator (r10 ADVICE fix): deviations from
 # the single full-series mean, denominator = full-series variance —
 # the estimator the Ljung-Box chi-square calibration is defined for.
 # Cross-multiplied by n² so every term stays an exact integer:
 #   rho_k = (n²·Σxy − n·S1·(Σx+Σy) + (n−k)·S1²) / (n²·S2 − n·S1²)
-_LB_RHO_SQL = """tot AS (
+# Shared by stats_ljung_box and ts_pacf; p holds r1..r3 per series.
+_ACF_RHO = """, tot AS (
     SELECT event_type, count(*) AS nn,
-           sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS s1,
-           sum(CAST(floor(value * 100 + 0.5) AS BIGINT)
-               * CAST(floor(value * 100 + 0.5) AS BIGINT)) AS s2
-    FROM events GROUP BY 1
-),
-r AS (
-    SELECT m.event_type, m.lag,
+           sum(CAST(c AS {wide})) AS s1, sum(CAST(c * c AS {wide})) AS s2
+    FROM (SELECT event_type, CAST(floor(value * 100 + 0.5e0) AS BIGINT) AS c
+          FROM {events}) e
+    GROUP BY event_type
+), r AS (
+    SELECT /*+ BROADCAST(t) */ m.event_type, m.lag,
            CAST(t.nn * t.nn * m.sxy - t.nn * t.s1 * (m.sx + m.sy)
                 + (t.nn - m.lag) * t.s1 * t.s1 AS DOUBLE)
            / nullif(CAST(t.nn * t.nn * t.s2 - t.nn * t.s1 * t.s1 AS DOUBLE),
-                    0.0) AS rho
-    FROM m JOIN tot t USING (event_type)
-),
-p AS (
+                    0e0) AS rho
+    FROM m JOIN tot t ON m.event_type = t.event_type
+), p AS (
     SELECT event_type,
            max(CASE WHEN lag = 1 THEN rho END) AS r1,
            max(CASE WHEN lag = 2 THEN rho END) AS r2,
            max(CASE WHEN lag = 3 THEN rho END) AS r3
-    FROM r GROUP BY 1
+    FROM r GROUP BY event_type
 )"""
 
-_LJUNG_BOX_ORACLE = (
-    "WITH " + _ACF_MOMENTS_SQL + ",\n" + _LB_RHO_SQL + f"""
-SELECT p.event_type,
+# The verdict compares the ROUNDED Q against the chi-square(3 df) 95%
+# critical value 7.814728.
+_LJUNG_BOX_SQL = "WITH " + _ACF_MOMENTS + _ACF_RHO + """
+SELECT /*+ BROADCAST(t) */ p.event_type,
        CAST(t.nn AS BIGINT) AS n,
        round(CAST(t.nn AS DOUBLE) * (t.nn + 2)
-             * (r1*r1/(t.nn-1) + r2*r2/(t.nn-2) + r3*r3/(t.nn-3)), 6) + 0.0
+             * (r1*r1/(t.nn-1) + r2*r2/(t.nn-2) + r3*r3/(t.nn-3)), 6) + 0e0
            AS q_stat,
        round(CAST(t.nn AS DOUBLE) * (t.nn + 2)
              * (r1*r1/(t.nn-1) + r2*r2/(t.nn-2) + r3*r3/(t.nn-3)), 6)
-           > {_LB_CRIT_3DF} AS reject_whiteness
-FROM p JOIN tot t USING (event_type)
+           > 7.814728e0 AS reject_whiteness
+FROM p JOIN tot t ON p.event_type = t.event_type
 """
-)
 
 
 @op(
     "stats_ljung_box",
-    oracle=_LJUNG_BOX_ORACLE,
+    oracle=duckdb_sql(_LJUNG_BOX_SQL),
     tags=("ext", "timeseries", "stats"),
 )
 def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1133,7 +1000,7 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the magnitudes).
 
     Exact: the lag cross-moments are ts_autocorr's integer aggregates
-    (ONE shared construction, Spark and SQL — _ACF_MOMENTS_SQL); rho is
+    (ONE shared text, _ACF_MOMENTS, run on both engines); rho is
     the STANDARD ACF estimator — deviations from the single full-series
     mean, denominator the full-series variance (r10 ADVICE fix: the
     chi-square(3) calibration is defined for this estimator, not the
@@ -1146,48 +1013,7 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same one-window + 15-key agg as ts_autocorr, plus a
     |types|-row count join.
     """
-    ev = load(spark, sf_dir, "events")
-    m = _acf_moment_frame(ev)
-    c = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-    tot = ev.select("event_type", c.alias("c")).groupBy("event_type").agg(
-        F.count("*").alias("nn"),
-        F.sum(F.col("c").cast("decimal(38,0)")).alias("s1"),
-        F.sum((F.col("c") * F.col("c")).cast("decimal(38,0)")).alias("s2"),
-    )
-    j = m.join(F.broadcast(tot), "event_type")
-    num = (
-        F.col("nn") * F.col("nn") * F.col("sxy")
-        - F.col("nn") * F.col("s1") * (F.col("sx") + F.col("sy"))
-        + (F.col("nn") - F.col("lag")) * F.col("s1") * F.col("s1")
-    )
-    den = (
-        F.col("nn") * F.col("nn") * F.col("s2")
-        - F.col("nn") * F.col("s1") * F.col("s1")
-    )
-    rho = j.select(
-        "event_type",
-        "lag",
-        (num.cast("double") / F.nullif(den.cast("double"), F.lit(0.0))).alias("rho"),
-    )
-    piv = rho.groupBy("event_type").agg(
-        *[
-            F.max(F.when(F.col("lag") == k, F.col("rho"))).alias(f"r{k}")
-            for k in (1, 2, 3)
-        ]
-    )
-    q_expr = (
-        "round(CAST(nn AS DOUBLE) * (nn + 2)"
-        " * (r1*r1/(nn-1) + r2*r2/(nn-2) + r3*r3/(nn-3)), 6)"
-    )
-    return (
-        piv.join(F.broadcast(tot), "event_type")
-        .select(
-            "event_type",
-            F.col("nn").cast("bigint").alias("n"),
-            (F.expr(q_expr) + F.lit(0.0)).alias("q_stat"),
-            (F.expr(q_expr) > F.lit(_LB_CRIT_3DF)).alias("reject_whiteness"),
-        )
-    )
+    return run_sql(spark, sf_dir, _LJUNG_BOX_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1901,21 +1727,19 @@ def ts_periodogram_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Inter-event gap profile (rank-exact percentiles)
 # ---------------------------------------------------------------------------
 
-_GAPS_ORACLE = """
+_GAPS_SQL = """
 WITH t AS (
-    SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) AS te, event_id
-    FROM events
+    SELECT event_type, {te} AS te, event_id FROM {events}
 ), g AS (
     SELECT event_type,
            te - lag(te) OVER (PARTITION BY event_type
                               ORDER BY te, event_id) AS gap
     FROM t
-), gg AS (SELECT event_type, gap FROM g WHERE gap IS NOT NULL),
-r AS (
+), r AS (
     SELECT event_type, gap,
            row_number() OVER (PARTITION BY event_type ORDER BY gap) AS rk,
            count(*) OVER (PARTITION BY event_type) AS n
-    FROM gg
+    FROM g WHERE gap IS NOT NULL
 )
 SELECT event_type,
        CAST(max(n) AS BIGINT) AS n_gaps,
@@ -1929,7 +1753,7 @@ FROM r GROUP BY event_type
 """
 
 
-@op("ts_event_gaps", oracle=_GAPS_ORACLE, tags=("ext", "timeseries", "stats"))
+@op("ts_event_gaps", oracle=duckdb_sql(_GAPS_SQL), tags=("ext", "timeseries", "stats"))
 def ts_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-event gap profile per event type: count, min, max, and
     rank-exact median/p90 of the seconds between consecutive events —
@@ -1950,80 +1774,56 @@ def ts_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ts_autocorr shape) plus a rank window over the same partitioning
     (no second exchange: same key) and a |types|-key agg.
     """
-    t = load(spark, sf_dir, "events").select(
-        "event_type", epoch_seconds("ts").alias("te"), "event_id"
-    )
-    w = Window.partitionBy("event_type").orderBy("te", "event_id")
-    g = t.select(
-        "event_type", (F.col("te") - F.lag("te").over(w)).alias("gap")
-    ).filter(F.col("gap").isNotNull())
-    wr = Window.partitionBy("event_type").orderBy("gap")
-    wn = Window.partitionBy("event_type")
-    r = g.select(
-        "event_type",
-        "gap",
-        F.row_number().over(wr).alias("rk"),
-        F.count("*").over(wn).alias("n"),
-    )
-    return r.groupBy("event_type").agg(
-        F.max("n").cast("bigint").alias("n_gaps"),
-        F.min("gap").cast("bigint").alias("min_gap_s"),
-        F.max("gap").cast("bigint").alias("max_gap_s"),
-        F.max(F.when(F.col("rk") == F.expr("(n + 1) div 2"), F.col("gap")))
-        .cast("bigint")
-        .alias("median_gap_s"),
-        F.max(F.when(F.col("rk") == F.expr("(n * 9 + 9) div 10"), F.col("gap")))
-        .cast("bigint")
-        .alias("p90_gap_s"),
-    )
+    return run_sql(spark, sf_dir, _GAPS_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Mann-Kendall trend test (the TEST to ts_theil_sen's estimator)
 # ---------------------------------------------------------------------------
 
-_MK_CRIT = 1.959964  # two-sided 5% normal critical value
-
-_MK_ORACLE = f"""
+# The verdict compares the ROUNDED z against the two-sided 5% normal
+# critical value 1.959964.
+_MK_SQL = """
 WITH daily AS (
-    SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS d,
-           sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS c
-    FROM events GROUP BY 1, 2
+    SELECT event_type, {te} // 86400 AS d,
+           sum(CAST(floor(value * 100 + 0.5e0) AS BIGINT)) AS c
+    FROM {events} GROUP BY 1, 2
 ), pairs AS (
     SELECT a.event_type,
            CASE WHEN b.c > a.c THEN 1 WHEN b.c < a.c THEN -1 ELSE 0 END AS sg
     FROM daily a JOIN daily b
       ON a.event_type = b.event_type AND a.d < b.d
 ), s AS (
-    SELECT event_type, sum(sg) AS s_stat FROM pairs GROUP BY 1
+    SELECT event_type, sum(sg) AS s_stat FROM pairs GROUP BY event_type
 ), n AS (
-    SELECT event_type, count(*) AS nd FROM daily GROUP BY 1
+    SELECT event_type, count(*) AS nd FROM daily GROUP BY event_type
 ), ties AS (
     SELECT event_type, sum(t * (t - 1) * (2 * t + 5)) AS tie_adj
-    FROM (SELECT event_type, c, count(*) AS t FROM daily GROUP BY 1, 2)
-    GROUP BY 1
+    FROM (SELECT event_type, c, count(*) AS t FROM daily GROUP BY 1, 2) tc
+    GROUP BY event_type
+), v AS (
+    SELECT event_type, nd, s_stat,
+           nd * (nd - 1) * (2 * nd + 5) - coalesce(tie_adj, 0) AS var18
+    FROM n JOIN s USING (event_type) LEFT JOIN ties USING (event_type)
 ), z AS (
-    SELECT n.event_type, n.nd, s.s_stat,
-           nd * (nd - 1) * (2 * nd + 5) - coalesce(t.tie_adj, 0) AS var18,
-           CASE WHEN s.s_stat > 0 THEN CAST(s.s_stat - 1 AS DOUBLE)
-                WHEN s.s_stat < 0 THEN CAST(s.s_stat + 1 AS DOUBLE)
-                ELSE 0.0 END
-           / nullif(sqrt(CAST(nd * (nd - 1) * (2 * nd + 5)
-                              - coalesce(t.tie_adj, 0) AS DOUBLE) / 18), 0.0)
-               AS zval
-    FROM n JOIN s USING (event_type) LEFT JOIN ties t USING (event_type)
+    SELECT event_type, nd, s_stat, var18,
+           CASE WHEN s_stat > 0 THEN CAST(s_stat - 1 AS DOUBLE)
+                WHEN s_stat < 0 THEN CAST(s_stat + 1 AS DOUBLE)
+                ELSE 0e0 END
+           / nullif(sqrt(CAST(var18 AS DOUBLE) / 18), 0e0) AS zval
+    FROM v
 )
 SELECT event_type,
        CAST(nd AS BIGINT) AS n_days,
        CAST(s_stat AS BIGINT) AS s_stat,
        CAST(var18 AS BIGINT) AS var_s_x18,
-       round(zval, 6) + 0.0 AS z_stat,
-       abs(round(zval, 6)) > {_MK_CRIT} AS reject_no_trend
+       round(zval, 6) + 0e0 AS z_stat,
+       abs(round(zval, 6)) > 1.959964e0 AS reject_no_trend
 FROM z
 """
 
 
-@op("ts_mann_kendall", oracle=_MK_ORACLE, tags=("ext", "timeseries", "stats"))
+@op("ts_mann_kendall", oracle=duckdb_sql(_MK_SQL), tags=("ext", "timeseries", "stats"))
 def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall monotonic-trend TEST per event type over the daily
     revenue series: S = Σ sign(later − earlier) over all day pairs, the
@@ -2043,88 +1843,38 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension, not a data dimension); everything corpus-sized stops at
     the first (type, day) hash agg.
     """
-    daily = (
-        load(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            epoch_seconds("ts").alias("te"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-        )
-        .select("event_type", F.expr("te div 86400").alias("d"), "cents")
-        .groupBy("event_type", "d")
-        .agg(F.sum("cents").alias("c"))
-    )
-    a, b = daily.alias("a"), daily.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.event_type") == F.col("b.event_type")) & (F.col("a.d") < F.col("b.d")),
-    ).select(
-        F.col("a.event_type").alias("event_type"),
-        F.when(F.col("b.c") > F.col("a.c"), 1)
-        .when(F.col("b.c") < F.col("a.c"), -1)
-        .otherwise(0)
-        .alias("sg"),
-    )
-    s = pairs.groupBy("event_type").agg(F.sum("sg").alias("s_stat"))
-    n = daily.groupBy("event_type").agg(F.count("*").alias("nd"))
-    ties = (
-        daily.groupBy("event_type", "c")
-        .agg(F.count("*").alias("t"))
-        .groupBy("event_type")
-        .agg(
-            F.sum(
-                F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)
-            ).alias("tie_adj")
-        )
-    )
-    j = n.join(s, "event_type").join(ties, "event_type", "left")
-    var18 = (
-        F.col("nd") * (F.col("nd") - 1) * (2 * F.col("nd") + 5)
-        - F.coalesce(F.col("tie_adj"), F.lit(0))
-    )
-    zval = (
-        F.when(F.col("s_stat") > 0, (F.col("s_stat") - 1).cast("double"))
-        .when(F.col("s_stat") < 0, (F.col("s_stat") + 1).cast("double"))
-        .otherwise(F.lit(0.0))
-    ) / F.nullif(F.sqrt(var18.cast("double") / 18), F.lit(0.0))
-    return j.select(
-        "event_type",
-        F.col("nd").cast("bigint").alias("n_days"),
-        F.col("s_stat").cast("bigint").alias("s_stat"),
-        var18.cast("bigint").alias("var_s_x18"),
-        (F.round(zval, 6) + F.lit(0.0)).alias("z_stat"),
-        (F.abs(F.round(zval, 6)) > F.lit(_MK_CRIT)).alias("reject_no_trend"),
-    )
+    return run_sql(spark, sf_dir, _MK_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Value-at-risk / expected shortfall of the daily revenue (rank-exact)
 # ---------------------------------------------------------------------------
 
-_VAR_ORACLE = """
+_VAR_SQL = """
 WITH daily AS (
-    SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS d,
-           sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS c
-    FROM events GROUP BY 1, 2
+    SELECT event_type, {te} // 86400 AS d,
+           sum(CAST(floor(value * 100 + 0.5e0) AS BIGINT)) AS c
+    FROM {events} GROUP BY 1, 2
 ), r AS (
     SELECT event_type, c,
            row_number() OVER (PARTITION BY event_type ORDER BY c, d) AS rk,
            count(*) OVER (PARTITION BY event_type) AS n
     FROM daily
-), k AS (SELECT event_type, greatest(1, (n * 5 + 99) // 100) AS kk, n
-         FROM r GROUP BY event_type, n)
-SELECT r.event_type,
-       CAST(max(r.n) AS BIGINT) AS n_days,
-       CAST(max(k.kk) AS BIGINT) AS k_tail,
-       CAST(max(CASE WHEN r.rk = k.kk THEN r.c END) AS BIGINT) AS var5_cents,
-       CAST(sum(CASE WHEN r.rk <= k.kk THEN r.c ELSE 0 END) // max(k.kk)
-            AS BIGINT) AS es5_cents
-FROM r JOIN k USING (event_type)
-GROUP BY r.event_type
+), k AS (
+    SELECT event_type, c, rk, n, greatest(1, (n * 5 + 99) // 100) AS kk
+    FROM r
+)
+SELECT event_type,
+       CAST(max(n) AS BIGINT) AS n_days,
+       CAST(max(kk) AS BIGINT) AS k_tail,
+       CAST(max(CASE WHEN rk = kk THEN c END) AS BIGINT) AS var5_cents,
+       CAST(sum(CASE WHEN rk <= kk THEN c ELSE 0 END) // max(kk) AS BIGINT)
+           AS es5_cents
+FROM k GROUP BY event_type
 """
 
 
-@op("ts_var_es", oracle=_VAR_ORACLE, tags=("ext", "timeseries", "stats"))
+@op("ts_var_es", oracle=duckdb_sql(_VAR_SQL), tags=("ext", "timeseries", "stats"))
 def ts_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5% value-at-risk and expected shortfall of the DAILY revenue per
     event type: the worst-tail day at rank ceil(0.05·n) and the mean of
@@ -2141,102 +1891,30 @@ def ts_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: dim-bounded daily rollup → one rank window per type (the
     ts_event_gaps shape) → |types| rows out.
     """
-    daily = (
-        load(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            epoch_seconds("ts").alias("te"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-        )
-        .select("event_type", F.expr("te div 86400").alias("d"), "cents")
-        .groupBy("event_type", "d")
-        .agg(F.sum("cents").alias("c"))
-    )
-    wr = Window.partitionBy("event_type").orderBy("c", "d")
-    wn = Window.partitionBy("event_type")
-    r = daily.select(
-        "event_type",
-        "c",
-        F.row_number().over(wr).alias("rk"),
-        F.count("*").over(wn).alias("n"),
-    ).withColumn("kk", F.greatest(F.lit(1), F.expr("(n * 5 + 99) div 100")))
-    return r.groupBy("event_type").agg(
-        F.max("n").cast("bigint").alias("n_days"),
-        F.max("kk").cast("bigint").alias("k_tail"),
-        F.max(F.when(F.col("rk") == F.col("kk"), F.col("c")))
-        .cast("bigint")
-        .alias("var5_cents"),
-        F.expr("sum(CASE WHEN rk <= kk THEN c ELSE 0 END) div max(kk)")
-        .cast("bigint")
-        .alias("es5_cents"),
-    )
+    return run_sql(spark, sf_dir, _VAR_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Partial autocorrelation (Durbin-Levinson over the shared ACF moments)
 # ---------------------------------------------------------------------------
 
-# rho uses the STANDARD ACF estimator (the stats_ljung_box construction):
-# deviations from the single full-series mean, full-series variance
-# denominator, cross-multiplied by n² so both operands are exact integers.
-_PACF_ORACLE = """
-WITH base AS (
-    SELECT event_type,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS c,
-           lead(CAST(floor(value * 100 + 0.5) AS BIGINT), 1) OVER w AS y1,
-           lead(CAST(floor(value * 100 + 0.5) AS BIGINT), 2) OVER w AS y2,
-           lead(CAST(floor(value * 100 + 0.5) AS BIGINT), 3) OVER w AS y3
-    FROM events
-    WINDOW w AS (PARTITION BY event_type
-                 ORDER BY CAST(floor(epoch(ts)) AS BIGINT), event_id)
-),
-pairs AS (
-    SELECT event_type, 1 AS lag, c AS x, y1 AS y FROM base WHERE y1 IS NOT NULL
-    UNION ALL
-    SELECT event_type, 2, c, y2 FROM base WHERE y2 IS NOT NULL
-    UNION ALL
-    SELECT event_type, 3, c, y3 FROM base WHERE y3 IS NOT NULL
-),
-m AS (
-    SELECT event_type, lag, sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy
-    FROM pairs GROUP BY 1, 2
-),
-tot AS (
-    SELECT event_type, count(*) AS nn,
-           sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS s1,
-           sum(CAST(floor(value * 100 + 0.5) AS BIGINT)
-               * CAST(floor(value * 100 + 0.5) AS BIGINT)) AS s2
-    FROM events GROUP BY 1
-),
-r AS (
-    SELECT m.event_type, m.lag,
-           CAST(t.nn * t.nn * m.sxy - t.nn * t.s1 * (m.sx + m.sy)
-                + (t.nn - m.lag) * t.s1 * t.s1 AS DOUBLE)
-           / nullif(CAST(t.nn * t.nn * t.s2 - t.nn * t.s1 * t.s1 AS DOUBLE),
-                    0.0) AS rho
-    FROM m JOIN tot t USING (event_type)
-),
-p AS (
-    SELECT event_type,
-           max(CASE WHEN lag = 1 THEN rho END) AS r1,
-           max(CASE WHEN lag = 2 THEN rho END) AS r2,
-           max(CASE WHEN lag = 3 THEN rho END) AS r3
-    FROM r GROUP BY 1
-)
+# rho is _ACF_RHO's standard estimator (the stats_ljung_box
+# construction); phi22 and phi33 are the Durbin-Levinson recursions.
+_PACF_SQL = "WITH " + _ACF_MOMENTS + _ACF_RHO + """
 SELECT event_type,
-       round(r1, 6) + 0.0 AS pacf_1,
-       round((r2 - r1 * r1) / nullif(1 - r1 * r1, 0.0), 6) + 0.0 AS pacf_2,
+       round(r1, 6) + 0e0 AS pacf_1,
+       round((r2 - r1 * r1) / nullif(1 - r1 * r1, 0e0), 6) + 0e0 AS pacf_2,
        round((r3 - r1 * r2
-                 - ((r2 - r1 * r1) / nullif(1 - r1 * r1, 0.0))
+                 - ((r2 - r1 * r1) / nullif(1 - r1 * r1, 0e0))
                    * (r2 - r1 * r1))
              / nullif(1 - r1 * r1
-                 - ((r2 - r1 * r1) / nullif(1 - r1 * r1, 0.0))
-                   * (r2 - r1 * r1), 0.0), 6) + 0.0 AS pacf_3
+                 - ((r2 - r1 * r1) / nullif(1 - r1 * r1, 0e0))
+                   * (r2 - r1 * r1), 0e0), 6) + 0e0 AS pacf_3
 FROM p
 """
 
 
-@op("ts_pacf", oracle=_PACF_ORACLE, tags=("ext", "timeseries", "stats"))
+@op("ts_pacf", oracle=duckdb_sql(_PACF_SQL), tags=("ext", "timeseries", "stats"))
 def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partial autocorrelation (lags 1-3) per event-type value series
     via the Durbin-Levinson recursion over the standard ACF estimates —
@@ -2255,58 +1933,17 @@ def ts_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one window pass per series + a 15-key agg (the ts_autocorr
     plan) + a |types|-row moment join.
     """
-    ev = load(spark, sf_dir, "events")
-    m = _acf_moment_frame(ev)
-    c = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-    tot = ev.select("event_type", c.alias("c")).groupBy("event_type").agg(
-        F.count("*").alias("nn"),
-        F.sum(F.col("c").cast("decimal(38,0)")).alias("s1"),
-        F.sum((F.col("c") * F.col("c")).cast("decimal(38,0)")).alias("s2"),
-    )
-    j = m.join(F.broadcast(tot), "event_type")
-    num = (
-        F.col("nn") * F.col("nn") * F.col("sxy")
-        - F.col("nn") * F.col("s1") * (F.col("sx") + F.col("sy"))
-        + (F.col("nn") - F.col("lag")) * F.col("s1") * F.col("s1")
-    )
-    den = (
-        F.col("nn") * F.col("nn") * F.col("s2")
-        - F.col("nn") * F.col("s1") * F.col("s1")
-    )
-    rho = j.select(
-        "event_type",
-        "lag",
-        (num.cast("double") / F.nullif(den.cast("double"), F.lit(0.0))).alias("rho"),
-    )
-    p = rho.groupBy("event_type").agg(
-        *[
-            F.max(F.when(F.col("lag") == k, F.col("rho"))).alias(f"r{k}")
-            for k in (1, 2, 3)
-        ]
-    )
-    r1, r2, r3 = F.col("r1"), F.col("r2"), F.col("r3")
-    phi22 = (r2 - r1 * r1) / F.nullif(F.lit(1) - r1 * r1, F.lit(0.0))
-    phi33 = (r3 - r1 * r2 - phi22 * (r2 - r1 * r1)) / F.nullif(
-        F.lit(1) - r1 * r1 - phi22 * (r2 - r1 * r1), F.lit(0.0)
-    )
-    return p.select(
-        "event_type",
-        (F.round(r1, 6) + F.lit(0.0)).alias("pacf_1"),
-        (F.round(phi22, 6) + F.lit(0.0)).alias("pacf_2"),
-        (F.round(phi33, 6) + F.lit(0.0)).alias("pacf_3"),
-    )
+    return run_sql(spark, sf_dir, _PACF_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Outage windows (gap intervals above the feed-break threshold)
 # ---------------------------------------------------------------------------
 
-_OUTAGE_MIN_S = 3600  # a 1h silence on any event type is a feed break here
-
-_OUTAGE_ORACLE = f"""
+# A 1h (3600 s) silence on any event type is a feed break here.
+_OUTAGE_SQL = """
 WITH t AS (
-    SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) AS te, event_id
-    FROM events
+    SELECT event_type, {te} AS te, event_id FROM {events}
 ), g AS (
     SELECT event_type,
            lag(te) OVER (PARTITION BY event_type
@@ -2318,11 +1955,11 @@ SELECT event_type,
        CAST(prev_te AS BIGINT) AS outage_start_epoch,
        CAST(te AS BIGINT) AS outage_end_epoch,
        CAST(te - prev_te AS BIGINT) AS gap_s
-FROM g WHERE te - prev_te >= {_OUTAGE_MIN_S}
+FROM g WHERE te - prev_te >= 3600
 """
 
 
-@op("ts_outage_windows", oracle=_OUTAGE_ORACLE, tags=("ext", "timeseries"))
+@op("ts_outage_windows", oracle=duckdb_sql(_OUTAGE_SQL), tags=("ext", "timeseries"))
 def ts_outage_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concrete outage intervals per event type: every silence of
     ≥ 1 hour between consecutive events, as (start, end, duration) rows
@@ -2339,33 +1976,18 @@ def ts_outage_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is |outages| rows, which is small by definition of the
     threshold.
     """
-    t = load(spark, sf_dir, "events").select(
-        "event_type", epoch_seconds("ts").alias("te"), "event_id"
-    )
-    w = Window.partitionBy("event_type").orderBy("te", "event_id")
-    g = t.select(
-        "event_type",
-        F.lag("te").over(w).alias("prev_te"),
-        "te",
-    )
-    return g.filter(F.col("te") - F.col("prev_te") >= _OUTAGE_MIN_S).select(
-        "event_type",
-        F.col("prev_te").cast("bigint").alias("outage_start_epoch"),
-        F.col("te").cast("bigint").alias("outage_end_epoch"),
-        (F.col("te") - F.col("prev_te")).cast("bigint").alias("gap_s"),
-    )
+    return run_sql(spark, sf_dir, _OUTAGE_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Hour-of-week load profile per event type (dow × hour seasonality matrix)
 # ---------------------------------------------------------------------------
 
-_HOW_ORACLE = """
+_HOW_SQL = """
 WITH b AS (
     SELECT event_type,
-           ((CAST(floor(epoch(ts)) AS BIGINT) // 86400 + 4) % 7) * 24
-           + (CAST(floor(epoch(ts)) AS BIGINT) // 3600) % 24 AS how
-    FROM events
+           (({te} // 86400 + 4) % 7) * 24 + ({te} // 3600) % 24 AS how
+    FROM {events}
 )
 SELECT event_type,
        CAST(how AS BIGINT) AS how,
@@ -2377,7 +1999,7 @@ FROM b GROUP BY 1, 2
 """
 
 
-@op("ts_hour_of_week_profile", oracle=_HOW_ORACLE, tags=("ext", "timeseries"))
+@op("ts_hour_of_week_profile", oracle=duckdb_sql(_HOW_SQL), tags=("ext", "timeseries"))
 def ts_hour_of_week_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event volume by hour-of-week slot (dow·24 + hour, Monday-anchored
     via the epoch-day + 4 offset: day 0 = 1970-01-01 was a Thursday) per
@@ -2397,22 +2019,7 @@ def ts_hour_of_week_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     a |types|-keyed window over ≤168·|types| aggregated rows. Nothing
     row-scale crosses the second exchange.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        (
-            (epoch_div("ts", 86400) + 4) % 7 * 24
-            + epoch_div("ts", 3600) % 24
-        ).alias("how"),
-    )
-    g = b.groupBy("event_type", "how").agg(F.count("*").alias("n"))
-    return g.select(
-        "event_type",
-        F.col("how").cast("bigint").alias("how"),
-        F.col("n").cast("bigint").alias("n"),
-        F.expr("n * 10000 div sum(n) OVER (PARTITION BY event_type)")
-        .cast("bigint")
-        .alias("share_bp"),
-    )
+    return run_sql(spark, sf_dir, _HOW_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2670,18 +2277,15 @@ def ts_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Index of dispersion of daily event counts per type (burstiness classifier)
 # ---------------------------------------------------------------------------
 
-# one-sided normal 5% for the chi2(n-1)/(n-1) large-sample approximation
-_DISP_Z = 1.644854
-
-_DISPERSION_ORACLE = f"""
+# 1.644854 is the one-sided normal 5% value for the chi2(n-1)/(n-1)
+# large-sample approximation.
+_DISPERSION_SQL = """
 WITH d AS (
-    SELECT event_type,
-           CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-           count(*) AS c
-    FROM events GROUP BY 1, 2
+    SELECT event_type, {te} // 86400 AS day, count(*) AS c
+    FROM {events} GROUP BY 1, 2
 ), m AS (
     SELECT event_type, count(*) AS n, sum(c) AS s, sum(c * c) AS q
-    FROM d GROUP BY 1 HAVING count(*) >= 2 AND sum(c) > 0
+    FROM d GROUP BY event_type HAVING count(*) >= 2 AND sum(c) > 0
 ), v AS (
     SELECT event_type, n, s,
            (CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * s / n) / (n - 1)
@@ -2690,14 +2294,14 @@ WITH d AS (
 )
 SELECT event_type,
        CAST(n AS BIGINT) AS n_days,
-       round(CAST(s AS DOUBLE) / n, 4) + 0.0 AS mean_per_day,
-       round(disp, 6) + 0.0 AS dispersion_index,
-       round(disp, 6) > 1 + {_DISP_Z} * sqrt(2.0 / (n - 1)) AS overdispersed
+       round(CAST(s AS DOUBLE) / n, 4) + 0e0 AS mean_per_day,
+       round(disp, 6) + 0e0 AS dispersion_index,
+       round(disp, 6) > 1 + 1.644854e0 * sqrt(2e0 / (n - 1)) AS overdispersed
 FROM v
 """
 
 
-@op("ts_dispersion_index", oracle=_DISPERSION_ORACLE, tags=("ext", "ts"))
+@op("ts_dispersion_index", oracle=duckdb_sql(_DISPERSION_SQL), tags=("ext", "ts"))
 def ts_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index of dispersion (variance-to-mean ratio) of DAILY EVENT
     COUNTS per type — the one-number burstiness classifier: a Poisson
@@ -2718,45 +2322,24 @@ def ts_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → (type, day) hash agg → |types| moment agg, all
     partial-combined.
     """
-    d = (
-        load(spark, sf_dir, "events")
-        .select("event_type", epoch_div("ts", 86400).alias("day"))
-        .groupBy("event_type", "day")
-        .agg(F.count("*").alias("c"))
-    )
-    m = (
-        d.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("c").alias("s"),
-            F.sum(F.col("c") * F.col("c")).alias("q"),
-        )
-        .filter((F.col("n") >= 2) & (F.col("s") > 0))
-    )
-    n, s, q = F.col("n"), F.col("s"), F.col("q")
-    disp = (
-        (q.cast("double") - s.cast("double") * s / n) / (n - 1)
-    ) / (s.cast("double") / n)
-    rd = F.round(disp, 6)
-    return m.select(
-        "event_type",
-        n.cast("bigint").alias("n_days"),
-        (F.round(s.cast("double") / n, 4) + F.lit(0.0)).alias("mean_per_day"),
-        (rd + F.lit(0.0)).alias("dispersion_index"),
-        (rd > 1 + _DISP_Z * F.sqrt(F.lit(2.0) / (n - 1))).alias("overdispersed"),
-    )
+    return run_sql(spark, sf_dir, _DISPERSION_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Seasonal-naive vs naive-1 forecast error per type (which baseline to beat)
 # ---------------------------------------------------------------------------
 
-_SNAIVE_ORACLE = """
+# Day-VALUE lags as degenerate RANGE frames ([day-1, day-1] and
+# [day-7, day-7]) over ONE window pass: one exchange, one sort, no
+# triple re-aggregation of the daily frame (the self-join form scanned
+# events three times), and gaps still can't misalign — an absent lag
+# day is an empty frame, i.e. NULL, filtered like the inner join it
+# replaces.
+_SNAIVE_SQL = """
 WITH d AS (
-    SELECT event_type,
-           CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-           sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS x
-    FROM events GROUP BY 1, 2
+    SELECT event_type, {te} // 86400 AS day,
+           sum(CAST(floor(value * 100 + 0.5e0) AS BIGINT)) AS x
+    FROM {events} GROUP BY 1, 2
 ), l AS (
     SELECT event_type, x,
            max(x) OVER (PARTITION BY event_type ORDER BY day
@@ -2764,20 +2347,18 @@ WITH d AS (
            max(x) OVER (PARTITION BY event_type ORDER BY day
                         RANGE BETWEEN 7 PRECEDING AND 7 PRECEDING) AS x7
     FROM d
-), j AS (
-    SELECT event_type, x, x1, x7 FROM l
-    WHERE x1 IS NOT NULL AND x7 IS NOT NULL
 )
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n_days,
        CAST(sum(abs(x - x1)) * 10000 // sum(x) AS BIGINT) AS wmape_naive1_bp,
        CAST(sum(abs(x - x7)) * 10000 // sum(x) AS BIGINT) AS wmape_naive7_bp,
        sum(abs(x - x7)) < sum(abs(x - x1)) AS weekly_naive_wins
-FROM j GROUP BY 1 HAVING sum(x) > 0
+FROM l WHERE x1 IS NOT NULL AND x7 IS NOT NULL
+GROUP BY event_type HAVING sum(x) > 0
 """
 
 
-@op("ts_seasonal_naive_error", oracle=_SNAIVE_ORACLE, tags=("ext", "ts"))
+@op("ts_seasonal_naive_error", oracle=duckdb_sql(_SNAIVE_SQL), tags=("ext", "ts"))
 def ts_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The two baselines every forecast must beat, scored against each
     other per type: naive-1 (tomorrow = today) vs seasonal-naive-7
@@ -2801,47 +2382,7 @@ def ts_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types| rollup with map-side partials. One exchange end-to-end
     after the daily agg; the events scan happens once.
     """
-    d = (
-        load(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            epoch_div("ts", 86400).alias("day"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("c"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").alias("x"))
-    )
-    # day-VALUE lags as degenerate RANGE frames ([day-1, day-1] and
-    # [day-7, day-7]) over ONE window pass: one exchange, one sort, no
-    # triple re-aggregation of the daily frame (the self-join form
-    # scanned events three times), and gaps still can't misalign — an
-    # absent lag day is an empty frame, i.e. NULL, filtered like the
-    # inner join it replaces
-    wd = Window.partitionBy("event_type").orderBy("day")
-    l = d.select(
-        "event_type",
-        "x",
-        F.max("x").over(wd.rangeBetween(-1, -1)).alias("x1"),
-        F.max("x").over(wd.rangeBetween(-7, -7)).alias("x7"),
-    )
-    j = l.filter(F.col("x1").isNotNull() & F.col("x7").isNotNull())
-    return (
-        j.groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_days"),
-            F.sum(F.abs(F.col("x") - F.col("x1"))).alias("sae1"),
-            F.sum(F.abs(F.col("x") - F.col("x7"))).alias("sae7"),
-            F.sum("x").alias("sx"),
-        )
-        .filter(F.col("sx") > 0)
-        .select(
-            "event_type",
-            "n_days",
-            F.expr("sae1 * 10000 div sx").cast("bigint").alias("wmape_naive1_bp"),
-            F.expr("sae7 * 10000 div sx").cast("bigint").alias("wmape_naive7_bp"),
-            (F.col("sae7") < F.col("sae1")).alias("weekly_naive_wins"),
-        )
-    )
+    return run_sql(spark, sf_dir, _SNAIVE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2849,13 +2390,13 @@ def ts_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dependent at all?)
 # ---------------------------------------------------------------------------
 
-_TP_CRIT = 1.959964  # two-sided 5% normal critical value
-
-_TP_ORACLE = f"""
+# The verdict compares the ROUNDED z against the two-sided 5% normal
+# critical value 1.959964; n counts the two end days.
+_TP_SQL = """
 WITH d AS (
-    SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-           sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS x
-    FROM events GROUP BY 1, 2
+    SELECT event_type, {te} // 86400 AS day,
+           sum(CAST(floor(value * 100 + 0.5e0) AS BIGINT)) AS x
+    FROM {events} GROUP BY 1, 2
 ), l AS (
     SELECT event_type, x,
            lag(x)  OVER (PARTITION BY event_type ORDER BY day) AS xp,
@@ -2867,23 +2408,23 @@ WITH d AS (
            sum(CASE WHEN (x > xp AND x > xn) OR (x < xp AND x < xn)
                     THEN 1 ELSE 0 END) AS tp
     FROM l WHERE xp IS NOT NULL AND xn IS NOT NULL
-    GROUP BY 1 HAVING count(*) >= 13
+    GROUP BY event_type HAVING count(*) + 2 >= 15
 ), f AS (
     SELECT event_type, n, tp,
-           (tp - 2.0 * (n - 2) / 3) / sqrt((16.0 * n - 29) / 90) AS z
+           (tp - 2e0 * (n - 2) / 3) / sqrt((16e0 * n - 29) / 90) AS z
     FROM t
 )
 SELECT event_type,
        CAST(n AS BIGINT) AS n_days,
        CAST(tp AS BIGINT) AS n_turning,
-       round(2.0 * (n - 2) / 3, 4) + 0.0 AS expected_turning,
-       round(z, 6) + 0.0 AS z,
-       abs(round(z, 6)) > {_TP_CRIT} AS reject_random
+       round(2e0 * (n - 2) / 3, 4) + 0e0 AS expected_turning,
+       round(z, 6) + 0e0 AS z,
+       abs(round(z, 6)) > 1.959964e0 AS reject_random
 FROM f
 """
 
 
-@op("ts_turning_points", oracle=_TP_ORACLE, tags=("ext", "timeseries", "stats"))
+@op("ts_turning_points", oracle=duckdb_sql(_TP_SQL), tags=("ext", "timeseries", "stats"))
 def ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Turning-point test of the daily cents series per type — the
     cheapest omnibus randomness screen: an i.i.d. series has E[T] =
@@ -2904,48 +2445,7 @@ def ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → (type, day) hash agg → one per-type day window
     (|days|-bounded partitions) → |types| rows.
     """
-    d = (
-        load(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            epoch_div("ts", 86400).alias("day"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("c"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").alias("x"))
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    l = d.select(
-        "event_type",
-        "x",
-        F.lag("x").over(w).alias("xp"),
-        F.lead("x").over(w).alias("xn"),
-    ).filter(F.col("xp").isNotNull() & F.col("xn").isNotNull())
-    t = (
-        l.groupBy("event_type")
-        .agg(
-            (F.count("*") + 2).alias("n"),
-            F.sum(
-                F.when(
-                    ((F.col("x") > F.col("xp")) & (F.col("x") > F.col("xn")))
-                    | ((F.col("x") < F.col("xp")) & (F.col("x") < F.col("xn"))),
-                    1,
-                ).otherwise(0)
-            ).alias("tp"),
-        )
-        .filter(F.col("n") >= 15)
-    )
-    n, tp = F.col("n"), F.col("tp")
-    z = (tp - 2.0 * (n - 2) / 3) / F.sqrt((16.0 * n - 29) / 90)
-    rz = F.round(z, 6)
-    return t.select(
-        "event_type",
-        n.cast("bigint").alias("n_days"),
-        tp.cast("bigint").alias("n_turning"),
-        (F.round(2.0 * (n - 2) / 3, 4) + F.lit(0.0)).alias("expected_turning"),
-        (rz + F.lit(0.0)).alias("z"),
-        (F.abs(rz) > F.lit(_TP_CRIT)).alias("reject_random"),
-    )
+    return run_sql(spark, sf_dir, _TP_SQL)
 
 
 # ---------------------------------------------------------------------------

@@ -100,7 +100,10 @@ def udaf_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def udtf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF: one row in → many rows out (tokenizer-as-table-fn).
 
-    Registered and invoked through SQL LATERAL, the Spark ≥3.5 UDTF path.
+    Invoked as a lateral join (``DataFrame.lateralJoin`` with the UDTF
+    called on an ``outer()`` column reference), the DataFrame form of
+    SQL ``LATERAL``. The UDTF object is called directly, never
+    registered, so the caller's session gains no temporary function.
     Bounded to doc_id<50 to keep the fixture result compact.
     """
 
@@ -110,12 +113,7 @@ def udtf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             for w in (text or "").split(" "):
                 yield (w,)
 
-    spark.udtf.register("split_words", SplitWords)
-    return spark.sql(
-        """
-        SELECT d.doc_id, s.word
-        FROM {documents} d, LATERAL split_words(d.text) s
-        WHERE d.doc_id < 50
-        """,
-        documents=load(spark, sf_dir, "documents"),
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 50).alias("d")
+    return d.lateralJoin(SplitWords(F.col("d.text").outer()).alias("s")).select(
+        "d.doc_id", "s.word"
     )

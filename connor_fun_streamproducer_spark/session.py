@@ -109,17 +109,27 @@ def stop_spark() -> None:
         active.stop()
 
 
+# py4j's "release this Java object" command (GatewayClient.
+# garbage_collect_object): sent whenever Python frees a JavaObject,
+# including objects that unrelated, earlier code left to the collector.
+_PY4J_RELEASE = "m\nd\n"
+
+
 @contextlib.contextmanager
 def py4j_commands(spark: SparkSession):
     """Count the py4j commands Python sends to the JVM inside the
     block; yields a one-cell list that holds the count. Around an op's
-    ``fn(spark, sf_dir)`` it is the op's construction cost."""
+    ``fn(spark, sf_dir)`` it is the op's construction cost. Object
+    releases are not counted: when Python's collector runs inside the
+    block it frees whatever JavaObjects were garbage by then, and that
+    traffic belongs to no op."""
     client = spark.sparkContext._gateway._gateway_client
     send, sent = client.send_command, [0]
 
-    def counting(*args, **kwargs):
-        sent[0] += 1
-        return send(*args, **kwargs)
+    def counting(command, *args, **kwargs):
+        if not command.startswith(_PY4J_RELEASE):
+            sent[0] += 1
+        return send(command, *args, **kwargs)
 
     client.send_command = counting
     try:

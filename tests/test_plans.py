@@ -1946,7 +1946,11 @@ def test_rank_sum_pair_single_exchange(spark):
 # (exchanges, parquet scans) of each two-era op: the per-type aggregate or
 # window stage(s) over ONE events scan, the era boundary a plan literal.
 # stats_mcnemar's second scan feeds its user-universe count.
-_ERA_PLAN_SHAPE = {
+# (Exchange, Scan parquet) of every op that runs one SQL text on both
+# engines through sql_front.run_sql: each count is the one its
+# Column-DSL body planned before the text replaced it.
+_SQL_FRONT_PLAN_SHAPE = {
+    # the two-era suite
     "stats_welch_ttest": (2, 1),
     "stats_cohens_d_eras": (2, 1),
     "stats_brown_forsythe": (2, 1),
@@ -1958,19 +1962,42 @@ _ERA_PLAN_SHAPE = {
     "stats_mcnemar": (4, 2),
     "stats_wilcoxon_signed_rank": (2, 1),
     "stats_cvm_eras": (1, 1),
+    # the event time-series battery
+    "ts_autocorr": (1, 1),
+    "stats_ljung_box": (3, 3),
+    "ts_pacf": (2, 2),
+    "ts_changepoint_cusum": (2, 2),
+    "ts_sma_crossover": (1, 1),
+    "ts_event_gaps": (1, 1),
+    "ts_mann_kendall": (8, 4),
+    "ts_var_es": (2, 1),
+    "ts_outage_windows": (1, 1),
+    "ts_hour_of_week_profile": (2, 1),
+    "ts_dispersion_index": (2, 1),
+    "ts_seasonal_naive_error": (2, 1),
+    "ts_turning_points": (2, 1),
+    # contingency and rank statistics
+    "stats_join_cardinality": (5, 4),
+    "stats_profile_drift": (2, 2),
+    "stats_label_impurity": (2, 1),
+    "stats_quantile_ci": (1, 1),
+    "stats_gk_lambda": (14, 5),
+    "stats_cohens_kappa": (1, 1),
 }
 
 
-@pytest.mark.parametrize("key", sorted(_ERA_PLAN_SHAPE))
+@pytest.mark.parametrize("key", sorted(_SQL_FRONT_PLAN_SHAPE))
 def test_era_ops_scan_events_once_per_use(spark, key):
-    """The two-era ops run one SQL text on both engines; the Spark
+    """Each op runs one SQL text on both engines, and its Spark plan
+    keeps the exchange and scan counts of the DataFrame plan it
+    replaced. For the two-era ops this also pins that the Spark
     rendering takes the era boundary as a literal, not the oracle's
     scalar subquery, so no span scan or exchange joins the plan."""
     df = _q(key, spark)
     assert (
         count_in_plan(df, "Exchange"),
         count_in_plan(df, "Scan parquet"),
-    ) == _ERA_PLAN_SHAPE[key], formatted_plan(df)
+    ) == _SQL_FRONT_PLAN_SHAPE[key], formatted_plan(df)
 
 
 def test_brand_pipelines_broadcast_part(spark):

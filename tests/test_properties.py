@@ -5647,3 +5647,259 @@ def test_cohens_kappa_matches_python_reference(spark, tmp_path):
     assert (r["both_pass"], r["only_length"], r["only_wordlen"], r["both_fail"]) == (
         5, 3, 2, 6)
     assert abs(r["kappa"] - round(kappa_py((5, 3, 2, 6)), 6)) < 1e-9
+
+
+# ---------------------------------------------------------------------------
+# Python replays of the ops that run one SQL text on both engines
+# ---------------------------------------------------------------------------
+# Their oracle is their own text, so test_oracle cannot catch a fault both
+# renderings share; these replays compute each op from the rows of one
+# small constructed fixture.
+
+_REPLAY_T0 = 1704067200  # 2024-01-01T00:00:00Z
+
+
+def _replay_events():
+    """(event_id, epoch_s, event_type, cents): two irregular series with
+    same-second ties, hour-plus silences, a skipped day and a level
+    shift."""
+    import random
+
+    rng = random.Random(20240101)
+    rows = []
+    for et in ("a", "b"):
+        t = _REPLAY_T0
+        for i in range(400):
+            t += rng.choice([0, 60, 600, 3600, 3600, 7200, 9000])
+            if i == 200:
+                t += 2 * 86400
+            cents = 1000 + 37 * (i % 5) + (400 if i >= 250 else 0) + rng.randint(0, 90)
+            rows.append((len(rows), t, et, cents))
+    return rows
+
+
+def _replay_orders():
+    """(o_orderkey, o_custkey, day offset from 1997-12-01, cents):
+    oscillating spend per customer, two orders a day, either side of
+    the 1998-01-01 drift cut."""
+    import random
+
+    rng = random.Random(19971201)
+    rows = []
+    for cust in (11, 12, 13):
+        for i in range(40):
+            day = (i // 2) * 3
+            cents = 10000 + 4000 * ((i // 5) % 2) + rng.randint(0, 2500)
+            rows.append((len(rows) + 1, cust, day, cents))
+    return rows
+
+
+def _replay_documents():
+    """(doc_id, lang, source)."""
+    mix = {"s1": {"en": 9}, "s2": {"en": 5, "de": 5}, "s3": {"en": 6, "de": 3, "fr": 1}}
+    rows = []
+    for src, langs in mix.items():
+        for lang, c in langs.items():
+            rows += [(len(rows) + j, lang, src) for j in range(c)]
+    return rows
+
+
+@pytest.fixture(scope="module")
+def replay_dir(tmp_path_factory):
+    import pandas as pd
+
+    d = tmp_path_factory.mktemp("sql_replays")
+    pd.DataFrame([
+        dict(event_id=eid, ts=pd.Timestamp(te, unit="s"), user_id=1,
+             event_type=et, value=c / 100.0, props="{}")
+        for eid, te, et, c in _replay_events()
+    ]).to_parquet(d / "events.parquet", index=False)
+    pd.DataFrame([
+        dict(o_orderkey=k, o_custkey=cu, o_orderstatus="O", o_totalprice=c / 100.0,
+             o_orderdate=pd.Timestamp("1997-12-01") + pd.Timedelta(days=day),
+             o_orderpriority="1-URGENT")
+        for k, cu, day, c in _replay_orders()
+    ]).to_parquet(d / "orders.parquet", index=False, coerce_timestamps="us")
+    pd.DataFrame([
+        dict(doc_id=i, text="w", lang=lang, source=src, n_chars=1)
+        for i, lang, src in _replay_documents()
+    ]).to_parquet(d / "documents.parquet", index=False)
+    return str(d)
+
+
+def _series():
+    """event_type -> [(epoch_s, event_id, cents)] in (ts, event_id) order."""
+    out = {}
+    for eid, te, et, c in _replay_events():
+        out.setdefault(et, []).append((te, eid, c))
+    return {et: sorted(s) for et, s in out.items()}
+
+
+def _replay_pacf():
+    rows = []
+    for et, s in _series().items():
+        x = [c for _, _, c in s]
+        n, s1, s2 = len(x), sum(x), sum(c * c for c in x)
+        r = []
+        for k in (1, 2, 3):
+            sxy = sum(a * b for a, b in zip(x, x[k:]))
+            num = n * n * sxy - n * s1 * (sum(x[:-k]) + sum(x[k:])) + (n - k) * s1 * s1
+            r.append(num / (n * n * s2 - n * s1 * s1))
+        r1, r2, r3 = r
+        phi22 = (r2 - r1 * r1) / (1 - r1 * r1)
+        phi33 = (r3 - r1 * r2 - phi22 * (r2 - r1 * r1)) / (1 - r1 * r1 - phi22 * (r2 - r1 * r1))
+        rows.append((et, r1, phi22, phi33))
+    return rows
+
+
+def _gaps(s):
+    return [(a[0], b[0]) for a, b in zip(s, s[1:])]
+
+
+def _replay_event_gaps():
+    rows = []
+    for et, s in _series().items():
+        g = sorted(b - a for a, b in _gaps(s))
+        n = len(g)
+        rows.append((et, n, g[0], g[-1], g[(n + 1) // 2 - 1], g[(n * 9 + 9) // 10 - 1]))
+    return rows
+
+
+def _replay_outage_windows():
+    return [
+        (et, a, b, b - a)
+        for et, s in _series().items()
+        for a, b in _gaps(s)
+        if b - a >= 3600
+    ]
+
+
+def _replay_hour_of_week_profile():
+    from collections import Counter
+
+    cells = Counter(
+        (et, ((te // 86400 + 4) % 7) * 24 + (te // 3600) % 24)
+        for _, te, et, _ in _replay_events()
+    )
+    tot = Counter()
+    for (et, _), n in cells.items():
+        tot[et] += n
+    return [(et, how, n, n * 10000 // tot[et]) for (et, how), n in cells.items()]
+
+
+def _replay_seasonal_naive_error():
+    rows = []
+    for et, s in _series().items():
+        x = {}
+        for te, _, c in s:
+            x[te // 86400] = x.get(te // 86400, 0) + c
+        days = [d for d in x if d - 1 in x and d - 7 in x]
+        sx = sum(x[d] for d in days)
+        sae1 = sum(abs(x[d] - x[d - 1]) for d in days)
+        sae7 = sum(abs(x[d] - x[d - 7]) for d in days)
+        if sx > 0:
+            rows.append((et, len(days), sae1 * 10000 // sx, sae7 * 10000 // sx, sae7 < sae1))
+    return rows
+
+
+def _replay_sma_crossover():
+    per = {}
+    for k, cu, day, c in _replay_orders():
+        per.setdefault(cu, []).append((day, k, c))
+    rows = []
+    for cu, s in per.items():
+        s.sort()
+        cents = [c for _, _, c in s]
+        prev = None
+        for i in range(6, len(s)):
+            fast, slow = sum(cents[i - 2:i + 1]), sum(cents[i - 6:i + 1])
+            cmp = 7 * fast - 3 * slow
+            if prev is not None and ((cmp > 0 and prev <= 0) or (cmp < 0 and prev >= 0)):
+                rows.append((cu, s[i][1], i + 1, fast, slow, "golden" if cmp > 0 else "dead"))
+            prev = cmp
+    return rows
+
+
+def _replay_changepoint_cusum():
+    rows = []
+    for et, s in _series().items():
+        n, tot, prefix, best = len(s), sum(c for _, _, c in s), 0, None
+        for i, (te, _, c) in enumerate(s, start=1):
+            prefix += c
+            cand = (-abs(n * prefix - i * tot), te, i)
+            best = cand if best is None or cand[:2] < best[:2] else best
+        rows.append((et, n, best[2], -best[0]))
+    return rows
+
+
+def _replay_label_impurity():
+    from collections import Counter
+
+    cells = Counter((src, lang) for _, lang, src in _replay_documents())
+    rows = []
+    for src in sorted({s for s, _ in cells}):
+        cs = [c for (s, _), c in cells.items() if s == src]
+        n, ss = sum(cs), sum(c * c for c in cs)
+        rows.append((src, n, len(cs), (n * n - ss) * 10000 // (n * n)))
+    return rows
+
+
+def _replay_profile_drift():
+    import datetime as dt
+
+    cut = (dt.date(1998, 1, 1) - dt.date(1997, 12, 1)).days
+    vals = {}
+    for _, cu, day, c in _replay_orders():
+        era = "a" if day < cut else "b"
+        vals.setdefault(("total_cents", era), []).append(c)
+        vals.setdefault(("custkey", era), []).append(cu)
+    return [
+        (col, era, len(v), len(set(v)), min(v), max(v), len(set(v)) * 10000 // len(v))
+        for (col, era), v in vals.items()
+    ]
+
+
+# key -> (replay, output columns compared); float columns compare to 2e-6
+_SQL_REPLAYS = {
+    "ts_pacf": (_replay_pacf, ("event_type", "pacf_1", "pacf_2", "pacf_3")),
+    "ts_event_gaps": (_replay_event_gaps, (
+        "event_type", "n_gaps", "min_gap_s", "max_gap_s", "median_gap_s", "p90_gap_s")),
+    "ts_outage_windows": (_replay_outage_windows, (
+        "event_type", "outage_start_epoch", "outage_end_epoch", "gap_s")),
+    "ts_hour_of_week_profile": (_replay_hour_of_week_profile, (
+        "event_type", "how", "n", "share_bp")),
+    "ts_seasonal_naive_error": (_replay_seasonal_naive_error, (
+        "event_type", "n_days", "wmape_naive1_bp", "wmape_naive7_bp", "weekly_naive_wins")),
+    "ts_sma_crossover": (_replay_sma_crossover, (
+        "o_custkey", "o_orderkey", "rid", "sum_fast", "sum_slow", "cross_type")),
+    "ts_changepoint_cusum": (_replay_changepoint_cusum, (
+        "event_type", "n", "cp_index", "cusum_scaled_abs")),
+    "stats_label_impurity": (_replay_label_impurity, (
+        "source", "n_docs", "n_langs", "impurity_bp")),
+    "stats_profile_drift": (_replay_profile_drift, (
+        "col_name", "era", "n", "ndv", "min_v", "max_v", "distinct_share_bp")),
+}
+
+
+@pytest.mark.parametrize("key", sorted(_SQL_REPLAYS))
+def test_sql_text_ops_match_python_replays(spark, replay_dir, key):
+    """Each op's rows equal a direct Python replay over the fixture rows:
+    exact for integers, strings and verdicts, 2e-6 for the rounded
+    PACF doubles."""
+    from connor_fun_streamproducer_spark import registry
+
+    registry._ensure_loaded()
+    replay, cols = _SQL_REPLAYS[key]
+    got = sorted(
+        tuple(r[c] for c in cols)
+        for r in registry.OPS[key].fn(spark, replay_dir).collect()
+    )
+    want = sorted(replay())
+    assert len(got) == len(want) and len(want) > 0, (key, got, want)
+    for g, w in zip(got, want):
+        assert g[0] == w[0], (key, g, w)
+        for a, b in zip(g[1:], w[1:]):
+            if isinstance(b, float):
+                assert abs(a - b) < 2e-6, (key, g, w)
+            else:
+                assert a == b, (key, g, w)

@@ -9,13 +9,16 @@ construction cost and a caller's session left as it was.
 
 from __future__ import annotations
 
+import gc
+import time
+
 import pytest
 
 from connor_fun_streamproducer_spark import registry
 from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, spark_sql
 from connor_fun_streamproducer_spark.session import py4j_commands
 from tests.conftest import SF_DIR
-from tests.test_plans import _ERA_PLAN_SHAPE
+from tests.test_plans import _SQL_FRONT_PLAN_SHAPE
 
 registry._ensure_loaded()
 
@@ -29,21 +32,22 @@ def test_bare_decimal_literal_raises_exponent_form_renders_unchanged():
 
 
 def test_renderers_apply_each_dialect():
-    text = "SELECT {te} // 2 FROM {events} WHERE {te} < {mid}"
+    text = "SELECT {te} // 2, CAST(x AS {wide}) FROM {events} WHERE {te} < {mid}"
     assert duckdb_sql(text) == (
-        "SELECT CAST(floor(epoch(ts)) AS BIGINT) // 2 FROM events"
+        "SELECT CAST(floor(epoch(ts)) AS BIGINT) // 2, CAST(x AS HUGEINT) FROM events"
         " WHERE CAST(floor(epoch(ts)) AS BIGINT) < (SELECT (min(te) + max(te)) // 2 FROM b)"
     )
     assert spark_sql(text, mid=7) == (
-        "SELECT CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT)  div  2 FROM {events}"
-        " WHERE CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT) < 7"
+        "SELECT CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT)  div  2, CAST(x AS DECIMAL(38,0))"
+        " FROM {events} WHERE CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT) < 7"
     )
 
 
-@pytest.mark.parametrize("key", sorted(_ERA_PLAN_SHAPE))
+@pytest.mark.parametrize("key", sorted(_SQL_FRONT_PLAN_SHAPE))
 def test_era_op_build_sends_few_py4j_commands(spark, key):
-    """Building an era op is one ``spark.sql`` call: well under 500 py4j
-    commands once the schema memo and the era boundary are warm."""
+    """Building an op on ``run_sql`` is one ``spark.sql`` call: well
+    under 500 py4j commands once the schema memo (and, for an era op,
+    the era boundary) is warm."""
     fn = registry.OPS[key].fn
     fn(spark, SF_DIR)
     with py4j_commands(spark) as sent:
@@ -52,11 +56,44 @@ def test_era_op_build_sends_few_py4j_commands(spark, key):
 
 
 def test_sql_ops_leave_no_session_views(spark):
-    """sql_api, agg_grouping_sets and udtf_table pass their tables as
-    ``spark.sql`` DataFrame arguments, whose views live for one call; a
-    fresh session (no views from other tests) still lists none after."""
+    """sql_api and agg_grouping_sets pass their tables as ``spark.sql``
+    DataFrame arguments, whose views live for one call, and udtf_table
+    calls its UDTF object without registering it; a fresh session (no
+    views from other tests) lists no new view or function after."""
     s = spark.newSession()
     before = sorted(t.name for t in s.catalog.listTables())
+    functions = sorted(f.name for f in s.catalog.listFunctions())
     for key in ("sql_api", "agg_grouping_sets", "udtf_table"):
         assert registry.OPS[key].fn(s, SF_DIR).count() > 0, key
     assert sorted(t.name for t in s.catalog.listTables()) == before
+    assert sorted(f.name for f in s.catalog.listFunctions()) == functions
+
+
+def test_py4j_commands_skip_object_releases(spark):
+    """Releases of Java objects that Python frees inside the block are
+    sent (py4j's finalizer) but not counted."""
+    jvm = spark.sparkContext._jvm
+    held = [jvm.java.util.ArrayList() for _ in range(5)]
+    client = spark.sparkContext._gateway._gateway_client
+    send, seen = client.send_command, []
+
+    def spy(command, *args, **kwargs):
+        seen.append(command)
+        return send(command, *args, **kwargs)
+
+    def releases():
+        return [c for c in seen if c.startswith("m\nd\n")]
+
+    client.send_command = spy
+    try:
+        with py4j_commands(spark) as sent:
+            del held
+            gc.collect()
+            # pinned-thread py4j sends releases from its finalizer thread
+            deadline = time.monotonic() + 10
+            while len(releases()) < 5 and time.monotonic() < deadline:
+                time.sleep(0.05)
+    finally:
+        client.send_command = send
+    assert len(releases()) >= 5, seen
+    assert sent[0] == len(seen) - len(releases()), seen
