@@ -39,21 +39,22 @@ from connor_fun_streamproducer_spark.registry import op
 PROFILE_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
 
-def _col_oracle(c: str) -> str:
-    return f"""
-    SELECT '{c}' AS col_name,
-           CAST(count(*) AS BIGINT)                 AS n_rows,
-           CAST(count(*) - count({c}) AS BIGINT)    AS n_null,
-           CAST(count(DISTINCT {c}) AS BIGINT)      AS ndv,
-           min({c})                                 AS min_v,
-           max({c})                                 AS max_v
-    FROM lineitem
-    """
+_PROFILE_SQL = f"""
+SELECT col_name,
+       CAST(count(*) AS BIGINT) AS n_rows,
+       CAST(count(*) - count(value) AS BIGINT) AS n_null,
+       CAST(count(DISTINCT value) AS BIGINT) AS ndv,
+       min(value) AS min_v,
+       max(value) AS max_v
+FROM (SELECT {", ".join(PROFILE_COLS)} FROM {{lineitem}})
+UNPIVOT INCLUDE NULLS (value FOR col_name IN ({", ".join(PROFILE_COLS)}))
+GROUP BY col_name
+"""
 
 
 @op(
     "stats_table_profile",
-    oracle=" UNION ALL ".join(_col_oracle(c) for c in PROFILE_COLS),
+    oracle=duckdb_sql(_PROFILE_SQL),
     tags=("ext", "agg", "stats", "scale"),
 )
 def stats_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,19 +62,11 @@ def stats_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One row per profiled column: row count, null count, exact NDV, min,
     max — the inputs a cost-based optimizer needs for selectivity and
-    broadcast decisions. Implemented as ``unpivot`` → one grouped
+    broadcast decisions. Implemented as ``UNPIVOT`` → one grouped
     aggregation, so profiling N columns still reads the table once (the
     alternative, N separate aggregations, is N scans of 100 TB).
     """
-    li = load(spark, sf_dir, "lineitem").select(*PROFILE_COLS)
-    long = li.unpivot([], PROFILE_COLS, "col_name", "value")
-    return long.groupBy("col_name").agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.sum(F.col("value").isNull().cast("int")).cast("bigint").alias("n_null"),
-        F.count_distinct("value").cast("bigint").alias("ndv"),
-        F.min("value").alias("min_v"),
-        F.max("value").alias("max_v"),
-    )
+    return run_sql(spark, sf_dir, _PROFILE_SQL)
 
 
 # Pairwise Pearson correlation from exact integer moments. Columns are
@@ -467,21 +460,19 @@ _BENFORD_CASE = (
     " END"
 )
 
-_BENFORD_ORACLE = f"""
+_BENFORD_SQL = f"""
 WITH vals AS (
-    SELECT 'l_extendedprice' AS column_name,
-           CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-    FROM lineitem
-    UNION ALL
-    SELECT 'l_quantity', CAST(l_quantity AS BIGINT) FROM lineitem
-),
-d AS (
+    SELECT column_name, v
+    FROM (
+        SELECT CAST(floor(l_extendedprice * 100 + 0.5e0) AS BIGINT) AS l_extendedprice,
+               CAST(l_quantity AS BIGINT) AS l_quantity
+        FROM {{lineitem}}
+    ) UNPIVOT INCLUDE NULLS (v FOR column_name IN (l_extendedprice, l_quantity))
+), g AS (
     SELECT column_name,
-           CAST(substr(CAST(v AS VARCHAR), 1, 1) AS BIGINT) AS digit
-    FROM vals WHERE v > 0
-),
-g AS (
-    SELECT column_name, digit, count(*) AS n FROM d GROUP BY 1, 2
+           CAST(substr(CAST(v AS STRING), 1, 1) AS BIGINT) AS digit,
+           count(*) AS n
+    FROM vals WHERE v > 0 GROUP BY 1, 2
 )
 SELECT column_name, digit, CAST(n AS BIGINT) AS n,
        CAST(n * 10000 // sum(n) OVER (PARTITION BY column_name) AS BIGINT)
@@ -495,7 +486,7 @@ FROM g
 
 @op(
     "stats_benford_profile",
-    oracle=_BENFORD_ORACLE,
+    oracle=duckdb_sql(_BENFORD_SQL),
     tags=("ext", "stats", "profile"),
 )
 def stats_benford_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -514,41 +505,10 @@ def stats_benford_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     total than l_extendedprice (a qty×price product with partial digit
     mixing) at every scale, pinned by test_benford_contrast.
 
-    Scale: one stacked scan, an 18-key hash agg with map-side partials,
+    Scale: one unpivoted scan, an 18-key hash agg with map-side partials,
     and a per-column window over ≤9 rows — nothing grows with the data.
     """
-    li = load(spark, sf_dir, "lineitem")
-    vals = li.select(
-        F.expr(
-            "stack(2,"
-            " 'l_extendedprice', cast(floor(l_extendedprice * 100 + 0.5) as bigint),"
-            " 'l_quantity', cast(l_quantity as bigint)"
-            ") AS (column_name, v)"
-        )
-    ).filter(F.col("v") > 0)
-    g = (
-        vals.select(
-            "column_name",
-            F.substring(F.col("v").cast("string"), 1, 1).cast("bigint").alias("digit"),
-        )
-        .groupBy("column_name", "digit")
-        .agg(F.count("*").alias("n"))
-    )
-    return g.select(
-        "column_name",
-        "digit",
-        F.col("n").cast("bigint").alias("n"),
-        F.expr("n * 10000 div sum(n) OVER (PARTITION BY column_name)")
-        .cast("bigint")
-        .alias("observed_bp"),
-        F.expr(_BENFORD_CASE).cast("bigint").alias("expected_bp"),
-        F.expr(
-            f"abs(n * 10000 div sum(n) OVER (PARTITION BY column_name)"
-            f" - {_BENFORD_CASE})"
-        )
-        .cast("bigint")
-        .alias("dev_bp"),
-    )
+    return run_sql(spark, sf_dir, _BENFORD_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -562,35 +522,32 @@ def stats_benford_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # boundary.
 _MAD_Z_BP = 30000
 
-_MAD_ORACLE = f"""
+_MAD_SQL = f"""
 WITH base AS (
     SELECT user_id, event_id,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-),
-med AS (
+           CAST(floor(value * 100 + 0.5e0) AS BIGINT) AS cents
+    FROM {{events}}
+), med AS (
     SELECT user_id, CAST(2 * median(cents) AS BIGINT) AS m2
-    FROM base GROUP BY 1
-),
-dev AS (
+    FROM base GROUP BY user_id
+), dev AS (
     SELECT b.user_id, b.event_id, b.cents,
            abs(2 * b.cents - m.m2) AS dev2
-    FROM base b JOIN med m USING (user_id)
-),
-mad AS (
+    FROM base b JOIN med m ON b.user_id = m.user_id
+), mad AS (
     SELECT user_id, CAST(2 * median(dev2) AS BIGINT) AS mad4
-    FROM dev GROUP BY 1
+    FROM dev GROUP BY user_id
 )
 SELECT d.user_id, d.event_id, d.cents,
        CAST(13490 * d.dev2 // m.mad4 AS BIGINT) AS z_bp
-FROM dev d JOIN mad m USING (user_id)
+FROM dev d JOIN mad m ON d.user_id = m.user_id
 WHERE m.mad4 > 0 AND 13490 * d.dev2 // m.mad4 >= {_MAD_Z_BP}
 """
 
 
 @op(
     "stats_mad_outliers",
-    oracle=_MAD_ORACLE,
+    oracle=duckdb_sql(_MAD_SQL),
     tags=("ext", "stats", "profile"),
 )
 def stats_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -613,35 +570,7 @@ def stats_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user scalars back onto the events. For unbounded keys the KLL
     tier (agg_kll_quantile) is the sketch alternative.
     """
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "user_id",
-        "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    med = base.groupBy("user_id").agg(
-        (2 * F.median("cents")).cast("bigint").alias("m2")
-    )
-    dev = base.join(med, "user_id").select(
-        "user_id",
-        "event_id",
-        "cents",
-        F.abs(2 * F.col("cents") - F.col("m2")).alias("dev2"),
-    )
-    mad = dev.groupBy("user_id").agg(
-        (2 * F.median("dev2")).cast("bigint").alias("mad4")
-    )
-    return (
-        dev.join(mad, "user_id")
-        .filter(F.col("mad4") > 0)
-        .select(
-            "user_id",
-            "event_id",
-            "cents",
-            F.expr("13490 * dev2 div mad4").cast("bigint").alias("z_bp"),
-        )
-        .filter(F.col("z_bp") >= _MAD_Z_BP)
-    )
+    return run_sql(spark, sf_dir, _MAD_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -650,27 +579,22 @@ def stats_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KS_CUT = "1998-01-01"  # same mid-range era cut as stats_profile_drift
 
-_KS_ORACLE = f"""
+_KS_SQL = f"""
 WITH base AS (
     SELECT o_orderpriority AS grp,
-           CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-           CASE WHEN o_orderdate < TIMESTAMP '{_KS_CUT} 00:00:00'
-                THEN 1 ELSE 0 END AS in_a
-    FROM orders
-),
-v AS (
-    SELECT grp, cents,
-           sum(in_a) AS ca, sum(1 - in_a) AS cb
-    FROM base GROUP BY 1, 2
-),
-tot AS (
-    SELECT grp, sum(ca) AS n1, sum(cb) AS n2 FROM v GROUP BY 1
-),
-cum AS (
-    SELECT v.grp, t.n1, t.n2,
+           CAST(floor(o_totalprice * 100 + 0.5e0) AS BIGINT) AS cents,
+           CASE WHEN o_orderdate < '{_KS_CUT}' THEN 1 ELSE 0 END AS in_a
+    FROM {{orders}}
+), v AS (
+    SELECT grp, cents, sum(in_a) AS ca, sum(1 - in_a) AS cb
+    FROM base GROUP BY grp, cents
+), tot AS (
+    SELECT grp, sum(ca) AS n1, sum(cb) AS n2 FROM v GROUP BY grp
+), cum AS (
+    SELECT /*+ BROADCAST(t) */ v.grp, t.n1, t.n2,
            sum(v.ca) OVER (PARTITION BY v.grp ORDER BY v.cents) AS cum_a,
            sum(v.cb) OVER (PARTITION BY v.grp ORDER BY v.cents) AS cum_b
-    FROM v JOIN tot t USING (grp)
+    FROM v JOIN tot t ON v.grp = t.grp
 )
 SELECT grp,
        CAST(n1 AS BIGINT) AS n1,
@@ -684,7 +608,7 @@ FROM cum GROUP BY grp, n1, n2
 
 @op(
     "stats_ks_eras",
-    oracle=_KS_ORACLE,
+    oracle=duckdb_sql(_KS_SQL),
     tags=("ext", "stats", "profile", "scale"),
 )
 def stats_ks_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -707,69 +631,38 @@ def stats_ks_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
     (grp) partitioning ordered by value, and a final per-group max —
     the same single-exchange ladder as the window tier.
     """
-    o = load(spark, sf_dir, "orders")
-    base = o.select(
-        F.col("o_orderpriority").alias("grp"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-        F.when(F.col("o_orderdate") < _KS_CUT, F.lit(1)).otherwise(F.lit(0)).alias("in_a"),
-    )
-    v = base.groupBy("grp", "cents").agg(
-        F.sum("in_a").alias("ca"),
-        F.sum(1 - F.col("in_a")).alias("cb"),
-    )
-    tot = v.groupBy("grp").agg(
-        F.sum("ca").alias("n1"), F.sum("cb").alias("n2")
-    )
-    w = Window.partitionBy("grp").orderBy("cents")
-    cum = v.join(F.broadcast(tot), "grp").select(
-        "grp",
-        "n1",
-        "n2",
-        F.sum("ca").over(w).alias("cum_a"),
-        F.sum("cb").over(w).alias("cum_b"),
-    )
-    return (
-        cum.groupBy("grp", "n1", "n2")
-        .agg(
-            F.max(F.abs(F.col("n2") * F.col("cum_a") - F.col("n1") * F.col("cum_b"))).alias("d_scaled")
-        )
-        .select(
-            "grp",
-            F.col("n1").cast("bigint").alias("n1"),
-            F.col("n2").cast("bigint").alias("n2"),
-            F.col("d_scaled").cast("bigint").alias("d_scaled"),
-            F.expr("d_scaled * 10000 div (n1 * n2)").cast("bigint").alias("d_bp"),
-        )
-    )
+    return run_sql(spark, sf_dir, _KS_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Chi-square independence screen (scaled integral contributions)
 # ---------------------------------------------------------------------------
 
-_CHI2_ORACLE = """
+_CHI2_SQL = """
 WITH base AS (
-    SELECT event_type AS a,
-           CAST(strftime(ts, '%H') AS BIGINT) // 6 AS b
-    FROM events
-),
-o AS (SELECT a, b, count(*) AS obs FROM base GROUP BY 1, 2),
-ra AS (SELECT a, sum(obs) AS r FROM o GROUP BY 1),
-cb AS (SELECT b, sum(obs) AS c FROM o GROUP BY 1),
-n AS (SELECT sum(obs) AS total FROM o)
-SELECT o.a, o.b,
+    SELECT event_type AS a, CAST(hour(ts) // 6 AS BIGINT) AS b FROM {events}
+), o AS (
+    SELECT a, b, count(*) AS obs FROM base GROUP BY a, b
+), ra AS (
+    SELECT a, sum(obs) AS r FROM o GROUP BY a
+), cb AS (
+    SELECT b, sum(obs) AS c FROM o GROUP BY b
+), n AS (
+    SELECT sum(obs) AS total FROM o
+)
+SELECT /*+ BROADCAST(ra, cb, n) */ o.a, o.b,
        CAST(o.obs AS BIGINT) AS obs,
        CAST(ra.r * cb.c // n.total AS BIGINT) AS expected_floor,
        CAST((o.obs * n.total - ra.r * cb.c)
             * (o.obs * n.total - ra.r * cb.c)
             // (ra.r * cb.c * n.total) AS BIGINT) AS chi2_n_scaled
-FROM o JOIN ra USING (a) JOIN cb USING (b) CROSS JOIN n
+FROM o JOIN ra ON o.a = ra.a JOIN cb ON o.b = cb.b CROSS JOIN n
 """
 
 
 @op(
     "stats_chi2_independence",
-    oracle=_CHI2_ORACLE,
+    oracle=duckdb_sql(_CHI2_SQL),
     tags=("ext", "stats", "profile"),
 )
 def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -783,40 +676,15 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: expected counts are rationals r·c/N that never become
     floats — the contribution is one integral division of exact integer
     products per cell, identical cross-engine. DuckDB's `/` on BIGINT
-    yields double, so the oracle uses `//` to match Spark's `div`
-    (ANSI-mode discipline).
+    yields double, so the text divides with `//` (Spark's `div`, the
+    ANSI-mode discipline).
 
     Scale: one scan, a |A|×|B|-cell hash agg with map-side partials, two
     dim-bounded marginal aggs of the CELL frame (never the data), and a
     1-row total cross join — nothing after the first agg scales with
     rows.
     """
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        F.col("event_type").alias("a"),
-        F.expr("hour(ts) div 6").cast("bigint").alias("b"),
-    )
-    o = base.groupBy("a", "b").agg(F.count("*").alias("obs"))
-    ra = o.groupBy("a").agg(F.sum("obs").alias("r"))
-    cb = o.groupBy("b").agg(F.sum("obs").alias("c"))
-    n = o.agg(F.sum("obs").alias("total"))
-    return (
-        o.join(F.broadcast(ra), "a")
-        .join(F.broadcast(cb), "b")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "a",
-            "b",
-            F.col("obs").cast("bigint").alias("obs"),
-            F.expr("r * c div total").cast("bigint").alias("expected_floor"),
-            F.expr(
-                "(obs * total - r * c) * (obs * total - r * c)"
-                " div (r * c * total)"
-            )
-            .cast("bigint")
-            .alias("chi2_n_scaled"),
-        )
-    )
+    return run_sql(spark, sf_dir, _CHI2_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -827,34 +695,39 @@ _PSI_SPLIT_DATE = "1998-01-01"
 _PSI_BIN_WIDTH = 50000  # dollars per o_totalprice bin
 
 
-def _psi_oracle() -> str:
-    return f"""
+# The era totals are a whole-frame window over the |bins|-row cells frame
+# rather than an agg + cross join: the cells subtree is computed once (no
+# re-derived second scan of orders) and the window runs on a
+# dimension-bounded input.
+_PSI_SQL = f"""
 WITH b AS (
     SELECT CAST(floor(o_totalprice / {_PSI_BIN_WIDTH}) AS BIGINT) AS bin,
-           CASE WHEN o_orderdate < DATE '{_PSI_SPLIT_DATE}' THEN 1 ELSE 0 END
-               AS in_a
-    FROM orders
+           CASE WHEN o_orderdate < '{_PSI_SPLIT_DATE}' THEN 1 ELSE 0 END AS in_a
+    FROM {{orders}}
 ), cells AS (
-    SELECT bin,
-           sum(in_a)     AS c_a,
-           sum(1 - in_a) AS c_b
-    FROM b GROUP BY 1
-), tot AS (
-    SELECT sum(c_a) AS n_a, sum(c_b) AS n_b, count(*) AS n_bins FROM cells
+    SELECT bin, sum(in_a) AS c_a, sum(1 - in_a) AS c_b FROM b GROUP BY bin
+), c AS (
+    SELECT bin, c_a, c_b,
+           -- dim_window: |bins| PSI cells
+           sum(c_a) OVER () AS n_a,
+           sum(c_b) OVER () AS n_b,
+           count(*) OVER () AS n_bins
+    FROM cells
+), pq AS (
+    SELECT bin, c_a, c_b,
+           CAST(c_a + 1 AS DOUBLE) / (n_a + n_bins) AS p,
+           CAST(c_b + 1 AS DOUBLE) / (n_b + n_bins) AS q
+    FROM c
 )
-SELECT c.bin,
-       CAST(c.c_a AS BIGINT) AS c_a,
-       CAST(c.c_b AS BIGINT) AS c_b,
-       round((CAST(c.c_a + 1 AS DOUBLE) / (t.n_a + t.n_bins)
-              - CAST(c.c_b + 1 AS DOUBLE) / (t.n_b + t.n_bins))
-             * ln((CAST(c.c_a + 1 AS DOUBLE) / (t.n_a + t.n_bins))
-                  / (CAST(c.c_b + 1 AS DOUBLE) / (t.n_b + t.n_bins))), 6)
-           + 0.0 AS psi_contrib
-FROM cells c CROSS JOIN tot t
+SELECT bin,
+       CAST(c_a AS BIGINT) AS c_a,
+       CAST(c_b AS BIGINT) AS c_b,
+       round((p - q) * ln(p / q), 6) + 0e0 AS psi_contrib
+FROM pq
 """
 
 
-@op("stats_psi_stability", oracle=_psi_oracle(), tags=("ext", "profiling", "scale"))
+@op("stats_psi_stability", oracle=duckdb_sql(_PSI_SQL), tags=("ext", "profiling", "scale"))
 def stats_psi_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index cells between two eras of the orders
     table (pre/post 1998): per value-bin, the Laplace-smoothed PSI
@@ -878,37 +751,7 @@ def stats_psi_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile every monitoring job already runs; bins are value-derived
     so the output is dimension-bounded regardless of table size.
     """
-    o = load(spark, sf_dir, "orders").select(
-        F.floor(F.col("o_totalprice") / _PSI_BIN_WIDTH).cast("bigint").alias("bin"),
-        F.when(F.col("o_orderdate") < F.lit(_PSI_SPLIT_DATE).cast("date"), 1)
-        .otherwise(0)
-        .alias("in_a"),
-    )
-    cells = o.groupBy("bin").agg(
-        F.sum("in_a").alias("c_a"),
-        F.sum(F.lit(1) - F.col("in_a")).alias("c_b"),
-    )
-    # Era totals as a whole-frame window over the |bins|-row cells frame
-    # rather than an agg + cross join: the cells subtree is computed
-    # once (no re-derived second scan of orders) and the window runs on
-    # a dimension-bounded input.
-    wall = dim_window(Window.partitionBy(), bound="|bins| PSI cells")
-    c = cells.select(
-        "bin",
-        "c_a",
-        "c_b",
-        F.sum("c_a").over(wall).alias("n_a"),
-        F.sum("c_b").over(wall).alias("n_b"),
-        F.count("*").over(wall).alias("n_bins"),
-    )
-    p = (F.col("c_a") + 1).cast("double") / (F.col("n_a") + F.col("n_bins"))
-    q = (F.col("c_b") + 1).cast("double") / (F.col("n_b") + F.col("n_bins"))
-    return c.select(
-        "bin",
-        F.col("c_a").cast("bigint").alias("c_a"),
-        F.col("c_b").cast("bigint").alias("c_b"),
-        (F.round((p - q) * F.log(p / q), 6) + F.lit(0.0)).alias("psi_contrib"),
-    )
+    return run_sql(spark, sf_dir, _PSI_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1018,32 +861,36 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _AB_SPLIT_DATE = "1998-01-01"
 
-_AB_ORACLE = f"""
+_AB_SQL = f"""
 WITH o AS (
-    SELECT CASE WHEN o_orderdate < DATE '{_AB_SPLIT_DATE}' THEN 1 ELSE 0 END
-               AS in_a,
+    SELECT CASE WHEN o_orderdate < '{_AB_SPLIT_DATE}' THEN 1 ELSE 0 END AS in_a,
            CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS hit
-    FROM orders
+    FROM {{orders}}
 ), m AS (
     SELECT sum(in_a)              AS n_a,
            sum(in_a * hit)        AS x_a,
            sum(1 - in_a)          AS n_b,
            sum((1 - in_a) * hit)  AS x_b
     FROM o
+), p AS (
+    SELECT n_a, x_a, n_b, x_b,
+           CAST(x_a AS DOUBLE) / n_a AS p_a,
+           CAST(x_b AS DOUBLE) / n_b AS p_b,
+           CAST(x_a + x_b AS DOUBLE) / (n_a + n_b) AS pool
+    FROM m
 )
 SELECT CAST(n_a AS BIGINT) AS n_a, CAST(x_a AS BIGINT) AS x_a,
        CAST(n_b AS BIGINT) AS n_b, CAST(x_b AS BIGINT) AS x_b,
        CAST(x_a * 10000 // n_a AS BIGINT) AS rate_a_bp,
        CAST(x_b * 10000 // n_b AS BIGINT) AS rate_b_bp,
-       round((CAST(x_a AS DOUBLE) / n_a - CAST(x_b AS DOUBLE) / n_b)
-             / sqrt((CAST(x_a + x_b AS DOUBLE) / (n_a + n_b))
-                    * (1 - CAST(x_a + x_b AS DOUBLE) / (n_a + n_b))
-                    * (1.0 / n_a + 1.0 / n_b)), 6) + 0.0 AS z_score
-FROM m
+       round((p_a - p_b)
+             / sqrt(pool * (1 - pool) * (1e0 / n_a + 1e0 / n_b)), 6) + 0e0
+           AS z_score
+FROM p
 """
 
 
-@op("stats_ab_proportions", oracle=_AB_ORACLE, tags=("ext", "stats", "profile"))
+@op("stats_ab_proportions", oracle=duckdb_sql(_AB_SQL), tags=("ext", "stats", "profile"))
 def stats_ab_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion z-test — THE A/B-test significance primitive: is
     era B's hit rate (order status F) different from era A's beyond
@@ -1062,73 +909,47 @@ def stats_ab_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the wire carries 4 integers. Any A/B assignment column can replace
     the date-era split without touching the shape.
     """
-    o = load(spark, sf_dir, "orders").select(
-        F.when(F.col("o_orderdate") < F.lit(_AB_SPLIT_DATE).cast("date"), 1)
-        .otherwise(0)
-        .alias("in_a"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("hit"),
-    )
-    m = o.agg(
-        F.sum("in_a").alias("n_a"),
-        F.sum(F.col("in_a") * F.col("hit")).alias("x_a"),
-        F.sum(F.lit(1) - F.col("in_a")).alias("n_b"),
-        F.sum((F.lit(1) - F.col("in_a")) * F.col("hit")).alias("x_b"),
-    )
-    p_a = F.col("x_a").cast("double") / F.col("n_a")
-    p_b = F.col("x_b").cast("double") / F.col("n_b")
-    pool = (F.col("x_a") + F.col("x_b")).cast("double") / (F.col("n_a") + F.col("n_b"))
-    z = (p_a - p_b) / F.sqrt(
-        pool * (1 - pool) * (1.0 / F.col("n_a") + 1.0 / F.col("n_b"))
-    )
-    return m.select(
-        F.col("n_a").cast("bigint").alias("n_a"),
-        F.col("x_a").cast("bigint").alias("x_a"),
-        F.col("n_b").cast("bigint").alias("n_b"),
-        F.col("x_b").cast("bigint").alias("x_b"),
-        F.expr("x_a * 10000 div n_a").cast("bigint").alias("rate_a_bp"),
-        F.expr("x_b * 10000 div n_b").cast("bigint").alias("rate_b_bp"),
-        (F.round(z, 6) + F.lit(0.0)).alias("z_score"),
-    )
+    return run_sql(spark, sf_dir, _AB_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Key-integrity audit (PK uniqueness + FK orphan report)
 # ---------------------------------------------------------------------------
 
-_KEY_INTEGRITY_ORACLE = """
+_KEY_INTEGRITY_SQL = """
 SELECT 'orders_pk' AS check_name,
        CAST(count(*) AS BIGINT) AS n_checked,
        CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_good,
        CAST((count(*) - count(DISTINCT o_orderkey)) * 10000
             // count(*) AS BIGINT) AS violations_bp
-FROM orders
+FROM {orders}
 UNION ALL
 SELECT 'lineitem_pk',
        CAST(count(*) AS BIGINT),
-       CAST(count(DISTINCT o_orderkey * 10 + l_linenumber) AS BIGINT),
-       CAST((count(*) - count(DISTINCT o_orderkey * 10 + l_linenumber)) * 10000
+       CAST(count(DISTINCT l_orderkey * 10 + l_linenumber) AS BIGINT),
+       CAST((count(*) - count(DISTINCT l_orderkey * 10 + l_linenumber)) * 10000
             // count(*) AS BIGINT)
-FROM (SELECT l_orderkey AS o_orderkey, l_linenumber FROM lineitem)
+FROM {lineitem}
 UNION ALL
-SELECT 'lineitem_fk_orders',
+SELECT /*+ BROADCAST(p) */ 'lineitem_fk_orders',
        CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN o.o_orderkey IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(sum(CASE WHEN o.o_orderkey IS NULL THEN 1 ELSE 0 END) * 10000
+       CAST(sum(CASE WHEN p.pk IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT),
+       CAST(sum(CASE WHEN p.pk IS NULL THEN 1 ELSE 0 END) * 10000
             // count(*) AS BIGINT)
-FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
-  ON o.o_orderkey = l.l_orderkey
+FROM {lineitem} l LEFT JOIN (SELECT DISTINCT o_orderkey AS pk FROM {orders}) p
+  ON l.l_orderkey = p.pk
 UNION ALL
-SELECT 'orders_fk_customer',
+SELECT /*+ BROADCAST(p) */ 'orders_fk_customer',
        CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN c.c_custkey IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(sum(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END) * 10000
+       CAST(sum(CASE WHEN p.pk IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT),
+       CAST(sum(CASE WHEN p.pk IS NULL THEN 1 ELSE 0 END) * 10000
             // count(*) AS BIGINT)
-FROM orders r LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
-  ON c.c_custkey = r.o_custkey
+FROM {orders} r LEFT JOIN (SELECT DISTINCT c_custkey AS pk FROM {customer}) p
+  ON r.o_custkey = p.pk
 """
 
 
-@op("stats_key_integrity", oracle=_KEY_INTEGRITY_ORACLE, tags=("ext", "stats", "profile"))
+@op("stats_key_integrity", oracle=duckdb_sql(_KEY_INTEGRITY_SQL), tags=("ext", "stats", "profile"))
 def stats_key_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-integrity audit: primary-key uniqueness and foreign-key
     orphan rates as one uniform report (check_name, n_checked, n_good,
@@ -1147,57 +968,7 @@ def stats_key_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-key join or distinct — at 100 TB these run as the nightly
     data-contract suite; violations_bp is the alert threshold knob.
     """
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    cust = load(spark, sf_dir, "customer")
-
-    def pk(df: DataFrame, name: str, key) -> DataFrame:
-        # Integral `div` (not float /-then-cast) so the floor is exact at
-        # any count — same discipline as fk() and the oracle's `//`.
-        return (
-            df.agg(
-                F.count("*").cast("bigint").alias("n_checked"),
-                F.countDistinct(key).cast("bigint").alias("n_good"),
-            )
-            .select(
-                F.lit(name).alias("check_name"),
-                "n_checked",
-                "n_good",
-                F.expr("(n_checked - n_good) * 10000 div n_checked")
-                .cast("bigint")
-                .alias("violations_bp"),
-            )
-        )
-
-    def fk(child: DataFrame, name: str, ckey: str, parent: DataFrame, pkey: str) -> DataFrame:
-        p = parent.select(F.col(pkey).alias("__pk")).distinct()
-        j = child.join(F.broadcast(p), child[ckey] == F.col("__pk"), "left")
-        return j.agg(
-            F.lit(name).alias("check_name"),
-            F.count("*").cast("bigint").alias("n_checked"),
-            F.sum(F.when(F.col("__pk").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_good"),
-            F.expr(
-                "sum(CASE WHEN __pk IS NULL THEN 1 ELSE 0 END) * 10000"
-                " div count(*)"
-            )
-            .cast("bigint")
-            .alias("violations_bp"),
-        ).select("check_name", "n_checked", "n_good", "violations_bp")
-
-    return (
-        pk(o, "orders_pk", F.col("o_orderkey"))
-        .unionByName(
-            pk(
-                li,
-                "lineitem_pk",
-                F.col("l_orderkey") * 10 + F.col("l_linenumber"),
-            )
-        )
-        .unionByName(fk(li, "lineitem_fk_orders", "l_orderkey", o, "o_orderkey"))
-        .unionByName(fk(o, "orders_fk_customer", "o_custkey", cust, "c_custkey"))
-    )
+    return run_sql(spark, sf_dir, _KEY_INTEGRITY_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1209,17 +980,28 @@ def stats_key_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (10k events -> 3 shards), bounded per-shard sort at any corpus size.
 _LATENESS_SHARD = 4096
 
-_LATENESS_ORACLE = """
+# Spark's and DuckDB's greatest() both skip NULLs, so the first shard
+# (prev_max NULL) falls back to its within-shard running max alone.
+_LATENESS_SQL = f"""
 WITH e AS (
-    SELECT event_id, epoch_us(ts) // 1000000 AS s FROM events
-), r AS (
-    SELECT s,
-           max(s) OVER (ORDER BY event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS frontier
+    SELECT event_id, {{te}} AS s, event_id // {_LATENESS_SHARD} AS shard
+    FROM {{events}}
+), rm AS (
+    SELECT shard, s,
+           max(s) OVER (PARTITION BY shard ORDER BY event_id
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rm
     FROM e
+), prefix AS (
+    SELECT shard,
+           -- dim_window: |shards| = N / _LATENESS_SHARD rows (range-sharded
+           -- prefix combine; 1e6-row shards keep this ~1e6 at 1e12 events)
+           max(smax) OVER (ORDER BY shard
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+               AS prev_max
+    FROM (SELECT shard, max(s) AS smax FROM e GROUP BY shard)
 ), l AS (
-    SELECT frontier - s AS late FROM r
+    SELECT /*+ BROADCAST(p) */ greatest(r.rm, p.prev_max) - r.s AS late
+    FROM rm r JOIN prefix p ON r.shard = p.shard
 ), b AS (
     SELECT CASE WHEN late = 0     THEN 'on_time'
                 WHEN late <= 60   THEN 'late_1m'
@@ -1230,17 +1012,17 @@ WITH e AS (
     FROM l
 )
 SELECT band,
-       CAST(count(*) AS BIGINT)                              AS n_events,
-       CAST(max(late) AS BIGINT)                             AS max_late_s,
-       CAST(count(*) * 10000 // (SELECT count(*) FROM e) AS BIGINT)
-                                                             AS share_bp
+       CAST(count(*) AS BIGINT) AS n_events,
+       CAST(max(late) AS BIGINT) AS max_late_s,
+       -- dim_window: the band rollup, at most 5 rows
+       CAST(count(*) * 10000 // sum(count(*)) OVER () AS BIGINT) AS share_bp
 FROM b GROUP BY band
 """
 
 
 @op(
     "stats_event_lateness",
-    oracle=_LATENESS_ORACLE,
+    oracle=duckdb_sql(_LATENESS_SQL),
     tags=("ext", "stats", "streaming", "scale"),
 )
 def stats_event_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1265,48 +1047,15 @@ def stats_event_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITHIN each shard — a partitioned window, every shard sorts its own
     ≤_LATENESS_SHARD rows; (2) one tiny per-shard max frame (|shards| =
     N/_LATENESS_SHARD rows) gets an exclusive prefix max over shard
-    order — the only ordered-without-partition window left, bounded by
-    |shards|, and broadcast back. frontier = greatest(within-shard
-    running max, previous-shards prefix max) — identical to the global
-    running max row for row, so the oracle (the naive global window) is
-    unchanged. At 100 TB the shard width is a config: 1e6-row shards
+    order — an ordered-without-partition window bounded by |shards|,
+    and broadcast back. frontier = greatest(within-shard running max,
+    previous-shards prefix max) — identical to the global running max
+    row for row. At 100 TB the shard width is a config: 1e6-row shards
     keep |shards| ~1e6 for 1e12 events — both levels stay bounded.
-    The final rollup is 5 rows.
+    The final rollup is at most 5 rows; the total each share divides by
+    is a whole-frame window over them, so building the op runs no job.
     """
-    e = load(spark, sf_dir, "events").select(
-        "event_id", epoch_seconds("ts").alias("s")
-    ).withColumn("shard", F.expr(f"event_id div {_LATENESS_SHARD}"))
-    w_in = Window.partitionBy("shard").orderBy("event_id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    rm = e.withColumn("rm", F.max("s").over(w_in))
-    shard_max = e.groupBy("shard").agg(F.max("s").alias("smax"))
-    w_pre = dim_window(
-        Window.orderBy("shard").rowsBetween(Window.unboundedPreceding, -1),
-        bound="|shards| = N / _LATENESS_SHARD rows (range-sharded "
-        "prefix combine; 1e6-row shards keep this ~1e6 at 1e12 events)",
-    )
-    prefix = shard_max.select(
-        "shard", F.max("smax").over(w_pre).alias("prev_max")
-    )
-    # Spark greatest() skips NULLs, so the first shard (prev_max NULL)
-    # falls back to its within-shard running max alone.
-    late = (F.greatest(F.col("rm"), F.col("prev_max")) - F.col("s")).alias("late")
-    b = rm.join(F.broadcast(prefix), "shard").select(late).select(
-        F.when(F.col("late") == 0, "on_time")
-        .when(F.col("late") <= 60, "late_1m")
-        .when(F.col("late") <= 600, "late_10m")
-        .when(F.col("late") <= 3600, "late_1h")
-        .otherwise("late_over_1h")
-        .alias("band"),
-        "late",
-    )
-    total = e.count()
-    return b.groupBy("band").agg(
-        F.count("*").cast("bigint").alias("n_events"),
-        F.max("late").cast("bigint").alias("max_late_s"),
-        F.expr(f"count(*) * 10000 div {total}").cast("bigint").alias("share_bp"),
-    )
+    return run_sql(spark, sf_dir, _LATENESS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1666,48 +1415,45 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TRIM_BP = 1000  # trim 10% from each tail
 
-_TRIMMED_ORACLE = f"""
+_TRIMMED_SQL = f"""
 WITH v AS (
-    SELECT event_type,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-           row_number() OVER (PARTITION BY event_type
-                              ORDER BY CAST(floor(value * 100 + 0.5) AS BIGINT),
-                                       event_id) AS rk,
+    SELECT event_type, cents,
+           row_number() OVER (PARTITION BY event_type ORDER BY cents, event_id) AS rk,
            count(*) OVER (PARTITION BY event_type) AS n
-    FROM events
+    FROM (
+        SELECT event_type, event_id,
+               CAST(floor(value * 100 + 0.5e0) AS BIGINT) AS cents
+        FROM {{events}}
+    )
 ), lim AS (
-    SELECT event_type, cents, rk, n,
-           n * {_TRIM_BP} // 10000 AS k
-    FROM v
+    SELECT event_type, cents, rk, n, n * {_TRIM_BP} // 10000 AS k FROM v
+), cuts AS (
+    SELECT event_type, cents, rk, n, k,
+           min(CASE WHEN rk = k + 1 THEN cents END)
+               OVER (PARTITION BY event_type) AS lo,
+           min(CASE WHEN rk = n - k THEN cents END)
+               OVER (PARTITION BY event_type) AS hi
+    FROM lim
 ), agg AS (
     SELECT event_type,
            max(n) AS n,
            max(k) AS n_trim_each,
            sum(CASE WHEN rk > k AND rk <= n - k THEN cents ELSE 0 END) AS s_trim,
            sum(CASE WHEN rk > k AND rk <= n - k THEN 1 ELSE 0 END) AS c_trim,
-           sum(CASE WHEN rk <= k THEN 0 WHEN rk > n - k THEN 0 ELSE cents END
-               + CASE WHEN rk <= k THEN lo ELSE 0 END
-               + CASE WHEN rk > n - k THEN hi ELSE 0 END) AS s_win
-    FROM (
-        SELECT l.*,
-               min(CASE WHEN rk = k + 1 THEN cents END)
-                   OVER (PARTITION BY event_type) AS lo,
-               min(CASE WHEN rk = n - k THEN cents END)
-                   OVER (PARTITION BY event_type) AS hi
-        FROM lim l
-    )
-    GROUP BY event_type
+           sum(CASE WHEN rk <= k THEN lo WHEN rk > n - k THEN hi ELSE cents END)
+               AS s_win
+    FROM cuts GROUP BY event_type
 )
 SELECT event_type,
        CAST(n AS BIGINT) AS n,
        CAST(n_trim_each AS BIGINT) AS n_trim_each,
-       round(CAST(s_trim AS DOUBLE) / c_trim / 100, 6) + 0.0 AS trimmed_mean,
-       round(CAST(s_win AS DOUBLE) / n / 100, 6) + 0.0 AS winsorized_mean
+       round(CAST(s_trim AS DOUBLE) / c_trim / 100, 6) + 0e0 AS trimmed_mean,
+       round(CAST(s_win AS DOUBLE) / n / 100, 6) + 0e0 AS winsorized_mean
 FROM agg
 """
 
 
-@op("stats_trimmed_mean", oracle=_TRIMMED_ORACLE, tags=("ext", "stats", "profile"))
+@op("stats_trimmed_mean", oracle=duckdb_sql(_TRIMMED_SQL), tags=("ext", "stats", "profile"))
 def stats_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10%-trimmed and winsorized means of event value per type — the
     robust location pair that brackets the plain mean: trimming DROPS
@@ -1727,45 +1473,7 @@ def stats_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash agg — the stats_mad_outliers shape without the second pass
     (rank bounds replace the grouped-median join).
     """
-    ev = load(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-    wp = Window.partitionBy("event_type")
-    v = ev.select(
-        "event_type",
-        cents.alias("cents"),
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy(cents.asc(), F.col("event_id").asc()))
-        .alias("rk"),
-        F.count("*").over(wp).alias("n"),
-    ).withColumn("k", F.expr(f"n * {_TRIM_BP} div 10000"))
-    cuts = v.select(
-        "*",
-        F.min(F.when(F.col("rk") == F.col("k") + 1, F.col("cents"))).over(wp).alias("lo"),
-        F.min(F.when(F.col("rk") == F.col("n") - F.col("k"), F.col("cents"))).over(wp).alias("hi"),
-    )
-    in_core = (F.col("rk") > F.col("k")) & (F.col("rk") <= F.col("n") - F.col("k"))
-    agg = cuts.groupBy("event_type").agg(
-        F.max("n").alias("n"),
-        F.max("k").alias("n_trim_each"),
-        F.sum(F.when(in_core, F.col("cents")).otherwise(0)).alias("s_trim"),
-        F.sum(F.when(in_core, 1).otherwise(0)).alias("c_trim"),
-        F.sum(
-            F.when(F.col("rk") <= F.col("k"), F.col("lo"))
-            .when(F.col("rk") > F.col("n") - F.col("k"), F.col("hi"))
-            .otherwise(F.col("cents"))
-        ).alias("s_win"),
-    )
-    return agg.select(
-        "event_type",
-        F.col("n").cast("bigint").alias("n"),
-        F.col("n_trim_each").cast("bigint").alias("n_trim_each"),
-        (F.round(F.col("s_trim").cast("double") / F.col("c_trim") / 100, 6) + F.lit(0.0)).alias(
-            "trimmed_mean"
-        ),
-        (F.round(F.col("s_win").cast("double") / F.col("n") / 100, 6) + F.lit(0.0)).alias(
-            "winsorized_mean"
-        ),
-    )
+    return run_sql(spark, sf_dir, _TRIMMED_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1948,32 +1656,36 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sample-ratio-mismatch check over a deterministic 50/50 assignment
 # ---------------------------------------------------------------------------
 
-_SRM_CRIT = 3.841459  # chi-square(1 df) 95% critical value
-
-_SRM_ORACLE = f"""
+# The arm is the parity of the md5's first 8 hex digits read as a number,
+# which is the parity of the 8th digit alone; 3.841459 is the chi-square
+# (1 df) 95% critical value.
+_SRM_SQL = """
 WITH a AS (
     SELECT event_type,
-           CAST(CAST('0x' || substr(md5('srm:' || CAST(user_id AS VARCHAR)), 1, 8)
-                AS UBIGINT) % 2 AS INTEGER) AS arm
-    FROM events
+           CASE WHEN substr(md5('srm:' || CAST(user_id AS STRING)), 8, 1)
+                     IN ('1', '3', '5', '7', '9', 'b', 'd', 'f')
+                THEN 1 ELSE 0 END AS arm
+    FROM {events}
 ), c AS (
     SELECT event_type,
            sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
            sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b
-    FROM a GROUP BY 1
+    FROM a GROUP BY event_type
+), x AS (
+    SELECT event_type, n_a, n_b,
+           round(CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE) / (n_a + n_b), 6) AS chi2
+    FROM c
 )
 SELECT event_type,
        CAST(n_a AS BIGINT) AS n_arm_a,
        CAST(n_b AS BIGINT) AS n_arm_b,
-       round(CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE) / (n_a + n_b), 6) + 0.0
-           AS chi2_stat,
-       round(CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE) / (n_a + n_b), 6)
-           > {_SRM_CRIT} AS srm_detected
-FROM c
+       chi2 + 0e0 AS chi2_stat,
+       chi2 > 3.841459e0 AS srm_detected
+FROM x
 """
 
 
-@op("stats_srm_check", oracle=_SRM_ORACLE, tags=("ext", "stats"))
+@op("stats_srm_check", oracle=duckdb_sql(_SRM_SQL), tags=("ext", "stats"))
 def stats_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-ratio-mismatch check: assign every event's user to a
     deterministic 50/50 arm (md5 of the salted user id — the
@@ -1993,33 +1705,7 @@ def stats_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: map-side md5 + a |types|-key hash agg; no joins, no windows.
     """
-    a = load(spark, sf_dir, "events").select(
-        "event_type",
-        (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("srm:"), F.col("user_id").cast("string"))), 1, 8),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-        ).alias("arm"),
-    )
-    c = a.groupBy("event_type").agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-    )
-    chi2 = F.round(
-        ((F.col("n_a") - F.col("n_b")) * (F.col("n_a") - F.col("n_b"))).cast("double")
-        / (F.col("n_a") + F.col("n_b")),
-        6,
-    )
-    return c.select(
-        "event_type",
-        F.col("n_a").cast("bigint").alias("n_arm_a"),
-        F.col("n_b").cast("bigint").alias("n_arm_b"),
-        (chi2 + F.lit(0.0)).alias("chi2_stat"),
-        (chi2 > F.lit(_SRM_CRIT)).alias("srm_detected"),
-    )
+    return run_sql(spark, sf_dir, _SRM_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2746,18 +2432,18 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Jarque-Bera normality screen per type (is the parametric tier trustworthy?)
 # ---------------------------------------------------------------------------
 
-_JB_CRIT = 5.991465  # chi-square(2 df) 95% critical value
-_JB_MIN_N = 8  # below this the chi2(2) approximation is meaningless
-
-_JB_ORACLE = f"""
-WITH b AS (
-    SELECT event_type, CAST(floor(value * 100 + 0.5) AS HUGEINT) AS c
-    FROM events
-), g AS (
+# Support floor n >= 8 (below it the chi2(2) approximation is
+# meaningless); 5.991465 is the chi-square(2 df) 95% critical value.
+_JB_SQL = """
+WITH g AS (
     SELECT event_type, count(*) AS n,
            sum(c) AS s1, sum(c * c) AS s2,
            sum(c * c * c) AS s3, sum(c * c * c * c) AS s4
-    FROM b GROUP BY 1 HAVING count(*) >= {_JB_MIN_N}
+    FROM (
+        SELECT event_type, CAST(floor(value * 100 + 0.5e0) AS {wide}) AS c
+        FROM {events}
+    )
+    GROUP BY event_type HAVING count(*) >= 8
 ), m AS (
     SELECT event_type, n,
            CAST(s1 AS DOUBLE) / n AS m1,
@@ -2773,22 +2459,25 @@ WITH b AS (
     FROM m
 ), f AS (
     SELECT event_type, n,
-           m3 / nullif(m2 * sqrt(m2), 0.0) AS skew,
-           m4 / nullif(m2 * m2, 0.0) - 3 AS kurt
+           m3 / nullif(m2 * sqrt(m2), 0e0) AS skew,
+           m4 / nullif(m2 * m2, 0e0) - 3 AS kurt
     FROM c WHERE m2 > 0
+), j AS (
+    SELECT event_type, n, skew, kurt,
+           round(n / 6e0 * (skew * skew + kurt * kurt / 4), 6) AS jb
+    FROM f
 )
 SELECT event_type,
        CAST(n AS BIGINT) AS n,
-       round(skew, 6) + 0.0 AS skewness,
-       round(kurt, 6) + 0.0 AS kurtosis_excess,
-       round(n / 6.0 * (skew * skew + kurt * kurt / 4), 6) + 0.0 AS jb_stat,
-       round(n / 6.0 * (skew * skew + kurt * kurt / 4), 6) > {_JB_CRIT}
-           AS normal_rejected
-FROM f
+       round(skew, 6) + 0e0 AS skewness,
+       round(kurt, 6) + 0e0 AS kurtosis_excess,
+       jb + 0e0 AS jb_stat,
+       jb > 5.991465e0 AS normal_rejected
+FROM j
 """
 
 
-@op("stats_jarque_bera", oracle=_JB_ORACLE, tags=("ext", "stats"))
+@op("stats_jarque_bera", oracle=duckdb_sql(_JB_SQL), tags=("ext", "stats"))
 def stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jarque-Bera normality screen of event values per type — the
     gate in FRONT of the parametric era suite: welch/cohens_d/anova
@@ -2803,48 +2492,12 @@ def stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     promoted BEFORE multiplying, the centroid-drift discipline);
     central moments, S, K, JB are one fixed-shape float expression over
     those integers, rounded before the chi²(2) 5% literal. Support
-    floor n ≥ {_JB_MIN_N} and m2 > 0, stated.
+    floor n ≥ 8 and m2 > 0, stated.
 
     Scale: one scan → |types|-row hash agg with map-side partials;
     everything after is per-row arithmetic on |types| rows.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("decimal(38,0)")
-        .alias("c"),
-    )
-    c = F.col("c")
-    g = (
-        b.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(c).alias("s1"),
-            F.sum(c * c).alias("s2"),
-            F.sum(c * c * c).alias("s3"),
-            F.sum(c * c * c * c).alias("s4"),
-        )
-        .filter(F.col("n") >= _JB_MIN_N)
-    )
-    n = F.col("n")
-    m1 = F.col("s1").cast("double") / n
-    r2 = F.col("s2").cast("double") / n
-    r3 = F.col("s3").cast("double") / n
-    r4 = F.col("s4").cast("double") / n
-    m2 = r2 - m1 * m1
-    m3 = r3 - 3 * m1 * r2 + 2 * m1 * m1 * m1
-    m4 = r4 - 4 * m1 * r3 + 6 * m1 * m1 * r2 - 3 * m1 * m1 * m1 * m1
-    skew = m3 / F.nullif(m2 * F.sqrt(m2), F.lit(0.0))
-    kurt = m4 / F.nullif(m2 * m2, F.lit(0.0)) - 3
-    jb = F.round(n / F.lit(6.0) * (skew * skew + kurt * kurt / 4), 6)
-    return g.filter(m2 > 0).select(
-        "event_type",
-        n.cast("bigint").alias("n"),
-        (F.round(skew, 6) + F.lit(0.0)).alias("skewness"),
-        (F.round(kurt, 6) + F.lit(0.0)).alias("kurtosis_excess"),
-        (jb + F.lit(0.0)).alias("jb_stat"),
-        (jb > F.lit(_JB_CRIT)).alias("normal_rejected"),
-    )
+    return run_sql(spark, sf_dir, _JB_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2925,59 +2578,54 @@ def stats_cohens_h(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cochran-Armitage trend test across span quartiles (is the drift MONOTONE?)
 # ---------------------------------------------------------------------------
 
-_CA_CRIT = 1.959964  # two-sided 5% normal critical value
-
-_TREND_ORACLE = f"""
+# 1.959964 is the two-sided 5% normal critical value.
+_TREND_SQL = """
 WITH b AS (
-    SELECT event_type, event_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS te,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), span AS (
-    SELECT min(te) AS mn, max(te) AS mx FROM b
-), e AS (
-    SELECT event_type, event_id, cents,
-           least((te - mn) * 4 // (mx - mn + 1), 3) AS q
-    FROM b CROSS JOIN span
+    SELECT event_type, event_id, {te} AS te,
+           CAST(floor(value * 100 + 0.5e0) AS BIGINT) AS cents
+    FROM {events}
 ), r AS (
     SELECT event_type, q, cents,
-           row_number() OVER (PARTITION BY event_type
-                              ORDER BY cents, event_id) AS rk,
+           row_number() OVER (PARTITION BY event_type ORDER BY cents, event_id) AS rk,
            count(*) OVER (PARTITION BY event_type) AS nt
-    FROM e
+    FROM (
+        SELECT event_type, event_id, cents,
+               least((te - {te_min}) * 4 // ({te_max} - {te_min} + 1), 3) AS q
+        FROM b
+    )
 ), cl AS (
     SELECT event_type, q,
            CASE WHEN cents > min(CASE WHEN rk = (nt + 1) // 2 THEN cents END)
-                            OVER (PARTITION BY event_type)
+                                 OVER (PARTITION BY event_type)
                 THEN 1 ELSE 0 END AS above
     FROM r
 ), g AS (
     SELECT event_type, q, count(*) AS n, sum(above) AS r1
-    FROM cl GROUP BY 1, 2
+    FROM cl GROUP BY event_type, q
 ), m AS (
     SELECT event_type,
            count(*) AS n_quarters,
            sum(n) AS nn, sum(r1) AS rr,
            sum(q * r1) AS t1, sum(q * n) AS w1, sum(q * q * n) AS w2
-    FROM g GROUP BY 1
+    FROM g GROUP BY event_type
     HAVING count(*) >= 2 AND sum(r1) > 0 AND sum(r1) < sum(n)
 ), f AS (
     SELECT event_type, n_quarters, nn,
-           (CAST(t1 AS DOUBLE) - CAST(rr AS DOUBLE) * w1 / nn)
-           / nullif(sqrt(CAST(rr AS DOUBLE) / nn * (1 - CAST(rr AS DOUBLE) / nn)
-                         * (w2 - CAST(w1 AS DOUBLE) * w1 / nn)), 0.0) AS z
+           round((CAST(t1 AS DOUBLE) - CAST(rr AS DOUBLE) * w1 / nn)
+                 / nullif(sqrt(CAST(rr AS DOUBLE) / nn * (1 - CAST(rr AS DOUBLE) / nn)
+                               * (w2 - CAST(w1 AS DOUBLE) * w1 / nn)), 0e0), 6) AS z
     FROM m
 )
 SELECT event_type,
        CAST(n_quarters AS BIGINT) AS n_quarters,
        CAST(nn AS BIGINT) AS n_total,
-       round(z, 6) + 0.0 AS trend_z,
-       abs(round(z, 6)) > {_CA_CRIT} AS reject_no_trend
+       z + 0e0 AS trend_z,
+       abs(z) > 1.959964e0 AS reject_no_trend
 FROM f
 """
 
 
-@op("stats_trend_proportions", oracle=_TREND_ORACLE, tags=("ext", "stats"))
+@op("stats_trend_proportions", oracle=duckdb_sql(_TREND_SQL), tags=("ext", "stats"))
 def stats_trend_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran-Armitage trend test of the above-pooled-median share
     across the four span QUARTILES, per event type — the era suite's
@@ -2998,78 +2646,8 @@ def stats_trend_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → per-type rank window (one exchange) →
     |types|·4-cell hash agg → |types| rows of scalar arithmetic.
     """
-    b = load(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
     mn, mx = events_epoch_span(spark, sf_dir)  # cached probe: quarter bounds
-    e = b.select(
-        "event_type",
-        "event_id",
-        "cents",
-        F.least(
-            F.expr(f"(te - {mn}) * 4 div {mx - mn + 1}"), F.lit(3)
-        ).alias("q"),
-    )
-    wt = Window.partitionBy("event_type")
-    r = e.select(
-        "event_type",
-        "q",
-        "cents",
-        F.row_number()
-        .over(wt.orderBy(F.col("cents").asc(), F.col("event_id").asc()))
-        .alias("rk"),
-        F.count("*").over(wt).alias("nt"),
-    )
-    cl = r.select(
-        "event_type",
-        "q",
-        (
-            F.col("cents")
-            > F.min(
-                F.when(F.col("rk") == F.expr("(nt + 1) div 2"), F.col("cents"))
-            ).over(wt)
-        )
-        .cast("int")
-        .alias("above"),
-    )
-    g = cl.groupBy("event_type", "q").agg(
-        F.count("*").alias("n"), F.sum("above").alias("r1")
-    )
-    m = (
-        g.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_quarters"),
-            F.sum("n").alias("nn"),
-            F.sum("r1").alias("rr"),
-            F.sum(F.col("q") * F.col("r1")).alias("t1"),
-            F.sum(F.col("q") * F.col("n")).alias("w1"),
-            F.sum(F.col("q") * F.col("q") * F.col("n")).alias("w2"),
-        )
-        .filter(
-            (F.col("n_quarters") >= 2)
-            & (F.col("rr") > 0)
-            & (F.col("rr") < F.col("nn"))
-        )
-    )
-    nn, rr, w1 = F.col("nn"), F.col("rr"), F.col("w1")
-    pbar = rr.cast("double") / nn
-    z = (F.col("t1").cast("double") - rr.cast("double") * w1 / nn) / F.nullif(
-        F.sqrt(
-            pbar * (1 - pbar) * (F.col("w2") - w1.cast("double") * w1 / nn)
-        ),
-        F.lit(0.0),
-    )
-    rz = F.round(z, 6)
-    return m.select(
-        "event_type",
-        F.col("n_quarters").cast("bigint").alias("n_quarters"),
-        nn.cast("bigint").alias("n_total"),
-        (rz + F.lit(0.0)).alias("trend_z"),
-        (F.abs(rz) > F.lit(_CA_CRIT)).alias("reject_no_trend"),
-    )
+    return run_sql(spark, sf_dir, _TREND_SQL, te_min=mn, te_max=mx)
 
 
 # ---------------------------------------------------------------------------

@@ -11,13 +11,22 @@ built on this module are written ONCE, as a SQL text with a few
   (``stats_join_cardinality``, ``stats_profile_drift``,
   ``stats_label_impurity``, ``stats_quantile_ci``, ``stats_gk_lambda``,
   ``stats_cohens_kappa``);
+- the table-profiling and event statistics in ``profiling``
+  (``stats_table_profile``, ``stats_benford_profile``,
+  ``stats_mad_outliers``, ``stats_ks_eras``, ``stats_chi2_independence``,
+  ``stats_psi_stability``, ``stats_ab_proportions``,
+  ``stats_key_integrity``, ``stats_event_lateness``,
+  ``stats_trimmed_mean``, ``stats_srm_check``, ``stats_jarque_bera``,
+  ``stats_trend_proportions``);
 - the event time-series battery in ``timeseries``: the ACF family
   (``ts_autocorr``, ``stats_ljung_box``, ``ts_pacf``, one shared moment
   fragment) and ``ts_changepoint_cusum``, ``ts_sma_crossover``,
   ``ts_event_gaps``, ``ts_mann_kendall``, ``ts_var_es``,
   ``ts_outage_windows``, ``ts_hour_of_week_profile``,
   ``ts_dispersion_index``, ``ts_seasonal_naive_error``,
-  ``ts_turning_points``.
+  ``ts_turning_points``, ``ts_peak_concurrency``,
+  ``ts_bollinger_breakout``, ``ts_burstiness``,
+  ``ts_seasonality_strength``.
 
 Two renderers turn a text into each engine's dialect, and one runner
 executes it on Spark:
@@ -49,6 +58,9 @@ Placeholders:
   the text's ``b`` CTE, which must carry ``te``; Spark gets the literal
   the caller passes (``catalog.events_era_mid``, a fingerprint-cached
   probe), so the Spark plan scans ``events`` once per use of ``b``.
+- ``{te_min}``/``{te_max}``: the epoch span's ends, the same way:
+  DuckDB gets ``(SELECT min(te) FROM b)``/``(SELECT max(te) FROM b)``,
+  Spark the ``catalog.events_epoch_span`` literals the caller passes.
 
 Dialect rules the renderers enforce:
 
@@ -56,6 +68,20 @@ Dialect rules the renderers enforce:
   only between integers: DuckDB's ``7.0 // 2`` is 3.5.
 - A broadcast hint is written ``/*+ BROADCAST(t) */``; DuckDB reads it
   as a comment.
+- Columns become rows through ``UNPIVOT INCLUDE NULLS (v FOR c IN
+  (...))`` (an Expand in Spark), or a ``CROSS JOIN (VALUES ...)`` with a
+  ``CASE``, never a ``UNION ALL`` over one input: Spark scans the input
+  once per branch.
+- The two engines share no hex-to-integer cast (DuckDB's
+  ``CAST('0x'... AS UBIGINT)``, Spark's ``conv``). A parity taken from
+  an md5 hex prefix is read off its last hex digit instead
+  (``IN ('1', '3', ..., 'f')``), which is the parity of the whole
+  prefix.
+- A whole-frame window (``OVER ()``, or ``ORDER BY`` with no
+  ``PARTITION BY``) carries a ``-- dim_window: <bound>`` comment within
+  the 4 lines before it, as ``catalog.dim_window`` marks one in the
+  DataFrame code; ``tests/test_plans.py`` checks every text ``run_sql``
+  runs.
 - Spark parses a bare decimal literal such as ``4.0`` as DECIMAL, which
   moves float results in the last digits. Double literals are written in
   exponent form (``4e0``, ``0.5e0``), and both renderers raise on a bare
@@ -82,6 +108,8 @@ _FRAGMENTS = {
         "te": "CAST(floor(epoch(ts)) AS BIGINT)",
         "wide": "HUGEINT",
         "mid": "(SELECT (min(te) + max(te)) // 2 FROM b)",
+        "te_min": "(SELECT min(te) FROM b)",
+        "te_max": "(SELECT max(te) FROM b)",
         **{t: t for t in TABLES},
     },
     "spark": {
@@ -112,14 +140,15 @@ def duckdb_sql(text: str) -> str:
 def spark_sql(text: str, **literals) -> str:
     """``text`` in Spark's dialect, table placeholders left for
     ``spark.sql``'s DataFrame arguments; ``literals`` fill the rest
-    (``mid=``)."""
+    (``mid=``, ``te_min=``, ``te_max=``)."""
     return _render(text, "spark", literals)
 
 
 def run_sql(spark: SparkSession, sf_dir: str, text: str, **literals) -> DataFrame:
     """Run ``text`` through ``spark.sql``: each fixture table it names
     is loaded from ``sf_dir`` and passed as its placeholder's DataFrame
-    argument; ``literals`` fill the rest (``mid=``)."""
+    argument; ``literals`` fill the rest (``mid=``, ``te_min=``,
+    ``te_max=``)."""
     tables = sorted({t for t in _PLACEHOLDER.findall(text) if t in TABLES})
     return spark.sql(
         spark_sql(text, **literals), **{t: load(spark, sf_dir, t) for t in tables}

@@ -32,11 +32,12 @@ Scale notes (100 TB):
   it needs only row_number + one weighted sum — no recursion, no UDF,
   whole-stage codegen end to end.
 
-Thirteen ops of the statistics battery below (the ACF family
-ts_autocorr / stats_ljung_box / ts_pacf and the gap, trend, tail and
-seasonality tests that ``sql_front``'s docstring lists) are written as
-one SQL text each, with ``sql_front`` placeholders: the text is the
-DuckDB oracle and, through ``sql_front.run_sql``, the Spark plan.
+Seventeen ops of the statistics battery below (the ACF family
+ts_autocorr / stats_ljung_box / ts_pacf and the gap, trend, tail,
+seasonality, concurrency and burstiness tests that ``sql_front``'s
+docstring lists) are written as one SQL text each, with ``sql_front``
+placeholders: the text is the DuckDB oracle and, through
+``sql_front.run_sql``, the Spark plan.
 """
 
 from __future__ import annotations
@@ -46,7 +47,6 @@ from pyspark.sql import functions as F
 
 from connor_fun_streamproducer_spark.catalog import (
     bounded_series,
-    dim_window,
     epoch_div,
     epoch_seconds,
     events_epoch_span,
@@ -1022,48 +1022,52 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CONC_WINDOW_S = 900  # each event holds a 15-minute activity interval
 
-_PEAK_CONC_ORACLE = f"""
+_PEAK_CONC_SQL = f"""
 WITH ev AS (
-    SELECT CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events
-), pts AS (
+    SELECT {{te}} AS t FROM {{events}}
+), opens AS (
     SELECT t // 86400 AS d, t, 1 AS delta FROM ev
+), closes AS (
+    SELECT (t + {_CONC_WINDOW_S}) // 86400 AS d, t + {_CONC_WINDOW_S} AS t, -1 AS delta
+    FROM ev
+), pts AS (
+    SELECT d, t, delta FROM opens
     UNION ALL
-    SELECT (t + {_CONC_WINDOW_S}) // 86400, t + {_CONC_WINDOW_S}, -1 FROM ev
+    SELECT d, t, delta FROM closes
     UNION ALL
     -- day-start sentinel: carries the pre-midnight open level into the
     -- day's peak candidates (delta 0; closes at exactly midnight sort
-    -- before it, opens after). Derived from ALL boundary-point days —
-    -- opens AND closes — so a day whose only points are carried-in
-    -- closes (sessions opened late the prior day) still gets one
-    -- (r10 ADVICE fix: open-only sentinels missed close-only days).
-    SELECT DISTINCT d, d * 86400, 0 FROM (
-        SELECT t // 86400 AS d FROM ev
-        UNION ALL
-        SELECT (t + {_CONC_WINDOW_S}) // 86400 FROM ev
-    )
+    -- before it, opens after). Derived from ALL boundary-point days,
+    -- opens AND closes, so a day whose only points are carried-in
+    -- closes (sessions opened late the prior day) still gets one.
+    SELECT d, d * 86400 AS t, 0 AS delta
+    FROM (SELECT DISTINCT d FROM (SELECT d FROM opens UNION ALL SELECT d FROM closes))
 ), offs AS (
     SELECT d,
+           -- dim_window: |days| daily-delta rows
            coalesce(sum(ddelta) OVER (ORDER BY d
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS carry
     FROM (SELECT d, sum(delta) AS ddelta FROM pts GROUP BY d)
 ), run AS (
-    SELECT p.d, p.t,
+    SELECT /*+ BROADCAST(o) */ p.d, p.t,
            o.carry + sum(p.delta) OVER (PARTITION BY p.d
                                         ORDER BY p.t ASC, p.delta ASC
-                                        ROWS UNBOUNDED PRECEDING) AS conc
-    FROM pts p JOIN offs o USING (d)
+                                        ROWS BETWEEN UNBOUNDED PRECEDING
+                                                 AND CURRENT ROW) AS conc
+    FROM pts p JOIN offs o ON p.d = o.d
 ), mx AS (
     SELECT d, max(conc) AS peak FROM run GROUP BY d
 )
 SELECT DATE '1970-01-01' + CAST(r.d AS INTEGER) AS day,
        CAST(m.peak AS BIGINT) AS peak_concurrency,
        CAST(min(r.t) AS BIGINT) AS first_peak_epoch
-FROM run r JOIN mx m ON m.d = r.d AND r.conc = m.peak
+FROM run r JOIN mx m ON r.d = m.d
+WHERE r.conc = m.peak
 GROUP BY r.d, m.peak
 """
 
 
-@op("ts_peak_concurrency", oracle=_PEAK_CONC_ORACLE, tags=("ext", "timeseries"))
+@op("ts_peak_concurrency", oracle=duckdb_sql(_PEAK_CONC_SQL), tags=("ext", "timeseries"))
 def ts_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily peak concurrency by sweep line: each event opens a
     15-minute activity interval; +1/−1 boundary points, sorted, running
@@ -1092,50 +1096,7 @@ def ts_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is |days| rows (dim-bounded cumsum + broadcast join back).
     Days remain independently parallel; only their net deltas serialize.
     """
-    ev = load(spark, sf_dir, "events").select(epoch_seconds("ts").alias("t"))
-    opens = ev.select(
-        F.expr("t div 86400").alias("d"), "t", F.lit(1).alias("delta")
-    )
-    closes = ev.select(
-        F.expr(f"(t + {_CONC_WINDOW_S}) div 86400").alias("d"),
-        (F.col("t") + F.lit(_CONC_WINDOW_S)).alias("t"),
-        F.lit(-1).alias("delta"),
-    )
-    sentinels = (
-        opens.select("d")
-        .unionByName(closes.select("d"))
-        .distinct()
-        .select("d", (F.col("d") * 86400).alias("t"), F.lit(0).alias("delta"))
-    )
-    pts = opens.unionByName(closes).unionByName(sentinels)
-    dd = pts.groupBy("d").agg(F.sum("delta").alias("ddelta"))
-    wcarry = dim_window(
-        Window.orderBy("d").rowsBetween(Window.unboundedPreceding, -1),
-        bound="|days| daily-delta rows",
-    )
-    offs = dd.select(
-        "d", F.coalesce(F.sum("ddelta").over(wcarry), F.lit(0)).alias("carry")
-    )
-    wrun = (
-        Window.partitionBy("d")
-        .orderBy(F.asc("t"), F.asc("delta"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    run = pts.join(F.broadcast(offs), "d").withColumn(
-        "conc", F.col("carry") + F.sum("delta").over(wrun)
-    )
-    mx = run.groupBy("d").agg(F.max("conc").alias("peak"))
-    return (
-        run.join(mx, "d")
-        .filter(F.col("conc") == F.col("peak"))
-        .groupBy("d", "peak")
-        .agg(F.min("t").cast("bigint").alias("first_peak_epoch"))
-        .select(
-            F.date_add(F.lit("1970-01-01").cast("date"), F.col("d").cast("int")).alias("day"),
-            F.col("peak").cast("bigint").alias("peak_concurrency"),
-            "first_peak_epoch",
-        )
-    )
+    return run_sql(spark, sf_dir, _PEAK_CONC_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2026,36 +1987,29 @@ def ts_hour_of_week_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bollinger-band breakout days per type (trailing window, integer-exact)
 # ---------------------------------------------------------------------------
 
-_BOLL_W = 7  # trailing days in the band (full-window rows only)
-
-_BOLL_ORACLE = f"""
+# A 7-day trailing band (full-window rows only): |x - mean| > 2 sd over
+# the trailing days, as integer algebra over the window's sums.
+_BOLL_SQL = """
 WITH d AS (
-    SELECT event_type,
-           CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-           sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS x
-    FROM events GROUP BY 1, 2
+    SELECT event_type, {te} // 86400 AS day,
+           CAST(sum(CAST(floor(value * 100 + 0.5e0) AS BIGINT)) AS {wide}) AS x
+    FROM {events} GROUP BY 1, 2
 ), w AS (
-    SELECT event_type, day, CAST(x AS HUGEINT) AS x,
-           sum(CAST(x AS HUGEINT)) OVER tw AS s,
-           sum(CAST(x AS HUGEINT) * x) OVER tw AS q,
+    SELECT event_type, x,
+           sum(x) OVER tw AS s,
+           sum(x * x) OVER tw AS q,
            count(*) OVER tw AS m
     FROM d
     WINDOW tw AS (PARTITION BY event_type ORDER BY day
-                  ROWS BETWEEN {_BOLL_W} PRECEDING AND 1 PRECEDING)
+                  ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
 ), f AS (
     SELECT event_type,
-           CASE WHEN m = {_BOLL_W} THEN 1 ELSE 0 END AS eval,
-           CASE WHEN m = {_BOLL_W}
-                 AND ({_BOLL_W} * x - s) > 0
-                 AND ({_BOLL_W} * x - s) * ({_BOLL_W} * x - s)
-                     * ({_BOLL_W} - 1)
-                     > 4 * {_BOLL_W} * ({_BOLL_W} * q - s * s)
+           CASE WHEN m = 7 THEN 1 ELSE 0 END AS eval,
+           CASE WHEN m = 7 AND (7 * x - s) > 0
+                 AND (7 * x - s) * (7 * x - s) * (7 - 1) > 4 * 7 * (7 * q - s * s)
                 THEN 1 ELSE 0 END AS up,
-           CASE WHEN m = {_BOLL_W}
-                 AND ({_BOLL_W} * x - s) < 0
-                 AND ({_BOLL_W} * x - s) * ({_BOLL_W} * x - s)
-                     * ({_BOLL_W} - 1)
-                     > 4 * {_BOLL_W} * ({_BOLL_W} * q - s * s)
+           CASE WHEN m = 7 AND (7 * x - s) < 0
+                 AND (7 * x - s) * (7 * x - s) * (7 - 1) > 4 * 7 * (7 * q - s * s)
                 THEN 1 ELSE 0 END AS down
     FROM w
 )
@@ -2064,11 +2018,11 @@ SELECT event_type,
        CAST(sum(eval) AS BIGINT) AS n_eval,
        CAST(sum(up) AS BIGINT) AS n_up,
        CAST(sum(down) AS BIGINT) AS n_down
-FROM f GROUP BY 1
+FROM f GROUP BY event_type
 """
 
 
-@op("ts_bollinger_breakout", oracle=_BOLL_ORACLE, tags=("ext", "ts"))
+@op("ts_bollinger_breakout", oracle=duckdb_sql(_BOLL_SQL), tags=("ext", "ts"))
 def ts_bollinger_breakout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bollinger-band breakout counter per event type: a day whose total
     (in cents) leaves the ±2-sample-sd band of the TRAILING 7 observed
@@ -2089,46 +2043,7 @@ def ts_bollinger_breakout(spark: SparkSession, sf_dir: str) -> DataFrame:
     one per-type window over the |types|·|days| daily rows → |types|
     final agg. The window input is day-grain, not event-grain.
     """
-    n = F.lit(_BOLL_W)
-    d = (
-        load(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            epoch_div("ts", 86400).alias("day"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("c"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").cast("decimal(38,0)").alias("x"))
-    )
-    tw = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(-_BOLL_W, -1)
-    )
-    w = d.select(
-        "event_type",
-        "x",
-        F.sum("x").over(tw).alias("s"),
-        F.sum(F.col("x") * F.col("x")).over(tw).alias("q"),
-        F.count("*").over(tw).alias("m"),
-    )
-    dev = n * F.col("x") - F.col("s")  # decimal: n·x − S
-    burst = (dev * dev * (n - 1)) > (
-        F.lit(4) * n * (n * F.col("q") - F.col("s") * F.col("s"))
-    )
-    full = F.col("m") == _BOLL_W
-    f = w.select(
-        "event_type",
-        full.cast("int").alias("eval"),
-        (full & (dev > 0) & burst).cast("int").alias("up"),
-        (full & (dev < 0) & burst).cast("int").alias("down"),
-    )
-    return f.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("n_days"),
-        F.sum("eval").cast("bigint").alias("n_eval"),
-        F.sum("up").cast("bigint").alias("n_up"),
-        F.sum("down").cast("bigint").alias("n_down"),
-    )
+    return run_sql(spark, sf_dir, _BOLL_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2137,32 +2052,31 @@ def ts_bollinger_breakout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # F(k-1, inf) 5% critical values = chi2(k-1, .95)/(k-1), k = dows present
 _DOW_F_CRIT_CASE = (
-    "CASE k WHEN 2 THEN 3.841459 WHEN 3 THEN 2.995732 WHEN 4 THEN 2.604909"
-    " WHEN 5 THEN 2.371932 WHEN 6 THEN 2.214100 ELSE 2.098598 END"
+    "CASE k WHEN 2 THEN 3.841459e0 WHEN 3 THEN 2.995732e0 WHEN 4 THEN 2.604909e0"
+    " WHEN 5 THEN 2.371932e0 WHEN 6 THEN 2.214100e0 ELSE 2.098598e0 END"
 )
 
 # fixed 7-column dow pivot: the float SSB is a fixed-SHAPE expression over
 # exact integer per-dow moments (order-free), never a float AGGREGATE
 _SB_TERMS_SQL = " + ".join(
     f"(CASE WHEN n{i} > 0 THEN CAST(s{i} AS DOUBLE) * s{i} / n{i}"
-    f" ELSE 0.0 END)"
+    f" ELSE 0e0 END)"
     for i in range(7)
 )
 _N_SUM_SQL = " + ".join(f"n{i}" for i in range(7))
 _S_SUM_SQL = " + ".join(f"s{i}" for i in range(7))
 _K_SUM_SQL = " + ".join(f"(CASE WHEN n{i} > 0 THEN 1 ELSE 0 END)" for i in range(7))
 
-_SEASON_STRENGTH_ORACLE = f"""
+_SEASON_STRENGTH_SQL = f"""
 WITH d AS (
-    SELECT event_type,
-           CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-           sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS x
-    FROM events GROUP BY 1, 2
+    SELECT event_type, {{te}} // 86400 AS day,
+           sum(CAST(floor(value * 100 + 0.5e0) AS BIGINT)) AS x
+    FROM {{events}} GROUP BY 1, 2
 ), g AS (
     SELECT event_type, (day + 4) % 7 AS dow,
            count(*) AS nd,
-           sum(CAST(x AS HUGEINT)) AS sd,
-           sum(CAST(x AS HUGEINT) * x) AS qd
+           sum(CAST(x AS {{wide}})) AS sd,
+           sum(CAST(x AS {{wide}}) * x) AS qd
     FROM d GROUP BY 1, 2
 ), p AS (
     SELECT event_type,
@@ -2172,7 +2086,7 @@ WITH d AS (
                for i in range(7)
            )},
            sum(qd) AS q
-    FROM g GROUP BY 1
+    FROM g GROUP BY event_type
 ), t AS (
     SELECT event_type,
            {_K_SUM_SQL} AS k,
@@ -2183,23 +2097,26 @@ WITH d AS (
     FROM p
 ), f AS (
     SELECT event_type, k, n,
-           (sb - CAST(s AS DOUBLE) * s / n) AS ssb,
-           (CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * s / n) AS sst
+           sb - CAST(s AS DOUBLE) * s / n AS ssb,
+           CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * s / n AS sst
     FROM t WHERE k >= 2 AND n > k
+), r AS (
+    SELECT event_type, k, n,
+           round(ssb / nullif(sst, 0e0), 6) AS eta,
+           round((ssb / (k - 1)) / nullif((sst - ssb) / (n - k), 0e0), 6) AS fs
+    FROM f
 )
 SELECT event_type,
        CAST(k AS BIGINT) AS n_dows,
        CAST(n AS BIGINT) AS n_days,
-       round(ssb / nullif(sst, 0.0), 6) + 0.0 AS eta_sq,
-       round((ssb / (k - 1)) / nullif((sst - ssb) / (n - k), 0.0), 6) + 0.0
-           AS f_stat,
-       round((ssb / (k - 1)) / nullif((sst - ssb) / (n - k), 0.0), 6)
-           > {_DOW_F_CRIT_CASE} AS weekly_seasonal
-FROM f
+       eta + 0e0 AS eta_sq,
+       fs + 0e0 AS f_stat,
+       fs > {_DOW_F_CRIT_CASE} AS weekly_seasonal
+FROM r
 """
 
 
-@op("ts_seasonality_strength", oracle=_SEASON_STRENGTH_ORACLE, tags=("ext", "ts"))
+@op("ts_seasonality_strength", oracle=duckdb_sql(_SEASON_STRENGTH_SQL), tags=("ext", "ts"))
 def ts_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     """How much of a series' day-to-day variance the weekly cycle
     explains, per event type: one-way ANOVA of day-of-week on daily
@@ -2221,56 +2138,7 @@ def ts_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤7 rows per type) → |types| pivot. All partial-combined; nothing
     beyond the daily grain crosses an exchange.
     """
-    d = (
-        load(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            epoch_div("ts", 86400).alias("day"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("c"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").alias("x"))
-    )
-    g = d.groupBy("event_type", ((F.col("day") + 4) % 7).alias("dow")).agg(
-        F.count("*").alias("nd"),
-        F.sum(F.col("x").cast("decimal(38,0)")).alias("sd"),
-        F.sum(F.col("x").cast("decimal(38,0)") * F.col("x")).alias("qd"),
-    )
-    piv = [
-        c
-        for i in range(7)
-        for c in (
-            F.coalesce(
-                F.max(F.when(F.col("dow") == i, F.col("nd"))), F.lit(0)
-            ).alias(f"n{i}"),
-            F.coalesce(
-                F.max(F.when(F.col("dow") == i, F.col("sd"))),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias(f"s{i}"),
-        )
-    ]
-    p = g.groupBy("event_type").agg(*piv, F.sum("qd").alias("q"))
-    t = p.select(
-        "event_type",
-        F.expr(_K_SUM_SQL).alias("k"),
-        F.expr(_N_SUM_SQL).alias("n"),
-        F.expr(_S_SUM_SQL).alias("s"),
-        "q",
-        F.expr(_SB_TERMS_SQL).alias("sb"),
-    ).filter((F.col("k") >= 2) & (F.col("n") > F.col("k")))
-    k, n = F.col("k"), F.col("n")
-    ssb = F.col("sb") - F.col("s").cast("double") * F.col("s") / n
-    sst = F.col("q").cast("double") - F.col("s").cast("double") * F.col("s") / n
-    fstat = (ssb / (k - 1)) / F.nullif((sst - ssb) / (n - k), F.lit(0.0))
-    rf = F.round(fstat, 6)
-    return t.select(
-        "event_type",
-        k.cast("bigint").alias("n_dows"),
-        n.cast("bigint").alias("n_days"),
-        (F.round(ssb / F.nullif(sst, F.lit(0.0)), 6) + F.lit(0.0)).alias("eta_sq"),
-        (rf + F.lit(0.0)).alias("f_stat"),
-        (rf > F.expr(_DOW_F_CRIT_CASE)).alias("weekly_seasonal"),
-    )
+    return run_sql(spark, sf_dir, _SEASON_STRENGTH_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2452,43 +2320,40 @@ def ts_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Burstiness of inter-event gaps per type (periodic ↔ Poisson ↔ bursty)
 # ---------------------------------------------------------------------------
 
-_BURST_BAND = 0.1  # |B| below this reads as Poisson-like, stated
-
-_BURSTINESS_ORACLE = f"""
-WITH e AS (
-    SELECT event_type, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS te
-    FROM events
-), g AS (
+# |B| below 0.1 reads as Poisson-like (stated convention).
+_BURSTINESS_SQL = """
+WITH g AS (
     SELECT event_type,
-           te - lag(te) OVER (PARTITION BY event_type
-                              ORDER BY te, event_id) AS gap
-    FROM e
+           te - lag(te) OVER (PARTITION BY event_type ORDER BY te, event_id) AS gap
+    FROM (SELECT event_type, event_id, {te} AS te FROM {events})
 ), m AS (
     SELECT event_type, count(*) AS n,
-           sum(CAST(gap AS HUGEINT)) AS s,
-           sum(CAST(gap AS HUGEINT) * gap) AS q
+           sum(CAST(gap AS {wide})) AS s,
+           sum(CAST(gap AS {wide}) * gap) AS q
     FROM g WHERE gap IS NOT NULL
-    GROUP BY 1 HAVING count(*) >= 2 AND sum(gap) > 0
+    GROUP BY event_type HAVING count(*) >= 2 AND sum(CAST(gap AS {wide})) > 0
 ), f AS (
-    SELECT event_type, n, s,
+    SELECT event_type, n,
+           CAST(s AS DOUBLE) / n AS mu,
            sqrt(greatest(CAST(q AS DOUBLE) / n
-                         - CAST(s AS DOUBLE) * s / n / n, 0.0)) AS sd,
-           CAST(s AS DOUBLE) / n AS mu
+                         - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n / n, 0e0)) AS sd
     FROM m
+), b AS (
+    SELECT event_type, n, mu, sd, round((sd - mu) / (sd + mu), 6) AS burst FROM f
 )
 SELECT event_type,
        CAST(n AS BIGINT) AS n_gaps,
-       round(mu, 4) + 0.0 AS mean_gap_s,
-       round(sd / mu, 6) + 0.0 AS cv,
-       round((sd - mu) / (sd + mu), 6) + 0.0 AS burstiness,
-       CASE WHEN round((sd - mu) / (sd + mu), 6) >= {_BURST_BAND} THEN 'bursty'
-            WHEN round((sd - mu) / (sd + mu), 6) <= -{_BURST_BAND} THEN 'regular'
+       round(mu, 4) + 0e0 AS mean_gap_s,
+       round(sd / mu, 6) + 0e0 AS cv,
+       burst + 0e0 AS burstiness,
+       CASE WHEN burst >= 0.1e0 THEN 'bursty'
+            WHEN burst <= -0.1e0 THEN 'regular'
             ELSE 'poisson_like' END AS regime
-FROM f
+FROM b
 """
 
 
-@op("ts_burstiness", oracle=_BURSTINESS_ORACLE, tags=("ext", "timeseries"))
+@op("ts_burstiness", oracle=duckdb_sql(_BURSTINESS_SQL), tags=("ext", "timeseries"))
 def ts_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Goh-Barabási burstiness B = (σ−μ)/(σ+μ) of INTER-EVENT gaps per
     type — the arrival-process fingerprint at the single-event grain
@@ -2507,43 +2372,7 @@ def ts_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → per-type lag window (one exchange) → |types|-row
     hash agg with map-side partials.
     """
-    e = load(spark, sf_dir, "events").select(
-        "event_type", "event_id", epoch_seconds("ts").alias("te")
-    )
-    w = Window.partitionBy("event_type").orderBy("te", "event_id")
-    g = e.select(
-        "event_type", (F.col("te") - F.lag("te").over(w)).alias("gap")
-    ).filter(F.col("gap").isNotNull())
-    gd = F.col("gap").cast("decimal(38,0)")
-    m = (
-        g.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(gd).alias("s"),
-            F.sum(gd * F.col("gap")).alias("q"),
-        )
-        .filter((F.col("n") >= 2) & (F.col("s") > 0))
-    )
-    n, s = F.col("n"), F.col("s")
-    mu = s.cast("double") / n
-    sd = F.sqrt(
-        F.greatest(
-            F.col("q").cast("double") / n - s.cast("double") * s.cast("double") / n / n,
-            F.lit(0.0),
-        )
-    )
-    b = F.round((sd - mu) / (sd + mu), 6)
-    return m.select(
-        "event_type",
-        n.cast("bigint").alias("n_gaps"),
-        (F.round(mu, 4) + F.lit(0.0)).alias("mean_gap_s"),
-        (F.round(sd / mu, 6) + F.lit(0.0)).alias("cv"),
-        (b + F.lit(0.0)).alias("burstiness"),
-        F.when(b >= _BURST_BAND, F.lit("bursty"))
-        .when(b <= -_BURST_BAND, F.lit("regular"))
-        .otherwise(F.lit("poisson_like"))
-        .alias("regime"),
-    )
+    return run_sql(spark, sf_dir, _BURSTINESS_SQL)
 
 
 # ---------------------------------------------------------------------------

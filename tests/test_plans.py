@@ -1654,7 +1654,8 @@ def test_event_lateness_sharded_frontier(spark):
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     # every Window over the event stream names the shard partition key;
-    # the only partition-less window is the |shards|-bounded prefix max
+    # the partition-less windows are the |shards|-bounded prefix max and
+    # the share total over the <= 5 band rows
     wins = [
         line for line in plan.splitlines() if "windowspecdefinition" in line
     ]
@@ -1943,12 +1944,10 @@ def test_rank_sum_pair_single_exchange(spark):
         assert plan.count("Sort ") <= 1, (key, plan)
 
 
-# (exchanges, parquet scans) of each two-era op: the per-type aggregate or
-# window stage(s) over ONE events scan, the era boundary a plan literal.
-# stats_mcnemar's second scan feeds its user-universe count.
 # (Exchange, Scan parquet) of every op that runs one SQL text on both
 # engines through sql_front.run_sql: each count is the one its
-# Column-DSL body planned before the text replaced it.
+# Column-DSL body planned before the text replaced it, except where
+# noted.
 _SQL_FRONT_PLAN_SHAPE = {
     # the two-era suite
     "stats_welch_ttest": (2, 1),
@@ -1983,6 +1982,26 @@ _SQL_FRONT_PLAN_SHAPE = {
     "stats_quantile_ci": (1, 1),
     "stats_gk_lambda": (14, 5),
     "stats_cohens_kappa": (1, 1),
+    # profiling and event-statistics ops
+    "stats_table_profile": (2, 1),
+    "stats_benford_profile": (2, 1),
+    "stats_mad_outliers": (3, 4),
+    "stats_ks_eras": (4, 2),
+    "stats_chi2_independence": (7, 4),
+    "stats_psi_stability": (2, 1),
+    "stats_ab_proportions": (1, 1),
+    "stats_key_integrity": (8, 6),
+    # one exchange more than the DataFrame plan: the total the shares
+    # divide by is a window over the <= 5 band rows, not a count job
+    "stats_event_lateness": (5, 2),
+    "stats_trimmed_mean": (1, 1),
+    "stats_srm_check": (1, 1),
+    "stats_jarque_bera": (1, 1),
+    "stats_trend_proportions": (1, 1),
+    "ts_peak_concurrency": (10, 16),
+    "ts_bollinger_breakout": (2, 1),
+    "ts_burstiness": (1, 1),
+    "ts_seasonality_strength": (3, 1),
 }
 
 
@@ -2056,7 +2075,13 @@ def test_every_whole_frame_window_is_dim_window_marked():
     with its bound stated inline, so "No Partition Defined for Window"
     warnings are all accounted for and a new whole-frame window cannot
     land unreviewed. Source scan, not runtime: the marker is identity at
-    runtime by design."""
+    runtime by design.
+
+    The SQL texts Spark runs through ``sql_front.run_sql`` are held to
+    the same rule: every ``OVER (...)`` or ``WINDOW w AS (...)`` spec
+    without ``PARTITION BY`` needs a ``-- dim_window: <bound>`` comment
+    within the 4 lines before it. DuckDB-only oracle strings are not
+    scanned: only the texts named in a ``run_sql`` call are."""
     import pathlib
     import re
 
@@ -2073,7 +2098,53 @@ def test_every_whole_frame_window_is_dim_window_marked():
             ctx = "\n".join(lines[max(0, i - 4) : i + 1])
             if "dim_window(" not in ctx:
                 offenders.append(f"{path.name}:{i + 1}: {line.strip()}")
+    for where, text in _run_sql_texts(root):
+        offenders += [f"{where}: {spec}" for spec in _unmarked_whole_frame_specs(text)]
     assert not offenders, (
         "whole-frame windows missing the dim_window bound marker:\n"
         + "\n".join(offenders)
     )
+
+
+def _run_sql_texts(root):
+    """(``module.NAME``, text) for every ``run_sql(spark, sf_dir, NAME)``
+    call in the package, NAME resolved in the calling module."""
+    import ast
+    import importlib
+
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        names = {
+            node.args[2].id
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "id", getattr(node.func, "attr", None)) == "run_sql"
+            and len(node.args) > 2
+            and isinstance(node.args[2], ast.Name)
+        }
+        if not names:
+            continue
+        module = ".".join(path.relative_to(root.parent).with_suffix("").parts)
+        mod = importlib.import_module(module)
+        for name in sorted(names):
+            yield f"{path.name}:{name}", getattr(mod, name)
+
+
+def _unmarked_whole_frame_specs(text):
+    """The window specs in ``text`` with no PARTITION BY and no
+    ``-- dim_window:`` comment within the 4 lines before them."""
+    import re
+
+    out = []
+    for m in re.finditer(r"\bOVER\s*\(|\bWINDOW\s+\w+\s+AS\s*\(", text, re.IGNORECASE):
+        depth, end = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(text[end], 0)
+            end += 1
+        spec = text[m.start() : end]
+        if re.search(r"\bPARTITION\s+BY\b", spec, re.IGNORECASE):
+            continue
+        before = text[: m.start()].split("\n")
+        if not any(re.match(r"\s*--\s*dim_window:\s*\S", ln) for ln in before[-5:]):
+            out.append(" ".join(spec.split()))
+    return out

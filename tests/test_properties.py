@@ -5859,6 +5859,110 @@ def _replay_profile_drift():
     ]
 
 
+# Profiling fixture: per-user event values (an outlier per user, a user
+# whose MAD is 0, a user with an even count so the median is a
+# half-integer), orders either side of the 1998-01-01 split with a
+# duplicate key and an orphan customer, and lineitem with a duplicate
+# (orderkey, linenumber) and an orphan order key.
+_PROFILE_USER_CENTS = {
+    1: [1000, 1010, 1020, 1030, 1040, 1050, 1060, 5000],
+    2: [700, 700, 700, 700, 700, 900, 100],
+    3: [200, 210, 190, 205, 195, 2000, 202],
+    4: [100, 103, 110, 111, 400, 120],
+}
+# (o_orderkey, o_custkey, o_orderstatus, o_orderdate)
+_PROFILE_ORDERS = [
+    (1, 11, "F", "1997-06-01"), (2, 11, "F", "1997-09-30"),
+    (3, 12, "O", "1997-12-31"), (3, 12, "F", "1997-11-02"),
+    (4, 13, "F", "1998-01-01"), (5, 13, "O", "1998-02-14"),
+    (6, 99, "P", "1998-03-01"), (7, 12, "F", "1998-05-05"),
+    (8, 11, "O", "1998-07-07"),
+]
+_PROFILE_CUSTOMERS = [11, 12, 13]
+# (l_orderkey, l_linenumber)
+_PROFILE_LINEITEMS = [(1, 1), (1, 2), (2, 1), (3, 1), (3, 1), (4, 1), (5, 1), (77, 1), (8, 3)]
+
+
+@pytest.fixture(scope="module")
+def profile_replay_dir(tmp_path_factory):
+    import pandas as pd
+
+    d = tmp_path_factory.mktemp("profile_replays")
+    events = [
+        (u, c) for u, cents in _PROFILE_USER_CENTS.items() for c in cents
+    ]
+    pd.DataFrame([
+        dict(event_id=i, ts=pd.Timestamp(_REPLAY_T0 + 60 * i, unit="s"), user_id=u,
+             event_type="a", value=c / 100.0, props="{}")
+        for i, (u, c) in enumerate(events)
+    ]).to_parquet(d / "events.parquet", index=False)
+    pd.DataFrame([
+        dict(o_orderkey=k, o_custkey=cu, o_orderstatus=st, o_totalprice=100.0,
+             o_orderdate=pd.Timestamp(day), o_orderpriority="1-URGENT")
+        for k, cu, st, day in _PROFILE_ORDERS
+    ]).to_parquet(d / "orders.parquet", index=False, coerce_timestamps="us")
+    pd.DataFrame([
+        dict(c_custkey=c, c_name=f"c{c}", c_nationkey=0, c_acctbal=0.0,
+             c_mktsegment="X")
+        for c in _PROFILE_CUSTOMERS
+    ]).to_parquet(d / "customer.parquet", index=False)
+    pd.DataFrame([
+        dict(l_orderkey=k, l_linenumber=ln, l_quantity=1.0)
+        for k, ln in _PROFILE_LINEITEMS
+    ]).to_parquet(d / "lineitem.parquet", index=False)
+    return str(d)
+
+
+def _replay_mad_outliers():
+    import statistics
+
+    rows, eid = [], 0
+    for u, cents in _PROFILE_USER_CENTS.items():
+        m2 = int(2 * statistics.median(cents))
+        dev2 = [abs(2 * c - m2) for c in cents]
+        mad4 = int(2 * statistics.median(dev2))
+        for c, d in zip(cents, dev2):
+            if mad4 > 0 and 13490 * d // mad4 >= 30000:
+                rows.append((u, eid, c, 13490 * d // mad4))
+            eid += 1
+    return rows
+
+
+def _replay_ab_proportions():
+    import math
+
+    n = {True: 0, False: 0}
+    x = {True: 0, False: 0}
+    for _, _, st, day in _PROFILE_ORDERS:
+        era_a = day < "1998-01-01"
+        n[era_a] += 1
+        x[era_a] += st == "F"
+    (n_a, x_a), (n_b, x_b) = (n[True], x[True]), (n[False], x[False])
+    pool = (x_a + x_b) / (n_a + n_b)
+    z = (x_a / n_a - x_b / n_b) / math.sqrt(pool * (1 - pool) * (1 / n_a + 1 / n_b))
+    return [(n_a, x_a, n_b, x_b, x_a * 10000 // n_a, x_b * 10000 // n_b, round(z, 6))]
+
+
+def _replay_key_integrity():
+    okeys = [k for k, _, _, _ in _PROFILE_ORDERS]
+    ocust = [cu for _, cu, _, _ in _PROFILE_ORDERS]
+    lkeys = [k for k, _ in _PROFILE_LINEITEMS]
+
+    def pk(name, keys):
+        return (name, len(keys), len(set(keys)), (len(keys) - len(set(keys))) * 10000 // len(keys))
+
+    def fk(name, keys, parents):
+        good = sum(k in set(parents) for k in keys)
+        return (name, len(keys), good, (len(keys) - good) * 10000 // len(keys))
+
+    return [
+        pk("orders_pk", okeys),
+        pk("lineitem_pk", _PROFILE_LINEITEMS),
+        fk("lineitem_fk_orders", lkeys, okeys),
+        fk("orders_fk_customer", ocust, _PROFILE_CUSTOMERS),
+    ]
+
+
 # key -> (replay, output columns compared); float columns compare to 2e-6
 _SQL_REPLAYS = {
     "ts_pacf": (_replay_pacf, ("event_type", "pacf_1", "pacf_2", "pacf_3")),
@@ -5878,21 +5982,29 @@ _SQL_REPLAYS = {
         "source", "n_docs", "n_langs", "impurity_bp")),
     "stats_profile_drift": (_replay_profile_drift, (
         "col_name", "era", "n", "ndv", "min_v", "max_v", "distinct_share_bp")),
+    "stats_mad_outliers": (_replay_mad_outliers, ("user_id", "event_id", "cents", "z_bp")),
+    "stats_ab_proportions": (_replay_ab_proportions, (
+        "n_a", "x_a", "n_b", "x_b", "rate_a_bp", "rate_b_bp", "z_score")),
+    "stats_key_integrity": (_replay_key_integrity, (
+        "check_name", "n_checked", "n_good", "violations_bp")),
 }
+# keys whose replay reads the profiling fixture instead of replay_dir
+_PROFILE_REPLAY_KEYS = {"stats_mad_outliers", "stats_ab_proportions", "stats_key_integrity"}
 
 
 @pytest.mark.parametrize("key", sorted(_SQL_REPLAYS))
-def test_sql_text_ops_match_python_replays(spark, replay_dir, key):
+def test_sql_text_ops_match_python_replays(spark, request, key):
     """Each op's rows equal a direct Python replay over the fixture rows:
     exact for integers, strings and verdicts, 2e-6 for the rounded
-    PACF doubles."""
+    PACF and z-score doubles."""
     from connor_fun_streamproducer_spark import registry
 
     registry._ensure_loaded()
     replay, cols = _SQL_REPLAYS[key]
+    fixture = "profile_replay_dir" if key in _PROFILE_REPLAY_KEYS else "replay_dir"
     got = sorted(
         tuple(r[c] for c in cols)
-        for r in registry.OPS[key].fn(spark, replay_dir).collect()
+        for r in registry.OPS[key].fn(spark, request.getfixturevalue(fixture)).collect()
     )
     want = sorted(replay())
     assert len(got) == len(want) and len(want) > 0, (key, got, want)

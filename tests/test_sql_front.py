@@ -41,18 +41,35 @@ def test_renderers_apply_each_dialect():
         "SELECT CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT)  div  2, CAST(x AS DECIMAL(38,0))"
         " FROM {events} WHERE CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT) < 7"
     )
+    span = "SELECT ({te} - {te_min}) * 4 // ({te_max} - {te_min} + 1) FROM b"
+    assert duckdb_sql(span) == (
+        "SELECT (CAST(floor(epoch(ts)) AS BIGINT) - (SELECT min(te) FROM b)) * 4"
+        " // ((SELECT max(te) FROM b) - (SELECT min(te) FROM b) + 1) FROM b"
+    )
+    assert spark_sql(span, te_min=10, te_max=99) == (
+        "SELECT (CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT) - 10) * 4"
+        "  div  (99 - 10 + 1) FROM b"
+    )
 
 
 @pytest.mark.parametrize("key", sorted(_SQL_FRONT_PLAN_SHAPE))
 def test_era_op_build_sends_few_py4j_commands(spark, key):
     """Building an op on ``run_sql`` is one ``spark.sql`` call: well
-    under 500 py4j commands once the schema memo (and, for an era op,
-    the era boundary) is warm."""
+    under 500 py4j commands and no Spark job once the schema memo (and,
+    for an era op, the era boundary) is warm."""
+    from tests.test_schema_memo import _jobs
+
     fn = registry.OPS[key].fn
     fn(spark, SF_DIR)
-    with py4j_commands(spark) as sent:
-        fn(spark, SF_DIR)
-    assert sent[0] < 500, (key, sent[0])
+
+    def build():
+        with py4j_commands(spark) as sent:
+            fn(spark, SF_DIR)
+        return sent[0]
+
+    sent, jobs = _jobs(spark, build)
+    assert sent < 500, (key, sent)
+    assert jobs == 0, (key, jobs)
 
 
 def test_sql_ops_leave_no_session_views(spark):
