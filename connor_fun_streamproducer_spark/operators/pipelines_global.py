@@ -1,49 +1,52 @@
-"""Multi-dimension join pipelines (TPC-H Q7/Q14 shapes) and the
-runtime-filtered selective join.
+"""Multi-dimension join pipelines (TPC-H Q6–Q19 shapes), the
+runtime-filtered selective join, and the warehouse rollups built on
+them.
 
 Round-3 widening of operators/pipelines.py: the reference computes one
-fixed geo dataflow (/root/reference/regionSpout.go:57-124); a warehouse
-user also runs the big snowflake joins — fact × fact × several dims with
-a group-by over derived attributes. These pin the plans Spark should
-produce for them: dims broadcast, facts shuffle on their join keys once,
-aggregation partial-combines, and (at real scale) the optimizer's
-runtime filters prune the probe side before the shuffle.
+fixed geo dataflow (regionSpout.go:57-124); a warehouse user also runs
+the big snowflake joins — fact × fact × several dims with a group-by
+over derived attributes. These pin the plans Spark should produce for
+them: dims broadcast, facts shuffle on their join keys once, aggregation
+partial-combines, and (at real scale) the optimizer's runtime filters
+prune the probe side before the shuffle.
+
+Every op here is one SQL text with ``sql_front`` placeholders: the text
+is the DuckDB oracle and, through ``sql_front.run_sql``, the Spark plan.
+The texts spell out the plan shape ``tests/test_plans.py`` pins: the
+join order, ``/*+ BROADCAST(t) */`` on each broadcast dim, and a dim
+subquery that renames its columns where a plan snapshot expects that
+projection.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from pyspark.sql.window import Window
-
-from connor_fun_streamproducer_spark.catalog import (
-    dim_window,
-    epoch_div,
-    epoch_seconds,
-    load,
-)
+from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, run_sql
 from connor_fun_streamproducer_spark.registry import op
+
+_NATION_VOLUME_SQL = """
+SELECT /*+ BROADCAST(n1, n2) */ supp_nation, cust_nation,
+       CAST(year(l_shipdate) AS INT) AS l_year,
+       CAST(count(*) AS BIGINT) AS n_items,
+       round(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 5e-1)
+                      AS BIGINT)) / 1e2, 2) AS revenue
+FROM {lineitem}
+JOIN {orders}   ON l_orderkey = o_orderkey
+JOIN {supplier} ON l_suppkey = s_suppkey
+JOIN {customer} ON o_custkey = c_custkey
+JOIN (SELECT n_nationkey AS s_nk, n_name AS supp_nation FROM {nation}) n1
+  ON s_nationkey = s_nk
+JOIN (SELECT n_nationkey AS c_nk, n_name AS cust_nation FROM {nation}) n2
+  ON c_nationkey = c_nk
+WHERE s_nk <> c_nk
+GROUP BY 1, 2, 3
+"""
 
 
 @op(
     "pipeline_nation_volume",
-    oracle="""
-    SELECT n1.n_name AS supp_nation,
-           n2.n_name AS cust_nation,
-           CAST(year(l_shipdate) AS INTEGER) AS l_year,
-           CAST(count(*) AS BIGINT) AS n_items,
-           round(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                          AS BIGINT)) / 100.0, 2) AS revenue
-    FROM lineitem
-    JOIN orders   ON o_orderkey = l_orderkey
-    JOIN supplier ON s_suppkey  = l_suppkey
-    JOIN customer ON c_custkey  = o_custkey
-    JOIN nation n1 ON s_nationkey = n1.n_nationkey
-    JOIN nation n2 ON c_nationkey = n2.n_nationkey
-    WHERE n1.n_nationkey <> n2.n_nationkey
-    GROUP BY 1, 2, 3
-    """,
+    oracle=duckdb_sql(_NATION_VOLUME_SQL),
     tags=("ext", "pipeline", "join"),
 )
 def pipeline_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,46 +64,21 @@ def pipeline_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines and run-to-run — double summation order would drift at the
     cent boundary on groups this large.
     """
-    l = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    s = load(spark, sf_dir, "supplier")
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    n1 = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
-    n2 = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation"))
-    joined = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(s, l.l_suppkey == s.s_suppkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-        .filter(F.col("s_nk") != F.col("c_nk"))
-    )
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5
-    ).cast("bigint")
-    return joined.groupBy(
-        "supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year")
-    ).agg(
-        F.count("*").cast("bigint").alias("n_items"),
-        F.round(F.sum(cents) / 100.0, 2).alias("revenue"),
-    )
+    return run_sql(spark, sf_dir, _NATION_VOLUME_SQL)
 
 
-@op(
-    "pipeline_promo_share",
-    oracle="""
-    SELECT CAST(year(l_shipdate) AS INTEGER) AS l_year,
-           CAST(count(*) AS BIGINT)          AS n_items,
-           round(100.0 * sum(CASE WHEN p_type = 'PROMO'
-                                  THEN l_extendedprice * (1 - l_discount)
-                                  ELSE 0 END)
-                 / sum(l_extendedprice * (1 - l_discount)), 4) AS promo_pct
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    GROUP BY 1
-    """,
-    tags=("ext", "pipeline", "join"),
-)
+_PROMO_SHARE_SQL = """
+SELECT CAST(year(l_shipdate) AS INT) AS l_year,
+       CAST(count(*) AS BIGINT) AS n_items,
+       round(1e2 * sum(CASE WHEN p_type = 'PROMO'
+                            THEN l_extendedprice * (1 - l_discount) ELSE 0e0 END)
+             / sum(l_extendedprice * (1 - l_discount)), 4) AS promo_pct
+FROM {lineitem} JOIN {part} ON l_partkey = p_partkey
+GROUP BY 1
+"""
+
+
+@op("pipeline_promo_share", oracle=duckdb_sql(_PROMO_SHARE_SQL), tags=("ext", "pipeline", "join"))
 def pipeline_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: promotional revenue share per year.
 
@@ -112,35 +90,20 @@ def pipeline_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the same rows is insensitive to the join strategy, which is what
     the oracle pins.
     """
-    l = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0.0))
-    return (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .groupBy(F.year("l_shipdate").cast("int").alias("l_year"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_items"),
-            F.round(100.0 * F.sum(promo) / F.sum(vol), 4).alias("promo_pct"),
-        )
-    )
+    return run_sql(spark, sf_dir, _PROMO_SHARE_SQL)
 
 
-@op(
-    "join_runtime_filter",
-    oracle="""
-    WITH sel AS (
-        SELECT o_orderkey FROM orders
-        WHERE o_orderpriority = '1-URGENT' AND o_orderstatus = 'F'
-    )
-    SELECT l_returnflag,
-           CAST(count(*) AS BIGINT) AS n,
-           round(sum(l_extendedprice), 2) AS total
-    FROM lineitem JOIN sel ON l_orderkey = o_orderkey
-    GROUP BY 1
-    """,
-    tags=("ext", "join", "scale"),
-)
+_RUNTIME_FILTER_SQL = """
+SELECT l_returnflag,
+       CAST(count(*) AS BIGINT) AS n,
+       round(sum(l_extendedprice), 2) AS total
+FROM {lineitem} JOIN {orders} ON l_orderkey = o_orderkey
+WHERE o_orderpriority = '1-URGENT' AND o_orderstatus = 'F'
+GROUP BY l_returnflag
+"""
+
+
+@op("join_runtime_filter", oracle=duckdb_sql(_RUNTIME_FILTER_SQL), tags=("ext", "join", "scale"))
 def join_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selective-dim fact join: the runtime-filter (bloom prefilter) shape.
 
@@ -154,46 +117,36 @@ def join_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowers the thresholds and asserts the bloom filter actually appears
     in this exact plan, so the scale path is proven, not assumed.
     """
-    o = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_orderstatus") == "F")
-    )
-    l = load(spark, sf_dir, "lineitem")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("l_returnflag")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.round(F.sum("l_extendedprice"), 2).alias("total"),
-        )
-    )
+    return run_sql(spark, sf_dir, _RUNTIME_FILTER_SQL)
 
 
-@op(
-    "pipeline_market_share",
-    oracle="""
-    WITH vol AS (
-        SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-               CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                    AS BIGINT) AS v_cents,
-               n1.n_name AS supp_nation
-        FROM lineitem
-        JOIN orders    ON o_orderkey = l_orderkey
-        JOIN supplier  ON s_suppkey  = l_suppkey
-        JOIN customer  ON c_custkey  = o_custkey
-        JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        JOIN region    ON n2.n_regionkey = r_regionkey
-        WHERE r_name = 'EUROPE'
-    )
-    SELECT o_year,
-           CAST(count(*) AS BIGINT) AS n_items,
-           round(sum(CASE WHEN supp_nation = 'NATION_3' THEN v_cents ELSE 0 END)
-                 * 1.0 / sum(v_cents), 4) AS mkt_share
-    FROM vol
-    GROUP BY 1
-    """,
-    tags=("ext", "pipeline", "join"),
+_MARKET_SHARE_SQL = """
+WITH vol AS (
+    SELECT /*+ BROADCAST(n1, n2, r) */ CAST(year(o_orderdate) AS INT) AS o_year,
+           supp_nation,
+           CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 5e-1) AS BIGINT)
+               AS v_cents
+    FROM {lineitem}
+    JOIN {orders}   ON l_orderkey = o_orderkey
+    JOIN {supplier} ON l_suppkey = s_suppkey
+    JOIN {customer} ON o_custkey = c_custkey
+    JOIN (SELECT n_nationkey AS s_nk, n_name AS supp_nation FROM {nation}) n1
+      ON s_nationkey = s_nk
+    JOIN (SELECT n_nationkey AS c_nk, n_regionkey AS c_rk FROM {nation}) n2
+      ON c_nationkey = c_nk
+    JOIN {region} r ON c_rk = r_regionkey
+    WHERE r_name = 'EUROPE'
 )
+SELECT o_year,
+       CAST(count(*) AS BIGINT) AS n_items,
+       round(sum(CASE WHEN supp_nation = 'NATION_3' THEN v_cents ELSE 0 END)
+             / sum(v_cents), 4) AS mkt_share
+FROM vol
+GROUP BY o_year
+"""
+
+
+@op("pipeline_market_share", oracle=duckdb_sql(_MARKET_SHARE_SQL), tags=("ext", "pipeline", "join"))
 def pipeline_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one nation's market share inside a region, by year.
 
@@ -209,50 +162,28 @@ def pipeline_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical whatever order either engine sums in; the divide happens
     once, after both sums are exact.
     """
-    l = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    s = load(spark, sf_dir, "supplier")
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    n1 = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
-    n2 = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk"))
-    vol_cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(0.5)
-    ).cast("bigint")
-    joined = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(s, l.l_suppkey == s.s_suppkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-        .join(F.broadcast(r), F.col("c_rk") == F.col("r_regionkey"))
-    )
-    share_num = F.when(F.col("supp_nation") == "NATION_3", vol_cents).otherwise(F.lit(0))
-    return (
-        joined.groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_items"),
-            F.round(F.sum(share_num) / F.sum(vol_cents), 4).alias("mkt_share"),
-        )
-    )
+    return run_sql(spark, sf_dir, _MARKET_SHARE_SQL)
+
+
+_PRODUCT_PROFIT_SQL = """
+SELECT /*+ BROADCAST(n) */ nation,
+       CAST(year(o_orderdate) AS INT) AS o_year,
+       round(sum(CAST(floor((l_extendedprice * (1 - l_discount)
+                             - 1e-1 * p_retailprice * l_quantity) * 100 + 5e-1)
+                      AS BIGINT)) / 1e2, 2) AS profit
+FROM {lineitem}
+JOIN {orders}   ON l_orderkey = o_orderkey
+JOIN {supplier} ON l_suppkey = s_suppkey
+JOIN {part}     ON l_partkey = p_partkey
+JOIN (SELECT n_nationkey, n_name AS nation FROM {nation}) n
+  ON s_nationkey = n_nationkey
+GROUP BY 1, 2
+"""
 
 
 @op(
     "pipeline_product_profit",
-    oracle="""
-    SELECT n_name AS nation,
-           CAST(year(o_orderdate) AS INTEGER) AS o_year,
-           round(sum(CAST(floor((l_extendedprice * (1 - l_discount)
-                                 - 0.1 * p_retailprice * l_quantity) * 100 + 0.5)
-                          AS BIGINT)) / 100.0, 2) AS profit
-    FROM lineitem
-    JOIN orders   ON o_orderkey = l_orderkey
-    JOIN supplier ON s_suppkey  = l_suppkey
-    JOIN part     ON p_partkey  = l_partkey
-    JOIN nation   ON s_nationkey = n_nationkey
-    GROUP BY 1, 2
-    """,
+    oracle=duckdb_sql(_PRODUCT_PROFIT_SQL),
     tags=("ext", "pipeline", "join"),
 )
 def pipeline_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -268,43 +199,26 @@ def pipeline_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Output is (25 nations × years) — partial aggregation
     collapses the exchange to dim-scale at any input size.
     """
-    l = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    s = load(spark, sf_dir, "supplier")
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
-    n = load(spark, sf_dir, "nation").select("n_nationkey", F.col("n_name").alias("nation"))
-    profit_cents = F.floor(
-        (
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            - 0.1 * F.col("p_retailprice") * F.col("l_quantity")
-        )
-        * 100
-        + 0.5
-    ).cast("bigint")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(s, l.l_suppkey == s.s_suppkey)
-        .join(p, l.l_partkey == p.p_partkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy("nation", F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg(F.round(F.sum(profit_cents) / 100.0, 2).alias("profit"))
-    )
+    return run_sql(spark, sf_dir, _PRODUCT_PROFIT_SQL)
+
+
+_DISJUNCTIVE_SQL = """
+SELECT CAST(count(*) AS BIGINT) AS n_items,
+       round(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 5e-1)
+                      AS BIGINT)) / 1e2, 2) AS revenue
+FROM {lineitem} JOIN {part} ON l_partkey = p_partkey
+WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
+       AND l_quantity BETWEEN 1 AND 11)
+   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25
+       AND l_quantity BETWEEN 10 AND 20)
+   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 50
+       AND l_quantity BETWEEN 20 AND 30)
+"""
 
 
 @op(
     "pipeline_disjunctive_revenue",
-    oracle="""
-    SELECT CAST(count(*) AS BIGINT) AS n_items,
-           round(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                          AS BIGINT)) / 100.0, 2) AS revenue
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-           AND l_quantity BETWEEN 1 AND 11)
-       OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25
-           AND l_quantity BETWEEN 10 AND 20)
-       OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 50
-           AND l_quantity BETWEEN 20 AND 30)
-    """,
+    oracle=duckdb_sql(_DISJUNCTIVE_SQL),
     tags=("ext", "pipeline", "join"),
 )
 def pipeline_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,96 +236,62 @@ def pipeline_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     and its keys runtime-filter the lineitem scan. Revenue in exact
     integer cents (Q7 convention).
     """
-    l = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    qty, size, brand = F.col("l_quantity"), F.col("p_size"), F.col("p_brand")
-    pred = (
-        ((brand == "Brand#1") & size.between(1, 15) & qty.between(1, 11))
-        | ((brand == "Brand#2") & size.between(1, 25) & qty.between(10, 20))
-        | ((brand == "Brand#3") & size.between(1, 50) & qty.between(20, 30))
-    )
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5
-    ).cast("bigint")
-    return (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .filter(pred)
-        .agg(
-            F.count("*").cast("bigint").alias("n_items"),
-            F.round(F.sum(cents) / 100.0, 2).alias("revenue"),
-        )
-    )
+    return run_sql(spark, sf_dir, _DISJUNCTIVE_SQL)
 
 
-@op(
-    "pipeline_top_supplier",
-    oracle="""
-    WITH rev AS (
-        SELECT l_suppkey,
-               sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                        AS BIGINT)) AS total_cents
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l_shipdate <  TIMESTAMP '1996-04-01'
-        GROUP BY 1
-    )
-    SELECT s_suppkey, s_name,
-           round(total_cents / 100.0, 2) AS total_revenue
-    FROM supplier JOIN rev ON s_suppkey = l_suppkey
-    WHERE total_cents = (SELECT max(total_cents) FROM rev)
-    """,
-    tags=("ext", "pipeline", "subquery"),
+_TOP_SUPPLIER_SQL = """
+WITH rev AS (
+    SELECT l_suppkey,
+           sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 5e-1)
+                    AS BIGINT)) AS total_cents
+    FROM {lineitem}
+    WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1996-04-01'
+    GROUP BY l_suppkey
 )
+SELECT /*+ BROADCAST(m) */ s_suppkey, s_name,
+       round(total_cents / 1e2, 2) AS total_revenue
+FROM rev
+JOIN (SELECT max(total_cents) AS max_cents FROM rev) m ON total_cents = max_cents
+JOIN {supplier} ON l_suppkey = s_suppkey
+"""
+
+
+@op("pipeline_top_supplier", oracle=duckdb_sql(_TOP_SUPPLIER_SQL), tags=("ext", "pipeline", "subquery"))
 def pipeline_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: supplier(s) with the maximum quarterly revenue.
 
     The view-plus-scalar-subquery pattern, decorrelated the way Catalyst
     should run it: the quarter's revenue aggregate builds ONCE (filter
     pushed to the lineitem scan, partial agg before the suppkey
-    exchange), its 1-row max is broadcast back over the same frame as a
-    cross-join scalar (operators/subqueries.py's Q22 pattern), and only
-    the winners join the supplier dim. Revenue in exact integer cents so
-    the equality predicate against the max is bit-stable — a double sum
-    would make 'the' max supplier engine-dependent at the last ulp.
-    Spark computes the rev frame once per branch here; at 100 TB you
-    would .cache() it across the max/filter reuse (the plan is otherwise
-    two scans) — localCheckpoint/cache is a no-op for correctness, so
-    the oracle pins either physical choice.
+    exchange), its 1-row max is broadcast back over the same frame as
+    an equi-join on the max, and only the winners join the supplier
+    dim. Revenue in exact integer cents so the equality predicate
+    against the max is bit-stable — a double sum would make 'the' max
+    supplier engine-dependent at the last ulp. Spark computes the rev
+    frame once per branch here; at 100 TB you would .cache() it across
+    the max/filter reuse (the plan is otherwise two scans) —
+    localCheckpoint/cache is a no-op for correctness, so the oracle
+    pins either physical choice.
     """
-    l = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
-    )
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5
-    ).cast("bigint")
-    rev = l.groupBy("l_suppkey").agg(F.sum(cents).alias("total_cents"))
-    max_rev = rev.agg(F.max("total_cents").alias("max_cents"))
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        rev.join(F.broadcast(max_rev), F.col("total_cents") == F.col("max_cents"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            "s_suppkey",
-            "s_name",
-            F.round(F.col("total_cents") / 100.0, 2).alias("total_revenue"),
-        )
-    )
+    return run_sql(spark, sf_dir, _TOP_SUPPLIER_SQL)
+
+
+_CUSTOMER_DIST_SQL = """
+WITH per_cust AS (
+    SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
+    FROM {customer}
+    LEFT JOIN {orders} ON o_custkey = c_custkey AND o_orderpriority <> '1-URGENT'
+    GROUP BY c_custkey
+)
+SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
+FROM per_cust
+GROUP BY c_count
+"""
 
 
 @op(
     "pipeline_customer_distribution",
-    oracle="""
-    WITH per_cust AS (
-        SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-        FROM customer
-        LEFT JOIN orders ON o_custkey = c_custkey
-                        AND o_orderpriority <> '1-URGENT'
-        GROUP BY c_custkey
-    )
-    SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-    FROM per_cust
-    GROUP BY c_count
-    """,
+    oracle=duckdb_sql(_CUSTOMER_DIST_SQL),
     tags=("ext", "pipeline", "join"),
 )
 def pipeline_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -429,37 +309,21 @@ def pipeline_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     collapsing to ~|distinct counts| — dim-scale. AQE handles the skew
     of the zero/low-count head.
     """
-    c = load(spark, sf_dir, "customer").select("c_custkey")
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderpriority")
-    per_cust = (
-        c.join(
-            o,
-            (F.col("o_custkey") == F.col("c_custkey"))
-            & (F.col("o_orderpriority") != "1-URGENT"),
-            "left",
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").cast("bigint").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(
-        F.count("*").cast("bigint").alias("custdist")
-    )
+    return run_sql(spark, sf_dir, _CUSTOMER_DIST_SQL)
 
 
-@op(
-    "pipeline_forecast_revenue",
-    oracle="""
-    SELECT round(sum(CAST(floor(l_extendedprice * l_discount * 100 + 0.5)
-                          AS BIGINT)) / 100.0, 2) AS promo_revenue,
-           CAST(count(*) AS BIGINT) AS n_items
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l_shipdate <  TIMESTAMP '1997-01-01'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-    """,
-    tags=("ext", "pipeline"),
-)
+_FORECAST_SQL = """
+SELECT round(sum(CAST(floor(l_extendedprice * l_discount * 100 + 5e-1)
+                      AS BIGINT)) / 1e2, 2) AS promo_revenue,
+       CAST(count(*) AS BIGINT) AS n_items
+FROM {lineitem}
+WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
+  AND l_discount BETWEEN 5e-2 AND 7e-2
+  AND l_quantity < 24
+"""
+
+
+@op("pipeline_forecast_revenue", oracle=duckdb_sql(_FORECAST_SQL), tags=("ext", "pipeline"))
 def pipeline_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: the pure scan-filter-aggregate revenue forecast.
 
@@ -474,41 +338,23 @@ def pipeline_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     40 TB fact; map-side partial aggregation leaves one scalar per
     partition for the final exchange.
     """
-    li = load(spark, sf_dir, "lineitem")
-    cents = F.floor(
-        F.col("l_extendedprice") * F.col("l_discount") * 100 + 0.5
-    ).cast("bigint")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= "1996-01-01")
-            & (F.col("l_shipdate") < "1997-01-01")
-            & F.col("l_discount").between(0.05, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(F.sum(cents) / 100.0, 2).alias("promo_revenue"),
-            F.count("*").cast("bigint").alias("n_items"),
-        )
-    )
+    return run_sql(spark, sf_dir, _FORECAST_SQL)
 
 
-@op(
-    "pipeline_shipmode_priority",
-    oracle="""
-    SELECT l.l_returnflag,
-           CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(sum(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-    FROM orders o
-    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l.l_shipdate <  TIMESTAMP '1997-01-01'
-    GROUP BY l.l_returnflag
-    ORDER BY l.l_returnflag
-    """,
-    tags=("ext", "pipeline", "join"),
-)
+_SHIPMODE_SQL = """
+SELECT l_returnflag,
+       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+FROM {lineitem} JOIN {orders} ON l_orderkey = o_orderkey
+WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
+GROUP BY l_returnflag
+ORDER BY l_returnflag
+"""
+
+
+@op("pipeline_shipmode_priority", oracle=duckdb_sql(_SHIPMODE_SQL), tags=("ext", "pipeline", "join"))
 def pipeline_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: conditional two-way counts per category after a
     fact-fact join.
@@ -524,52 +370,39 @@ def pipeline_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     selectivity), and the tiny category group-by is map-side-partial
     first, so the final exchange moves ~categories × partitions rows.
     """
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
-    )
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    is_high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(is_high, 1).otherwise(0)).cast("bigint").alias("high_line_count"),
-            F.sum(F.when(~is_high, 1).otherwise(0)).cast("bigint").alias("low_line_count"),
-        )
-        .orderBy("l_returnflag")
-    )
+    return run_sql(spark, sf_dir, _SHIPMODE_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Part revenue velocity (top movers, rank-exact)
 # ---------------------------------------------------------------------------
 
-_VELOCITY_ORACLE = """
-WITH r AS (
-    SELECT l_partkey,
-           sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-               * (10000 - CAST(floor(l_discount * 10000 + 0.5) AS BIGINT)))
-               AS rev_cbp,
-           count(DISTINCT date_trunc('day', l_shipdate)) AS active_days,
+_VELOCITY_SQL = """
+WITH li AS (
+    SELECT l_partkey AS p_partkey,
+           CAST(floor(l_extendedprice * 100 + 5e-1) AS BIGINT)
+               * (10000 - CAST(floor(l_discount * 10000 + 5e-1) AS BIGINT)) AS line_cbp,
+           date_trunc('day', l_shipdate) AS ship_day
+    FROM {lineitem}
+), r AS (
+    SELECT p_partkey,
+           sum(CAST(line_cbp AS {wide})) AS rev_cbp,
+           count(DISTINCT ship_day) AS active_days,
            count(*) AS n_lines
-    FROM lineitem GROUP BY 1
-), v AS (
-    SELECT l_partkey AS p_partkey, rev_cbp, active_days, n_lines,
-           rev_cbp // active_days AS velocity_cbp
-    FROM r
+    FROM li GROUP BY p_partkey
 )
-SELECT v.p_partkey, p.p_brand,
-       CAST(v.rev_cbp AS BIGINT) AS revenue_cbp,
-       CAST(v.active_days AS BIGINT) AS active_days,
-       CAST(v.n_lines AS BIGINT) AS n_lines,
-       CAST(v.velocity_cbp AS BIGINT) AS velocity_cbp
-FROM v JOIN part p USING (p_partkey)
-ORDER BY v.velocity_cbp DESC, v.p_partkey ASC
+SELECT /*+ BROADCAST(p) */ p_partkey, p_brand,
+       CAST(rev_cbp AS BIGINT) AS revenue_cbp,
+       CAST(active_days AS BIGINT) AS active_days,
+       CAST(n_lines AS BIGINT) AS n_lines,
+       CAST(rev_cbp // active_days AS BIGINT) AS velocity_cbp
+FROM r JOIN {part} p USING (p_partkey)
+ORDER BY velocity_cbp DESC, p_partkey ASC
 LIMIT 20
 """
 
 
-@op("pipeline_part_velocity", oracle=_VELOCITY_ORACLE, tags=("ext", "pipeline"))
+@op("pipeline_part_velocity", oracle=duckdb_sql(_VELOCITY_SQL), tags=("ext", "pipeline"))
 def pipeline_part_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 parts by revenue VELOCITY — discounted revenue per active
     shipping day — the inventory-turns ranking a merchandiser reads
@@ -588,63 +421,36 @@ def pipeline_part_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange), broadcast part join for the brand, global top-k via
     TakeOrdered — the scan dominates, nothing else is corpus-sized.
     """
-    li = load(spark, sf_dir, "lineitem").select(
-        F.col("l_partkey").alias("p_partkey"),
-        (
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint")
-            * (
-                F.lit(10000)
-                - F.floor(F.col("l_discount") * 10000 + F.lit(0.5)).cast("bigint")
-            )
-        ).alias("line_cbp"),
-        F.date_trunc("day", "l_shipdate").alias("ship_day"),
-    )
-    r = li.groupBy("p_partkey").agg(
-        F.sum(F.col("line_cbp").cast("decimal(38,0)")).alias("rev_cbp"),
-        F.countDistinct("ship_day").alias("active_days"),
-        F.count("*").alias("n_lines"),
-    )
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    v = r.join(F.broadcast(p), "p_partkey").select(
-        "p_partkey",
-        "p_brand",
-        F.col("rev_cbp").cast("bigint").alias("revenue_cbp"),
-        F.col("active_days").cast("bigint").alias("active_days"),
-        F.col("n_lines").cast("bigint").alias("n_lines"),
-        F.expr("CAST(rev_cbp div active_days AS BIGINT)").alias("velocity_cbp"),
-    )
-    return v.orderBy(F.desc("velocity_cbp"), F.asc("p_partkey")).limit(20)
+    return run_sql(spark, sf_dir, _VELOCITY_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Open-order aging buckets (receivables-style aging by priority)
 # ---------------------------------------------------------------------------
 
-_AGING_ORACLE = """
+_AGING_SQL = """
 WITH anchor AS (
-    SELECT CAST(floor(epoch(max(o_orderdate))) AS BIGINT) // 86400 AS mx
-    FROM orders
+    SELECT max({epoch[o_orderdate]} // 86400) AS mx FROM {orders}
 ), aged AS (
-    SELECT o_orderpriority, o_orderstatus,
-           mx - CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS age_d,
-           CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-    FROM orders CROSS JOIN anchor
+    SELECT /*+ BROADCAST(anchor) */ o_orderpriority, o_orderstatus,
+           mx - {epoch[o_orderdate]} // 86400 AS age_d,
+           CAST(floor(o_totalprice * 100 + 5e-1) AS BIGINT) AS cents
+    FROM {orders} CROSS JOIN anchor
 ), b AS (
     SELECT o_orderpriority, o_orderstatus,
-           CASE WHEN age_d <= 30 THEN 0 WHEN age_d <= 90 THEN 1
-                WHEN age_d <= 365 THEN 2 ELSE 3 END AS age_bucket,
+           CAST(CASE WHEN age_d <= 30 THEN 0 WHEN age_d <= 90 THEN 1
+                     WHEN age_d <= 365 THEN 2 ELSE 3 END AS BIGINT) AS age_bucket,
            cents
     FROM aged
 )
-SELECT o_orderpriority, o_orderstatus,
-       CAST(age_bucket AS BIGINT) AS age_bucket,
+SELECT o_orderpriority, o_orderstatus, age_bucket,
        CAST(count(*) AS BIGINT) AS n_orders,
        CAST(sum(cents) AS BIGINT) AS total_cents
-FROM b GROUP BY 1, 2, 3
+FROM b GROUP BY o_orderpriority, o_orderstatus, age_bucket
 """
 
 
-@op("pipeline_order_aging", oracle=_AGING_ORACLE, tags=("ext", "pipeline"))
+@op("pipeline_order_aging", oracle=duckdb_sql(_AGING_SQL), tags=("ext", "pipeline"))
 def pipeline_order_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Receivables-style order aging: count and value per (priority,
     status, age bucket) where age is days from the order date to the
@@ -661,53 +467,31 @@ def pipeline_order_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → a 1-row anchor agg broadcast back → a
     |priorities|×|statuses|×4-key hash agg with map-side partials.
     """
-    o = load(spark, sf_dir, "orders")
-    day = epoch_div("o_orderdate", 86400)
-    anchor = o.agg(F.max(day).alias("mx"))
-    aged = o.crossJoin(F.broadcast(anchor)).select(
-        "o_orderpriority",
-        "o_orderstatus",
-        (F.col("mx") - day).alias("age_d"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    b = aged.select(
-        "o_orderpriority",
-        "o_orderstatus",
-        F.when(F.col("age_d") <= 30, 0)
-        .when(F.col("age_d") <= 90, 1)
-        .when(F.col("age_d") <= 365, 2)
-        .otherwise(3)
-        .cast("bigint")
-        .alias("age_bucket"),
-        "cents",
-    )
-    return b.groupBy("o_orderpriority", "o_orderstatus", "age_bucket").agg(
-        F.count("*").cast("bigint").alias("n_orders"),
-        F.sum("cents").cast("bigint").alias("total_cents"),
-    )
+    return run_sql(spark, sf_dir, _AGING_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Discount-depth histogram by brand (pricing-policy audit)
 # ---------------------------------------------------------------------------
 
-_DISCOUNT_ORACLE = """
-WITH b AS (
-    SELECT p.p_brand,
-           CAST(floor(l.l_discount * 10000 + 0.5) AS BIGINT) // 100 AS disc_pct,
-           CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+_DISCOUNT_SQL = """
+WITH li AS (
+    SELECT l_partkey,
+           CAST(floor(l_discount * 10000 + 5e-1) AS BIGINT) // 100 AS disc_pct,
+           CAST(floor(l_extendedprice * 100 + 5e-1) AS BIGINT) AS cents
+    FROM {lineitem}
 )
-SELECT p_brand,
+SELECT /*+ BROADCAST(p) */ p_brand,
        CAST(disc_pct AS BIGINT) AS disc_pct,
        CAST(count(*) AS BIGINT) AS n_lines,
        CAST(sum(cents) AS BIGINT) AS gross_cents,
        CAST(sum(cents * disc_pct) // 100 AS BIGINT) AS given_away_cents
-FROM b GROUP BY 1, 2
+FROM li JOIN {part} p ON l_partkey = p_partkey
+GROUP BY 1, 2
 """
 
 
-@op("pipeline_discount_depth", oracle=_DISCOUNT_ORACLE, tags=("ext", "pipeline"))
+@op("pipeline_discount_depth", oracle=duckdb_sql(_DISCOUNT_SQL), tags=("ext", "pipeline"))
 def pipeline_discount_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discount-depth histogram per brand: line counts, gross revenue,
     and the money given away at each whole-percent discount level — the
@@ -723,58 +507,32 @@ def pipeline_discount_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one lineitem scan → broadcast part join (dim) →
     |brands|×|depths| hash agg with map-side partials.
     """
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.expr(
-            "CAST(floor(l_discount * 10000 + 0.5) AS BIGINT) div 100"
-        ).alias("disc_pct"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
-    )
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "disc_pct")
-        .agg(
-            F.count("*").cast("bigint").alias("n_lines"),
-            F.sum("cents").cast("bigint").alias("gross_cents"),
-            F.expr("sum(cents * disc_pct) div 100")
-            .cast("bigint")
-            .alias("given_away_cents"),
-        )
-        .select(
-            "p_brand",
-            F.col("disc_pct").cast("bigint").alias("disc_pct"),
-            "n_lines",
-            "gross_cents",
-            "given_away_cents",
-        )
-    )
+    return run_sql(spark, sf_dir, _DISCOUNT_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Return-rate table by brand and month (quality drift signal)
 # ---------------------------------------------------------------------------
 
-_RETURNS_ORACLE = """
-WITH b AS (
-    SELECT p.p_brand,
-           CAST(date_trunc('month', l.l_shipdate) AS DATE) AS ship_month,
-           CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END AS ret,
-           CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+_RETURNS_SQL = """
+WITH li AS (
+    SELECT l_partkey,
+           CAST(date_trunc('month', l_shipdate) AS DATE) AS ship_month,
+           CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS ret,
+           CAST(floor(l_extendedprice * 100 + 5e-1) AS BIGINT) AS cents
+    FROM {lineitem}
 )
-SELECT p_brand, ship_month,
+SELECT /*+ BROADCAST(p) */ p_brand, ship_month,
        CAST(count(*) AS BIGINT) AS n_lines,
        CAST(sum(ret) AS BIGINT) AS n_returned,
        CAST(sum(ret) * 10000 // count(*) AS BIGINT) AS return_rate_bp,
        CAST(sum(ret * cents) AS BIGINT) AS returned_cents
-FROM b GROUP BY 1, 2
+FROM li JOIN {part} p ON l_partkey = p_partkey
+GROUP BY p_brand, ship_month
 """
 
 
-@op("pipeline_returns_rate", oracle=_RETURNS_ORACLE, tags=("ext", "pipeline"))
+@op("pipeline_returns_rate", oracle=duckdb_sql(_RETURNS_SQL), tags=("ext", "pipeline"))
 def pipeline_returns_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Return-rate table per (brand, ship month): line counts, returned
     lines, the integral return rate in basis points, and the returned
@@ -789,39 +547,19 @@ def pipeline_returns_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one lineitem scan → broadcast part join →
     |brands|×|months| hash agg with map-side partials.
     """
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.date_trunc("month", "l_shipdate").cast("date").alias("ship_month"),
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("ret"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
-    )
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "ship_month")
-        .agg(
-            F.count("*").cast("bigint").alias("n_lines"),
-            F.sum("ret").cast("bigint").alias("n_returned"),
-            F.expr("sum(ret) * 10000 div count(*)")
-            .cast("bigint")
-            .alias("return_rate_bp"),
-            F.sum(F.col("ret") * F.col("cents")).cast("bigint").alias("returned_cents"),
-        )
-    )
+    return run_sql(spark, sf_dir, _RETURNS_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Part-level repeat-buyer rate (retention at the product grain)
 # ---------------------------------------------------------------------------
 
-_REPEAT_ORACLE = """
+_REPEAT_SQL = """
 WITH bo AS (
-    SELECT l.l_partkey AS partkey, o.o_custkey AS custkey,
-           count(DISTINCT l.l_orderkey) AS n_orders
-    FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-    GROUP BY 1, 2
+    SELECT l_partkey AS partkey, o_custkey AS custkey,
+           count(DISTINCT l_orderkey) AS n_orders
+    FROM {lineitem} JOIN {orders} ON l_orderkey = o_orderkey
+    GROUP BY l_partkey, o_custkey
 )
 SELECT partkey,
        CAST(count(*) AS BIGINT) AS n_buyers,
@@ -829,12 +567,12 @@ SELECT partkey,
            AS n_repeat_buyers,
        CAST(sum(CASE WHEN n_orders >= 2 THEN 1 ELSE 0 END) * 10000
             // count(*) AS BIGINT) AS repeat_bp
-FROM bo GROUP BY 1
-HAVING count(*) >= 3
+FROM bo GROUP BY partkey
+HAVING n_buyers >= 3
 """
 
 
-@op("pipeline_repeat_buyers", oracle=_REPEAT_ORACLE, tags=("ext", "pipeline"))
+@op("pipeline_repeat_buyers", oracle=duckdb_sql(_REPEAT_SQL), tags=("ext", "pipeline"))
 def pipeline_repeat_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repeat-purchase rate at the PRODUCT grain: per part, how many
     distinct customers bought it at all and how many came back for it
@@ -853,72 +591,50 @@ def pipeline_repeat_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial/final; the part-level rollup reuses the partkey
     partitioning. Output is bounded by |part|.
     """
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    bo = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(F.col("l_partkey").alias("partkey"), F.col("o_custkey").alias("custkey"))
-        .agg(F.countDistinct("l_orderkey").alias("n_orders"))
-    )
-    rep = F.when(F.col("n_orders") >= 2, 1).otherwise(0)
-    return (
-        bo.groupBy("partkey")
-        .agg(
-            F.count("*").cast("bigint").alias("n_buyers"),
-            F.sum(rep).cast("bigint").alias("n_repeat_buyers"),
-            F.expr(
-                "sum(CASE WHEN n_orders >= 2 THEN 1 ELSE 0 END) * 10000"
-                " div count(*)"
-            )
-            .cast("bigint")
-            .alias("repeat_bp"),
-        )
-        .filter(F.col("n_buyers") >= 3)
-    )
+    return run_sql(spark, sf_dir, _REPEAT_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Price/volume bridge per brand between shipping-year eras
 # ---------------------------------------------------------------------------
 
-_BRIDGE_ORACLE = """
+_BRIDGE_SQL = """
 WITH b AS (
-    SELECT CAST(year(l_shipdate) AS INTEGER) AS yr,
+    SELECT CAST(year(l_shipdate) AS INT) AS yr,
            l_partkey,
-           CAST(floor(l_quantity + 0.5) AS BIGINT) AS qty,
-           CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                AS BIGINT) AS cents
-    FROM lineitem
-), span AS (
-    SELECT (min(yr) + max(yr)) // 2 AS mid FROM b
+           CAST(floor(l_quantity + 5e-1) AS BIGINT) AS qty,
+           CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 5e-1) AS BIGINT)
+               AS cents
+    FROM {lineitem}
+), e AS (
+    SELECT /*+ BROADCAST(p) */ p_brand,
+           CASE WHEN yr <= (SELECT (min(yr) + max(yr)) // 2 FROM b) THEN 0 ELSE 1 END
+               AS era,
+           qty, cents
+    FROM b JOIN {part} p ON l_partkey = p_partkey
 ), m AS (
-    SELECT p.p_brand,
-           CASE WHEN yr <= mid THEN 0 ELSE 1 END AS era,
-           sum(qty) AS q, sum(cents) AS r
-    FROM b JOIN part p ON p.p_partkey = b.l_partkey
-    CROSS JOIN span GROUP BY 1, 2
-), p AS (
+    SELECT p_brand, era, sum(qty) AS q, sum(cents) AS r
+    FROM e GROUP BY p_brand, era
+), pv AS (
     SELECT p_brand,
            max(CASE WHEN era = 0 THEN q END) AS qa,
            max(CASE WHEN era = 0 THEN r END) AS ra,
            max(CASE WHEN era = 1 THEN q END) AS qb,
            max(CASE WHEN era = 1 THEN r END) AS rb
-    FROM m GROUP BY 1
-    HAVING max(CASE WHEN era = 0 THEN q END) > 0
-       AND max(CASE WHEN era = 1 THEN q END) > 0
+    FROM m GROUP BY p_brand
 )
 SELECT p_brand,
        CAST(qa AS BIGINT) AS qty_a, CAST(qb AS BIGINT) AS qty_b,
        CAST(ra AS BIGINT) AS rev_cents_a, CAST(rb AS BIGINT) AS rev_cents_b,
-       round(CAST(ra AS DOUBLE) * (qb - qa) / qa / 100.0, 2) + 0.0
-           AS volume_effect,
-       round((CAST(rb AS DOUBLE) - CAST(ra AS DOUBLE) * qb / qa) / 100.0, 2)
-           + 0.0 AS price_effect
-FROM p
+       round(CAST(ra AS DOUBLE) * (qb - qa) / qa / 1e2, 2) + 0e0 AS volume_effect,
+       round((CAST(rb AS DOUBLE) - CAST(ra AS DOUBLE) * qb / qa) / 1e2, 2) + 0e0
+           AS price_effect
+FROM pv
+WHERE qa > 0 AND qb > 0
 """
 
 
-@op("pipeline_price_volume_bridge", oracle=_BRIDGE_ORACLE, tags=("ext", "pipeline"))
+@op("pipeline_price_volume_bridge", oracle=duckdb_sql(_BRIDGE_SQL), tags=("ext", "pipeline"))
 def pipeline_price_volume_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Price/volume bridge per brand between the first and second half
     of the shipping-year span: the revenue delta decomposed into "we
@@ -933,101 +649,54 @@ def pipeline_price_volume_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact: per-(brand, era) quantity and revenue-cents sums are integer
     aggregates; the era boundary is the integer midpoint of the year
-    span (1-row probe); the two effects are fixed-shape rationals of
-    those integers, rounded to dollars on both engines. rev/qty columns
-    stay exact integers so the rounding never touches the reconciliation
-    inputs.
+    span (a scalar subquery); the two effects are fixed-shape rationals
+    of those integers, rounded to dollars on both engines. rev/qty
+    columns stay exact integers so the rounding never touches the
+    reconciliation inputs.
 
     Scale: one fact scan → broadcast part join (brand is a part
     attribute) → (brand, era) hash agg with map-side partials → |brands|
     pivot. Nothing bigger than |brands|·2 crosses the second exchange.
+    The era boundary's subquery reads lineitem a second time, when the
+    query runs: building the op submits no job.
     """
-    b = load(spark, sf_dir, "lineitem").select(
-        F.year("l_shipdate").cast("int").alias("yr"),
-        "l_partkey",
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("bigint").alias("qty"),
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("cents"),
-    )
-    mid = b.agg(F.expr("(min(yr) + max(yr)) div 2").alias("mid")).collect()[0][
-        "mid"
-    ]  # 1-row probe: the era boundary literal
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    m = (
-        b.join(F.broadcast(p), b.l_partkey == p.p_partkey)
-        .select(
-            "p_brand",
-            F.when(F.col("yr") <= F.lit(mid), F.lit(0)).otherwise(F.lit(1)).alias("era"),
-            "qty",
-            "cents",
-        )
-        .groupBy("p_brand", "era")
-        .agg(F.sum("qty").alias("q"), F.sum("cents").alias("r"))
-    )
-    pv = (
-        m.groupBy("p_brand")
-        .agg(
-            F.max(F.when(F.col("era") == 0, F.col("q"))).alias("qa"),
-            F.max(F.when(F.col("era") == 0, F.col("r"))).alias("ra"),
-            F.max(F.when(F.col("era") == 1, F.col("q"))).alias("qb"),
-            F.max(F.when(F.col("era") == 1, F.col("r"))).alias("rb"),
-        )
-        .filter((F.col("qa") > 0) & (F.col("qb") > 0))
-    )
-    qa, qb, ra, rb = F.col("qa"), F.col("qb"), F.col("ra"), F.col("rb")
-    return pv.select(
-        "p_brand",
-        qa.cast("bigint").alias("qty_a"),
-        qb.cast("bigint").alias("qty_b"),
-        ra.cast("bigint").alias("rev_cents_a"),
-        rb.cast("bigint").alias("rev_cents_b"),
-        (F.round(ra.cast("double") * (qb - qa) / qa / 100.0, 2) + F.lit(0.0)).alias(
-            "volume_effect"
-        ),
-        (
-            F.round((rb.cast("double") - ra.cast("double") * qb / qa) / 100.0, 2)
-            + F.lit(0.0)
-        ).alias("price_effect"),
-    )
+    return run_sql(spark, sf_dir, _BRIDGE_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Discount elasticity of demand per brand (OLS slope, exact integer moments)
 # ---------------------------------------------------------------------------
 
-_ELASTICITY_ORACLE = """
-WITH b AS (
-    SELECT p.p_brand,
-           CAST(floor(l_discount * 10000 + 0.5) AS BIGINT) AS disc_bp,
-           CAST(floor(l_quantity + 0.5) AS BIGINT) AS qty
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+_ELASTICITY_SQL = """
+WITH li AS (
+    SELECT l_partkey,
+           CAST(floor(l_discount * 10000 + 5e-1) AS BIGINT) AS disc_bp,
+           CAST(floor(l_quantity + 5e-1) AS BIGINT) AS qty
+    FROM {lineitem}
 ), g AS (
-    SELECT p_brand,
+    SELECT /*+ BROADCAST(p) */ p_brand,
            count(*) AS n,
            sum(disc_bp) AS sx, sum(qty) AS sy,
            sum(disc_bp * qty) AS sxy, sum(disc_bp * disc_bp) AS sxx
-    FROM b GROUP BY 1
-    HAVING count(*) >= 2
+    FROM li JOIN {part} p ON l_partkey = p_partkey
+    GROUP BY p_brand
 ), s AS (
     SELECT p_brand, n, sy,
-           (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-           / nullif(CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx, 0.0)
-               AS slope
-    FROM g
+           round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
+                 / nullif(CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx, 0e0)
+                 * 100, 6) AS rs
+    FROM g WHERE n >= 2
 )
 SELECT p_brand,
        CAST(n AS BIGINT) AS n_lines,
-       round(CAST(sy AS DOUBLE) / n, 4) + 0.0 AS mean_qty,
-       round(slope * 100, 6) + 0.0 AS slope_qty_per_pct,
-       round(slope * 100, 6) > 0 AS demand_responds
+       round(CAST(sy AS DOUBLE) / n, 4) + 0e0 AS mean_qty,
+       rs + 0e0 AS slope_qty_per_pct,
+       rs > 0 AS demand_responds
 FROM s
 """
 
 
-@op("pipeline_discount_elasticity", oracle=_ELASTICITY_ORACLE, tags=("ext", "pipeline"))
+@op("pipeline_discount_elasticity", oracle=duckdb_sql(_ELASTICITY_SQL), tags=("ext", "pipeline"))
 def pipeline_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discount elasticity per brand: the OLS slope of line quantity on
     discount — does a deeper discount actually MOVE more units for this
@@ -1048,77 +717,51 @@ def pipeline_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials. The slope needs no second pass — sufficient
     statistics only.
     """
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.floor(F.col("l_discount") * 10000 + F.lit(0.5)).cast("bigint").alias("disc_bp"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("bigint").alias("qty"),
-    )
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    g = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("disc_bp").alias("sx"),
-            F.sum("qty").alias("sy"),
-            F.sum(F.col("disc_bp") * F.col("qty")).alias("sxy"),
-            F.sum(F.col("disc_bp") * F.col("disc_bp")).alias("sxx"),
-        )
-        .filter(F.col("n") >= 2)
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    slope = (n.cast("double") * F.col("sxy") - sx.cast("double") * sy) / F.nullif(
-        n.cast("double") * F.col("sxx") - sx.cast("double") * sx, F.lit(0.0)
-    )
-    rs = F.round(slope * 100, 6)
-    return g.select(
-        "p_brand",
-        n.cast("bigint").alias("n_lines"),
-        (F.round(sy.cast("double") / n, 4) + F.lit(0.0)).alias("mean_qty"),
-        (rs + F.lit(0.0)).alias("slope_qty_per_pct"),
-        (rs > 0).alias("demand_responds"),
-    )
+    return run_sql(spark, sf_dir, _ELASTICITY_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Weekly order backlog burndown (opened vs fully-shipped, cumulative)
 # ---------------------------------------------------------------------------
 
-_BACKLOG_ORACLE = """
-WITH op AS (
-    SELECT CAST(floor(epoch(o_orderdate)) AS BIGINT) // 604800 AS wk,
-           count(*) AS n_opened,
-           sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS opened_cents
-    FROM orders GROUP BY 1
-), cl AS (
+_BACKLOG_SQL = """
+WITH o AS (
+    SELECT o_orderkey, {epoch[o_orderdate]} // 604800 AS owk,
+           CAST(floor(o_totalprice * 100 + 5e-1) AS BIGINT) AS cents
+    FROM {orders}
+), opened AS (
+    SELECT owk AS wk, count(*) AS n_opened, sum(cents) AS opened_cents
+    FROM o GROUP BY owk
+), li AS (
+    SELECT l_orderkey, {epoch[l_shipdate]} // 604800 AS swk FROM {lineitem}
+), closed AS (
     SELECT wk, count(*) AS n_closed, sum(cents) AS closed_cents
     FROM (
-        SELECT l_orderkey,
-               max(CAST(floor(epoch(l_shipdate)) AS BIGINT) // 604800) AS wk,
-               max(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS cents
-        FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-        GROUP BY 1
-    ) GROUP BY 1
+        SELECT l_orderkey, max(swk) AS wk, max(cents) AS cents
+        FROM li JOIN o ON l_orderkey = o_orderkey
+        GROUP BY l_orderkey
+    ) per_order
+    GROUP BY wk
 ), wks AS (
-    SELECT coalesce(op.wk, cl.wk) AS wk,
+    SELECT coalesce(opened.wk, closed.wk) AS wk,
            coalesce(n_opened, 0) AS n_opened,
            coalesce(n_closed, 0) AS n_closed,
            coalesce(opened_cents, 0) AS opened_cents,
            coalesce(closed_cents, 0) AS closed_cents
-    FROM op FULL JOIN cl ON op.wk = cl.wk
+    FROM opened FULL JOIN closed ON opened.wk = closed.wk
 )
 SELECT CAST(wk AS BIGINT) AS week,
        CAST(n_opened AS BIGINT) AS n_opened,
        CAST(n_closed AS BIGINT) AS n_closed,
-       CAST(sum(n_opened - n_closed) OVER (ORDER BY wk
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS backlog_orders,
-       CAST(sum(opened_cents - closed_cents) OVER (ORDER BY wk
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS backlog_cents
+       CAST(sum(n_opened - n_closed) OVER w AS BIGINT) AS backlog_orders,
+       CAST(sum(opened_cents - closed_cents) OVER w AS BIGINT) AS backlog_cents
 FROM wks
+-- dim_window: |weeks| rows (calendar-bounded)
+WINDOW w AS (ORDER BY wk ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 """
 
 
-@op("pipeline_backlog_burndown", oracle=_BACKLOG_ORACLE, tags=("ext", "pipeline"))
+@op("pipeline_backlog_burndown", oracle=duckdb_sql(_BACKLOG_SQL), tags=("ext", "pipeline"))
 def pipeline_backlog_burndown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly order-backlog burndown: per week, orders OPENED (by order
     date) vs orders FULLY SHIPPED (the week of the order's LAST line
@@ -1140,74 +783,33 @@ def pipeline_backlog_burndown(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey (fact×fact, AQE) → per-order max agg → |weeks| agg; the
     cumulative window runs on the |weeks|-bounded union frame.
     """
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        epoch_div("o_orderdate", 604800).alias("owk"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
-    )
-    opened = o.groupBy(F.col("owk").alias("wk")).agg(
-        F.count("*").alias("n_opened"), F.sum("cents").alias("opened_cents")
-    )
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", epoch_div("l_shipdate", 604800).alias("swk")
-    )
-    closed = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey")
-        .agg(F.max("swk").alias("wk"), F.max("cents").alias("cents"))
-        .groupBy("wk")
-        .agg(F.count("*").alias("n_closed"), F.sum("cents").alias("closed_cents"))
-    )
-    wks = (
-        opened.join(closed, "wk", "full")
-        .select(
-            "wk",
-            F.coalesce("n_opened", F.lit(0)).alias("n_opened"),
-            F.coalesce("n_closed", F.lit(0)).alias("n_closed"),
-            F.coalesce("opened_cents", F.lit(0)).alias("opened_cents"),
-            F.coalesce("closed_cents", F.lit(0)).alias("closed_cents"),
-        )
-    )
-    wc = dim_window(
-        Window.orderBy("wk").rowsBetween(Window.unboundedPreceding, 0),
-        bound="|weeks| rows (calendar-bounded)",
-    )
-    return wks.select(
-        F.col("wk").cast("bigint").alias("week"),
-        F.col("n_opened").cast("bigint").alias("n_opened"),
-        F.col("n_closed").cast("bigint").alias("n_closed"),
-        F.sum(F.col("n_opened") - F.col("n_closed"))
-        .over(wc)
-        .cast("bigint")
-        .alias("backlog_orders"),
-        F.sum(F.col("opened_cents") - F.col("closed_cents"))
-        .over(wc)
-        .cast("bigint")
-        .alias("backlog_cents"),
-    )
+    return run_sql(spark, sf_dir, _BACKLOG_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Nation trade balance (export vs import revenue per nation)
 # ---------------------------------------------------------------------------
 
-_TRADE_ORACLE = """
+# Each line unpivots into an export row (supplier nation) and an import
+# row (customer nation), so ONE pass over the joined fact feeds one hash
+# agg — two separate rollups would plan (and scan) the join twice.
+_TRADE_SQL = """
 WITH r AS (
     SELECT s_nationkey AS exp_nk, c_nationkey AS imp_nk,
-           CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                AS BIGINT) AS cents
-    FROM lineitem
-    JOIN orders   ON o_orderkey = l_orderkey
-    JOIN supplier ON s_suppkey = l_suppkey
-    JOIN customer ON c_custkey = o_custkey
-), ex AS (
-    SELECT exp_nk AS nk, sum(cents) AS export_cents, count(*) AS n_export_items
-    FROM r GROUP BY 1
-), im AS (
-    SELECT imp_nk AS nk, sum(cents) AS import_cents, count(*) AS n_import_items
-    FROM r GROUP BY 1
+           CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 5e-1) AS BIGINT)
+               AS cents
+    FROM {lineitem}
+    JOIN {orders}   ON l_orderkey = o_orderkey
+    JOIN {supplier} ON l_suppkey = s_suppkey
+    JOIN {customer} ON o_custkey = c_custkey
+), flows AS (
+    SELECT nk,
+           sum(CASE WHEN role = 'exp_nk' THEN cents END) AS export_cents,
+           sum(CASE WHEN role = 'exp_nk' THEN 1 ELSE 0 END) AS n_export_items,
+           sum(CASE WHEN role = 'imp_nk' THEN cents END) AS import_cents,
+           sum(CASE WHEN role = 'imp_nk' THEN 1 ELSE 0 END) AS n_import_items
+    FROM r UNPIVOT INCLUDE NULLS (nk FOR role IN (exp_nk, imp_nk))
+    GROUP BY nk
 )
 SELECT n_name,
        CAST(coalesce(n_export_items, 0) AS BIGINT) AS n_export_items,
@@ -1216,13 +818,15 @@ SELECT n_name,
        CAST(coalesce(import_cents, 0) AS BIGINT) AS import_cents,
        CAST(coalesce(export_cents, 0) - coalesce(import_cents, 0) AS BIGINT)
            AS balance_cents
-FROM nation
-LEFT JOIN ex ON ex.nk = n_nationkey
-LEFT JOIN im ON im.nk = n_nationkey
+FROM {nation} LEFT JOIN flows ON n_nationkey = nk
 """
 
 
-@op("pipeline_nation_trade_balance", oracle=_TRADE_ORACLE, tags=("ext", "pipeline", "join"))
+@op(
+    "pipeline_nation_trade_balance",
+    oracle=duckdb_sql(_TRADE_SQL),
+    tags=("ext", "pipeline", "join"),
+)
 def pipeline_nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation trade balance over the supplier→customer flow: a
     nation EXPORTS a line's revenue when its supplier ships it and
@@ -1234,103 +838,54 @@ def pipeline_nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Exact: revenue in integer cents (per-line round then exact BIGINT
     sums); one shared fact-join subtree feeds BOTH rollups (export by
-    supplier nation, import by customer nation), so the corpus-scale
-    joins run once.
+    supplier nation, import by customer nation) through one UNPIVOT,
+    so the corpus-scale joins run once.
 
     Scale: lineitem⋈orders shuffle (fact×fact, AQE) + two key lookups;
-    both rollups are 25-row aggs with map-side partials; the final
-    joins are broadcasts against the nation dim.
+    both rollups are one 25-row agg with map-side partials, joined
+    back to the nation dim.
     """
-    l = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5
-    ).cast("bigint")
-    r = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(s, l.l_suppkey == s.s_suppkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            F.col("s_nationkey").alias("exp_nk"),
-            F.col("c_nationkey").alias("imp_nk"),
-            cents.alias("cents"),
-        )
-    )
-    # role-explode each line into (export, s_nation) + (import, c_nation)
-    # rows so ONE pass over the joined fact feeds one hash agg — two
-    # separate rollups would compile (and scan) the join subtree twice
-    per = r.select(
-        F.explode(
-            F.array(
-                F.struct(F.lit(1).alias("is_ex"), F.col("exp_nk").alias("nk")),
-                F.struct(F.lit(0).alias("is_ex"), F.col("imp_nk").alias("nk")),
-            )
-        ).alias("x"),
-        "cents",
-    ).select("x.is_ex", "x.nk", "cents")
-    both = per.groupBy("nk").agg(
-        F.sum(F.when(F.col("is_ex") == 1, F.col("cents"))).alias("export_cents"),
-        F.sum(F.when(F.col("is_ex") == 1, 1).otherwise(0)).alias("n_export_items"),
-        F.sum(F.when(F.col("is_ex") == 0, F.col("cents"))).alias("import_cents"),
-        F.sum(F.when(F.col("is_ex") == 0, 1).otherwise(0)).alias("n_import_items"),
-    )
-    return (
-        n.join(both, n.n_nationkey == both.nk, "left")
-        .select(
-            "n_name",
-            F.coalesce("n_export_items", F.lit(0))
-            .cast("bigint")
-            .alias("n_export_items"),
-            F.coalesce("n_import_items", F.lit(0))
-            .cast("bigint")
-            .alias("n_import_items"),
-            F.coalesce("export_cents", F.lit(0))
-            .cast("bigint")
-            .alias("export_cents"),
-            F.coalesce("import_cents", F.lit(0))
-            .cast("bigint")
-            .alias("import_cents"),
-            (
-                F.coalesce("export_cents", F.lit(0))
-                - F.coalesce("import_cents", F.lit(0))
-            )
-            .cast("bigint")
-            .alias("balance_cents"),
-        )
-    )
+    return run_sql(spark, sf_dir, _TRADE_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Monthly fill rate (service level: quantity shipped within 30 days)
 # ---------------------------------------------------------------------------
 
-_FILL_DAYS = 30  # service-level promise window, stated
-
-_FILL_ORACLE = f"""
-WITH j AS (
-    SELECT CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 // 30 AS m30,
-           CAST(floor(l_quantity + 0.5) AS BIGINT) AS qty,
-           CASE WHEN CAST(floor(epoch(l_shipdate)) AS BIGINT) // 86400
-                     - CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400
-                     <= {_FILL_DAYS} THEN 1 ELSE 0 END AS on_time
-    FROM lineitem JOIN orders ON o_orderkey = l_orderkey
+_FILL_SQL = """
+WITH o AS (
+    SELECT o_orderkey,
+           {epoch[o_orderdate]} // 86400 AS oday,
+           {epoch[o_orderdate]} // 86400 // 30 AS m30
+    FROM {orders}
+), li AS (
+    SELECT l_orderkey,
+           {epoch[l_shipdate]} // 86400 AS sday,
+           CAST(floor(l_quantity + 5e-1) AS BIGINT) AS qty
+    FROM {lineitem}
+), g AS (
+    SELECT m30,
+           count(*) AS n_lines,
+           sum(qty) AS total_qty,
+           -- the service-level promise window: shipped within 30 days
+           sum(CASE WHEN sday - oday <= 30 THEN 1 ELSE 0 END * qty) AS on_time_qty
+    FROM li JOIN o ON l_orderkey = o_orderkey
+    GROUP BY m30
 )
 SELECT CAST(m30 AS BIGINT) AS month_bucket,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(qty) AS BIGINT) AS total_qty,
-       CAST(sum(on_time * qty) AS BIGINT) AS on_time_qty,
-       CAST(sum(on_time * qty) * 10000 // sum(qty) AS BIGINT) AS fill_rate_bp
-FROM j GROUP BY 1 HAVING sum(qty) > 0
+       CAST(n_lines AS BIGINT) AS n_lines,
+       CAST(total_qty AS BIGINT) AS total_qty,
+       CAST(on_time_qty AS BIGINT) AS on_time_qty,
+       CAST(on_time_qty * 10000 // total_qty AS BIGINT) AS fill_rate_bp
+FROM g
+WHERE total_qty > 0
 """
 
 
-@op("pipeline_fill_rate", oracle=_FILL_ORACLE, tags=("ext", "pipeline"))
+@op("pipeline_fill_rate", oracle=duckdb_sql(_FILL_SQL), tags=("ext", "pipeline"))
 def pipeline_fill_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly fill rate: the share of ordered QUANTITY shipped within
-    the {days}-day service window, per 30-day order-date bucket — the
+    the 30-day service window, per 30-day order-date bucket — the
     service-level number an ops review tracks, where
     pipeline_order_lead_time reports the latency distribution and
     pipeline_late_shipment_priority the worst offenders: lead time says
@@ -1345,72 +900,44 @@ def pipeline_fill_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact×fact shuffle on orderkey (AQE), then a
     |month-buckets| hash agg with map-side partials.
     """
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        epoch_div("o_orderdate", 86400).alias("oday"),
-        F.expr("cast(cast(o_orderdate as timestamp_ltz) as long) div 86400 div 30")
-        .alias("m30"),
-    )
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        epoch_div("l_shipdate", 86400).alias("sday"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("bigint").alias("qty"),
-    )
-    j = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "m30",
-        "qty",
-        F.when(F.col("sday") - F.col("oday") <= _FILL_DAYS, 1)
-        .otherwise(0)
-        .alias("on_time"),
-    )
-    g = (
-        j.groupBy("m30")
-        .agg(
-            F.count("*").alias("n_lines"),
-            F.sum("qty").alias("total_qty"),
-            F.sum(F.col("on_time") * F.col("qty")).alias("on_time_qty"),
-        )
-        .filter(F.col("total_qty") > 0)
-    )
-    return g.select(
-        F.col("m30").cast("bigint").alias("month_bucket"),
-        F.col("n_lines").cast("bigint").alias("n_lines"),
-        F.col("total_qty").cast("bigint").alias("total_qty"),
-        F.col("on_time_qty").cast("bigint").alias("on_time_qty"),
-        F.expr("on_time_qty * 10000 div total_qty")
-        .cast("bigint")
-        .alias("fill_rate_bp"),
-    )
+    return run_sql(spark, sf_dir, _FILL_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Supplier concentration per brand (sourcing-risk HHI)
 # ---------------------------------------------------------------------------
 
-_BRAND_HHI_ORACLE = """
-WITH r AS (
-    SELECT p_brand, l_suppkey,
-           sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                    AS BIGINT)) AS cents
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    GROUP BY 1, 2
+_BRAND_HHI_SQL = """
+WITH li AS (
+    SELECT l_partkey, l_suppkey,
+           CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 5e-1) AS BIGINT)
+               AS cents
+    FROM {lineitem}
+), r AS (
+    SELECT /*+ BROADCAST(p) */ p_brand, l_suppkey, sum(cents) AS cents
+    FROM li JOIN {part} p ON l_partkey = p_partkey
+    GROUP BY p_brand, l_suppkey
 ), t AS (
     SELECT p_brand, sum(cents) AS total, count(*) AS n_suppliers,
            max(cents) AS top_cents
-    FROM r GROUP BY 1 HAVING sum(cents) > 0
+    FROM r GROUP BY p_brand
+    HAVING sum(cents) > 0
+), h AS (
+    SELECT /*+ BROADCAST(t) */ p_brand, n_suppliers, total, top_cents,
+           sum((cents * 10000 // total) * (cents * 10000 // total)) AS hhi_bp2
+    FROM r JOIN t USING (p_brand)
+    GROUP BY p_brand, n_suppliers, total, top_cents
 )
-SELECT t.p_brand,
-       CAST(t.n_suppliers AS BIGINT) AS n_suppliers,
-       CAST(t.total AS BIGINT) AS total_cents,
-       CAST(t.top_cents * 10000 // t.total AS BIGINT) AS top_share_bp,
-       CAST(sum((r.cents * 10000 // t.total)
-                * (r.cents * 10000 // t.total)) AS BIGINT) AS hhi_bp2
-FROM r JOIN t USING (p_brand)
-GROUP BY 1, 2, 3, 4
+SELECT p_brand,
+       CAST(n_suppliers AS BIGINT) AS n_suppliers,
+       CAST(total AS BIGINT) AS total_cents,
+       CAST(top_cents * 10000 // total AS BIGINT) AS top_share_bp,
+       CAST(hhi_bp2 AS BIGINT) AS hhi_bp2
+FROM h
 """
 
 
-@op("pipeline_brand_supplier_hhi", oracle=_BRAND_HHI_ORACLE, tags=("ext", "pipeline"))
+@op("pipeline_brand_supplier_hhi", oracle=duckdb_sql(_BRAND_HHI_SQL), tags=("ext", "pipeline"))
 def pipeline_brand_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier-concentration HHI per brand: Herfindahl over each
     supplier's revenue share of the brand (integral bp, squared and
@@ -1430,71 +957,35 @@ def pipeline_brand_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg → |brands| rollup; the share join is against the |brands|-row
     totals frame, broadcast.
     """
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        "l_suppkey",
-        F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + 0.5)
-        .cast("bigint")
-        .alias("cents"),
-    )
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    r = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "l_suppkey")
-        .agg(F.sum("cents").alias("cents"))
-    )
-    t = (
-        r.groupBy("p_brand")
-        .agg(
-            F.sum("cents").alias("total"),
-            F.count("*").alias("n_suppliers"),
-            F.max("cents").alias("top_cents"),
-        )
-        .filter(F.col("total") > 0)
-    )
-    share = F.expr("cents * 10000 div total")
-    return (
-        r.join(F.broadcast(t), "p_brand")
-        .groupBy("p_brand", "n_suppliers", "total", "top_cents")
-        .agg(F.sum(share * share).alias("hhi_bp2"))
-        .select(
-            "p_brand",
-            F.col("n_suppliers").cast("bigint").alias("n_suppliers"),
-            F.col("total").cast("bigint").alias("total_cents"),
-            F.expr("top_cents * 10000 div total")
-            .cast("bigint")
-            .alias("top_share_bp"),
-            F.col("hhi_bp2").cast("bigint").alias("hhi_bp2"),
-        )
-    )
+    return run_sql(spark, sf_dir, _BRAND_HHI_SQL)
 
 
 # ---------------------------------------------------------------------------
-# Cross-supplier unit-price dispersion per part (round 13)
+# Per-(part, supplier) average unit prices, shared by the next two ops
 # ---------------------------------------------------------------------------
 
-_DISPERSION_TOPK = 20
-_DISPERSION_MIN_SUPPLIERS = 3
-
-_PRICE_DISPERSION_ORACLE = f"""
+# Unit prices are integral milli-cents (cents·1000 div qty).
+_UNIT_PRICES = """
 WITH ps AS (
     SELECT l_partkey, l_suppkey,
-           sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS cents,
+           sum(CAST(floor(l_extendedprice * 100 + 5e-1) AS BIGINT)) AS cents,
            sum(CAST(l_quantity AS BIGINT)) AS qty
-    FROM lineitem
-    GROUP BY 1, 2
+    FROM {lineitem}
+    GROUP BY l_partkey, l_suppkey
 ), u AS (
-    SELECT l_partkey, l_suppkey,
-           cents * 1000 // qty AS unit_mil
+    SELECT l_partkey, cents, qty, cents * 1000 // qty AS unit_mil
     FROM ps WHERE qty > 0
-), d AS (
+)"""
+
+_PRICE_DISPERSION_SQL = _UNIT_PRICES + """, d AS (
     SELECT l_partkey,
            count(*) AS n_suppliers,
            min(unit_mil) AS min_unit_mil,
            max(unit_mil) AS max_unit_mil,
            sum(unit_mil) AS sum_unit_mil
-    FROM u GROUP BY 1
-    HAVING count(*) >= {_DISPERSION_MIN_SUPPLIERS}
+    FROM u GROUP BY l_partkey
+    -- a spread needs at least 3 suppliers of the part
+    HAVING count(*) >= 3
 )
 SELECT CAST(l_partkey AS BIGINT) AS partkey,
        CAST(n_suppliers AS BIGINT) AS n_suppliers,
@@ -1503,15 +994,15 @@ SELECT CAST(l_partkey AS BIGINT) AS partkey,
        CAST((max_unit_mil - min_unit_mil) * 10000
             // nullif(sum_unit_mil // n_suppliers, 0) AS BIGINT) AS spread_bp
 FROM d
-ORDER BY (max_unit_mil - min_unit_mil) * 10000
-         // nullif(sum_unit_mil // n_suppliers, 0) DESC, partkey
-LIMIT {_DISPERSION_TOPK}
+-- the top 20 spreads
+ORDER BY spread_bp DESC, partkey
+LIMIT 20
 """
 
 
 @op(
     "pipeline_price_dispersion",
-    oracle=_PRICE_DISPERSION_ORACLE,
+    oracle=duckdb_sql(_PRICE_DISPERSION_SQL),
     tags=("ext", "pipeline", "global"),
 )
 def pipeline_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1533,62 +1024,20 @@ def pipeline_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     |suppliers-per-part|, then a |parts|-bounded agg and a top-k. No
     joins at all.
     """
-    ps = (
-        load(spark, sf_dir, "lineitem")
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint")
-            ).alias("cents"),
-            F.sum(F.col("l_quantity").cast("bigint")).alias("qty"),
-        )
-    )
-    u = ps.filter(F.col("qty") > 0).select(
-        "l_partkey", F.expr("cents * 1000 div qty").alias("unit_mil")
-    )
-    d = (
-        u.groupBy("l_partkey")
-        .agg(
-            F.count("*").alias("n_suppliers"),
-            F.min("unit_mil").alias("min_unit_mil"),
-            F.max("unit_mil").alias("max_unit_mil"),
-            F.sum("unit_mil").alias("sum_unit_mil"),
-        )
-        .filter(F.col("n_suppliers") >= _DISPERSION_MIN_SUPPLIERS)
-    )
-    spread = F.expr(
-        "(max_unit_mil - min_unit_mil) * 10000"
-        " div nullif(sum_unit_mil div n_suppliers, 0)"
-    )
-    return (
-        d.select(
-            F.col("l_partkey").cast("bigint").alias("partkey"),
-            F.col("n_suppliers").cast("bigint").alias("n_suppliers"),
-            F.col("min_unit_mil").cast("bigint").alias("min_unit_mil"),
-            F.col("max_unit_mil").cast("bigint").alias("max_unit_mil"),
-            spread.cast("bigint").alias("spread_bp"),
-        )
-        .orderBy(F.desc("spread_bp"), "partkey")
-        .limit(_DISPERSION_TOPK)
-    )
+    return run_sql(spark, sf_dir, _PRICE_DISPERSION_SQL)
 
 
 # ---------------------------------------------------------------------------
 # New-vs-repeat revenue split per order year (round 13)
 # ---------------------------------------------------------------------------
 
-_NEW_REPEAT_ORACLE = """
+_NEW_REPEAT_SQL = """
 WITH o AS (
-    SELECT o_custkey, o_orderkey,
-           CAST(year(o_orderdate) AS BIGINT) AS yr,
-           CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-           min(o_orderdate) OVER (PARTITION BY o_custkey) AS first_dt,
-           o_orderdate
-    FROM orders
-), tag AS (
-    SELECT yr, cents,
-           CASE WHEN o_orderdate = first_dt THEN 1 ELSE 0 END AS is_first
-    FROM o
+    SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
+           CAST(floor(o_totalprice * 100 + 5e-1) AS BIGINT) AS cents,
+           CASE WHEN o_orderdate = min(o_orderdate) OVER (PARTITION BY o_custkey)
+                THEN 1 ELSE 0 END AS is_first
+    FROM {orders}
 )
 SELECT yr,
        CAST(count(*) AS BIGINT) AS n_orders,
@@ -1598,13 +1047,13 @@ SELECT yr,
        CAST(sum(cents) AS BIGINT) AS total_cents,
        CAST(sum(CASE WHEN is_first = 1 THEN cents ELSE 0 END) * 10000
             // nullif(sum(cents), 0) AS BIGINT) AS new_revenue_bp
-FROM tag GROUP BY yr
+FROM o GROUP BY yr
 """
 
 
 @op(
     "pipeline_new_vs_repeat_revenue",
-    oracle=_NEW_REPEAT_ORACLE,
+    oracle=duckdb_sql(_NEW_REPEAT_SQL),
     tags=("ext", "pipeline", "global"),
 )
 def pipeline_new_vs_repeat_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1624,61 +1073,26 @@ def pipeline_new_vs_repeat_revenue(spark: SparkSession, sf_dir: str) -> DataFram
     then one |years| hash agg. At 100 TB this is the canonical
     "enrich facts with an entity-level min" shape; no joins.
     """
-    w = Window.partitionBy("o_custkey")
-    o = load(spark, sf_dir, "orders").select(
-        F.year("o_orderdate").cast("bigint").alias("yr"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint").alias(
-            "cents"
-        ),
-        F.when(
-            F.col("o_orderdate") == F.min("o_orderdate").over(w), 1
-        )
-        .otherwise(0)
-        .alias("is_first"),
-    )
-    return o.groupBy("yr").agg(
-        F.count("*").cast("bigint").alias("n_orders"),
-        F.sum("is_first").cast("bigint").alias("n_first_orders"),
-        F.sum(F.when(F.col("is_first") == 1, F.col("cents")).otherwise(0))
-        .cast("bigint")
-        .alias("first_order_cents"),
-        F.sum("cents").cast("bigint").alias("total_cents"),
-        F.expr(
-            "sum(CASE WHEN is_first = 1 THEN cents ELSE 0 END) * 10000"
-            " div nullif(sum(cents), 0)"
-        )
-        .cast("bigint")
-        .alias("new_revenue_bp"),
-    )
+    return run_sql(spark, sf_dir, _NEW_REPEAT_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Vendor-consolidation what-if savings (round 13, wave 2)
 # ---------------------------------------------------------------------------
 
-_CONSOLIDATION_ORACLE = """
-WITH ps AS (
-    SELECT l_partkey, l_suppkey,
-           sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS cents,
-           sum(CAST(l_quantity AS BIGINT)) AS qty
-    FROM lineitem GROUP BY 1, 2
-), u AS (
-    SELECT l_partkey, cents, qty, cents * 1000 // qty AS unit_mil
-    FROM ps WHERE qty > 0
-), d AS (
+_CONSOLIDATION_SQL = _UNIT_PRICES + """, d AS (
     SELECT l_partkey,
            count(*) AS n_suppliers,
            sum(cents) AS actual_cents,
            sum(qty) AS total_qty,
            min(unit_mil) AS best_unit_mil
-    FROM u GROUP BY 1
+    FROM u GROUP BY l_partkey
 )
 SELECT CAST(count(*) AS BIGINT) AS n_parts,
        CAST(sum(CASE WHEN n_suppliers > 1 THEN 1 ELSE 0 END) AS BIGINT)
            AS n_multi_supplier_parts,
        CAST(sum(actual_cents) AS BIGINT) AS actual_cents,
-       CAST(sum(total_qty * best_unit_mil) // 1000 AS BIGINT)
-           AS consolidated_cents,
+       CAST(sum(total_qty * best_unit_mil) // 1000 AS BIGINT) AS consolidated_cents,
        CAST((sum(actual_cents) - sum(total_qty * best_unit_mil) // 1000)
             * 10000 // sum(actual_cents) AS BIGINT) AS savings_bp
 FROM d
@@ -1687,7 +1101,7 @@ FROM d
 
 @op(
     "pipeline_vendor_consolidation_savings",
-    oracle=_CONSOLIDATION_ORACLE,
+    oracle=duckdb_sql(_CONSOLIDATION_SQL),
     tags=("ext", "pipeline", "global"),
 )
 def pipeline_vendor_consolidation_savings(
@@ -1710,41 +1124,4 @@ def pipeline_vendor_consolidation_savings(
     Scale: one (part, supplier) hash agg → one |parts| agg → one row.
     No joins.
     """
-    ps = (
-        load(spark, sf_dir, "lineitem")
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint")
-            ).alias("cents"),
-            F.sum(F.col("l_quantity").cast("bigint")).alias("qty"),
-        )
-    )
-    u = ps.filter(F.col("qty") > 0).select(
-        "l_partkey",
-        "cents",
-        "qty",
-        F.expr("cents * 1000 div qty").alias("unit_mil"),
-    )
-    d = u.groupBy("l_partkey").agg(
-        F.count("*").alias("n_suppliers"),
-        F.sum("cents").alias("actual_cents"),
-        F.sum("qty").alias("total_qty"),
-        F.min("unit_mil").alias("best_unit_mil"),
-    )
-    return d.agg(
-        F.count("*").cast("bigint").alias("n_parts"),
-        F.sum(F.when(F.col("n_suppliers") > 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_multi_supplier_parts"),
-        F.sum("actual_cents").cast("bigint").alias("actual_cents"),
-        F.expr("sum(total_qty * best_unit_mil) div 1000")
-        .cast("bigint")
-        .alias("consolidated_cents"),
-        F.expr(
-            "(sum(actual_cents) - sum(total_qty * best_unit_mil) div 1000)"
-            " * 10000 div sum(actual_cents)"
-        )
-        .cast("bigint")
-        .alias("savings_bp"),
-    )
+    return run_sql(spark, sf_dir, _CONSOLIDATION_SQL)

@@ -2,31 +2,9 @@
 
 Most of the package declares plans through the DataFrame API. The ops
 built on this module are written ONCE, as a SQL text with a few
-``{placeholders}``:
-
-- ``sql_api`` here and ``agg_grouping_sets`` in ``aggregates``;
-- the two-era statistics suite in ``profiling`` (the eleven ops that
-  split ``events`` at ``{mid}``);
-- the contingency/rank statistics in ``profiling``
-  (``stats_join_cardinality``, ``stats_profile_drift``,
-  ``stats_label_impurity``, ``stats_quantile_ci``, ``stats_gk_lambda``,
-  ``stats_cohens_kappa``);
-- the table-profiling and event statistics in ``profiling``
-  (``stats_table_profile``, ``stats_benford_profile``,
-  ``stats_mad_outliers``, ``stats_ks_eras``, ``stats_chi2_independence``,
-  ``stats_psi_stability``, ``stats_ab_proportions``,
-  ``stats_key_integrity``, ``stats_event_lateness``,
-  ``stats_trimmed_mean``, ``stats_srm_check``, ``stats_jarque_bera``,
-  ``stats_trend_proportions``);
-- the event time-series battery in ``timeseries``: the ACF family
-  (``ts_autocorr``, ``stats_ljung_box``, ``ts_pacf``, one shared moment
-  fragment) and ``ts_changepoint_cusum``, ``ts_sma_crossover``,
-  ``ts_event_gaps``, ``ts_mann_kendall``, ``ts_var_es``,
-  ``ts_outage_windows``, ``ts_hour_of_week_profile``,
-  ``ts_dispersion_index``, ``ts_seasonal_naive_error``,
-  ``ts_turning_points``, ``ts_peak_concurrency``,
-  ``ts_bollinger_breakout``, ``ts_burstiness``,
-  ``ts_seasonality_strength``.
+``{placeholders}``: every op whose body is one ``run_sql`` call. Each
+of them is listed, with the exchange and scan counts its Spark plan
+keeps, in ``tests/test_plans.py``'s ``_SQL_FRONT_PLAN_SHAPE``.
 
 Two renderers turn a text into each engine's dialect, and one runner
 executes it on Spark:
@@ -39,16 +17,17 @@ executes it on Spark:
   again, so an op leaves no view behind in the caller's session.
 - ``run_sql(spark, sf_dir, text, **literals)`` is that call: it loads
   every fixture table the text names and passes each as the DataFrame
-  argument of its placeholder. Every op above is this one call.
+  argument of its placeholder.
 
 Placeholders:
 
 - ``{<table>}`` for any fixture table: DuckDB gets the view name; Spark
   keeps the placeholder for ``spark.sql``'s DataFrame argument of that
   name.
-- ``{te}``: epoch seconds of ``events.ts`` as BIGINT. DuckDB gets
-  ``CAST(floor(epoch(ts)) AS BIGINT)``; Spark casts through
+- ``{epoch[c]}``: epoch seconds of timestamp column ``c`` as BIGINT.
+  DuckDB gets ``CAST(floor(epoch(c)) AS BIGINT)``; Spark casts through
   TIMESTAMP_LTZ (``catalog.epoch_seconds``'s rule).
+- ``{te}``: ``{epoch[ts]}``, the epoch seconds of ``events.ts``.
 - ``{wide}``: the exact 38-digit integer type that moment sums ride so
   they cannot overflow. Spark gets ``DECIMAL(38,0)``; DuckDB gets
   ``HUGEINT``, because its ``//`` on a DECIMAL divides as DOUBLE
@@ -68,6 +47,9 @@ Dialect rules the renderers enforce:
   only between integers: DuckDB's ``7.0 // 2`` is 3.5.
 - A broadcast hint is written ``/*+ BROADCAST(t) */``; DuckDB reads it
   as a comment.
+- A date bound is a string literal compared against the timestamp
+  column (``l_shipdate >= '1996-01-01'``): both engines cast the string
+  to the column's type, as the DataFrame API does.
 - Columns become rows through ``UNPIVOT INCLUDE NULLS (v FOR c IN
   (...))`` (an Expand in Spark), or a ``CROSS JOIN (VALUES ...)`` with a
   ``CASE``, never a ``UNION ALL`` over one input: Spark scans the input
@@ -103,9 +85,24 @@ from connor_fun_streamproducer_spark.registry import op
 _BARE_DECIMAL = re.compile(r"(?<![\w.])(?:\d+\.\d*|\.\d+)(?![\w.])")
 _PLACEHOLDER = re.compile(r"\{(\w+)\}")
 
+
+class _Epoch:
+    """Fills ``{epoch[c]}``: one engine's epoch-seconds cast of ``c``."""
+
+    def __init__(self, cast: str):
+        self.cast = cast
+
+    def __getitem__(self, col: str) -> str:
+        return self.cast % col
+
+
+_DUCKDB_EPOCH = _Epoch("CAST(floor(epoch(%s)) AS BIGINT)")
+_SPARK_EPOCH = _Epoch("CAST(CAST(%s AS TIMESTAMP_LTZ) AS BIGINT)")
+
 _FRAGMENTS = {
     "duckdb": {
-        "te": "CAST(floor(epoch(ts)) AS BIGINT)",
+        "epoch": _DUCKDB_EPOCH,
+        "te": _DUCKDB_EPOCH["ts"],
         "wide": "HUGEINT",
         "mid": "(SELECT (min(te) + max(te)) // 2 FROM b)",
         "te_min": "(SELECT min(te) FROM b)",
@@ -113,7 +110,8 @@ _FRAGMENTS = {
         **{t: t for t in TABLES},
     },
     "spark": {
-        "te": "CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT)",
+        "epoch": _SPARK_EPOCH,
+        "te": _SPARK_EPOCH["ts"],
         "wide": "DECIMAL(38,0)",
         **{t: "{%s}" % t for t in TABLES},
     },

@@ -1023,17 +1023,13 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONC_WINDOW_S = 900  # each event holds a 15-minute activity interval
 
 _PEAK_CONC_SQL = f"""
-WITH ev AS (
-    SELECT {{te}} AS t FROM {{events}}
-), opens AS (
-    SELECT t // 86400 AS d, t, 1 AS delta FROM ev
-), closes AS (
-    SELECT (t + {_CONC_WINDOW_S}) // 86400 AS d, t + {_CONC_WINDOW_S} AS t, -1 AS delta
-    FROM ev
+WITH bp AS (
+    -- each event's open (+1) and close (-1) point, from one read of events
+    SELECT t, CASE WHEN side = 'open_t' THEN 1 ELSE -1 END AS delta
+    FROM (SELECT {{te}} AS open_t, {{te}} + {_CONC_WINDOW_S} AS close_t FROM {{events}})
+    UNPIVOT INCLUDE NULLS (t FOR side IN (open_t, close_t))
 ), pts AS (
-    SELECT d, t, delta FROM opens
-    UNION ALL
-    SELECT d, t, delta FROM closes
+    SELECT t // 86400 AS d, t, delta FROM bp
     UNION ALL
     -- day-start sentinel: carries the pre-midnight open level into the
     -- day's peak candidates (delta 0; closes at exactly midnight sort
@@ -1041,7 +1037,7 @@ WITH ev AS (
     -- opens AND closes, so a day whose only points are carried-in
     -- closes (sessions opened late the prior day) still gets one.
     SELECT d, d * 86400 AS t, 0 AS delta
-    FROM (SELECT DISTINCT d FROM (SELECT d FROM opens UNION ALL SELECT d FROM closes))
+    FROM (SELECT DISTINCT t // 86400 AS d FROM bp)
 ), offs AS (
     SELECT d,
            -- dim_window: |days| daily-delta rows
@@ -1055,15 +1051,15 @@ WITH ev AS (
                                         ROWS BETWEEN UNBOUNDED PRECEDING
                                                  AND CURRENT ROW) AS conc
     FROM pts p JOIN offs o ON p.d = o.d
-), mx AS (
-    SELECT d, max(conc) AS peak FROM run GROUP BY d
+), pk AS (
+    SELECT d, t, conc, max(conc) OVER (PARTITION BY d) AS peak FROM run
 )
-SELECT DATE '1970-01-01' + CAST(r.d AS INTEGER) AS day,
-       CAST(m.peak AS BIGINT) AS peak_concurrency,
-       CAST(min(r.t) AS BIGINT) AS first_peak_epoch
-FROM run r JOIN mx m ON r.d = m.d
-WHERE r.conc = m.peak
-GROUP BY r.d, m.peak
+SELECT DATE '1970-01-01' + CAST(d AS INTEGER) AS day,
+       CAST(peak AS BIGINT) AS peak_concurrency,
+       CAST(min(t) AS BIGINT) AS first_peak_epoch
+FROM pk
+WHERE conc = peak
+GROUP BY d, peak
 """
 
 
@@ -1092,9 +1088,12 @@ def ts_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel and any +1 opening at t (adjacent intervals don't
     double-count); peak, carry, and first epoch are integer arithmetic.
 
-    Scale: one exchange on the day key for the sweep window; the carry
-    frame is |days| rows (dim-bounded cumsum + broadcast join back).
-    Days remain independently parallel; only their net deltas serialize.
+    Scale: one exchange on the day key for the sweep window, whose
+    partitioning the per-day peak window reuses (no self-join); the
+    carry frame is |days| rows (dim-bounded cumsum + broadcast join
+    back). The open and close points come from one unpivot of each
+    event. Days remain independently parallel; only their net deltas
+    serialize.
     """
     return run_sql(spark, sf_dir, _PEAK_CONC_SQL)
 

@@ -1998,10 +1998,41 @@ _SQL_FRONT_PLAN_SHAPE = {
     "stats_srm_check": (1, 1),
     "stats_jarque_bera": (1, 1),
     "stats_trend_proportions": (1, 1),
-    "ts_peak_concurrency": (10, 16),
+    # fewer than the DataFrame plan's (10, 16): opens and closes come
+    # from one unpivot of events, and the per-day peak is a window, not a
+    # self-join
+    "ts_peak_concurrency": (5, 4),
     "ts_bollinger_breakout": (2, 1),
     "ts_burstiness": (1, 1),
     "ts_seasonality_strength": (3, 1),
+    # warehouse pipelines
+    "join_runtime_filter": (1, 2),
+    "pipeline_nation_volume": (1, 6),
+    "pipeline_promo_share": (1, 2),
+    "pipeline_market_share": (1, 7),
+    "pipeline_product_profit": (1, 5),
+    "pipeline_disjunctive_revenue": (1, 2),
+    "pipeline_top_supplier": (3, 3),
+    "pipeline_customer_distribution": (2, 2),
+    "pipeline_forecast_revenue": (1, 1),
+    "pipeline_shipmode_priority": (2, 2),
+    "pipeline_part_velocity": (2, 2),
+    "pipeline_order_aging": (2, 2),
+    "pipeline_discount_depth": (1, 2),
+    "pipeline_returns_rate": (1, 2),
+    "pipeline_repeat_buyers": (3, 2),
+    # one scan and one exchange more than the DataFrame plan: the era
+    # boundary is a scalar subquery over lineitem, not a collect() job
+    # run while the op is built
+    "pipeline_price_volume_bridge": (3, 3),
+    "pipeline_discount_elasticity": (1, 2),
+    "pipeline_backlog_burndown": (4, 3),
+    "pipeline_nation_trade_balance": (2, 5),
+    "pipeline_fill_rate": (1, 2),
+    "pipeline_brand_supplier_hhi": (4, 4),
+    "pipeline_price_dispersion": (2, 1),
+    "pipeline_new_vs_repeat_revenue": (2, 1),
+    "pipeline_vendor_consolidation_savings": (3, 1),
 }
 
 

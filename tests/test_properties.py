@@ -5963,6 +5963,141 @@ def _replay_key_integrity():
     ]
 
 
+# Disordered event stream for stats_event_lateness: 9,000 events, three
+# 4096-event shards of the op's frontier. Timestamps rise 10 s per
+# event_id except four late arrivals (one per lateness band) and the
+# last event of shard 0, which jumps the frontier 5,000 s ahead: the
+# first ~500 events of shard 1 are late only against that earlier
+# shard's maximum.
+_LATENESS_N = 9000
+_LATENESS_LATE = {100: 30, 200: 300, 300: 2000, 400: 10000, 4095: -5000}
+
+
+def _lateness_ts():
+    return [_REPLAY_T0 + 10 * i - _LATENESS_LATE.get(i, 0) for i in range(_LATENESS_N)]
+
+
+@pytest.fixture(scope="module")
+def lateness_replay_dir(tmp_path_factory):
+    import pandas as pd
+
+    d = tmp_path_factory.mktemp("lateness_replays")
+    pd.DataFrame([
+        dict(event_id=i, ts=pd.Timestamp(t, unit="s"), user_id=1, event_type="a",
+             value=1.0, props="{}")
+        for i, t in enumerate(_lateness_ts())
+    ]).to_parquet(d / "events.parquet", index=False)
+    return str(d)
+
+
+def _replay_event_lateness():
+    bands, frontier = {}, None
+    for t in _lateness_ts():
+        frontier = t if frontier is None else max(frontier, t)
+        late = frontier - t
+        band = (
+            "on_time" if late == 0 else "late_1m" if late <= 60
+            else "late_10m" if late <= 600 else "late_1h" if late <= 3600
+            else "late_over_1h"
+        )
+        n, mx = bands.get(band, (0, 0))
+        bands[band] = (n + 1, max(mx, late))
+    return [(b, n, mx, n * 10000 // _LATENESS_N) for b, (n, mx) in bands.items()]
+
+
+# Warehouse fixture for the pipeline replays. Customers 1-5: 3 orders
+# only with lines, 4 only 1-URGENT orders, 5 no orders at all.
+# (o_orderkey, o_custkey, o_orderdate, o_orderpriority, o_totalprice)
+_WH_ORDERS = [
+    (1, 1, "1997-01-06", "2-HIGH", 100.0),
+    (2, 1, "1997-01-08", "3-MEDIUM", 250.5),
+    (3, 2, "1997-02-03", "1-URGENT", 75.25),
+    (4, 2, "1997-02-10", "5-LOW", 40.0),
+    (5, 3, "1997-03-01", "4-NOT SPECIFIED", 60.0),  # no lines: never closes
+    (6, 4, "1997-01-20", "1-URGENT", 300.0),  # closes alone in its week
+    (7, 4, "1997-03-15", "1-URGENT", 20.0),
+    (8, 3, "1997-04-01", "2-HIGH", 80.0),
+]
+_WH_CUSTOMERS = [1, 2, 3, 4, 5]
+# (l_orderkey, l_linenumber, l_quantity, ship day minus order day)
+_WH_LINES = [
+    (1, 1, 5.0, 30), (1, 2, 3.0, 31), (2, 1, 7.0, 2), (3, 1, 2.0, 45),
+    (4, 1, 1.0, 10), (4, 2, 4.0, 31), (6, 1, 6.0, 100), (7, 1, 2.0, 5),
+    (8, 1, 3.0, 30),
+]
+
+
+def _wh_day(iso):
+    import datetime
+
+    return (datetime.date.fromisoformat(iso) - datetime.date(1970, 1, 1)).days
+
+
+@pytest.fixture(scope="module")
+def warehouse_replay_dir(tmp_path_factory):
+    import pandas as pd
+
+    d = tmp_path_factory.mktemp("warehouse_replays")
+    orders = {k: day for k, _, day, _, _ in _WH_ORDERS}
+    pd.DataFrame([
+        dict(o_orderkey=k, o_custkey=cu, o_orderstatus="F", o_totalprice=tp,
+             o_orderdate=pd.Timestamp(day), o_orderpriority=pr)
+        for k, cu, day, pr, tp in _WH_ORDERS
+    ]).to_parquet(d / "orders.parquet", index=False, coerce_timestamps="us")
+    pd.DataFrame([
+        dict(l_orderkey=k, l_partkey=1, l_suppkey=1, l_linenumber=ln, l_quantity=q,
+             l_extendedprice=10.0, l_discount=0.0, l_returnflag="N",
+             l_shipdate=pd.Timestamp(orders[k]) + pd.Timedelta(days=lag))
+        for k, ln, q, lag in _WH_LINES
+    ]).to_parquet(d / "lineitem.parquet", index=False, coerce_timestamps="us")
+    pd.DataFrame([
+        dict(c_custkey=c, c_name=f"c{c}", c_nationkey=0, c_acctbal=0.0, c_mktsegment="X")
+        for c in _WH_CUSTOMERS
+    ]).to_parquet(d / "customer.parquet", index=False)
+    return str(d)
+
+
+def _replay_fill_rate():
+    oday = {k: _wh_day(day) for k, _, day, _, _ in _WH_ORDERS}
+    g = {}
+    for k, _, q, lag in _WH_LINES:
+        n, tot, ok = g.get(oday[k] // 30, (0, 0, 0))
+        g[oday[k] // 30] = (n + 1, tot + int(q + 0.5), ok + int(q + 0.5) * (lag <= 30))
+    return [(m, n, tot, ok, ok * 10000 // tot) for m, (n, tot, ok) in g.items() if tot > 0]
+
+
+def _replay_backlog_burndown():
+    def week(day):
+        return day * 86400 // (7 * 86400)
+
+    oday = {k: _wh_day(day) for k, _, day, _, _ in _WH_ORDERS}
+    cents = {k: int(tp * 100 + 0.5) for k, _, _, _, tp in _WH_ORDERS}
+    last_ship = {}
+    for k, _, _, lag in _WH_LINES:
+        last_ship[k] = max(last_ship.get(k, 0), week(oday[k] + lag))
+    opened, closed = {}, {}
+    for rollup, weeks in ((opened, {k: week(d) for k, d in oday.items()}), (closed, last_ship)):
+        for k, wk in weeks.items():
+            n, c = rollup.get(wk, (0, 0))
+            rollup[wk] = (n + 1, c + cents[k])
+    rows, backlog, backlog_cents = [], 0, 0
+    for wk in sorted(set(opened) | set(closed)):
+        (no, co), (nc, cc) = opened.get(wk, (0, 0)), closed.get(wk, (0, 0))
+        backlog, backlog_cents = backlog + no - nc, backlog_cents + co - cc
+        rows.append((wk, no, nc, backlog, backlog_cents))
+    return rows
+
+
+def _replay_customer_distribution():
+    counts = {c: 0 for c in _WH_CUSTOMERS}
+    for _, cu, _, pr, _ in _WH_ORDERS:
+        counts[cu] += pr != "1-URGENT"
+    dist = {}
+    for n in counts.values():
+        dist[n] = dist.get(n, 0) + 1
+    return list(dist.items())
+
+
 # key -> (replay, output columns compared); float columns compare to 2e-6
 _SQL_REPLAYS = {
     "ts_pacf": (_replay_pacf, ("event_type", "pacf_1", "pacf_2", "pacf_3")),
@@ -5987,9 +6122,25 @@ _SQL_REPLAYS = {
         "n_a", "x_a", "n_b", "x_b", "rate_a_bp", "rate_b_bp", "z_score")),
     "stats_key_integrity": (_replay_key_integrity, (
         "check_name", "n_checked", "n_good", "violations_bp")),
+    "stats_event_lateness": (_replay_event_lateness, (
+        "band", "n_events", "max_late_s", "share_bp")),
+    "pipeline_fill_rate": (_replay_fill_rate, (
+        "month_bucket", "n_lines", "total_qty", "on_time_qty", "fill_rate_bp")),
+    "pipeline_backlog_burndown": (_replay_backlog_burndown, (
+        "week", "n_opened", "n_closed", "backlog_orders", "backlog_cents")),
+    "pipeline_customer_distribution": (_replay_customer_distribution, (
+        "c_count", "custdist")),
 }
-# keys whose replay reads the profiling fixture instead of replay_dir
-_PROFILE_REPLAY_KEYS = {"stats_mad_outliers", "stats_ab_proportions", "stats_key_integrity"}
+# keys whose replay reads another fixture than replay_dir
+_REPLAY_FIXTURES = {
+    "stats_mad_outliers": "profile_replay_dir",
+    "stats_ab_proportions": "profile_replay_dir",
+    "stats_key_integrity": "profile_replay_dir",
+    "stats_event_lateness": "lateness_replay_dir",
+    "pipeline_fill_rate": "warehouse_replay_dir",
+    "pipeline_backlog_burndown": "warehouse_replay_dir",
+    "pipeline_customer_distribution": "warehouse_replay_dir",
+}
 
 
 @pytest.mark.parametrize("key", sorted(_SQL_REPLAYS))
@@ -6001,7 +6152,7 @@ def test_sql_text_ops_match_python_replays(spark, request, key):
 
     registry._ensure_loaded()
     replay, cols = _SQL_REPLAYS[key]
-    fixture = "profile_replay_dir" if key in _PROFILE_REPLAY_KEYS else "replay_dir"
+    fixture = _REPLAY_FIXTURES.get(key, "replay_dir")
     got = sorted(
         tuple(r[c] for c in cols)
         for r in registry.OPS[key].fn(spark, request.getfixturevalue(fixture)).collect()

@@ -50,6 +50,15 @@ def test_renderers_apply_each_dialect():
         "SELECT (CAST(CAST(ts AS TIMESTAMP_LTZ) AS BIGINT) - 10) * 4"
         "  div  (99 - 10 + 1) FROM b"
     )
+    days = "SELECT {epoch[l_shipdate]} // 86400 - {epoch[o_orderdate]} // 86400 FROM t"
+    assert duckdb_sql(days) == (
+        "SELECT CAST(floor(epoch(l_shipdate)) AS BIGINT) // 86400"
+        " - CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 FROM t"
+    )
+    assert spark_sql(days) == (
+        "SELECT CAST(CAST(l_shipdate AS TIMESTAMP_LTZ) AS BIGINT)  div  86400"
+        " - CAST(CAST(o_orderdate AS TIMESTAMP_LTZ) AS BIGINT)  div  86400 FROM t"
+    )
 
 
 @pytest.mark.parametrize("key", sorted(_SQL_FRONT_PLAN_SHAPE))
