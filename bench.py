@@ -304,13 +304,6 @@ EXTENDED = [
     "stats_cohens_kappa",
 ]
 
-# Round-over-round comparability marker (VERDICT r14 #4): everything at or
-# below this index existed in the round-14 extended list. FUTURE ADDITIONS
-# MUST APPEND BELOW the list end so the same-keys subtotal emitted as
-# ``extended_r14_keys_total`` stays a fixed-key comparison — a 16-op tier
-# addition can then never masquerade as a 20% extended regression.
-_R14_EXTENDED_END = len(EXTENDED)
-
 
 def _time_keys(
     spark,
@@ -523,12 +516,6 @@ def main() -> None:
     }
     if ext_timings:
         out["extended_total_wall"] = round(sum(ext_timings.values()), 3)
-        # fixed-key subtotal (same keys as round 14's extended list) so
-        # future tier additions can't read as an extended regression
-        r14_keys = {k for k in EXTENDED[:_R14_EXTENDED_END]}
-        out["extended_r14_keys_total"] = round(
-            sum(v for k, v in ext_timings.items() if k in r14_keys), 3
-        )
     if stream_rows_per_sec is not None:
         out["stream_rows_per_sec"] = stream_rows_per_sec
     gate_line = json.dumps(out)

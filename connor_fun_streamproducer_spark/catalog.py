@@ -175,13 +175,14 @@ def literal_frame(
     ``spark.createDataFrame(<python list>, schema)`` plans as ``Scan
     ExistingRDD`` over pickled rows sliced across the default
     parallelism: every action that reads it runs a job that unpickles
-    them, one task per slice, and a broadcast of it re-runs that job in
-    every micro-batch of a stream-static join. Rows handed over as
-    one Arrow table become a ``LocalRelation`` instead, and the optimizer
-    folds projections and filters into it. A broadcast of it still runs
-    a job (``LocalTableScanExec`` does not override
-    ``executeCollectIterator``), but one over rows the driver already
-    holds: at most as many tasks as rows, with no Python workers.
+    them, one task per slice. Rows handed over as one Arrow table become
+    a ``LocalRelation`` instead, and the optimizer folds projections and
+    filters into it. Its ``collect`` returns the rows the relation
+    already holds and submits no job, which is how ``streaming.pipeline.enrich`` turns
+    the region dim into literals. A broadcast of it still runs a job
+    (``LocalTableScanExec`` does not override
+    ``executeCollectIterator``), at most as many tasks as rows, with no
+    Python workers.
     ``schema`` (a StructType or DDL string) is kept exactly — names,
     types and nullability — also for zero rows. Rows are positional
     tuples in schema order.

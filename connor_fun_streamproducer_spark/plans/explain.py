@@ -18,44 +18,32 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def executed_plan(df: DataFrame) -> str:
-    """Plan after an action, with AQE's runtime decisions materialized."""
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def assert_in_plan(df: DataFrame, *needles: str, executed: bool = False) -> str:
-    plan = executed_plan(df) if executed else formatted_plan(df)
+def assert_in_plan(df: DataFrame, *needles: str) -> str:
+    plan = formatted_plan(df)
     for needle in needles:
         assert needle in plan, f"expected {needle!r} in plan:\n{plan}"
     return plan
 
 
-def assert_not_in_plan(df: DataFrame, *needles: str, executed: bool = False) -> str:
-    plan = executed_plan(df) if executed else formatted_plan(df)
+def assert_not_in_plan(df: DataFrame, *needles: str) -> str:
+    plan = formatted_plan(df)
     for needle in needles:
         assert needle not in plan, f"unexpected {needle!r} in plan:\n{plan}"
     return plan
 
 
-def count_in_plan(df: DataFrame, needle: str, executed: bool = False) -> int:
+def count_in_plan(df: DataFrame, needle: str) -> int:
     """Count distinct operator instances named ``needle``.
 
     Formatted plans print each operator twice (tree + "(N) Op" detail
     header); counting the numbered detail headers counts each instance
-    exactly once.
+    exactly once, and a bare substring match could be a different
+    operator containing the needle (e.g. "BroadcastExchange" contains
+    "Exchange").
     """
     import re
 
-    plan = executed_plan(df) if executed else formatted_plan(df)
-    has_headers = re.search(r"^\(\d+\) ", plan, flags=re.MULTILINE) is not None
-    if has_headers:
-        # Trust the header count even when it is 0: a bare substring match
-        # can be a different operator containing the needle (e.g.
-        # "BroadcastExchange" contains "Exchange").
-        return len(re.findall(rf"^\(\d+\) {re.escape(needle)}\b", plan, flags=re.MULTILINE))
-    # Executed plans have no detail headers — fall back to whole-word count.
-    return len(re.findall(rf"(?<![A-Za-z]){re.escape(needle)}\b", plan))
+    return len(re.findall(rf"^\(\d+\) {re.escape(needle)}\b", formatted_plan(df), flags=re.MULTILINE))
 
 
 def plan_snapshot(df: DataFrame) -> str:

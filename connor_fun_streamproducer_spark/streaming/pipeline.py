@@ -12,7 +12,7 @@ Reference dataflow (/root/reference/regionSpout.go):
 4. Monitor loop — tumbling 30 s processing-time count-and-reset per region
    (regionSpout.go:102-117).
 
-Spark mapping (SURVEY.md §3.4): one declarative plan — broadcast theta-join
+Spark mapping (SURVEY.md §3.4): one declarative plan — bbox-containment
 enrichment (the honest, engine-side form of what Twitter evaluated
 server-side), ``to_json(struct(*))`` serialization, a computed ``topic``
 column for routing, and ``groupBy(window(ts, "30 seconds"), region)`` for
@@ -21,23 +21,24 @@ same logical plan over ``readStream`` (see ``streaming/windows.py`` and
 tests).
 
 Scale posture: the locations dim is ≤25 rows (regionSpout.go:77 caps at 25)
-— broadcast nested-loop joins the bbox predicate with zero shuffle of the
+— ``enrich`` inlines its boxes into the plan as a generator, so each event
+is tested against every box inside its own task, with zero shuffle of the
 event side. At 100 TB of events the plan stays shuffle-free up to the
 windowed count, which aggregates partially map-side before one exchange on
 (window, region) — the same "partial counts per source, merge in monitor"
 structure the reference hand-rolled with atomics.
 
-The locations dim is a local relation (``catalog.literal_frame``), not a
-parallelized RDD: a stream-static join re-plans and re-broadcasts its
-static side in every micro-batch, so the dim's broadcast costs one Spark
-job per trigger whatever the batch size. Over a parallelized RDD that
-job unpickled the rows, one task per slice of the default parallelism;
-over a local relation it reads rows the driver already holds, in at most
-as many tasks as rows (two for the reference dim), with no Python
-workers.
+The locations dim is a local relation (``catalog.literal_frame``): the
+plan holds its rows, so reading them submits no job. A stream-static
+join against it would re-plan and re-broadcast the dim in every
+micro-batch, a second Spark job per trigger whatever the batch size. The
+boxes are rendered into the plan instead, so a trigger runs only the job
+that reads its input.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,14 +84,15 @@ _LOCATIONS_VALUES_SQL = (
 _LON_EXPR = "-126 + (event_id * 7) % 59"
 _LAT_EXPR = "25 + (event_id * 13) % 25"
 
+# Point (lon, lat) inside box (north, east, south, west), edges included.
+_CONTAINS = "lon >= least(east, west) AND lon <= greatest(east, west) AND lat >= south AND lat <= north"
+
 
 def locations_df(spark: SparkSession) -> DataFrame:
     """The static region dimension (src_config_scan's output shape).
 
-    Planned as a ``LocalTableScan``: ``enrich`` broadcasts it in every
-    micro-batch of a stream, and the broadcast of a local relation runs
-    a job of at most as many tasks as rows, with no Python workers
-    (``catalog.literal_frame``)."""
+    Planned as a ``LocalTableScan`` (``catalog.literal_frame``), so
+    ``enrich`` reads its rows back without a Spark job."""
     return literal_frame(spark, REGION_BOXES, LOCATIONS_SCHEMA)
 
 
@@ -99,21 +101,41 @@ def with_coords(events: DataFrame) -> DataFrame:
     return events.withColumn("lon", F.expr(_LON_EXPR)).withColumn("lat", F.expr(_LAT_EXPR))
 
 
+def _sql_literal(value, dtype: T.DataType) -> str:
+    """``value`` as a Spark SQL literal of type ``dtype``. String literals
+    process backslash escapes, so ``\\`` is escaped along with ``'``."""
+    if value is None:
+        return f"CAST(NULL AS {dtype.simpleString()})"
+    if isinstance(dtype, T.DoubleType) and math.isfinite(value):
+        return f"{value!r}D"
+    text = "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return text if isinstance(dtype, T.StringType) else f"CAST({text} AS {dtype.simpleString()})"
+
+
 def enrich(events: DataFrame, locations: DataFrame) -> DataFrame:
-    """Broadcast theta-join: tag each event with its containing region.
+    """Tag each event with every region box that contains it.
 
     The engine-side form of the reference's source-side bbox filter
     (regionSpout.go:133-139) + region tagging via closure capture
-    (regionSpout.go:94,128-130). Broadcast nested-loop join — the dim is
-    ≤25 rows, so no shuffle of the (arbitrarily large) event side.
+    (regionSpout.go:94,128-130). The dim is ≤25 rows held in its plan (a
+    ``LocalRelation``, so ``collect`` submits no job); its rows
+    are rendered into one ``inline(array(named_struct(...), ...))``
+    generator, each event is paired with every box inside its own task,
+    and the containment filter keeps the boxes that hold the point. The
+    plan is Filter → Generate → Scan in one codegen stage: no exchange,
+    no broadcast, so a micro-batch of a stream runs one job. Rows, column
+    order and types are the inner join's (events, then the dim's
+    columns); a dim column comes out non-null unless it holds a null.
     """
-    cond = (
-        (F.col("lon") >= F.least("east", "west"))
-        & (F.col("lon") <= F.greatest("east", "west"))
-        & (F.col("lat") >= F.col("south"))
-        & (F.col("lat") <= F.col("north"))
+    fields = locations.schema.fields
+    rows = locations.collect() or [(None,) * len(fields)]  # no box: one all-null row the filter drops
+    boxes = ", ".join(
+        "named_struct("
+        + ", ".join(f"'{f.name}', {_sql_literal(v, f.dataType)}" for f, v in zip(fields, row))
+        + ")"
+        for row in rows
     )
-    return events.join(F.broadcast(locations), cond, "inner")
+    return events.select("*", F.expr(f"inline(array({boxes}))")).where(_CONTAINS)
 
 
 @op(
@@ -128,7 +150,7 @@ def enrich(events: DataFrame, locations: DataFrame) -> DataFrame:
     tags=("ref", "join"),
 )
 def enrich_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Region enrichment via broadcast bbox-containment join.
+    """Region enrichment via bbox containment (``enrich``).
 
     Reference: regionSpout.go:84-85 (bbox build), :94 (region captured per
     stream), :128-130 (tag threading). The reference outsourced containment
@@ -155,22 +177,22 @@ def enrich_region_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Region enrichment via grid-cell EQUI-join — the bbox join's scale
     path (SURVEY §4.2).
 
-    BroadcastNestedLoopJoin evaluates every event against every region:
+    ``enrich``'s inline generator pairs every event with every region:
     fine at the reference's 25-region cap (regionSpout.go:77), O(|events|
-    × |regions|) at thousands of regions. The grid rewrite quantizes
-    space into 1° cells, expands each region bbox into its covering cells
-    driver-side (dim-sized work), and hash-joins events on their single
-    containing cell — O(|events|) probes — with exact containment kept as
-    a residual predicate for boxes that only partly cover a cell.
+    × |regions|) at thousands of regions, whose boxes would also all
+    travel inside the plan. The grid rewrite quantizes space into 1°
+    cells, expands each region bbox into its covering cells in Python
+    (dim-sized work), and hash-joins events on their single containing
+    cell — O(|events|) probes — with exact containment kept as a residual
+    predicate for boxes that only partly cover a cell.
 
     Same output as ``enrich_region`` (identical semantics, so the oracle
-    is the same containment SQL); the plan upgrades to BroadcastHashJoin,
+    is the same containment SQL); the plan is a BroadcastHashJoin,
     asserted in tests/test_plans.py. At 100 TB the cell id also becomes
     the partition key of a pre-bucketed events layout, making the join
     shuffle-free and prunable to the queried cells.
     """
     GRID = 1.0  # degrees per cell; tune to median region size
-    import math
 
     cover: list[tuple[int, int, str, float, float, float, float]] = []
     for (_, rid, north, east, south, west) in REGION_BOXES:
@@ -190,18 +212,12 @@ def enrich_region_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ecy": F.floor(F.col("lat") / GRID).cast("int"),
         }
     )
-    residual = (
-        (F.col("lon") >= F.least("east", "west"))
-        & (F.col("lon") <= F.greatest("east", "west"))
-        & (F.col("lat") >= F.col("south"))
-        & (F.col("lat") <= F.col("north"))
-    )
     return (
         events.join(
             F.broadcast(cells),
             (F.col("ecx") == F.col("cx")) & (F.col("ecy") == F.col("cy")),
         )
-        .filter(residual)
+        .filter(_CONTAINS)
         .select("event_id", "region_id", "lon", "lat")
     )
 

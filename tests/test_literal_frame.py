@@ -1,9 +1,10 @@
 """catalog.literal_frame: driver-built literal tables as local relations.
 
-A literal frame is broadcast into joins (and, in a stream-static join,
-re-broadcast every micro-batch), so it must plan as a LocalTableScan,
-never as a parallelized RDD, and it must keep the declared schema
-exactly, because the plans and oracle hashes downstream depend on it.
+A literal frame is broadcast into joins, or read back into Python (the
+region dim ``streaming.pipeline.enrich`` inlines), so it must plan as a
+LocalTableScan, never as a parallelized RDD, and it must keep the
+declared schema exactly, because the plans and oracle hashes downstream
+depend on it.
 """
 
 from __future__ import annotations

@@ -33,9 +33,15 @@ def test_join_broadcast_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_enrich_region_is_broadcast_nested_loop(spark):
-    """The bbox theta-join must broadcast the ≤25-row locations dim."""
-    assert_in_plan(_q("enrich_region", spark), "BroadcastNestedLoopJoin")
+def test_enrich_region_is_inline_generate(spark):
+    """The ≤25-row locations dim is inlined as one generator: events pair
+    with every box inside the scan's own codegen stage, with no join, no
+    broadcast and no exchange of any kind."""
+    df = _q("enrich_region", spark)
+    plan = assert_in_plan(df, "Generate [codegen id : 1]", "Arguments: inline(")
+    assert count_in_plan(df, "Generate") == 1, plan
+    for op_name in ("BroadcastExchange", "BroadcastNestedLoopJoin", "Exchange"):
+        assert count_in_plan(df, op_name) == 0, (op_name, plan)
 
 
 def test_scan_parquet_pushdown_and_pruning(spark):
@@ -191,15 +197,16 @@ def test_enrich_region_grid_is_hash_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_region_dim_broadcasts_a_local_relation(spark):
-    """The locations dim must broadcast straight from a LocalTableScan: an
-    RDD-backed dim (Scan ExistingRDD) costs a Spark job per broadcast,
-    i.e. per micro-batch of the stream-static enrich."""
-    for key in ("enrich_region", "agg_window_count"):
-        lines = [l.lstrip(" :+-") for l in plan_snapshot(_q(key, spark)).splitlines()]
-        built = [nxt for cur, nxt in zip(lines, lines[1:]) if cur == "BroadcastExchange"]
-        assert built == ["LocalTableScan"], (key, lines)
-        assert not any("ExistingRDD" in l for l in lines), (key, lines)
+def test_region_dim_plans_no_broadcast(spark):
+    """Every op built on ``enrich`` carries the locations dim inside its
+    plan as one generator: no broadcast of it (a Spark job per action, and
+    per micro-batch of a stream) and no scan of it at all, local or
+    RDD-backed."""
+    for key in ("enrich_region", "agg_window_count", "route_by_key", "sink_kafka"):
+        lines = [l.lstrip(" :+-*") for l in plan_snapshot(_q(key, spark)).splitlines()]
+        assert lines.count("Generate") == 1, (key, lines)
+        for needle in ("BroadcastExchange", "BroadcastNestedLoopJoin", "ExistingRDD", "LocalTableScan"):
+            assert not any(needle in l for l in lines), (key, needle, lines)
 
 
 def test_sim_search_ivf_scan_is_partition_pruned(spark):

@@ -131,9 +131,9 @@ def test_rollup_hierarchy_equals_direct_aggregation(spark):
 
 
 def test_grid_join_equals_nested_loop_join(spark):
-    """The grid-cell equi-join rewrite must return exactly the nested-loop
-    containment join's rows — the rewrite is an optimization, never a
-    semantic change."""
+    """The grid-cell equi-join rewrite must return exactly the rows of
+    ``enrich_region``'s every-box containment — the rewrite is an
+    optimization, never a semantic change."""
     from connor_fun_streamproducer_spark import registry
 
     registry._ensure_loaded()
@@ -142,6 +142,70 @@ def test_grid_join_equals_nested_loop_join(spark):
         tuple(r) for r in registry.OPS["enrich_region_grid"].fn(spark, SF_DIR).collect()
     }
     assert nlj == grid and len(nlj) > 0
+
+
+def test_enrich_matches_broadcast_join_on_edge_cases(spark, tmp_path):
+    """``enrich`` must be the bbox-containment inner join, row for row,
+    beyond the reference's two disjoint boxes: a point inside two
+    overlapping boxes yields two rows, an east < west box (the shipped
+    locations.json quirk) contains its points, points on each of the four
+    edges are inside, a null coordinate matches nothing, and a region
+    name holding ``'`` and ``\\`` survives its rendering as a SQL
+    literal. Names, dtypes and nullability are the join's too."""
+    from connor_fun_streamproducer_spark.catalog import literal_frame
+    from connor_fun_streamproducer_spark.streaming.pipeline import LOCATIONS_SCHEMA, enrich
+
+    odd_name = "O'Hare \\ 'quoted' \\n"
+    dim = literal_frame(
+        spark,
+        [
+            # (name, id, north, east, south, west)
+            (odd_name, "A", 10.0, 0.0, 0.0, 10.0),  # east < west
+            ("overlap", "B", 15.0, 15.0, 5.0, 5.0),
+            ("far", "C", -20.0, -20.0, -30.0, -30.0),
+        ],
+        LOCATIONS_SCHEMA,
+    )
+    points = [
+        (1, 7.0, 7.0),  # inside A and B
+        (2, 0.0, 3.0),  # A's west edge (its `east` field)
+        (3, 10.0, 3.0),  # A's east edge (its `west` field)
+        (4, 3.0, 0.0),  # A's south edge
+        (5, 3.0, 10.0),  # A's north edge
+        (6, 10.0, 10.0),  # A's corner, B's interior
+        (7, 15.0, 15.0),  # B's corner only
+        (8, 20.0, 20.0),  # no box
+        (9, -0.5, 3.0),  # just outside A
+        (10, None, 3.0),  # null lon
+        (11, -25.0, -25.0),  # C only
+    ]
+    path = str(tmp_path / "events.parquet")
+    literal_frame(spark, points, "event_id bigint, lon double, lat double").write.parquet(path)
+    events = spark.read.parquet(path)
+
+    got = enrich(events, dim)
+    cond = (
+        (F.col("lon") >= F.least("east", "west"))
+        & (F.col("lon") <= F.greatest("east", "west"))
+        & (F.col("lat") >= F.col("south"))
+        & (F.col("lat") <= F.col("north"))
+    )
+    want = events.join(F.broadcast(dim), cond, "inner")
+    assert got.columns == want.columns
+    assert got.dtypes == want.dtypes
+    assert [f.nullable for f in got.schema.fields] == [f.nullable for f in want.schema.fields]
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == sorted(tuple(r) for r in want.collect())
+    tags = sorted((r[0], r[4]) for r in rows)
+    assert tags == [
+        (1, "A"), (1, "B"), (2, "A"), (3, "A"), (4, "A"), (5, "A"),
+        (6, "A"), (6, "B"), (7, "B"), (11, "C"),
+    ]
+    assert {r[3] for r in rows if r[4] == "A"} == {odd_name}
+
+    empty = enrich(events, literal_frame(spark, [], LOCATIONS_SCHEMA))
+    assert empty.columns == want.columns and empty.dtypes == want.dtypes
+    assert empty.count() == 0
 
 
 def test_chunks_reconstruct_documents(spark):

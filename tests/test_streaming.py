@@ -494,11 +494,11 @@ def test_append_mode_finalizes_window_ending_exactly_at_watermark(spark, tmp_pat
     assert ("2024-01-01 00:00:00", 2) in got, got
 
 
-def test_stream_static_enrich_broadcasts_local_relation(spark, scratch):
-    """Every micro-batch of the stream-static enrich re-plans its
-    broadcast of the locations dim; the dim must stay a LocalTableScan
-    there (no Spark job per trigger), and the stream must tag the same
-    rows as the batch enrich over the same files."""
+def test_stream_enrich_runs_one_job_per_trigger(spark, scratch):
+    """The streaming enrich carries the locations dim inside its plan, so
+    a trigger that reads input runs exactly one Spark job (the sink's)
+    and no broadcast; the stream must tag the same rows as the batch
+    enrich over the same files."""
     from connor_fun_streamproducer_spark.streaming.pipeline import (
         enrich,
         locations_df,
@@ -531,8 +531,14 @@ def test_stream_static_enrich_broadcasts_local_relation(spark, scratch):
         q.awaitTermination(120)
         batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
         assert len(batches) >= 2, q.recentProgress
+        # Every job a query runs carries its run id as the job group.
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+        assert len(jobs) == len(batches), (jobs, q.recentProgress)
         plan = q._jsq.explainInternal(False)
-        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert "Generate" in plan, plan
+        for needle in ("BroadcastExchange", "BroadcastNestedLoopJoin", "ExistingRDD"):
+            assert needle not in plan, (needle, plan)
         static = enrich(with_coords(spark.read.parquet(src)), locations_df(spark))
         got = sorted(tuple(r) for r in spark.table(name).collect())
         assert got == sorted(tuple(r) for r in static.select("event_id", "region_id").collect())
