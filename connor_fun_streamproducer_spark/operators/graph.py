@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -348,18 +348,20 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB design — nothing graph-sized touches the driver:
 
     - edges are repartitioned by join key ``src`` and localCheckpointed
-      once (five-plus rounds must not replay the bucket build);
-    - each round is the canonical message-passing step: join(edges,
-      labels on src) → groupBy(dst).min → merge with ``least`` — two
-      keyed exchanges, both on the same reused hash partitioning;
-    - labels are localCheckpointed EVERY round: the convergence probe
-      needs the round materialized anyway, and checkpointing is what
+      once (five-plus rounds must not replay the bucket build), keeping
+      only edges into a node of the node frame;
+    - each round is the canonical message-passing step: the labels
+      unioned with join(edges, labels on src) relabelled to dst, then
+      one groupBy(node).min — one aggregation per round, no join back;
+    - labels are localCheckpointed EVERY round: checkpointing is what
       keeps the iterative plan from nesting exponentially;
     - convergence is a SCALAR aggregate (labels only ever decrease
       under min-propagation, so the label sum strictly decreases iff
       any node changed — one number to the driver per round, the
-      fixpoint-scalar pattern of scale_patterns.py:161). The sum is
-      taken in decimal(38,0) so it cannot overflow at any node count.
+      fixpoint-scalar pattern of scale_patterns.py:161), observed on
+      the checkpoint's own job (``DataFrame.observe``), so a round runs
+      no separate aggregate job. The sum is taken in decimal(38,0) so
+      it cannot overflow at any node count.
     - rounds are bounded by CC_MAX_ROUNDS; min-label propagation
       converges in O(component diameter) rounds, and the star
       construction keeps diameters small (hub chains, not paths).
@@ -394,31 +396,32 @@ def propagate_min_label(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Min-label propagation to fixpoint over an arbitrary undirected
     edge frame (src, dst); returns (node, component). See
     graph_connected_components for the scale rationale."""
-    edges = edges.repartition("src").localCheckpoint()
-    labels = nodes.select("node", F.col("node").alias("component")).localCheckpoint()
-    prev_sum = labels.agg(
-        F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
+    # an edge into a node outside ``nodes`` would add a label for it
+    edges = (
+        edges.join(nodes.select(F.col("node").alias("dst")), "dst", "left_semi")
+        .repartition("src")
+        .localCheckpoint()
+    )
+
+    def checkpoint(df: DataFrame):
+        obs = Observation()
+        df = df.observe(
+            obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
+        ).localCheckpoint()
+        return df, obs.get["s"]
+
+    labels, prev_sum = checkpoint(
+        nodes.select("node", F.col("node").alias("component"))
+    )
     for _ in range(CC_MAX_ROUNDS):
-        nbr_min = (
-            edges.join(labels, edges.src == labels.node)
-            .select(F.col("dst").alias("node"), F.col("component").alias("cand"))
+        sent = edges.join(labels, edges.src == labels.node).select(
+            F.col("dst").alias("node"), "component"
+        )
+        labels, cur_sum = checkpoint(
+            labels.unionByName(sent)
             .groupBy("node")
-            .agg(F.min("cand").alias("nbr"))
+            .agg(F.min("component").alias("component"))
         )
-        labels = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr"), F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint()
-        )
-        cur_sum = labels.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum

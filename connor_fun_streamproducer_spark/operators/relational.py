@@ -1,14 +1,13 @@
 """Projection, filtering, sorting, limiting — the relational bread-and-butter.
 
-The reference has no in-process relational ops at all (SURVEY.md §2.1: "no
-joins executed in-process, no sorts, no limits") — its one projection is
-whole-row JSON marshal (regionSpout.go:152) and its one filter is pushed to
-the source (regionSpout.go:133-136). These EXT-tier ops give the engine the
-relational surface the north star mandates, all as built-in Catalyst
-operators: projections and filters reach the parquet scan (column pruning +
-predicate pushdown — the engine-side generalization of the reference's
-source-side filter), sorts are range-partitioned exchanges, top-k compiles
-to TakeOrderedAndProject (no global sort materialization at scale).
+The reference has no in-process relational ops (SURVEY.md §2.1): its one
+projection is whole-row JSON marshal (regionSpout.go:152) and its one
+filter is pushed to the source (regionSpout.go:133-136). Here
+projections and filters reach the parquet scan (column pruning and
+predicate pushdown), sorts are range-partitioned exchanges, and top-k
+compiles to TakeOrderedAndProject. Ops are one SQL text run on both
+engines through ``sql_front``, except ``sort_within`` (Spark's ``SORT
+BY`` has no DuckDB form) and the ``bench.py`` headline ``topk_per_group``.
 """
 
 from __future__ import annotations
@@ -18,71 +17,57 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from connor_fun_streamproducer_spark.catalog import load
+from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, run_sql
 from connor_fun_streamproducer_spark.registry import op
 
 
-@op(
-    "project_select",
-    oracle="""
-    SELECT l_orderkey,
-           l_linenumber,
-           round(l_extendedprice * (1 - l_discount), 4) AS net_price,
-           upper(l_returnflag) AS flag
-    FROM lineitem
-    """,
-    tags=("ext", "project"),
-)
+_PROJECT_SQL = """
+SELECT l_orderkey,
+       l_linenumber,
+       round(l_extendedprice * (1 - l_discount), 4) AS net_price,
+       upper(l_returnflag) AS flag
+FROM {lineitem}
+"""
+
+
+@op("project_select", oracle=duckdb_sql(_PROJECT_SQL), tags=("ext", "project"))
 def project_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column pruning + computed columns + aliasing.
 
     The scan should read only the 5 referenced columns (ReadSchema in the
     physical plan) no matter how wide lineitem gets.
     """
-    li = load(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias("net_price"),
-        F.upper("l_returnflag").alias("flag"),
-    )
+    return run_sql(spark, sf_dir, _PROJECT_SQL)
 
 
-@op(
-    "filter_pred",
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
-    FROM orders
-    WHERE o_orderstatus IN ('O', 'F')
-      AND o_totalprice BETWEEN 1000 AND 200000
-      AND o_orderpriority LIKE '%URGENT%'
-      AND o_custkey IS NOT NULL
-    """,
-    tags=("ext", "filter"),
-)
+_FILTER_SQL = """
+SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
+FROM {orders}
+WHERE o_orderstatus IN ('O', 'F')
+  AND o_totalprice BETWEEN 1000 AND 200000
+  AND o_orderpriority LIKE '%URGENT%'
+  AND o_custkey IS NOT NULL
+"""
+
+
+@op("filter_pred", oracle=duckdb_sql(_FILTER_SQL), tags=("ext", "filter"))
 def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive predicates: IN / BETWEEN / LIKE / null test.
 
     All four predicates are Catalyst-pushable; the parquet scan should show
     them under PushedFilters (checked in tests/test_plans.py).
     """
-    orders = load(spark, sf_dir, "orders")
-    return orders.filter(
-        F.col("o_orderstatus").isin("O", "F")
-        & F.col("o_totalprice").between(1000, 200000)
-        & F.col("o_orderpriority").like("%URGENT%")
-        & F.col("o_custkey").isNotNull()
-    ).select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
+    return run_sql(spark, sf_dir, _FILTER_SQL)
 
 
-@op(
-    "sort_global",
-    oracle="""
-    SELECT c_custkey, c_name, round(c_acctbal, 4) AS acctbal
-    FROM customer
-    ORDER BY c_acctbal DESC, c_custkey
-    """,
-    tags=("ext", "sort"),
-)
+_SORT_GLOBAL_SQL = """
+SELECT c_custkey, c_name, round(c_acctbal, 4) AS acctbal
+FROM {customer}
+ORDER BY acctbal DESC, c_custkey
+"""
+
+
+@op("sort_global", oracle=duckdb_sql(_SORT_GLOBAL_SQL), tags=("ext", "sort"))
 def sort_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total order via range-partitioned sort (no single-node gather).
 
@@ -90,10 +75,7 @@ def sort_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort scales horizontally; the oracle compare is order-insensitive but
     the op exists for its plan shape.
     """
-    cust = load(spark, sf_dir, "customer")
-    return cust.select(
-        "c_custkey", "c_name", F.round("c_acctbal", 4).alias("acctbal")
-    ).orderBy(F.desc("acctbal"), F.asc("c_custkey"))
+    return run_sql(spark, sf_dir, _SORT_GLOBAL_SQL)
 
 
 @op(
@@ -120,16 +102,15 @@ def sort_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op(
-    "limit_topk",
-    oracle="""
-    SELECT o_orderkey, round(o_totalprice, 4) AS total
-    FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey
-    LIMIT 25
-    """,
-    tags=("ext", "sort"),
-)
+_LIMIT_TOPK_SQL = """
+SELECT o_orderkey, round(o_totalprice, 4) AS total
+FROM {orders}
+ORDER BY o_totalprice DESC, o_orderkey
+LIMIT 25
+"""
+
+
+@op("limit_topk", oracle=duckdb_sql(_LIMIT_TOPK_SQL), tags=("ext", "sort"))
 def limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDER BY … LIMIT k — compiles to TakeOrderedAndProject.
 
@@ -137,12 +118,7 @@ def limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global sort. Composite key (price, orderkey) makes ties
     deterministic for the oracle hash.
     """
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.select("o_orderkey", F.round("o_totalprice", 4).alias("total"))
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(25)
-    )
+    return run_sql(spark, sf_dir, _LIMIT_TOPK_SQL)
 
 
 @op(

@@ -290,7 +290,7 @@ def dedup_minhash_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph is the scale-safe STAR form (docs link through each bucket's
     minimum doc — |edges| linear in bucket membership, the _cc_edges
     keeper pattern, never Θ(b²) in-bucket pairs), and the closure is
-    graph.propagate_min_label (two keyed exchanges per round on a
+    graph.propagate_min_label (one aggregation per round on a
     checkpointed frame, O(cluster diameter) rounds). The oracle replays
     buckets, star edges, and closure as one recursive CTE. The xxhash64
     variant this replaced is strictly dominated: same shape, engine-

@@ -69,6 +69,25 @@ Dialect rules the renderers enforce:
   exponent form (``4e0``, ``0.5e0``), and both renderers raise on a bare
   decimal literal.
 
+Forms both engines parse alike, and hazards with no shared form:
+
+- A left-semi join is written ``SEMI JOIN`` (DuckDB rejects ``LEFT
+  SEMI JOIN``). Where an ``IN`` subquery's column also sits in an equi
+  join, Catalyst copies the ``IN`` onto the other join side and plans
+  the subquery twice; the explicit ``SEMI JOIN`` does not.
+- A ``/*+ REPARTITION(c) */`` or ``/*+ BROADCAST(t) */`` hint is a
+  comment to DuckDB; Spark applies it to the ``SELECT`` it follows.
+- ``last_value(v IGNORE NULLS)`` is DuckDB's form and
+  ``last_value(v) IGNORE NULLS`` Spark's. A carry-forward is written with
+  a running ``count(v)`` instead: the rows sharing a count share one
+  non-null ``v``.
+- Spark has no array-length function that DuckDB shares (``size``
+  against ``len``/``array_length``), and no shared element accessor
+  (Spark's ``element_at`` and 0-based ``[]``, DuckDB's 1-based ``[]``).
+  A frame's length is a ``count(c)`` over the same frame; an op that
+  must index an array keeps its DataFrame body.
+- ``median`` of a BIGINT column returns DOUBLE on both engines.
+
 The reference has no query language at all (SURVEY.md §3); this is part of
 the EXT "what its downstream analytics would run" surface.
 """

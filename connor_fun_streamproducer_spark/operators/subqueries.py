@@ -1,557 +1,319 @@
-"""Subquery-shaped pipelines: the query forms relational users actually
-write that are NOT plain join chains — grouped-HAVING membership, scalar
-subqueries, and correlated (NOT) EXISTS with extra predicates.
+"""Subquery-shaped pipelines: grouped-HAVING membership, scalar
+subqueries, and correlated (NOT) EXISTS with extra predicates — the
+forms relational users write that are NOT plain join chains, extending
+the EXT pipeline tier of operators/pipelines.py (the reference has no
+query language, SURVEY.md §3).
 
-Catalyst de-correlates all of these into joins (semi/anti + broadcast of
-scalar aggregates), which is exactly the 100 TB story: none of them
-executes per-row re-evaluation of the inner query — each plans as one
-additional hash join against a (usually tiny) aggregated frame. The
-DataFrame forms below build the de-correlated shape explicitly so the plan
-is deterministic and auditable.
-
-The reference has no query language (SURVEY.md §3); these extend the EXT
-pipeline tier alongside the Q1/Q3/Q5/Q10 shapes in operators/pipelines.py.
+Catalyst de-correlates each into one more hash join (semi/anti, or a
+broadcast one-row aggregate); none re-evaluates its inner query per
+row. Each op is one SQL text run on both engines through ``sql_front``;
+where the rewrite would not give the pinned plan, the text spells the
+de-correlated form out (a ``SEMI JOIN``, a broadcast one-row threshold,
+a ``REPARTITION`` hint).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from connor_fun_streamproducer_spark.catalog import load
+from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, run_sql
 from connor_fun_streamproducer_spark.registry import op
 
+_LARGE_VOLUME_SQL = """
+SELECT c_name, o.o_orderkey, o.o_orderdate,
+       round(o.o_totalprice, 4) AS o_totalprice,
+       round(sum(l_quantity), 4) AS total_qty
+FROM {orders} o
+SEMI JOIN (
+    SELECT l_orderkey AS big_key FROM {lineitem} GROUP BY l_orderkey
+    HAVING sum(l_quantity) > 200
+) big ON o.o_orderkey = big_key
+JOIN {customer} ON o.o_custkey = c_custkey
+JOIN {lineitem} ON o.o_orderkey = l_orderkey
+GROUP BY c_name, o.o_orderkey, o.o_orderdate, o.o_totalprice
+ORDER BY o_totalprice DESC, o_orderkey
+LIMIT 20
+"""
 
-@op(
-    "pipeline_large_volume_orders",
-    oracle="""
-    SELECT c.c_name, o.o_orderkey, o.o_orderdate,
-           round(o.o_totalprice, 4) AS o_totalprice,
-           round(sum(l.l_quantity), 4) AS total_qty
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE o.o_orderkey IN (
-        SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-        HAVING sum(l_quantity) > 200
-    )
-    GROUP BY c.c_name, o.o_orderkey, o.o_orderdate, o.o_totalprice
-    ORDER BY o_totalprice DESC, o.o_orderkey ASC
-    LIMIT 20
-    """,
-    tags=("ext", "pipeline", "subquery"),
-)
+
+@op("pipeline_large_volume_orders", oracle=duckdb_sql(_LARGE_VOLUME_SQL),
+    tags=("ext", "pipeline", "subquery"))
 def pipeline_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: customers behind the largest-volume orders.
 
-    The IN (GROUP BY … HAVING) membership subquery becomes a left-semi
-    join against the aggregated order-quantity frame — computed ONCE,
-    shuffled on the same l_orderkey key the main join uses, so the
-    pre-filter rides the existing partitioning. At 100 TB the semi join
-    prunes the orders side before the expensive customer join, which is
-    the point of the Q18 shape: aggregate-driven selectivity, no
-    correlated re-execution.
+    The IN (GROUP BY … HAVING) membership is written as the left-semi
+    join it decorrelates to: an IN on o_orderkey would be copied through
+    the lineitem join's key equality onto the lineitem side, and its
+    aggregate would run twice. The order-quantity aggregate runs ONCE,
+    and the semi join prunes orders before the customer join —
+    aggregate-driven selectivity, no correlated re-execution. The top 20
+    order by the rounded total.
     """
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-        .filter(F.col("qty") > 200)
-        .select("l_orderkey")
-    )
-    return (
-        o.join(big, o.o_orderkey == big.l_orderkey, "left_semi")
-        .join(c, F.col("o_custkey") == c.c_custkey)
-        .join(li, F.col("o_orderkey") == li.l_orderkey)
-        .groupBy("c_name", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(F.round(F.sum("l_quantity"), 4).alias("total_qty"))
-        .select(
-            "c_name",
-            "o_orderkey",
-            "o_orderdate",
-            F.round("o_totalprice", 4).alias("o_totalprice"),
-            "total_qty",
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(20)
-    )
+    return run_sql(spark, sf_dir, _LARGE_VOLUME_SQL)
 
 
-@op(
-    "pipeline_dormant_accounts",
-    oracle="""
-    WITH ab AS (SELECT avg(c_acctbal) AS a FROM customer WHERE c_acctbal > 0)
-    SELECT c.c_mktsegment,
-           count(*) AS n_cust,
-           round(sum(c.c_acctbal), 4) AS total_bal
-    FROM customer c, ab
-    WHERE c.c_acctbal > ab.a
-      AND NOT EXISTS (
-          SELECT 1 FROM orders o
-          WHERE o.o_custkey = c.c_custkey
-            AND o.o_orderdate >= TIMESTAMP '1998-01-01'
-      )
-    GROUP BY c.c_mktsegment
-    """,
-    tags=("ext", "pipeline", "subquery"),
-)
+_DORMANT_SQL = """
+WITH ab AS (SELECT avg(c_acctbal) AS a FROM {customer} WHERE c_acctbal > 0)
+SELECT /*+ BROADCAST(ab) */ c_mktsegment,
+       count(*) AS n_cust,
+       round(sum(c_acctbal), 4) AS total_bal
+FROM {customer} c CROSS JOIN ab
+WHERE c_acctbal > ab.a
+  AND NOT EXISTS (
+      SELECT 1 FROM {orders} o
+      WHERE o.o_custkey = c.c_custkey
+        AND o.o_orderdate >= '1998-01-01'
+  )
+GROUP BY c_mktsegment
+"""
+
+
+@op("pipeline_dormant_accounts", oracle=duckdb_sql(_DORMANT_SQL),
+    tags=("ext", "pipeline", "subquery"))
 def pipeline_dormant_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: high-balance customers with no recent orders.
 
     Two subquery forms in one query: a scalar subquery (global positive-
-    balance average) that becomes a 1-row broadcast cross join, and a
-    correlated NOT EXISTS with an extra predicate that becomes a left-anti
-    join against the date-filtered orders keys. Both decorrelate to joins:
-    the scalar costs one tiny aggregate, the anti join shuffles only
-    (custkey) pairs of one quarter's orders. No per-row subquery
-    re-execution anywhere — the 100 TB plan is scan + two joins.
+    balance average) as a 1-row broadcast cross join, and a correlated
+    NOT EXISTS with an extra predicate that becomes a left-anti join
+    against the date-filtered orders keys. The 100 TB plan is scan + two
+    joins.
     """
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    avg_bal = (
-        c.filter(F.col("c_acctbal") > 0).agg(F.avg("c_acctbal").alias("a"))
-    )
-    recent = o.filter(F.col("o_orderdate") >= "1998-01-01").select("o_custkey")
-    return (
-        c.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("a"))
-        .join(recent, c.c_custkey == recent.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_cust"),
-            F.round(F.sum("c_acctbal"), 4).alias("total_bal"),
-        )
-    )
+    return run_sql(spark, sf_dir, _DORMANT_SQL)
 
 
-@op(
-    "pipeline_late_shipment_priority",
-    oracle="""
-    SELECT o.o_orderpriority, count(*) AS n_orders
-    FROM orders o
-    WHERE o.o_orderdate >= TIMESTAMP '1997-01-01'
-      AND o.o_orderdate <  TIMESTAMP '1997-04-01'
-      AND EXISTS (
-          SELECT 1 FROM lineitem l
-          WHERE l.l_orderkey = o.o_orderkey
-            AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-      )
-    GROUP BY o.o_orderpriority
-    """,
-    tags=("ext", "pipeline", "subquery"),
-)
+_LATE_SHIPMENT_SQL = """
+SELECT o_orderpriority, count(*) AS n_orders
+FROM {orders} o
+WHERE o_orderdate >= '1997-01-01'
+  AND o_orderdate <  '1997-04-01'
+  AND EXISTS (
+      SELECT 1 FROM {lineitem} l
+      WHERE l.l_orderkey = o.o_orderkey
+        AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
+  )
+GROUP BY o_orderpriority
+"""
+
+
+@op("pipeline_late_shipment_priority", oracle=duckdb_sql(_LATE_SHIPMENT_SQL),
+    tags=("ext", "pipeline", "subquery"))
 def pipeline_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: order-priority counts for orders with a late line.
 
     Correlated EXISTS whose inner predicate references BOTH sides
-    (l_shipdate > o_orderdate + 60 days) — the decorrelation is a
-    left-semi join with the cross-side comparison as part of the join
-    condition, so semi-join semantics (at most one match counted per
-    order) replace DISTINCT-after-join. One quarter of orders semi-joined
-    against lineitem on the natural key: the probe side is filter-pruned
-    at the scan before the shuffle.
+    (l_shipdate > o_orderdate + 60 days): a left-semi join with the
+    cross-side comparison in the join condition, so at most one match
+    counts per order — no DISTINCT-after-join. The quarter's orders are
+    filter-pruned at the scan before the shuffle.
     """
-    o = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1997-04-01")
-    )
-    li = load(spark, sf_dir, "lineitem")
-    cond = (li.l_orderkey == o.o_orderkey) & (
-        li.l_shipdate > o.o_orderdate + F.expr("INTERVAL 60 DAY")
-    )
-    return (
-        o.join(li, cond, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_orders"))
-    )
+    return run_sql(spark, sf_dir, _LATE_SHIPMENT_SQL)
 
 
-@op(
-    "pipeline_mincost_supplier",
-    oracle="""
-    WITH eu AS (
-        SELECT l_partkey,
-               CAST(year(l_shipdate) AS INTEGER) AS l_year,
-               CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cost_cents,
-               s_name, s_acctbal, n_name
-        FROM lineitem
-        JOIN supplier ON s_suppkey = l_suppkey
-        JOIN nation   ON s_nationkey = n_nationkey
-        JOIN region   ON n_regionkey = r_regionkey
-        WHERE r_name = 'EUROPE'
-    )
-    SELECT DISTINCT p_partkey, l_year,
-           round(cost_cents / 100.0, 2) AS min_cost,
-           s_name, round(s_acctbal, 4) AS s_acctbal, n_name
-    FROM eu JOIN part ON p_partkey = l_partkey
-    WHERE p_size = 15
-      AND cost_cents = (SELECT min(e2.cost_cents) FROM eu e2
-                        WHERE e2.l_partkey = eu.l_partkey
-                          AND e2.l_year = eu.l_year)
-    ORDER BY s_acctbal DESC, n_name, s_name, p_partkey, l_year
-    LIMIT 100
-    """,
-    tags=("ext", "pipeline", "subquery"),
+_MINCOST_SQL = """
+WITH eu AS (
+    SELECT /*+ BROADCAST(n, r) */ l_partkey,
+           CAST(year(l_shipdate) AS INT) AS l_year,
+           CAST(floor(l_extendedprice * 100 + 5e-1) AS BIGINT) AS cost_cents,
+           s_name, s_acctbal, n_name
+    FROM {lineitem}
+    JOIN {supplier} ON l_suppkey = s_suppkey
+    JOIN {nation} n ON s_nationkey = n_nationkey
+    JOIN {region} r ON n_regionkey = r_regionkey
+    WHERE r_name = 'EUROPE'
+), m AS (
+    SELECT *, min(cost_cents) OVER (PARTITION BY l_partkey, l_year) AS min_cents
+    FROM eu
 )
+SELECT /*+ BROADCAST(p) */ DISTINCT p_partkey, l_year,
+       round(cost_cents / 1e2, 2) AS min_cost,
+       s_name, round(s_acctbal, 4) AS s_acctbal, n_name
+FROM m JOIN {part} p ON l_partkey = p_partkey
+WHERE cost_cents = min_cents AND p_size = 15
+ORDER BY s_acctbal DESC, n_name, s_name, p_partkey, l_year
+LIMIT 100
+"""
+
+
+@op("pipeline_mincost_supplier", oracle=duckdb_sql(_MINCOST_SQL),
+    tags=("ext", "pipeline", "subquery"))
 def pipeline_mincost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: the supplier(s) achieving the minimum cost per
-    part, correlated on TWO keys.
+    part, correlated on TWO keys (partkey, ship-year).
 
-    Q2's signature is a scalar subquery correlated on the outer part
-    (here on (partkey, ship-year) — the two-key form the round-4 verdict
-    asked for): for each group, keep only rows whose cost equals the
-    group minimum. The fixture has no partsupp table, so the
-    part–supplier offer relation is derived from lineitem (each shipped
-    line is an observed offer at extendedprice), restricted to one
-    region's suppliers; cost is exact integer cents so the min and the
-    equality filter are bit-identical across engines.
-
-    Decorrelation: a windowed ``min() OVER (PARTITION BY partkey, year)``
-    — ONE shuffle on the correlation keys and a single pass, strictly
-    better at 100 TB than the aggregate-plus-self-join form, which scans
-    the offers twice and shuffles twice. DISTINCT collapses equal-cost
-    duplicate offers by the same supplier; the final top-100 is a
-    TakeOrdered over a composite total-order key.
+    The offers are European suppliers' shipped lines (the fixture has
+    no partsupp), in exact integer cents so the min and the equality
+    filter agree across engines. The correlated min is a ``min() OVER
+    (PARTITION BY partkey, year)`` — ONE shuffle on the correlation keys,
+    where the aggregate-plus-self-join form scans and shuffles the
+    offers twice. DISTINCT collapses equal-cost duplicate offers.
     """
-    from pyspark.sql.window import Window
-
-    li = load(spark, sf_dir, "lineitem")
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    p = load(spark, sf_dir, "part").filter(F.col("p_size") == 15)
-    eu = (
-        li.join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .select(
-            "l_partkey",
-            F.year("l_shipdate").cast("int").alias("l_year"),
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("bigint")
-            .alias("cost_cents"),
-            "s_name",
-            "s_acctbal",
-            "n_name",
-        )
-    )
-    w = Window.partitionBy("l_partkey", "l_year")
-    return (
-        eu.withColumn("min_cents", F.min("cost_cents").over(w))
-        .filter(F.col("cost_cents") == F.col("min_cents"))
-        .join(F.broadcast(p), F.col("l_partkey") == p.p_partkey)
-        .select(
-            "p_partkey",
-            "l_year",
-            F.round(F.col("cost_cents") / 100.0, 2).alias("min_cost"),
-            "s_name",
-            F.round("s_acctbal", 4).alias("s_acctbal"),
-            "n_name",
-        )
-        .distinct()
-        .orderBy(
-            F.desc("s_acctbal"), "n_name", "s_name", "p_partkey", "l_year"
-        )
-        .limit(100)
-    )
+    return run_sql(spark, sf_dir, _MINCOST_SQL)
 
 
-@op(
-    "pipeline_important_part_share",
-    oracle="""
-    WITH v AS (
-        SELECT l_partkey,
-               sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5)
-                        AS BIGINT)) AS cents
-        FROM lineitem
-        JOIN supplier ON s_suppkey = l_suppkey
-        JOIN nation   ON s_nationkey = n_nationkey
-        WHERE n_name = 'NATION_3'
-        GROUP BY l_partkey
-    )
-    SELECT l_partkey AS partkey, round(cents / 100.0, 2) AS value
-    FROM v
-    WHERE cents > (SELECT 0.001 * sum(cents) FROM v)
-    ORDER BY value DESC, partkey
-    """,
-    tags=("ext", "pipeline", "subquery"),
+_IMPORTANT_PART_SQL = """
+WITH v AS (
+    SELECT /*+ BROADCAST(n) */ l_partkey,
+           sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 5e-1)
+                    AS BIGINT)) AS cents
+    FROM {lineitem}
+    JOIN {supplier} ON l_suppkey = s_suppkey
+    JOIN {nation} n ON s_nationkey = n_nationkey
+    WHERE n_name = 'NATION_3'
+    GROUP BY l_partkey
 )
+SELECT /*+ BROADCAST(t) */ l_partkey AS partkey, round(cents / 1e2, 2) AS value
+FROM v CROSS JOIN (SELECT sum(cents) * 1e-3 AS threshold FROM v) t
+WHERE cents > threshold
+ORDER BY value DESC, partkey
+"""
+
+
+@op("pipeline_important_part_share", oracle=duckdb_sql(_IMPORTANT_PART_SQL),
+    tags=("ext", "pipeline", "subquery"))
 def pipeline_important_part_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: per-part value exceeding a global-share threshold.
 
-    The HAVING references a scalar over the SAME aggregated frame (total
-    value across all parts), so the frame is computed once, the global
-    sum reduces it to one row, and the threshold filter is a 1-row
+    The threshold is a scalar over the SAME aggregated frame, so the
+    frame is computed once, reduced to one row, and applied as a 1-row
     broadcast cross join — no second scan of the fact. Value accumulates
     in exact integer cents; the 0.001 × total threshold is one IEEE
-    multiply of an exact integer on both engines, so the comparison can't
-    drift. At 100 TB: one shuffle (partkey agg, map-side partials), one
-    O(#parts) reduction, one broadcast — the plan Q11 wants.
+    multiply on both engines, so the comparison cannot drift.
     """
-    li = load(spark, sf_dir, "lineitem")
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(0.5)
-    ).cast("bigint")
-    v = (
-        li.join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .groupBy("l_partkey")
-        .agg(F.sum(cents).alias("cents"))
-    )
-    total = v.agg((F.sum("cents") * 0.001).alias("threshold"))
-    return (
-        v.crossJoin(F.broadcast(total))
-        .filter(F.col("cents") > F.col("threshold"))
-        .select(
-            F.col("l_partkey").alias("partkey"),
-            F.round(F.col("cents") / 100.0, 2).alias("value"),
-        )
-        .orderBy(F.desc("value"), "partkey")
-    )
+    return run_sql(spark, sf_dir, _IMPORTANT_PART_SQL)
 
 
-@op(
-    "pipeline_supplier_part_counts",
-    oracle="""
-    SELECT p_brand, p_type, p_size,
-           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-    FROM lineitem
-    JOIN part ON p_partkey = l_partkey
-    WHERE p_brand <> 'Brand#5'
-      AND p_type <> 'PROMO'
-      AND p_size IN (1, 4, 9, 14, 19, 24, 29, 34)
-      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-                            WHERE s_name LIKE '%7')
-    GROUP BY 1, 2, 3
-    ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-    """,
-    tags=("ext", "pipeline", "subquery"),
-)
+_SUPPLIER_PART_COUNTS_SQL = """
+SELECT /*+ BROADCAST(p) */ p_brand, p_type, p_size,
+       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
+FROM {lineitem}
+JOIN {part} p ON l_partkey = p_partkey
+WHERE p_brand <> 'Brand#5'
+  AND p_type <> 'PROMO'
+  AND p_size IN (1, 4, 9, 14, 19, 24, 29, 34)
+  AND NOT EXISTS (SELECT 1 FROM {supplier}
+                  WHERE s_suppkey = l_suppkey AND s_name LIKE '%7')
+GROUP BY p_brand, p_type, p_size
+ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
+"""
+
+
+@op("pipeline_supplier_part_counts", oracle=duckdb_sql(_SUPPLIER_PART_COUNTS_SQL),
+    tags=("ext", "pipeline", "subquery"))
 def pipeline_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct-supplier counts per part attribute,
-    excluding a supplier denylist.
+    excluding a supplier denylist (names ending in '7').
 
-    The NOT IN subquery is a left-anti join against the filtered supplier
-    keys (the denylist stand-in: names ending in '7' — the fixture has no
-    comment column for the 'Customer Complaints' predicate). The denylist
-    is dim-sized → broadcast anti join, zero extra shuffles; the
-    count-distinct then aggregates on (brand, type, size). NOT IN's null
-    trap doesn't apply (s_suppkey is a non-null key) and the anti join
-    form sidesteps it anyway. At 100 TB: fact scan → broadcast anti →
-    one partial-aggregated exchange on the 3-attribute group key.
+    The denylist is NOT EXISTS rather than Q16's NOT IN, so it plans as
+    the plain broadcast left-anti join, not the null-aware one: zero
+    extra shuffles, then one partial-aggregated exchange on the
+    (brand, type, size) count-distinct key.
     """
-    li = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#5")
-        & (F.col("p_type") != "PROMO")
-        & (F.col("p_size").isin(1, 4, 9, 14, 19, 24, 29, 34))
-    )
-    deny = (
-        load(spark, sf_dir, "supplier")
-        .filter(F.col("s_name").like("%7"))
-        .select("s_suppkey")
-    )
-    return (
-        li.join(F.broadcast(deny), li.l_suppkey == deny.s_suppkey, "left_anti")
-        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.count_distinct("l_suppkey").cast("bigint").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
+    return run_sql(spark, sf_dir, _SUPPLIER_PART_COUNTS_SQL)
 
 
-@op(
-    "pipeline_small_qty_revenue",
-    oracle="""
-    SELECT round(sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT))
-                 / 700.0, 2) AS avg_yearly
-    FROM lineitem l
-    JOIN part ON p_partkey = l.l_partkey
-    WHERE p_brand = 'Brand#3'
-      AND p_type = 'ECONOMY'
-      AND l.l_quantity < (SELECT 0.2 * avg(l2.l_quantity) FROM lineitem l2
-                          WHERE l2.l_partkey = l.l_partkey)
-    """,
-    tags=("ext", "pipeline", "subquery"),
-)
+_SMALL_QTY_SQL = """
+SELECT /*+ BROADCAST(p) */
+       round(sum(CAST(floor(l.l_extendedprice * 100 + 5e-1) AS BIGINT)) / 7e2, 2)
+           AS avg_yearly
+FROM {lineitem} l
+JOIN {part} p ON l.l_partkey = p_partkey
+WHERE p_brand = 'Brand#3'
+  AND p_type = 'ECONOMY'
+  AND l.l_quantity < (SELECT avg(l2.l_quantity) * 2e-1 FROM {lineitem} l2
+                      WHERE l2.l_partkey = l.l_partkey)
+"""
+
+
+@op("pipeline_small_qty_revenue", oracle=duckdb_sql(_SMALL_QTY_SQL),
+    tags=("ext", "pipeline", "subquery"))
 def pipeline_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: revenue lost to small-quantity orders, gated by a
     per-part average computed over the whole fact.
 
-    The correlated scalar subquery (0.2 × avg quantity for THIS part)
-    decorrelates to a part-keyed aggregate joined back to the fact — the
-    aggregate frame has part cardinality (tiny next to lineitem), so AQE
-    broadcasts it and the fact is never shuffled for the correlation.
-    The average itself is exact in both engines (whole-number quantities
-    summed in doubles, one divide), so the boundary predicate can't
-    drift; revenue accumulates in integer cents and divides by 7 once at
-    the end (Q17's averaging constant).
+    The correlated scalar (0.2 × this part's average quantity)
+    decorrelates to a part-keyed aggregate joined back to the fact; it
+    has part cardinality, so AQE broadcasts it and the fact is never
+    shuffled for the correlation. Whole-number quantities keep the
+    average exact on both engines; revenue accumulates in integer cents
+    and divides by 7 once (Q17's averaging constant).
     """
-    li = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part").filter(
-        (F.col("p_brand") == "Brand#3") & (F.col("p_type") == "ECONOMY")
-    )
-    part_avg = li.groupBy(F.col("l_partkey").alias("pa_partkey")).agg(
-        (F.avg("l_quantity") * 0.2).alias("qty_cap")
-    )
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(part_avg, li.l_partkey == F.col("pa_partkey"))
-        .filter(F.col("l_quantity") < F.col("qty_cap"))
-        .agg(
-            F.round(
-                F.sum(
-                    F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                        "bigint"
-                    )
-                )
-                / 700.0,
-                2,
-            ).alias("avg_yearly")
-        )
-    )
+    return run_sql(spark, sf_dir, _SMALL_QTY_SQL)
 
 
-@op(
-    "pipeline_promotion_suppliers",
-    oracle="""
-    SELECT s_name, n_name
-    FROM supplier
-    JOIN nation ON s_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    WHERE r_name = 'EUROPE'
-      AND s_suppkey IN (
-          SELECT l_suppkey
-          FROM lineitem
-          JOIN part ON p_partkey = l_partkey
-          WHERE p_name LIKE 'red%'
-            AND l_shipdate >= TIMESTAMP '1997-01-01'
-            AND l_shipdate <  TIMESTAMP '1998-01-01'
-          GROUP BY l_suppkey, l_partkey
-          HAVING sum(l_quantity) > 40
-      )
-    ORDER BY s_name
-    """,
-    tags=("ext", "pipeline", "subquery"),
-)
+_PROMOTION_SQL = """
+SELECT /*+ BROADCAST(n, r) */ s_name, n_name
+FROM {supplier}
+JOIN {nation} n ON s_nationkey = n_nationkey
+JOIN {region} r ON n_regionkey = r_regionkey
+WHERE r_name = 'EUROPE'
+  AND s_suppkey IN (
+      SELECT l_suppkey
+      FROM {lineitem}
+      WHERE l_partkey IN (SELECT p_partkey FROM {part} WHERE p_name LIKE 'red%')
+        AND l_shipdate >= '1997-01-01'
+        AND l_shipdate <  '1998-01-01'
+      GROUP BY l_suppkey, l_partkey
+      HAVING sum(l_quantity) > 40
+  )
+ORDER BY s_name
+"""
+
+
+@op("pipeline_promotion_suppliers", oracle=duckdb_sql(_PROMOTION_SQL),
+    tags=("ext", "pipeline", "subquery"))
 def pipeline_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers who moved real volume of a named part
     family — a nested semi-join chain.
 
-    Inner chain: parts filtered by name prefix (broadcast semi into the
-    fact), one year of lineitem, aggregated per (supplier, part) with a
-    HAVING volume floor (the availqty>half-of-shipped stand-in — the
-    fixture has no partsupp); the surviving supplier keys semi-join into
-    the region-filtered supplier dim (region EUROPE through the nation
-    snowflake). Every membership test is a semi join — no
-    DISTINCT-after-join, no duplicate inflation, and the only fact
-    shuffle is the (suppkey, partkey) aggregation. Quantity sums of
-    whole numbers are exact in double, so the HAVING boundary is
-    engine-stable.
+    One year of lines of 'red%' parts (a semi join into the fact),
+    aggregated per (supplier, part) with a HAVING volume floor (the
+    fixture has no partsupp availqty), semi-joins into the European
+    suppliers. Every membership test is a semi join — no
+    DISTINCT-after-join — and the only fact shuffle is the (suppkey,
+    partkey) aggregation.
     """
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
-    )
-    p = load(spark, sf_dir, "part").filter(F.col("p_name").like("red%"))
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    movers = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey, "left_semi")
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-        .filter(F.col("qty") > 40)
-        .select("l_suppkey")
-    )
-    return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .join(movers, s.s_suppkey == movers.l_suppkey, "left_semi")
-        .select("s_name", "n_name")
-        .orderBy("s_name")
-    )
+    return run_sql(spark, sf_dir, _PROMOTION_SQL)
 
 
-@op(
-    "pipeline_waiting_suppliers",
-    oracle="""
-    WITH li AS (
-        SELECT l_orderkey, l_suppkey,
-               max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY
-                        THEN 1 ELSE 0 END) AS late
-        FROM lineitem
-        JOIN orders ON o_orderkey = l_orderkey
-        WHERE o_orderstatus = 'F'
-        GROUP BY l_orderkey, l_suppkey
-    ),
-    ostat AS (
-        SELECT l_orderkey,
-               count(*) AS n_supp,
-               sum(late) AS n_late
-        FROM li GROUP BY l_orderkey
-    )
-    SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-    FROM li
-    JOIN ostat USING (l_orderkey)
-    JOIN supplier ON s_suppkey = l_suppkey
-    WHERE li.late = 1 AND ostat.n_supp >= 2 AND ostat.n_late = 1
-    GROUP BY s_name
-    ORDER BY numwait DESC, s_name
-    LIMIT 100
-    """,
-    tags=("ext", "pipeline", "subquery"),
+_WAITING_SQL = """
+WITH li AS (
+    SELECT /*+ REPARTITION(l_orderkey) */ l_orderkey, l_suppkey,
+           CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY THEN 1 ELSE 0 END
+               AS late_raw
+    FROM {lineitem}
+    JOIN {orders} ON l_orderkey = o_orderkey
+    WHERE o_orderstatus = 'F'
+), g AS (
+    SELECT l_orderkey, l_suppkey, max(late_raw) AS late
+    FROM li GROUP BY l_orderkey, l_suppkey
+), w AS (
+    SELECT l_suppkey, late,
+           count(*) OVER (PARTITION BY l_orderkey) AS n_supp,
+           sum(late) OVER (PARTITION BY l_orderkey) AS n_late
+    FROM g
 )
+SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
+FROM w
+JOIN {supplier} ON l_suppkey = s_suppkey
+WHERE late = 1 AND n_supp >= 2 AND n_late = 1
+GROUP BY s_name
+ORDER BY numwait DESC, s_name
+LIMIT 100
+"""
+
+
+@op("pipeline_waiting_suppliers", oracle=duckdb_sql(_WAITING_SQL),
+    tags=("ext", "pipeline", "subquery"))
 def pipeline_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: the supplier who alone held up a multi-supplier
-    order — EXISTS and NOT EXISTS over the same fact, decorrelated to one
-    aggregate.
+    order (late: shipped over 90 days after the order date).
 
-    Q21's two correlated subqueries (EXISTS another supplier on the
-    order; NOT EXISTS another LATE supplier) collapse into per-order
-    stats computed once: n_supp ≥ 2 ⇔ the EXISTS, n_late = 1 (the
-    candidate itself) ⇔ the NOT EXISTS. Lateness is l_shipdate more than
-    90 days after o_orderdate (the fixture carries no commit/receipt
-    dates).
-
-    The naive decorrelation (groupBy + join-back of per-order stats)
-    makes Spark compute the per-(order, supplier) frame TWICE — no
-    common-subexpression sharing across self-join branches — and pay
-    three orderkey-family exchanges. Instead: repartition the joined
-    fact ONCE on l_orderkey; the (orderkey, suppkey) aggregate reuses it
-    (hash on a subset of the grouping keys satisfies the clustering
-    requirement), and the per-order stats become window functions over
-    the SAME partitioning — zero further exchanges and a single pass, so
-    the whole correlation costs one fact shuffle at 100 TB.
+    Q21's EXISTS (another supplier on the order) and NOT EXISTS (another
+    LATE supplier) collapse into per-order stats: n_supp ≥ 2 and
+    n_late = 1. The joined fact is repartitioned ONCE on l_orderkey (the
+    ``REPARTITION`` hint); the (orderkey, suppkey) aggregate and the
+    per-order windows reuse it, so the correlation costs one fact
+    shuffle where the join-back form pays three exchanges.
     """
-    from pyspark.sql.window import Window
-
-    li_raw = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    s = load(spark, sf_dir, "supplier")
-    late_flag = F.when(
-        F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAY"),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    li = (
-        li_raw.join(o, li_raw.l_orderkey == o.o_orderkey)
-        .select("l_orderkey", "l_suppkey", late_flag.alias("late_raw"))
-        .repartition("l_orderkey")
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(F.max("late_raw").alias("late"))
-    )
-    w = Window.partitionBy("l_orderkey")
-    return (
-        li.withColumn("n_supp", F.count("*").over(w))
-        .withColumn("n_late", F.sum("late").over(w))
-        .filter(
-            (F.col("late") == 1) & (F.col("n_supp") >= 2) & (F.col("n_late") == 1)
-        )
-        .join(s, F.col("l_suppkey") == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count("*").cast("bigint").alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
-        .limit(100)
-    )
+    return run_sql(spark, sf_dir, _WAITING_SQL)

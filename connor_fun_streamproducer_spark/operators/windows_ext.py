@@ -1,10 +1,11 @@
-"""Window extensions: event-time RANGE frames.
+"""Window extensions: event-time RANGE frames, distributions, rolling
+and running statistics, and sequence patterns.
 
-operators/windows.py covers rank/analytic/ROWS-frame windows; this adds
-the time-interval RANGE frame — "total over this key's trailing 30
-days" — which a ROWS frame cannot express (row counts per day vary).
-Reference anchor: the 30 s tumbling window of regionSpout.go:102-117 is
-the stream form; this is the batch form over arbitrary lookback.
+operators/windows.py covers rank/analytic/ROWS-frame windows. Every op
+here but ``win_median_rolling`` is one SQL text run on both engines
+through ``sql_front``; that one indexes a sorted frame array, and the
+engines share no array element accessor (unpivoting the frame to rows
+instead costs an exchange: an Expand keeps no partitioning).
 """
 
 from __future__ import annotations
@@ -13,228 +14,131 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from connor_fun_streamproducer_spark.catalog import epoch_div, epoch_seconds, load
+from connor_fun_streamproducer_spark.catalog import epoch_seconds, load
+from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, run_sql
 from connor_fun_streamproducer_spark.registry import op
 
-LOOKBACK_S = 30 * 86400  # 30 days
-
-
-@op(
-    "win_range_interval",
-    oracle=f"""
-    WITH o AS (
-        SELECT o_orderkey, o_custkey, o_totalprice,
-               CAST(floor(epoch(o_orderdate)) AS BIGINT) AS sec
-        FROM orders
-    )
-    SELECT o_orderkey, o_custkey,
-           CAST(count(*) OVER w AS BIGINT)        AS n_orders_30d,
-           round(sum(o_totalprice) OVER w, 2)     AS total_30d
-    FROM o
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY sec
-                 RANGE BETWEEN {LOOKBACK_S} PRECEDING AND CURRENT ROW)
-    """,
-    tags=("ext", "window", "temporal"),
-)
-def win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-30-day per-customer totals via an event-time RANGE frame.
-
-    The frame is value-based (orderdate seconds ± lookback), not
-    row-based, so days with many orders widen the frame correctly —
-    the canonical "rolling spend" feature every fraud/abuse pipeline
-    derives. Both engines run the identical numeric RANGE spec over
-    epoch seconds (no interval-type semantics to diverge on). One
-    (o_custkey) exchange serves the sort and the frame scan; a RANGE
-    frame aggregates all peer rows of equal sec, so ties need no
-    tie-break column — the result per row is order-independent and
-    hash-stable. At 100 TB the plan is scan → one keyed exchange →
-    per-partition sorted sliding aggregation, bounded by each
-    customer's own history.
-    """
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        "o_totalprice",
-        # o_orderdate loads as TIMESTAMP_NTZ (no direct long cast);
-        # session TZ is pinned UTC so the timestamp hop is exact.
-        F.col("o_orderdate").cast("timestamp").cast("long").alias("sec"),
-    )
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("sec")
-        .rangeBetween(-LOOKBACK_S, Window.currentRow)
-    )
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.count("*").over(w).cast("bigint").alias("n_orders_30d"),
-        F.round(F.sum("o_totalprice").over(w), 2).alias("total_30d"),
-    )
-
-
-@op(
-    "win_distribution",
-    oracle="""
-    SELECT o_orderkey,
-           o_orderstatus,
-           CAST(ntile(4) OVER w AS INTEGER)       AS quartile,
-           round(percent_rank() OVER w, 6)        AS pct_rank,
-           round(cume_dist() OVER w, 6)           AS cume
-    FROM orders
-    WINDOW w AS (PARTITION BY o_orderstatus
-                 ORDER BY round(o_totalprice, 4), o_orderkey)
-    """,
-    tags=("ext", "window"),
-)
-def win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution window functions: ntile / percent_rank / cume_dist.
-
-    The analytics trio behind quantile bucketing and percentile-feature
-    engineering (e.g. "what spend quartile is this customer in"). Ordering
-    ties break on (rounded price, o_orderkey) so both engines assign
-    identical positions despite last-ulp double drift — ntile and
-    percent_rank are POSITION functions, so unlike a RANGE-frame sum a
-    tie mis-order flips the output. One (o_orderstatus) exchange serves
-    all three functions over the shared sort; at 100 TB skew is bounded
-    by the largest status partition, and a production variant would
-    sub-bucket the hot status before the window (agg_skew_salted's
-    pattern).
-    """
-    w = (
-        Window.partitionBy("o_orderstatus")
-        .orderBy(F.round("o_totalprice", 4), "o_orderkey")
-    )
-    o = load(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.ntile(4).over(w).cast("int").alias("quartile"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-    )
-
-
-@op(
-    "win_fill_forward",
-    oracle="""
-    SELECT event_id, user_id,
-           round(last_value(v IGNORE NULLS)
-                 OVER (PARTITION BY user_id
-                       ORDER BY CAST(floor(epoch(ts)) AS BIGINT), event_id
-                       ROWS UNBOUNDED PRECEDING), 6) AS filled_value
-    FROM (
-        SELECT event_id, user_id, ts,
-               CASE WHEN event_type = 'click' THEN value END AS v
-        FROM events
-    )
-    """,
-    tags=("ext", "window", "temporal"),
-)
-def win_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series gap fill: carry each user's last observed reading
-    forward over rows that lack one (only 'click' events carry the
-    metric here; every other event inherits the most recent click's
-    value, null until the first observation).
-
-    The LOCF (last-observation-carried-forward) primitive behind sensor
-    downsampling and feature snapshotting — and the same
-    last(ignorenulls) machinery the merge-asof tape uses, on one input
-    instead of a union. One (user_id) exchange serves sort and fill;
-    deterministic (sec, event_id) ordering keeps both engines' carry
-    identical under timestamp ties. At 100 TB: linear per user, no
-    join, no state beyond the running value.
-    """
-    from connor_fun_streamproducer_spark.catalog import epoch_seconds
-
-    e = load(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        epoch_seconds("ts").alias("sec"),
-        F.when(F.col("event_type") == "click", F.col("value")).alias("v"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("sec", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return e.select(
-        "event_id",
-        "user_id",
-        F.round(F.last("v", ignorenulls=True).over(w), 6).alias("filled_value"),
-    )
-
-
-_ROLL_N = 3  # trailing rows in the frame besides the current row
-
-_ROLLING_ORACLE = f"""
-WITH o AS (
-    SELECT o_orderkey, o_custkey,
-           CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-           CAST(floor(epoch(o_orderdate)) AS BIGINT) AS sec
-    FROM orders
-)
+# the frame reaches 30 days (2,592,000 s) back
+_RANGE_INTERVAL_SQL = """
 SELECT o_orderkey, o_custkey,
-       CAST(count(*) OVER w AS BIGINT) AS roll_n,
-       round(sum(cents) OVER w / (100.0 * count(*) OVER w), 4) AS roll_avg,
-       round(max(cents) OVER w / 100.0, 2) AS roll_max,
-       round(min(cents) OVER w / 100.0, 2) AS roll_min
-FROM o
-WINDOW w AS (PARTITION BY o_custkey ORDER BY sec, o_orderkey
-             ROWS BETWEEN {_ROLL_N} PRECEDING AND CURRENT ROW)
+       CAST(count(*) OVER w AS BIGINT) AS n_orders_30d,
+       round(sum(o_totalprice) OVER w, 2) AS total_30d
+FROM (SELECT o_orderkey, o_custkey, o_totalprice, {epoch[o_orderdate]} AS sec
+      FROM {orders}) o
+WINDOW w AS (PARTITION BY o_custkey ORDER BY sec
+             RANGE BETWEEN 2592000 PRECEDING AND CURRENT ROW)
 """
 
 
-@op(
-    "win_rolling_stats",
-    oracle=_ROLLING_ORACLE,
-    tags=("ext", "window"),
+@op("win_range_interval", oracle=duckdb_sql(_RANGE_INTERVAL_SQL),
+    tags=("ext", "window", "temporal"))
+def win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing-30-day per-customer totals via an event-time RANGE frame.
+
+    The frame is value-based (orderdate seconds − lookback), not
+    row-based, so days with many orders widen it correctly — the
+    "rolling spend" feature of fraud/abuse pipelines. Both engines run
+    the same numeric RANGE spec over epoch seconds. A RANGE frame takes
+    every peer of equal sec, so ties need no tie-break and each row's
+    result is order-independent. One (o_custkey) exchange serves the
+    sort and the sliding aggregation.
+    """
+    return run_sql(spark, sf_dir, _RANGE_INTERVAL_SQL)
+
+
+_DISTRIBUTION_SQL = """
+SELECT o_orderkey, o_orderstatus,
+       CAST(ntile(4) OVER w AS INT) AS quartile,
+       round(percent_rank() OVER w, 6) AS pct_rank,
+       round(cume_dist() OVER w, 6) AS cume
+FROM {orders}
+WINDOW w AS (PARTITION BY o_orderstatus ORDER BY round(o_totalprice, 4), o_orderkey)
+"""
+
+
+@op("win_distribution", oracle=duckdb_sql(_DISTRIBUTION_SQL), tags=("ext", "window"))
+def win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distribution window functions: ntile / percent_rank / cume_dist.
+
+    The trio behind quantile bucketing ("what spend quartile is this
+    order in"). ntile and percent_rank are POSITION functions, so ties
+    break on (rounded price, o_orderkey) and both engines assign the
+    same positions despite last-ulp double drift. One (o_orderstatus)
+    exchange serves all three over the shared sort; skew is bounded by
+    the largest status (agg_skew_salted's pattern would sub-bucket it).
+    """
+    return run_sql(spark, sf_dir, _DISTRIBUTION_SQL)
+
+
+_FILL_FORWARD_SQL = """
+WITH e AS (
+    SELECT event_id, user_id, {te} AS sec,
+           CASE WHEN event_type = 'click' THEN value END AS v
+    FROM {events}
+), g AS (
+    SELECT event_id, user_id, v,
+           count(v) OVER (PARTITION BY user_id ORDER BY sec, event_id
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seen
+    FROM e
 )
+SELECT event_id, user_id,
+       round(max(v) OVER (PARTITION BY user_id, seen), 6) AS filled_value
+FROM g
+"""
+
+
+@op("win_fill_forward", oracle=duckdb_sql(_FILL_FORWARD_SQL), tags=("ext", "window", "temporal"))
+def win_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-series gap fill (LOCF): carry each user's last 'click'
+    reading forward over the rows that lack one, null until the first.
+
+    The engines spell ``last_value(v IGNORE NULLS)`` differently, so the
+    text numbers the readings: the running count of readings, ``seen``,
+    is shared by a reading and every row up to the next one, and that
+    reading is the one non-null ``v`` among them. (sec, event_id)
+    ordering keeps the carry identical under timestamp ties. One
+    (user_id) exchange serves both windows: hash(user_id) satisfies the
+    (user_id, seen) partitioning.
+    """
+    return run_sql(spark, sf_dir, _FILL_FORWARD_SQL)
+
+
+# the frame holds the current order and the 3 before it
+_ROLLING_SQL = """
+SELECT o_orderkey, o_custkey,
+       CAST(count(*) OVER w AS BIGINT) AS roll_n,
+       round(sum(cents) OVER w / (1e2 * count(*) OVER w), 4) AS roll_avg,
+       round(max(cents) OVER w / 1e2, 2) AS roll_max,
+       round(min(cents) OVER w / 1e2, 2) AS roll_min
+FROM (SELECT o_orderkey, o_custkey,
+             CAST(floor(o_totalprice * 100 + 5e-1) AS BIGINT) AS cents,
+             {epoch[o_orderdate]} AS sec
+      FROM {orders}) o
+WINDOW w AS (PARTITION BY o_custkey ORDER BY sec, o_orderkey
+             ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
+"""
+
+
+@op("win_rolling_stats", oracle=duckdb_sql(_ROLLING_SQL), tags=("ext", "window"))
 def win_rolling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-rows rolling statistics per customer: count / mean /
-    max / min of order value over the last 4 orders (3 preceding +
-    current), ordered by (order epoch-sec, orderkey).
+    max / min of order value over the last 4 orders, ordered by (order
+    epoch-sec, orderkey) — a total order, so frame membership is
+    deterministic under ties.
 
-    The per-entity rolling-feature generator every feature store needs
-    (trailing spend, trailing order size). ROWS frame, not RANGE: "last
-    N orders" is a row-count semantics. One exchange on o_custkey; all
-    four aggregates share the single WindowExec frame pass (Spark
-    evaluates same-frame window functions together). Money stays in
-    integer cents inside the frame (repo-wide exact-money convention);
-    the mean divides once at the end, rounded to 4dp on both engines.
-
-    The total sort key (sec, o_orderkey) makes frame membership — and
-    therefore every output value — deterministic under ties.
+    ROWS frame, not RANGE: "last N orders" counts rows. One exchange on
+    o_custkey; the four aggregates share one WindowExec frame pass.
+    Money stays in integer cents inside the frame; the mean divides once,
+    rounded to 4dp on both engines.
     """
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-        epoch_seconds("o_orderdate").alias("sec"),
-    )
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("sec", "o_orderkey")
-        .rowsBetween(-_ROLL_N, Window.currentRow)
-    )
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.count("*").over(w).cast("bigint").alias("roll_n"),
-        F.round(F.sum("cents").over(w) / (100.0 * F.count("*").over(w)), 4).alias(
-            "roll_avg"
-        ),
-        F.round(F.max("cents").over(w) / 100.0, 2).alias("roll_max"),
-        F.round(F.min("cents").over(w) / 100.0, 2).alias("roll_min"),
-    )
+    return run_sql(spark, sf_dir, _ROLLING_SQL)
 
 
-_CUMDIST_ORACLE = """
+_CUMDIST_SQL = """
 WITH e AS (
-    SELECT user_id, event_id, event_type,
-           CAST(floor(epoch(ts)) AS BIGINT) AS sec
-    FROM events
-),
-flagged AS (
+    SELECT /*+ REPARTITION(user_id) */ user_id, event_id, event_type, {te} AS sec
+    FROM {events}
+), flagged AS (
     SELECT user_id, event_id, sec,
            CASE WHEN row_number() OVER (PARTITION BY user_id, event_type
                                         ORDER BY sec, event_id) = 1
@@ -243,128 +147,56 @@ flagged AS (
 )
 SELECT user_id, event_id,
        CAST(sum(first_seen) OVER (PARTITION BY user_id ORDER BY sec, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT)
-           AS distinct_types_so_far
+                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+            AS BIGINT) AS distinct_types_so_far
 FROM flagged
 """
 
 
-@op(
-    "win_cumulative_distinct",
-    oracle=_CUMDIST_ORACLE,
-    tags=("ext", "window", "scale"),
-)
+@op("win_cumulative_distinct", oracle=duckdb_sql(_CUMDIST_SQL), tags=("ext", "window", "scale"))
 def win_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running count of DISTINCT event types each user has exhibited,
-    as of each event: (user_id, event_id, distinct_types_so_far).
+    """Running count of DISTINCT event types each user has shown, as
+    of each event.
 
-    count(DISTINCT) over a running frame is not directly computable by
-    any engine's window machinery; the standard O(n) decomposition is
-    first-occurrence flagging + running sum:
-
-    - pass 1 flags the first (user, type) occurrence with row_number
-      over (user_id, event_type);
-    - pass 2 running-sums the flags over (user_id).
-
-    100 TB shape — ONE exchange despite two window passes: the frame is
-    explicitly repartitioned by user_id first, and both windows'
-    required ClusteredDistribution — (user_id, event_type) and
-    (user_id) — are SATISFIED by hash(user_id) (co-clustering on a
-    prefix of the partition keys), so Catalyst inserts no further
-    exchange, only the two in-partition sorts. Ordering key
-    (epoch-sec, event_id) is total, so the running sum is
-    tie-deterministic.
+    count(DISTINCT) over a running frame is no window function anywhere;
+    the O(n) form flags each (user, type)'s first occurrence, then
+    running-sums the flags per user. The ``REPARTITION`` hint (a comment
+    to DuckDB) hashes by user_id, which satisfies both windows'
+    partitionings: ONE exchange, then two in-partition sorts.
     """
-    e = (
-        load(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            epoch_seconds("ts").alias("sec"),
-        )
-        .repartition("user_id")
-    )
-    w_first = Window.partitionBy("user_id", "event_type").orderBy("sec", "event_id")
-    w_run = (
-        Window.partitionBy("user_id")
-        .orderBy("sec", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    flagged = e.select(
-        "user_id",
-        "event_id",
-        "sec",
-        F.when(F.row_number().over(w_first) == 1, F.lit(1)).otherwise(F.lit(0)).alias(
-            "first_seen"
-        ),
-    )
-    return flagged.select(
-        "user_id",
-        "event_id",
-        F.sum("first_seen").over(w_run).cast("bigint").alias("distinct_types_so_far"),
-    )
+    return run_sql(spark, sf_dir, _CUMDIST_SQL)
 
 
-@op(
-    "win_islands_consecutive",
-    oracle="""
-    WITH days AS (
-        SELECT DISTINCT user_id,
-               CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS d
-        FROM events
-    ), grp AS (
-        SELECT user_id, d,
-               d - row_number() OVER (PARTITION BY user_id ORDER BY d)
-                   AS island
-        FROM days
-    ), runs AS (
-        SELECT user_id, island, count(*) AS run_len
-        FROM grp GROUP BY user_id, island
-    )
-    SELECT user_id,
-           CAST(count(*) AS BIGINT)      AS n_islands,
-           CAST(max(run_len) AS BIGINT)  AS max_run,
-           CAST(sum(run_len) AS BIGINT)  AS active_days
-    FROM runs GROUP BY user_id
-    """,
-    tags=("ext", "window"),
+_ISLANDS_SQL = """
+WITH days AS (
+    SELECT DISTINCT user_id, {te} // 86400 AS d FROM {events}
+), grp AS (
+    SELECT user_id, d - row_number() OVER (PARTITION BY user_id ORDER BY d) AS island
+    FROM days
+), runs AS (
+    SELECT user_id, island, count(*) AS run_len
+    FROM grp GROUP BY user_id, island
 )
+SELECT user_id,
+       CAST(count(*) AS BIGINT) AS n_islands,
+       CAST(max(run_len) AS BIGINT) AS max_run,
+       CAST(sum(run_len) AS BIGINT) AS active_days
+FROM runs GROUP BY user_id
+"""
+
+
+@op("win_islands_consecutive", oracle=duckdb_sql(_ISLANDS_SQL), tags=("ext", "window"))
 def win_islands_consecutive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands: maximal runs of CONSECUTIVE active days per user.
+    """Gaps-and-islands: maximal runs of CONSECUTIVE active days per user
+    (number of streaks, longest streak, total active days).
 
-    The classic warehouse shape SQL engines solve with the
-    day − row_number() trick: within a user's sorted distinct active
-    days, consecutive days share a constant difference from their rank,
-    so that difference IS the island id — streak detection with one
-    window pass and no self-joins or iteration. Output per user: number
-    of distinct streaks, longest streak, total active days.
-
-    Scale: distinct (user, day) first — that hash-agg collapses 100 TB
-    of raw events to at most users × days rows and partial-aggregates
-    map-side before its exchange; the row_number window and both
-    follow-up aggregates all share the same user_id hash partitioning,
-    so AQE plans one exchange for the whole chain after the distinct.
+    Within a user's sorted distinct days, consecutive days share one
+    day − row_number() difference, which is the island id: one window
+    pass, no self-join or iteration. The (user, day) distinct collapses
+    the events first; the window and both aggregates then share the
+    user_id partitioning.
     """
-    days = (
-        load(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            epoch_div("ts", 86400).alias("d"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("user_id").orderBy("d")
-    runs = (
-        days.withColumn("island", F.col("d") - F.row_number().over(w))
-        .groupBy("user_id", "island")
-        .agg(F.count("*").alias("run_len"))
-    )
-    return runs.groupBy("user_id").agg(
-        F.count("*").cast("bigint").alias("n_islands"),
-        F.max("run_len").cast("bigint").alias("max_run"),
-        F.sum("run_len").cast("bigint").alias("active_days"),
-    )
+    return run_sql(spark, sf_dir, _ISLANDS_SQL)
 
 
 MEDIAN_FRAME = 5  # trailing orders per rolling-median evaluation
@@ -396,20 +228,13 @@ MEDIAN_FRAME = 5  # trailing orders per rolling-median evaluation
 def win_median_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling EXACT median of the customer's last 5 order totals — the
     robust-statistics window no engine offers natively (median is not
-    rank-translatable and not mergeable; contrast the mean/min/max tier
-    in win_rolling_stats).
+    rank-translatable and not mergeable).
 
-    Median is defined as the LOWER middle of the sorted frame
-    (``sorted[(n+1) div 2]``, 1-indexed) rather than the interpolating
-    form, so it stays in exact integer cents — both engines evaluate
-    the identical expression and the hash matches bit-for-bit.
-
-    Scale: the frame is a bounded 5 rows, so collect_list-per-frame is
-    O(frame) memory per row and the whole op is one (custkey) exchange
-    + one sort — the same WindowExec cost as any trailing aggregate.
-    The bounded frame is what makes exact medians tractable at 100 TB;
-    the unbounded-window form is precisely what the KLL sketch tier
-    (operators/sketches.py) exists to approximate.
+    The median is the LOWER middle of the sorted frame (``sorted[(n+1)
+    div 2]``, 1-indexed), so it stays in exact integer cents. The frame
+    is a bounded 5 rows, so collecting it costs O(frame) per row over
+    one (custkey) exchange and sort; the unbounded form is what the KLL
+    sketch tier (operators/sketches.py) approximates.
     """
     o = load(spark, sf_dir, "orders").select(
         "o_custkey",
@@ -431,17 +256,15 @@ def win_median_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RISES_ORACLE = """
-WITH o AS (
-    SELECT o_custkey,
-           CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-           o_orderdate, o_orderkey
-    FROM orders
-), l AS (
+_RISES_SQL = """
+WITH l AS (
     SELECT o_custkey, cents,
            lag(cents, 1) OVER w AS p1,
            lag(cents, 2) OVER w AS p2
-    FROM o WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+    FROM (SELECT o_custkey, o_orderdate, o_orderkey,
+                 CAST(floor(o_totalprice * 100 + 5e-1) AS BIGINT) AS cents
+          FROM {orders}) o
+    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 )
 SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_rise3
 FROM l WHERE p2 IS NOT NULL AND p2 < p1 AND p1 < cents
@@ -449,313 +272,150 @@ GROUP BY o_custkey
 """
 
 
-@op("win_pattern_rises", oracle=_RISES_ORACLE, tags=("ext", "window", "pattern"))
+@op("win_pattern_rises", oracle=duckdb_sql(_RISES_SQL), tags=("ext", "window", "pattern"))
 def win_pattern_rises(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential-pattern detection: per customer, how many times did
-    three CONSECUTIVE orders (by order date, key-tiebroken) carry
-    strictly increasing spend? The lag-window formulation of the
-    MATCH_RECOGNIZE / sessions-style "N rising events in a row" query —
-    escalation detection over purchase histories, expressed with plain
-    windows so it runs anywhere.
+    """Sequential-pattern detection: per customer, how many times three
+    CONSECUTIVE orders (by date, key-tiebroken) carried strictly rising
+    spend — MATCH_RECOGNIZE's "N rising events in a row" as plain lags.
 
-    Two lags over ONE window spec (one sort per customer partition, no
-    self-joins — the naive 3-way self-join on adjacency is quadratic
-    under ties and shuffles three times); the counting aggregate reuses
-    the window's hash(custkey) partitioning, so the whole pattern scan
-    is one exchange + one per-partition sort at any scale. Spend
-    compares in exact integer cents.
+    Two lags over ONE window spec, no self-joins (the 3-way adjacency
+    join is quadratic under ties and shuffles three times); the count
+    reuses the window's partitioning, so the scan is one exchange + one
+    sort. Spend compares in exact integer cents.
     """
-    o = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-    l = o.select("o_custkey", cents.alias("cents"), "o_orderdate", "o_orderkey").select(
-        "o_custkey",
-        "cents",
-        F.lag("cents", 1).over(w).alias("p1"),
-        F.lag("cents", 2).over(w).alias("p2"),
-    )
-    return (
-        l.filter(
-            F.col("p2").isNotNull()
-            & (F.col("p2") < F.col("p1"))
-            & (F.col("p1") < F.col("cents"))
-        )
-        .groupBy("o_custkey")
-        .agg(F.count("*").cast("bigint").alias("n_rise3"))
-    )
+    return run_sql(spark, sf_dir, _RISES_SQL)
 
 
-_CLAMP_ORACLE = """
+_CLAMP_SQL = """
 WITH d AS (
-    SELECT user_id, event_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS sec,
+    SELECT user_id, event_id, {te} AS sec,
            CASE WHEN event_type = 'purchase'
-                THEN  CAST(floor(value * 100 + 0.5) AS BIGINT)
-                ELSE -CAST(floor(value * 25 + 0.5) AS BIGINT) END AS delta
-    FROM events
+                THEN CAST(floor(value * 100 + 5e-1) AS BIGINT)
+                ELSE -CAST(floor(value * 25 + 5e-1) AS BIGINT) END AS delta
+    FROM {events}
 ), s AS (
     SELECT user_id, event_id, sec,
            sum(delta) OVER (PARTITION BY user_id ORDER BY sec, event_id
-                            ROWS UNBOUNDED PRECEDING) AS cs
+                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cs
     FROM d
 )
 SELECT user_id, event_id,
-       CAST(cs - least(min(cs) OVER (PARTITION BY user_id
-                                     ORDER BY sec, event_id
-                                     ROWS UNBOUNDED PRECEDING), 0)
-            AS BIGINT) AS balance
+       CAST(cs - least(min(cs) OVER (PARTITION BY user_id ORDER BY sec, event_id
+                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+                       0) AS BIGINT) AS balance
 FROM s
 """
 
 
-@op("win_clamped_cumsum", oracle=_CLAMP_ORACLE, tags=("ext", "window", "scale"))
+@op("win_clamped_cumsum", oracle=duckdb_sql(_CLAMP_SQL), tags=("ext", "window", "scale"))
 def win_clamped_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Floor-at-zero running balance per user (credits from purchases,
-    debits from every other event): ``bal_i = max(0, bal_{i-1} + Δ_i)``
-    — inventory positions, prepaid credit, rate-limiter tokens all walk
-    this recurrence, and its clamp makes it look like it needs a
-    per-key sequential scan (the applyInPandas escape hatch).
+    debits from every other event): ``bal_i = max(0, bal_{i-1} + Δ_i)``.
 
-    It does not: by the Skorokhod-reflection identity the clamped walk
-    is ``cs_i − min(0, min_{j≤i} cs_j)`` — plain running sum minus
-    running min of that sum (check: Δ = +5, −10, +3 → cs 5, −5, −2 →
-    bal 5, 0, 3). So the op stays ENTIRELY inside window codegen: two
-    stacked window aggregates on ONE (user) exchange and sort, no
-    Python, no UDF, exact integer cents — the design rule made
-    executable: before reaching for mapInPandas on a 'stateful' scan,
-    look for the algebraic form first. At 100 TB: one shuffle, linear
-    per-partition sweeps.
+    By the Skorokhod-reflection identity the clamped walk is
+    ``cs_i − min(0, min_{j≤i} cs_j)`` (Δ = +5, −10, +3 → cs 5, −5, −2 →
+    bal 5, 0, 3), so no per-key sequential scan (mapInPandas) is needed:
+    two stacked window aggregates on ONE (user) exchange and sort, no
+    Python, exact integer cents.
     """
-    ev = load(spark, sf_dir, "events")
-    delta = F.when(
-        F.col("event_type") == "purchase",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"),
-    ).otherwise(-F.floor(F.col("value") * 25 + F.lit(0.5)).cast("bigint"))
-    d = ev.select(
-        "user_id", "event_id", epoch_seconds("ts").alias("sec"), delta.alias("delta")
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("sec", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # Both windows share ONE partitioning and ONE sort order, so Spark
-    # plans a single exchange and a single per-partition sort carrying
-    # two stacked window aggregates.
-    s = d.select(
-        "user_id", "event_id", "sec", F.sum("delta").over(w).alias("cs")
-    )
-    w2 = (
-        Window.partitionBy("user_id")
-        .orderBy("sec", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return s.select(
-        "user_id",
-        "event_id",
-        (F.col("cs") - F.least(F.min("cs").over(w2), F.lit(0)))
-        .cast("bigint")
-        .alias("balance"),
-    )
+    return run_sql(spark, sf_dir, _CLAMP_SQL)
 
 
-# ---------------------------------------------------------------------------
-# Running-peak drawdown (the equity-curve risk window)
-# ---------------------------------------------------------------------------
-
-_DRAWDOWN_ORACLE = """
-WITH base AS (
-    SELECT user_id, ts, event_id,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-),
-r AS (
+_DRAWDOWN_SQL = """
+WITH r AS (
     SELECT user_id, cents,
-           max(cents) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS peak
-    FROM base
+           max(cents) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
+    FROM (SELECT user_id, ts, event_id,
+                 CAST(floor(value * 100 + 5e-1) AS BIGINT) AS cents
+          FROM {events}) b
 )
 SELECT user_id,
        CAST(count(*) AS BIGINT) AS n_events,
        CAST(max(peak) AS BIGINT) AS peak_cents,
        CAST(max(peak - cents) AS BIGINT) AS max_drawdown_cents,
        CAST(max((peak - cents) * 10000 // peak) AS BIGINT) AS max_dd_bp
-FROM r GROUP BY 1
+FROM r GROUP BY user_id
 """
 
 
-@op("win_drawdown", oracle=_DRAWDOWN_ORACLE, tags=("ext", "window", "timeseries"))
+@op("win_drawdown", oracle=duckdb_sql(_DRAWDOWN_SQL), tags=("ext", "window", "timeseries"))
 def win_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user maximum drawdown of the event-value series: how far (in
-    cents and in basis points of the peak) each user's value has fallen
-    below its running maximum — the equity-curve risk statistic, and the
-    window archetype win_rank/win_frame lack: a RUNNING extremum
-    consumed by a DOWNSTREAM expression in the same pass.
+    cents and in basis points of the peak) each user's value fell below
+    its running maximum — a RUNNING extremum consumed by a downstream
+    expression.
 
-    Exact integers end-to-end: cents via the repo-wide half-up floor,
-    the peak a running max (no accumulation error possible), the bp
-    ratio one integral division per row aggregated with max — so the
-    result hash-matches DuckDB exactly.
-
-    Scale: ONE exchange on user_id; the running max and the final
-    per-user aggregate share that partitioning (the window sort feeds
-    the hash agg without a second shuffle). Peak > 0 always (values are
-    positive cents), so the bp division needs no zero guard.
+    Exact integers end to end (half-up cents, a running max, one
+    integral division per row). ONE exchange on user_id: the window sort
+    feeds the per-user aggregate. Values are positive cents, so the
+    peak is never 0.
     """
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    r = base.select(
-        "user_id", "cents", F.max("cents").over(w).alias("peak")
-    )
-    return r.groupBy("user_id").agg(
-        F.count("*").cast("bigint").alias("n_events"),
-        F.max("peak").cast("bigint").alias("peak_cents"),
-        F.max(F.col("peak") - F.col("cents")).cast("bigint").alias("max_drawdown_cents"),
-        F.max(F.expr("(peak - cents) * 10000 div peak")).cast("bigint").alias("max_dd_bp"),
-    )
+    return run_sql(spark, sf_dir, _DRAWDOWN_SQL)
 
 
-# ---------------------------------------------------------------------------
-# Rolling Pearson correlation from exact integer moments
-# ---------------------------------------------------------------------------
-
-_ROLLCORR_FRAME = 7
-
-_ROLLCORR_ORACLE = f"""
+# `+ 0e0` normalizes IEEE -0.0: DuckDB's round keeps the sign, Spark's
+# drops it. Frame f is the current shipment and the 6 before it.
+_ROLLCORR_SQL = """
 WITH li AS (
     SELECT l_suppkey, l_shipdate, l_orderkey, l_linenumber,
            CAST(l_quantity AS BIGINT) AS q,
-           CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-    FROM lineitem
+           CAST(floor(l_extendedprice * 100 + 5e-1) AS BIGINT) AS cents
+    FROM {lineitem}
 ), s AS (
     SELECT l_suppkey,
            row_number() OVER w AS rid,
-           count(*)      OVER f AS n_frame,
-           sum(q)        OVER f AS sx,
-           sum(cents)    OVER f AS sy,
+           count(*) OVER f AS n_frame,
+           sum(q) OVER f AS sx,
+           sum(cents) OVER f AS sy,
            sum(q * cents) OVER f AS sxy,
-           sum(q * q)    OVER f AS sx2,
+           sum(q * q) OVER f AS sx2,
            sum(cents * cents) OVER f AS sy2
     FROM li
     WINDOW w AS (PARTITION BY l_suppkey
                  ORDER BY l_shipdate, l_orderkey, l_linenumber, q, cents),
            f AS (PARTITION BY l_suppkey
                  ORDER BY l_shipdate, l_orderkey, l_linenumber, q, cents
-                 ROWS BETWEEN {_ROLLCORR_FRAME - 1} PRECEDING AND CURRENT ROW)
+                 ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
 )
 SELECT l_suppkey, CAST(rid AS BIGINT) AS rid,
        CAST(n_frame AS BIGINT) AS n_frame,
-       CAST(n_frame * sxy - sx * sy AS BIGINT)  AS num,
-       CAST(n_frame * sx2 - sx * sx AS BIGINT)  AS denx,
-       CAST(n_frame * sy2 - sy * sy AS BIGINT)  AS deny,
+       CAST(n_frame * sxy - sx * sy AS BIGINT) AS num,
+       CAST(n_frame * sx2 - sx * sx AS BIGINT) AS denx,
+       CAST(n_frame * sy2 - sy * sy AS BIGINT) AS deny,
        round(CAST(n_frame * sxy - sx * sy AS DOUBLE)
              / sqrt(nullif(CAST(n_frame * sx2 - sx * sx AS DOUBLE)
-                           * CAST(n_frame * sy2 - sy * sy AS DOUBLE), 0)), 4)
-           + 0.0 AS corr4
+                           * CAST(n_frame * sy2 - sy * sy AS DOUBLE), 0e0)), 4)
+           + 0e0 AS corr4
 FROM s
 """
 
 
-@op("win_rolling_corr", oracle=_ROLLCORR_ORACLE, tags=("ext", "window", "scale"))
+@op("win_rolling_corr", oracle=duckdb_sql(_ROLLCORR_SQL), tags=("ext", "window", "scale"))
 def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling Pearson correlation between quantity and line revenue
-    over each supplier's last 7 shipments — the co-movement monitor
-    (is this supplier's price tracking volume, or decoupling?) that
-    engines only offer as an unbounded `corr` aggregate, here as a
-    trailing window.
+    over each supplier's last 7 shipments.
 
-    Exactness discipline (agg_corr_pairs / graph_assortativity): the
-    five frame moments (Σx, Σy, Σxy, Σx², Σy²) are exact bigints in
-    cents, the outputs `num`/`denx`/`deny` are the exact integer
-    correlation decomposition n·Σxy − Σx·Σy etc., and the only float
-    work is one division + sqrt over those identical integers, rounded
-    to 4. All moment magnitudes stay under 2⁵³ by construction
-    (7-row frame × cents ≤ 10⁷), so the double conversion is lossless
-    on both engines. Window order is totally tie-broken down to the
-    value columns — the fixture's duplicate (orderkey, linenumber) rows
-    (TESTDATA quirk) order arbitrarily only among identical rows, which
-    cannot change any frame's multiset.
-
-    Scale: one (suppkey) exchange + one sort feeds ALL six windowed
-    sums in a single WindowExec (same frame spec → one buffer pass);
-    bounded 7-row frames mean O(1) state per row. At 100 TB this is
-    the standard sort-window cost — no joins, no second shuffle.
+    The five frame moments are exact bigints in cents, and ``num``,
+    ``denx``, ``deny`` the exact integer decomposition (n·Σxy − Σx·Σy
+    etc.); the only float work is one division and sqrt, rounded to 4,
+    over moments under 2⁵³ (7 rows × cents ≤ 10⁷). The order is
+    tie-broken down to the value columns, so the fixture's duplicate
+    (orderkey, linenumber) rows can only swap identical rows. One
+    (suppkey) exchange and sort feed all six sums in one WindowExec.
     """
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_suppkey",
-        "l_shipdate",
-        "l_orderkey",
-        "l_linenumber",
-        F.col("l_quantity").cast("bigint").alias("q"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
-    )
-    order = ["l_shipdate", "l_orderkey", "l_linenumber", "q", "cents"]
-    w = Window.partitionBy("l_suppkey").orderBy(*order)
-    f = w.rowsBetween(-(_ROLLCORR_FRAME - 1), Window.currentRow)
-    s = li.select(
-        "l_suppkey",
-        F.row_number().over(w).alias("rid"),
-        F.count("*").over(f).alias("n_frame"),
-        F.sum("q").over(f).alias("sx"),
-        F.sum("cents").over(f).alias("sy"),
-        F.sum(F.col("q") * F.col("cents")).over(f).alias("sxy"),
-        F.sum(F.col("q") * F.col("q")).over(f).alias("sx2"),
-        F.sum(F.col("cents") * F.col("cents")).over(f).alias("sy2"),
-    )
-    num = F.col("n_frame") * F.col("sxy") - F.col("sx") * F.col("sy")
-    denx = F.col("n_frame") * F.col("sx2") - F.col("sx") * F.col("sx")
-    deny = F.col("n_frame") * F.col("sy2") - F.col("sy") * F.col("sy")
-    return s.select(
-        "l_suppkey",
-        F.col("rid").cast("bigint").alias("rid"),
-        F.col("n_frame").cast("bigint").alias("n_frame"),
-        num.cast("bigint").alias("num"),
-        denx.cast("bigint").alias("denx"),
-        deny.cast("bigint").alias("deny"),
-        # `+ 0.0` normalizes IEEE -0.0 (DuckDB's round keeps the sign,
-        # Spark's drops it) so the value hash agrees at exact zero.
-        (
-            F.round(
-                num.cast("double")
-                / F.sqrt(
-                    F.nullif(denx.cast("double") * deny.cast("double"), F.lit(0.0))
-                ),
-                4,
-            )
-            + F.lit(0.0)
-        ).alias("corr4"),
-    )
+    return run_sql(spark, sf_dir, _ROLLCORR_SQL)
 
 
-# ---------------------------------------------------------------------------
-# Time-weighted average (TWAP) over irregular event series
-# ---------------------------------------------------------------------------
-
-_TWAP_ORACLE = """
+_TWAP_SQL = """
 WITH e AS (
-    SELECT user_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-           CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v_bp,
+    SELECT user_id, {te} AS sec,
+           CAST(floor(value * 10000 + 5e-1) AS BIGINT) AS v_bp,
            event_id
-    FROM events WHERE event_type = 'click'
+    FROM {events} WHERE event_type = 'click'
 ), seg AS (
     SELECT user_id, v_bp,
-           lead(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id) - sec
-               AS dur
+           lead(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id) - sec AS dur
     FROM e
 )
 SELECT user_id,
@@ -763,189 +423,89 @@ SELECT user_id,
        CAST(sum(v_bp * dur) AS BIGINT) AS weighted_bp_sec,
        CAST(sum(dur) AS BIGINT) AS total_sec,
        round(CAST(sum(v_bp * dur) AS DOUBLE)
-             / nullif(CAST(sum(dur) AS DOUBLE) * 10000, 0), 6) + 0.0 AS twap
+             / nullif(CAST(sum(dur) AS DOUBLE) * 10000, 0e0), 6) + 0e0 AS twap
 FROM seg WHERE dur IS NOT NULL AND dur > 0
 GROUP BY user_id
 """
 
 
-@op("win_time_weighted_avg", oracle=_TWAP_ORACLE, tags=("ext", "window", "temporal"))
+@op("win_time_weighted_avg", oracle=duckdb_sql(_TWAP_SQL), tags=("ext", "window", "temporal"))
 def win_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average (TWAP) of each user's click metric — the
-    correct mean for IRREGULARLY sampled series, where the plain mean
-    over-weights bursts: each reading holds until the next one, so its
-    weight is its holding duration (lead(ts) − ts), the step-function
-    integral divided by elapsed time.
+    """Time-weighted average (TWAP) of each user's click metric, the
+    right mean for irregular samples: each reading holds until the next
+    one, so its weight is its holding time (lead(ts) − ts).
 
-    Exactness: readings quantized to basis points, durations in whole
-    seconds → the integral Σ v·dur and the denominator Σ dur are exact
-    bigints; the single float division happens once per user over those
-    identical integers (round 6, −0.0 normalized). Zero-duration
-    segments (same-second readings) are excluded on both engines — the
-    step function assigns them no measure.
-
-    Scale: one (user) exchange + sort for the lead, then a hash agg on
-    the same partitioning — Spark plans no second exchange. The classic
-    feature-store aggregation (sensor/price TWAP) with no interpolation
-    state to carry.
+    Readings in basis points and whole-second durations make Σ v·dur
+    and Σ dur exact bigints; one float division per user (round 6,
+    −0.0 normalized). Same-second readings get no measure on either
+    engine. One (user) exchange and sort for the lead; the aggregate
+    reuses the partitioning.
     """
-    e = load(spark, sf_dir, "events").filter(F.col("event_type") == "click").select(
-        "user_id",
-        epoch_seconds("ts").alias("sec"),
-        F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("bigint").alias("v_bp"),
-        "event_id",
-    )
-    w = Window.partitionBy("user_id").orderBy("sec", "event_id")
-    seg = e.select(
-        "user_id", "v_bp", (F.lead("sec").over(w) - F.col("sec")).alias("dur")
-    ).filter(F.col("dur").isNotNull() & (F.col("dur") > 0))
-    return seg.groupBy("user_id").agg(
-        F.count("*").cast("bigint").alias("n_segments"),
-        F.sum(F.col("v_bp") * F.col("dur")).cast("bigint").alias("weighted_bp_sec"),
-        F.sum("dur").cast("bigint").alias("total_sec"),
-        (
-            F.round(
-                F.sum(F.col("v_bp") * F.col("dur")).cast("double")
-                / F.nullif(F.sum("dur").cast("double") * 10000, F.lit(0.0)),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("twap"),
-    )
+    return run_sql(spark, sf_dir, _TWAP_SQL)
 
 
-# ---------------------------------------------------------------------------
-# Ratio-to-report: each day's share of its month, per series
-# ---------------------------------------------------------------------------
-
-_RTR_ORACLE = """
+_RTR_SQL = """
 WITH daily AS (
     SELECT event_type,
            CAST(date_trunc('day', ts) AS DATE) AS day,
            CAST(date_trunc('month', ts) AS DATE) AS month,
-           sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS cents
-    FROM events GROUP BY 1, 2, 3
+           sum(CAST(floor(value * 100 + 5e-1) AS BIGINT)) AS cents
+    FROM {events} GROUP BY 1, 2, 3
 )
 SELECT event_type, day,
        CAST(cents AS BIGINT) AS cents,
-       CAST(sum(cents) OVER (PARTITION BY event_type, month) AS BIGINT)
-           AS month_cents,
+       CAST(sum(cents) OVER (PARTITION BY event_type, month) AS BIGINT) AS month_cents,
        CAST(cents * 10000 // sum(cents) OVER (PARTITION BY event_type, month)
             AS BIGINT) AS share_bp
 FROM daily
 """
 
 
-@op("win_ratio_to_report", oracle=_RTR_ORACLE, tags=("ext", "window"))
+@op("win_ratio_to_report", oracle=duckdb_sql(_RTR_SQL), tags=("ext", "window"))
 def win_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RATIO_TO_REPORT: each day's revenue as basis points of its
-    month's total, per event type — the classic report-share analytic
-    (Oracle's RATIO_TO_REPORT, Teradata's ratio window) every finance
-    rollup uses to answer "which days carried the month". win_frame
-    computes running sums; this is the whole-partition-denominator
-    shape, which is its own window pattern (unbounded frame feeding a
-    division, not an accumulation).
+    month's total, per event type — the whole-partition-denominator
+    window (an unbounded frame feeding a division), which win_frame's
+    running sums do not cover.
 
-    Exact: daily cents are integer sums; the share is an integral
-    division against the exact month window sum — no float anywhere.
-
-    Scale: the corpus-sized work stops at the (type, day) hash agg;
-    the month window runs over the dim-bounded daily frame on the same
-    (event_type) exchange.
+    Exact: integer daily cents, an integral division by the exact month
+    sum. The event-sized work stops at the (type, day) aggregate; the
+    month window runs over the daily rows on the event_type exchange.
     """
-    daily = (
-        load(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-            F.date_trunc("month", "ts").cast("date").alias("month"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("c"),
-        )
-        .groupBy("event_type", "day", "month")
-        .agg(F.sum("c").alias("cents"))
-    )
-    w = Window.partitionBy("event_type", "month")
-    return daily.select(
-        "event_type",
-        "day",
-        F.col("cents").cast("bigint").alias("cents"),
-        F.sum("cents").over(w).cast("bigint").alias("month_cents"),
-        F.expr("cents * 10000").cast("bigint").alias("_num"),
-    ).select(
-        "event_type",
-        "day",
-        "cents",
-        "month_cents",
-        F.expr("_num div month_cents").cast("bigint").alias("share_bp"),
-    )
+    return run_sql(spark, sf_dir, _RTR_SQL)
 
 
-# ---------------------------------------------------------------------------
-# Current (trailing) activity streak per user — the live-streak counter
-# ---------------------------------------------------------------------------
-
-_STREAK_ORACLE = """
+_STREAK_SQL = """
 WITH d AS (
-    SELECT DISTINCT user_id,
-           CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day
-    FROM events
+    SELECT DISTINCT user_id, {te} // 86400 AS day FROM {events}
 ), v AS (
     SELECT user_id, day,
            day - row_number() OVER (PARTITION BY user_id ORDER BY day) AS grp
     FROM d
 ), g AS (
-    SELECT user_id, grp, count(*) AS streak_days, max(day) AS last_day,
-           row_number() OVER (PARTITION BY user_id ORDER BY max(day) DESC)
-               AS rk
-    FROM v GROUP BY 1, 2
+    SELECT user_id, count(*) AS streak_days, max(day) AS last_day
+    FROM v GROUP BY user_id, grp
+), r AS (
+    SELECT user_id, streak_days, last_day,
+           row_number() OVER (PARTITION BY user_id ORDER BY last_day DESC) AS rk
+    FROM g
 )
 SELECT user_id, CAST(last_day AS BIGINT) AS last_day,
        CAST(streak_days AS BIGINT) AS streak_days
-FROM g WHERE rk = 1
+FROM r WHERE rk = 1
 """
 
 
-@op("win_active_streak_latest", oracle=_STREAK_ORACLE, tags=("ext", "window"))
+@op("win_active_streak_latest", oracle=duckdb_sql(_STREAK_SQL), tags=("ext", "window"))
 def win_active_streak_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per user: the length of the TRAILING run of consecutive active
-    days ending at their most recent active day — the live streak
-    counter (as of each user's own last activity, never a wall clock —
-    reruns are reproducible). win_islands_consecutive enumerates ALL
-    historical runs; engagement features and streak-based nudges only
-    want the current one, and joining the full island list to find it
-    re-derives this op badly.
+    days ending at their most recent active day — the live streak as of
+    the user's own last activity, so reruns are reproducible.
+    win_islands_consecutive lists every run; this keeps the latest.
 
-    Exact: epoch-day buckets by integer div; the gaps-and-islands
-    day − row_number group key is pure integer arithmetic; the latest
-    island per user is a rank pick on max(day) (distinct by
-    construction — islands can't share a max day).
-
-    Scale: one distinct on (user, day) (two-phase), one rank window and
-    one hash agg, all exchanging on user_id — a single partitioning
-    reused end to end. Output is |users| rows.
+    Epoch-day buckets by integer div, the day − row_number island key,
+    and a rank pick on max(day) (islands cannot share one). One distinct
+    on (user, day), one rank window and one aggregate, all on the
+    user_id partitioning.
     """
-    d = (
-        load(spark, sf_dir, "events")
-        .select("user_id", epoch_div("ts", 86400).alias("day"))
-        .distinct()
-    )
-    v = d.withColumn(
-        "grp",
-        F.col("day")
-        - F.row_number().over(Window.partitionBy("user_id").orderBy("day")),
-    )
-    g = v.groupBy("user_id", "grp").agg(
-        F.count("*").alias("streak_days"), F.max("day").alias("last_day")
-    )
-    rk = F.row_number().over(
-        Window.partitionBy("user_id").orderBy(F.col("last_day").desc())
-    )
-    return (
-        g.withColumn("rk", rk)
-        .filter(F.col("rk") == 1)
-        .select(
-            "user_id",
-            F.col("last_day").cast("bigint").alias("last_day"),
-            F.col("streak_days").cast("bigint").alias("streak_days"),
-        )
-    )
+    return run_sql(spark, sf_dir, _STREAK_SQL)

@@ -12,10 +12,24 @@ from pyspark.sql import DataFrame
 
 
 def formatted_plan(df: DataFrame) -> str:
-    """The formatted physical plan (AQE initial plan for batch frames)."""
-    return df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    """The formatted physical plan as planned before execution.
+
+    Once a batch frame has run an action, its adaptive plan is final and
+    prints its final form above the initial one, so every operator would
+    appear twice. Such a frame is planned afresh from its analyzed plan
+    (commands in it are not run again), which gives the string the frame
+    printed before the action, unless its plan was bound under session
+    confs that are no longer set (``scan_agg_pushdown``).
+    """
+    jvm = df.sparkSession._jvm
+    qe = df._jdf.queryExecution()
+    if not df.isStreaming:
+        plan = qe.executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec" and plan.isFinalPlan():
+            qe = df.sparkSession._jsparkSession.sessionState().executePlan(
+                qe.analyzed(), jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP()
+            )
+    return qe.explainString(jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
 
 def assert_in_plan(df: DataFrame, *needles: str) -> str:

@@ -27,6 +27,27 @@ def _q(key, spark):
     return registry.OPS[key].fn(spark, SF_DIR)
 
 
+
+def test_plan_helpers_read_the_pre_execution_plan_after_an_action(spark):
+    """An action makes the adaptive plan final, and its own explain
+    string then prints the final and the initial plan; the helpers must
+    still read the one pre-execution plan, so a count taken after
+    ``collect()`` equals the count taken before it."""
+    df = _q("pipeline_forecast_revenue", spark)
+
+    def read():
+        return (
+            count_in_plan(df, "Exchange"),
+            count_in_plan(df, "HashAggregate"),
+            plan_snapshot(df),
+        )
+
+    before = read()
+    df.collect()
+    assert read() == before
+    assert before[:2] == (1, 2)
+    assert "Final Plan" not in formatted_plan(df)
+
 def test_join_broadcast_is_broadcast(spark):
     """Dim joins must be BroadcastHashJoin — zero shuffle of the fact side."""
     plan = assert_in_plan(_q("join_broadcast", spark), "BroadcastHashJoin")
@@ -2040,6 +2061,42 @@ _SQL_FRONT_PLAN_SHAPE = {
     "pipeline_price_dispersion": (2, 1),
     "pipeline_new_vs_repeat_revenue": (2, 1),
     "pipeline_vendor_consolidation_savings": (3, 1),
+    # subquery pipelines
+    "pipeline_large_volume_orders": (2, 4),
+    "pipeline_dormant_accounts": (2, 3),
+    "pipeline_late_shipment_priority": (1, 2),
+    "pipeline_mincost_supplier": (1, 5),
+    "pipeline_important_part_share": (4, 6),
+    "pipeline_supplier_part_counts": (3, 3),
+    "pipeline_small_qty_revenue": (2, 3),
+    "pipeline_promotion_suppliers": (2, 5),
+    "pipeline_waiting_suppliers": (2, 3),
+    # set operations
+    "set_union": (1, 2),
+    "set_union_all": (0, 2),
+    "set_intersect": (1, 2),
+    "set_intersect_all": (1, 2),
+    "set_except": (1, 2),
+    "set_except_all": (1, 2),
+    # projection, filter, sort, limit
+    "project_select": (0, 1),
+    "filter_pred": (0, 1),
+    "sort_global": (1, 1),
+    "limit_topk": (0, 1),
+    # extended windows
+    "win_range_interval": (1, 1),
+    "win_distribution": (1, 1),
+    "win_fill_forward": (1, 1),
+    "win_rolling_stats": (1, 1),
+    "win_cumulative_distinct": (1, 1),
+    "win_islands_consecutive": (2, 1),
+    "win_pattern_rises": (1, 1),
+    "win_clamped_cumsum": (1, 1),
+    "win_drawdown": (1, 1),
+    "win_rolling_corr": (1, 1),
+    "win_time_weighted_avg": (1, 1),
+    "win_ratio_to_report": (2, 1),
+    "win_active_streak_latest": (2, 1),
 }
 
 

@@ -448,27 +448,28 @@ def test_bitmap_distinct_exact_on_random_multisets(spark, vals):
 )
 @_settings
 def test_fill_forward_matches_sequential_fold(spark, rows):
-    """win_fill_forward's window must equal the obvious per-key sequential
+    """win_fill_forward's text must equal the obvious per-key sequential
     LOCF fold, including all-null prefixes and timestamp ties (broken on
     event_id)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
+    from connor_fun_streamproducer_spark.operators.sql_front import spark_sql
+    from connor_fun_streamproducer_spark.operators.windows_ext import _FILL_FORWARD_SQL
 
     data = [
         (i, user, sec, float(v) if has else None)
         for i, (user, sec, has, v) in enumerate(rows)
     ]
-    df = spark.createDataFrame(data, "event_id long, user_id long, sec long, v double")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("sec", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    events = spark.createDataFrame(
+        data, "event_id long, user_id long, sec long, v double"
+    ).select(
+        "event_id",
+        "user_id",
+        F.timestamp_seconds("sec").alias("ts"),
+        F.when(F.col("v").isNotNull(), "click").otherwise("view").alias("event_type"),
+        F.coalesce("v", F.lit(-1.0)).alias("value"),
     )
     got = {
-        r["event_id"]: r["f"]
-        for r in df.select(
-            "event_id", F.last("v", ignorenulls=True).over(w).alias("f")
-        ).collect()
+        r["event_id"]: r["filled_value"]
+        for r in spark.sql(spark_sql(_FILL_FORWARD_SQL), events=events).collect()
     }
     # sequential reference fold
     expected = {}
@@ -617,6 +618,32 @@ def test_min_label_propagation_converges_on_worst_case_path(spark):
     assert all(got[n] == 7 for n in (7, 8, 9))
     assert got[999] == 999
 
+
+
+def test_cc_labels_build_runs_one_aggregation_per_round(spark, tmp_path):
+    """One cold build of the connected-components labels at sf0.01 (a
+    private copy of events, so the artifact is built, not served) stays
+    within 44 Spark jobs: each round is one union-and-min aggregation
+    checkpointed with its label sum observed on the same job. The round
+    form that joined a separate per-round minimum back and collected the
+    sum took 77."""
+    import shutil
+
+    import duckdb
+
+    from connor_fun_streamproducer_spark import registry
+    from connor_fun_streamproducer_spark.catalog import table_path
+    from connor_fun_streamproducer_spark.operators.graph import _cc_labels
+    from tests.test_schema_memo import _jobs
+
+    sf = "/root/testdata/sf0.01"
+    shutil.copy2(table_path(sf, "events"), table_path(str(tmp_path), "events"))
+    labels, jobs = _jobs(spark, lambda: _cc_labels(spark, str(tmp_path)))
+    assert jobs <= 44, jobs
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{table_path(sf, 'events')}')")
+    want = dict(con.sql(registry.OPS["graph_connected_components"].oracle).fetchall())
+    assert {r["node"]: r["component"] for r in labels.collect()} == want
 
 def test_pca_projection_matches_numpy_reference(spark):
     """embedding_pca_project (hash-checked since r13: the driver eigh
@@ -4807,6 +4834,40 @@ def _write_documents(tmp_path, rows):
     )
 
 
+
+def test_exact_normalized_dedup_matches_python_replay(spark, tmp_path):
+    """dedup_exact_normalized finds no copies in any shared fixture, so
+    its keeper logic is checked here: copies that differ only in case,
+    punctuation and spacing share one normalized digest, the smallest
+    doc_id keeps it, and every other member reports that keeper."""
+    import hashlib
+    import re
+
+    from connor_fun_streamproducer_spark import registry
+
+    registry._ensure_loaded()
+    texts = [
+        "Hello, World!", "hello world", "HELLO   WORLD...", "  hello world  ",
+        "Goodbye", "good-bye", "Unique text 42", "unique TEXT 42!", "other words",
+        "Other   Words?", "Other words", "a lone document",
+    ]
+    _write_documents(tmp_path, [
+        dict(doc_id=10 * i + 5, text=t, lang="en", source="s") for i, t in enumerate(texts)
+    ])
+    groups: dict = {}
+    for i, t in enumerate(texts):
+        norm = re.sub(" +", " ", re.sub("[^a-z0-9 ]", "", t.lower())).strip(" ")
+        groups.setdefault(hashlib.md5(norm.encode()).hexdigest(), []).append(10 * i + 5)
+    want = sorted(
+        (d, min(ids), digest, len(ids))
+        for digest, ids in groups.items() for d in ids if d != min(ids)
+    )
+    got = sorted(
+        (r["doc_id"], r["keeper_doc_id"], r["digest"], r["n_members"])
+        for r in registry.OPS["dedup_exact_normalized"].fn(spark, str(tmp_path)).collect()
+    )
+    assert len(want) == 7 and got == want
+
 def test_dunn_posthoc_matches_python_reference(spark, tmp_path):
     """stats_dunn_posthoc vs a textbook average-rank Dunn z with tie
     correction (the op carries doubled min+max ranks; plain average
@@ -6162,6 +6223,537 @@ def _replay_customer_distribution():
     return list(dist.items())
 
 
+# Relational fixture for the subquery, set-operation, projection and
+# window replays: random orders, lines and events plus hand-placed rows
+# that sit on each text's boundaries (noted where they are added).
+_RL_REGIONS = [(0, "AFRICA"), (3, "EUROPE")]
+_RL_NATIONS = [(0, "NATION_0", 0), (3, "NATION_3", 3), (5, "NATION_5", 3)]
+# (s_suppkey, s_name, s_nationkey, s_acctbal); names ending in 7 are denied
+_RL_SUPPLIERS = [
+    (1, "S1", 3, 500.25), (2, "S2", 5, 120.5), (3, "S3", 0, 900.0), (4, "S4", 3, -20.0),
+    (7, "S7", 5, 300.0), (8, "S8", 3, 75.0), (9, "S9", 0, 60.0), (17, "S17", 0, 10.0),
+]
+# (p_partkey, p_name, p_brand, p_type, p_size)
+_RL_PARTS = [
+    (1, "red apple", "Brand#3", "ECONOMY", 15), (2, "red rose", "Brand#1", "STANDARD", 4),
+    (3, "blue sky", "Brand#5", "PROMO", 9), (4, "green tea", "Brand#3", "ECONOMY", 14),
+    (5, "redwood", "Brand#2", "PROMO", 15), (6, "black ink", "Brand#1", "STANDARD", 19),
+    (7, "tiny pin", "Brand#1", "STANDARD", 1),
+]
+# (c_custkey, c_name, c_acctbal, c_mktsegment): the positive balances
+# average 958.33 (821.43 if the 0.0 balance counted), so C5-C7 clear it
+_RL_CUSTOMERS = [
+    (1, "C1", -5.0, "A"), (2, "C2", 0.0, "B"), (3, "C3", 100.0, "A"), (4, "C4", 900.0, "B"),
+    (5, "C5", 1200.0, "A"), (6, "C6", 1500.0, "A"), (7, "C7", 2000.0, "B"), (8, "C8", 50.0, "A"),
+]
+
+
+def _rl_tables():
+    """(orders, lines, events) as tuples:
+    orders (o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority),
+    lines (l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity, l_extendedprice,
+    l_discount, l_returnflag, l_shipdate), events (event_id, epoch_s, user_id, event_type,
+    value); dates are datetime.date."""
+    import datetime
+    import random
+
+    rng = random.Random(20260101)
+    day0 = datetime.date(1996, 1, 1)
+    orders, lines = [], []
+    for k in range(1, 49):
+        orders.append((
+            k, rng.choice([1, 2, 3, 4, 5, 6, 8]), rng.choice("OFFP"),
+            rng.randint(500, 250000) + rng.randint(0, 99) / 100,
+            day0 + datetime.timedelta(days=12 * rng.randint(0, 58)),
+            rng.choice(["1-URGENT", "2-HIGH", "3-MEDIUM", "5-LOW"]),
+        ))
+    # C5's only recent order falls on the NOT EXISTS bound itself
+    orders.append((49, 5, "O", 1234.5, datetime.date(1998, 1, 1), "2-HIGH"))
+    # two orders over the 200-unit volume cut, all lines shipped 1997
+    orders.append((50, 3, "F", 180000.0, datetime.date(1997, 2, 1), "1-URGENT"))
+    orders.append((51, 6, "F", 90000.0, datetime.date(1997, 3, 1), "3-MEDIUM"))
+    # the one big spender who never ordered urgently
+    orders.append((52, 7, "O", 160000.0, datetime.date(1997, 6, 1), "2-HIGH"))
+    # C2's last orders rise with a tie: 100, 200, 200, 300
+    for k, price in enumerate([100.0, 200.0, 200.0, 300.0], 53):
+        orders.append((k, 2, "O", price, datetime.date(1997, 12, k - 43), "5-LOW"))
+    oday = {o[0]: o[4] for o in orders}
+    for o in orders[:48]:
+        for ln in range(1, rng.randint(1, 6) + 1):
+            lines.append((
+                o[0], rng.choice([1, 2, 3, 5, 6]), rng.choice([1, 2, 3, 4, 7, 17]), ln,
+                float(rng.randint(1, 50)), rng.randint(10000, 500000) / 100,
+                rng.choice([0.0, 0.05, 0.1]), rng.choice("NRA"),
+                o[4] + datetime.timedelta(days=rng.randint(1, 120)),
+            ))
+
+    def line(k, ln, part, supp, qty, price, lag, disc=0.0):
+        lines.append((k, part, supp, ln, float(qty), price, disc, "N",
+                      oday[k] + datetime.timedelta(days=lag)))
+
+    for ln, qty in enumerate([45, 48, 50, 47, 46], 1):
+        line(50, ln, 1, 1, qty, 1000.0 + ln, 10)
+    for ln, qty in enumerate([50, 50, 50, 50, 6], 1):
+        # part 4's own average caps at 8.24: the 6-unit line is small
+        # against it, not against the whole fact's average
+        line(51, ln, 4, 2, qty, 2000.0 + ln, 20)
+    # S8 moves exactly 40 units of a red part in 1997, S2 moves 41
+    line(50, 6, 2, 8, 25, 300.0, 30)
+    line(50, 7, 2, 8, 15, 310.0, 40)
+    line(51, 6, 5, 2, 20, 320.0, 50)
+    line(51, 7, 5, 2, 21, 330.0, 60)
+    # an AFRICA supplier moving 50 red units; a NATION_3 part under 0.1%
+    line(51, 8, 1, 9, 50, 340.0, 70)
+    line(51, 9, 7, 4, 1, 50.0, 80)
+
+    events = []
+    t0 = 1706400000  # 2024-01-28T00:00:00Z: the series cross into February
+    for user in (1, 2, 3):
+        t = t0 + 3600 * user
+        for i in range(40):
+            t += rng.choice([0, 30, 600, 3600, 86400, 86400, 2 * 86400 + 100])
+            events.append((len(events) + 1, t, user, rng.choice(["click", "purchase", "view"]),
+                           rng.randint(100, 99999) / 100))
+    return orders, lines, events
+
+
+@pytest.fixture(scope="module")
+def relational_replay_dir(tmp_path_factory):
+    import pandas as pd
+
+    orders, lines, events = _rl_tables()
+    d = tmp_path_factory.mktemp("relational_replays")
+
+    def write(name, rows, cols, **kw):
+        pd.DataFrame(rows, columns=cols).to_parquet(d / f"{name}.parquet", index=False, **kw)
+
+    write("region", _RL_REGIONS, ["r_regionkey", "r_name"])
+    write("nation", _RL_NATIONS, ["n_nationkey", "n_name", "n_regionkey"])
+    write("supplier", _RL_SUPPLIERS, ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"])
+    write("part", [p + (10.0,) for p in _RL_PARTS],
+          ["p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"])
+    write("customer", [(k, n, 0, b, s) for k, n, b, s in _RL_CUSTOMERS],
+          ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"])
+    write("orders", [o[:4] + (pd.Timestamp(o[4]),) + o[5:] for o in orders],
+          ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate",
+           "o_orderpriority"], coerce_timestamps="us")
+    write("lineitem", [li[:8] + ("F", pd.Timestamp(li[8])) for li in lines],
+          ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
+           "l_extendedprice", "l_discount", "l_returnflag", "l_linestatus", "l_shipdate"],
+          coerce_timestamps="us")
+    write("events", [(e, pd.Timestamp(t, unit="s"), u, et, v, "{}") for e, t, u, et, v in events],
+          ["event_id", "ts", "user_id", "event_type", "value", "props"])
+    return str(d)
+
+
+def _hu(x, n):
+    """Spark's round(x, n) of a double: HALF_UP on its shortest decimal."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    if x is None:
+        return None
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-n), rounding=ROUND_HALF_UP))
+
+
+def _cents(v):
+    import math
+
+    return math.floor(v * 100 + 0.5)
+
+
+def _esec(day):
+    import datetime
+
+    return (day - datetime.date(1970, 1, 1)).days * 86400
+
+
+def _rl_europe():
+    nations = {k: (n, r) for k, n, r in _RL_NATIONS}
+    return {s: (name, bal, nations[nk][0]) for s, name, nk, bal in _RL_SUPPLIERS
+            if nations[nk][1] == 3}
+
+
+def _replay_large_volume_orders():
+    orders, lines, _ = _rl_tables()
+    qty, names = {}, {k: n for k, n, _, _ in _RL_CUSTOMERS}
+    for li in lines:
+        qty[li[0]] = qty.get(li[0], 0.0) + li[4]
+    big = [o for o in orders if qty.get(o[0], 0) > 200]
+    big.sort(key=lambda o: (-_hu(o[3], 4), o[0]))
+    return [(o[0], names[o[1]], _hu(o[3], 4), _hu(qty[o[0]], 4)) for o in big[:20]]
+
+
+def _replay_dormant_accounts():
+    import datetime
+
+    orders, _, _ = _rl_tables()
+    pos = [b for _, _, b, _ in _RL_CUSTOMERS if b > 0]
+    recent = {o[1] for o in orders if o[4] >= datetime.date(1998, 1, 1)}
+    seg = {}
+    for k, _, b, s in _RL_CUSTOMERS:
+        if b > sum(pos) / len(pos) and k not in recent:
+            n, tot = seg.get(s, (0, 0.0))
+            seg[s] = (n + 1, tot + b)
+    return [(s, n, _hu(tot, 4)) for s, (n, tot) in seg.items()]
+
+
+def _replay_late_shipment_priority():
+    import datetime
+
+    orders, lines, _ = _rl_tables()
+    late = {li[0] for li in lines for o in orders
+            if o[0] == li[0] and li[8] > o[4] + datetime.timedelta(days=60)}
+    out = {}
+    for o in orders:
+        if datetime.date(1997, 1, 1) <= o[4] < datetime.date(1997, 4, 1) and o[0] in late:
+            out[o[5]] = out.get(o[5], 0) + 1
+    return list(out.items())
+
+
+def _replay_mincost_supplier():
+    _, lines, _ = _rl_tables()
+    eu, size = _rl_europe(), {p[0]: p[4] for p in _RL_PARTS}
+    offers = [(li[1], li[8].year, _cents(li[5]), li[2]) for li in lines if li[2] in eu]
+    low = {}
+    for p, y, c, _ in offers:
+        low[(p, y)] = min(low.get((p, y), c), c)
+    rows = {(p, y, _hu(c / 100.0, 2), eu[s][0], _hu(eu[s][1], 4), eu[s][2])
+            for p, y, c, s in offers if c == low[(p, y)] and size[p] == 15}
+    return sorted(rows, key=lambda r: (-r[4], r[5], r[3], r[0], r[1]))[:100]
+
+
+def _replay_important_part_share():
+    _, lines, _ = _rl_tables()
+    n3 = {s for s, _, nk, _ in _RL_SUPPLIERS if nk == 3}
+    v = {}
+    for li in lines:
+        if li[2] in n3:
+            v[li[1]] = v.get(li[1], 0) + _cents(li[5] * (1 - li[6]))
+    cut = sum(v.values()) * 0.001
+    return [(p, _hu(c / 100.0, 2)) for p, c in v.items() if c > cut]
+
+
+def _replay_supplier_part_counts():
+    _, lines, _ = _rl_tables()
+    deny = {s for s, name, _, _ in _RL_SUPPLIERS if name.endswith("7")}
+    parts = {p: (b, t, sz) for p, _, b, t, sz in _RL_PARTS
+             if b != "Brand#5" and t != "PROMO" and sz in (1, 4, 9, 14, 19, 24, 29, 34)}
+    out = {}
+    for li in lines:
+        if li[1] in parts and li[2] not in deny:
+            out.setdefault(parts[li[1]], set()).add(li[2])
+    return [g + (len(s),) for g, s in out.items()]
+
+
+def _replay_small_qty_revenue():
+    _, lines, _ = _rl_tables()
+    by_part = {}
+    for li in lines:
+        by_part.setdefault(li[1], []).append(li[4])
+    gated = {p for p, _, b, t, _ in _RL_PARTS if b == "Brand#3" and t == "ECONOMY"}
+    hit = [_cents(li[5]) for li in lines if li[1] in gated
+           and li[4] < sum(by_part[li[1]]) / len(by_part[li[1]]) * 0.2]
+    return [(_hu(sum(hit) / 700.0, 2) if hit else None,)]
+
+
+def _replay_promotion_suppliers():
+    import datetime
+
+    _, lines, _ = _rl_tables()
+    red = {p for p, name, _, _, _ in _RL_PARTS if name.startswith("red")}
+    vol = {}
+    for li in lines:
+        if li[1] in red and datetime.date(1997, 1, 1) <= li[8] < datetime.date(1998, 1, 1):
+            vol[(li[2], li[1])] = vol.get((li[2], li[1]), 0.0) + li[4]
+    movers = {s for (s, _), q in vol.items() if q > 40}
+    return [(name, nation) for s, (name, _, nation) in _rl_europe().items() if s in movers]
+
+
+def _replay_waiting_suppliers():
+    import datetime
+
+    orders, lines, _ = _rl_tables()
+    final = {o[0]: o[4] for o in orders if o[2] == "F"}
+    late = {}
+    for li in lines:
+        if li[0] in final:
+            key = (li[0], li[2])
+            is_late = li[8] > final[li[0]] + datetime.timedelta(days=90)
+            late[key] = max(late.get(key, 0), int(is_late))
+    per_order = {}
+    for (k, _), v in late.items():
+        n, nl = per_order.get(k, (0, 0))
+        per_order[k] = (n + 1, nl + v)
+    names = {s: name for s, name, _, _ in _RL_SUPPLIERS}
+    out = {}
+    for (k, s), v in late.items():
+        if v == 1 and per_order[k][0] >= 2 and per_order[k][1] == 1 and s in names:
+            out[names[s]] = out.get(names[s], 0) + 1
+    return sorted(out.items(), key=lambda r: (-r[1], r[0]))[:100]
+
+
+def _rl_sets():
+    orders, _, _ = _rl_tables()
+    return ([o[1] for o in orders if o[3] > 150000],
+            [o[1] for o in orders if o[5] == "1-URGENT"])
+
+
+def _replay_set(kind):
+    from collections import Counter
+
+    def replay():
+        a, b = _rl_sets()
+        ca, cb = Counter(a), Counter(b)
+        bag = {
+            "union": set(a) | set(b), "union_all": a + b,
+            "intersect": set(a) & set(b), "intersect_all": (ca & cb).elements(),
+            "except": set(a) - set(b), "except_all": (ca - cb).elements(),
+        }[kind]
+        return [(k,) for k in bag]
+
+    return replay
+
+
+def _replay_project_select():
+    _, lines, _ = _rl_tables()
+    return [(li[0], li[3], _hu(li[5] * (1 - li[6]), 4), li[7].upper()) for li in lines]
+
+
+def _replay_filter_pred():
+    orders, _, _ = _rl_tables()
+    return [(o[0], o[1], o[3], o[5]) for o in orders
+            if o[2] in ("O", "F") and 1000 <= o[3] <= 200000 and "URGENT" in o[5]]
+
+
+def _replay_sort_global():
+    return [(k, n, _hu(b, 4)) for k, n, b, _ in _RL_CUSTOMERS]
+
+
+def _replay_limit_topk():
+    orders, _, _ = _rl_tables()
+    return [(o[0], _hu(o[3], 4)) for o in sorted(orders, key=lambda o: (-o[3], o[0]))[:25]]
+
+
+def _rl_by_customer():
+    """o_custkey -> [(epoch_s, o_orderkey, o_totalprice)] in (date, key) order."""
+    orders, _, _ = _rl_tables()
+    out = {}
+    for o in orders:
+        out.setdefault(o[1], []).append((_esec(o[4]), o[0], o[3]))
+    return {c: sorted(s) for c, s in out.items()}
+
+
+def _replay_range_interval():
+    rows = []
+    for cust, s in _rl_by_customer().items():
+        for sec, k, _ in s:
+            frame = [p for t, _, p in s if sec - 2592000 <= t <= sec]
+            rows.append((k, cust, len(frame), _hu(sum(frame), 2)))
+    return rows
+
+
+def _replay_distribution():
+    orders, _, _ = _rl_tables()
+    rows = []
+    for status in {o[2] for o in orders}:
+        part = sorted((_hu(o[3], 4), o[0]) for o in orders if o[2] == status)
+        n = len(part)
+        size, extra = divmod(n, 4)
+        for i, (_, k) in enumerate(part):
+            big = extra * (size + 1)  # the first `extra` tiles hold one row more
+            tile = i // (size + 1) if i < big else (i - big) // size + extra
+            rows.append((k, status, tile + 1, _hu(i / (n - 1) if n > 1 else 0.0, 6),
+                         _hu((i + 1) / n, 6)))
+    return rows
+
+
+def _rl_by_user():
+    """user_id -> [(epoch_s, event_id, event_type, value)] in (ts, event_id) order."""
+    _, _, events = _rl_tables()
+    out = {}
+    for e, t, u, et, v in events:
+        out.setdefault(u, []).append((t, e, et, v))
+    return {u: sorted(s) for u, s in out.items()}
+
+
+def _replay_fill_forward():
+    rows = []
+    for user, s in _rl_by_user().items():
+        last = None
+        for _, e, et, v in s:
+            last = v if et == "click" else last
+            rows.append((e, user, _hu(last, 6)))
+    return rows
+
+
+def _replay_rolling_stats():
+    rows = []
+    for cust, s in _rl_by_customer().items():
+        cents = [_cents(p) for _, _, p in s]
+        for i, (_, k, _) in enumerate(s):
+            f = cents[max(0, i - 3): i + 1]
+            rows.append((k, cust, len(f), _hu(sum(f) / (100.0 * len(f)), 4),
+                         _hu(max(f) / 100.0, 2), _hu(min(f) / 100.0, 2)))
+    return rows
+
+
+def _replay_cumulative_distinct():
+    rows = []
+    for user, s in _rl_by_user().items():
+        seen = set()
+        for _, e, et, _ in s:
+            seen.add(et)
+            rows.append((e, user, len(seen)))
+    return rows
+
+
+def _rl_islands():
+    """user_id -> [(first_day, last_day)] runs of consecutive active days."""
+    out = {}
+    for user, s in _rl_by_user().items():
+        runs = []
+        for d in sorted({t // 86400 for t, _, _, _ in s}):
+            if runs and runs[-1][1] == d - 1:
+                runs[-1][1] = d
+            else:
+                runs.append([d, d])
+        out[user] = runs
+    return out
+
+
+def _replay_islands_consecutive():
+    return [(u, len(r), max(b - a + 1 for a, b in r), sum(b - a + 1 for a, b in r))
+            for u, r in _rl_islands().items()]
+
+
+def _replay_active_streak_latest():
+    return [(u, r[-1][1], r[-1][1] - r[-1][0] + 1) for u, r in _rl_islands().items()]
+
+
+def _replay_pattern_rises():
+    rows = []
+    for cust, s in _rl_by_customer().items():
+        c = [_cents(p) for _, _, p in s]
+        n = sum(c[i - 2] < c[i - 1] < c[i] for i in range(2, len(c)))
+        if n:
+            rows.append((cust, n))
+    return rows
+
+
+def _replay_drawdown():
+    rows = []
+    for user, s in _rl_by_user().items():
+        peak, dd, bp = 0, 0, 0
+        for _, _, _, v in s:
+            c = _cents(v)
+            peak = max(peak, c)
+            dd, bp = max(dd, peak - c), max(bp, (peak - c) * 10000 // peak)
+        rows.append((user, len(s), peak, dd, bp))
+    return rows
+
+
+def _replay_rolling_corr():
+    import math
+
+    _, lines, _ = _rl_tables()
+    by_supp = {}
+    for li in lines:
+        by_supp.setdefault(li[2], []).append((li[8], li[0], li[3], int(li[4]), _cents(li[5])))
+    rows = []
+    for supp, s in by_supp.items():
+        s.sort()
+        for i in range(len(s)):
+            f = s[max(0, i - 6): i + 1]
+            n = len(f)
+            sx, sy = sum(r[3] for r in f), sum(r[4] for r in f)
+            num = n * sum(r[3] * r[4] for r in f) - sx * sy
+            denx = n * sum(r[3] * r[3] for r in f) - sx * sx
+            deny = n * sum(r[4] * r[4] for r in f) - sy * sy
+            prod = float(denx) * float(deny)
+            corr = None if prod == 0 else _hu(float(num) / math.sqrt(prod), 4) + 0.0
+            rows.append((supp, i + 1, n, num, denx, deny, corr))
+    return rows
+
+
+def _replay_time_weighted_avg():
+    import math
+
+    rows = []
+    for user, s in _rl_by_user().items():
+        clicks = [(t, math.floor(v * 10000 + 0.5)) for t, _, et, v in s if et == "click"]
+        seg = [(bp, b - a) for (a, bp), (b, _) in zip(clicks, clicks[1:]) if b > a]
+        if seg:
+            w, tot = sum(bp * d for bp, d in seg), sum(d for _, d in seg)
+            rows.append((user, len(seg), w, tot, _hu(float(w) / (float(tot) * 10000), 6) + 0.0))
+    return rows
+
+
+def _replay_ratio_to_report():
+    import datetime
+
+    _, _, events = _rl_tables()
+    daily = {}
+    for _, t, _, et, v in events:
+        day = datetime.date(1970, 1, 1) + datetime.timedelta(days=t // 86400)
+        daily[(et, day)] = daily.get((et, day), 0) + _cents(v)
+    month = {}
+    for (et, day), c in daily.items():
+        month[(et, day.replace(day=1))] = month.get((et, day.replace(day=1)), 0) + c
+    rows = []
+    for (et, day), c in daily.items():
+        m = month[(et, day.replace(day=1))]
+        rows.append((et, day, c, m, c * 10000 // m))
+    return rows
+
+
+# replays over relational_replay_dir
+_RELATIONAL_REPLAYS = {
+    "pipeline_large_volume_orders": (_replay_large_volume_orders, (
+        "o_orderkey", "c_name", "o_totalprice", "total_qty")),
+    "pipeline_dormant_accounts": (_replay_dormant_accounts, (
+        "c_mktsegment", "n_cust", "total_bal")),
+    "pipeline_late_shipment_priority": (_replay_late_shipment_priority, (
+        "o_orderpriority", "n_orders")),
+    "pipeline_mincost_supplier": (_replay_mincost_supplier, (
+        "p_partkey", "l_year", "min_cost", "s_name", "s_acctbal", "n_name")),
+    "pipeline_important_part_share": (_replay_important_part_share, ("partkey", "value")),
+    "pipeline_supplier_part_counts": (_replay_supplier_part_counts, (
+        "p_brand", "p_type", "p_size", "supplier_cnt")),
+    "pipeline_small_qty_revenue": (_replay_small_qty_revenue, ("avg_yearly",)),
+    "pipeline_promotion_suppliers": (_replay_promotion_suppliers, ("s_name", "n_name")),
+    "pipeline_waiting_suppliers": (_replay_waiting_suppliers, ("s_name", "numwait")),
+    **{f"set_{kind}": (_replay_set(kind), ("custkey",)) for kind in (
+        "union", "union_all", "intersect", "intersect_all", "except", "except_all")},
+    "project_select": (_replay_project_select, (
+        "l_orderkey", "l_linenumber", "net_price", "flag")),
+    "filter_pred": (_replay_filter_pred, (
+        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")),
+    "sort_global": (_replay_sort_global, ("c_custkey", "c_name", "acctbal")),
+    "limit_topk": (_replay_limit_topk, ("o_orderkey", "total")),
+    "win_range_interval": (_replay_range_interval, (
+        "o_orderkey", "o_custkey", "n_orders_30d", "total_30d")),
+    "win_distribution": (_replay_distribution, (
+        "o_orderkey", "o_orderstatus", "quartile", "pct_rank", "cume")),
+    "win_fill_forward": (_replay_fill_forward, ("event_id", "user_id", "filled_value")),
+    "win_rolling_stats": (_replay_rolling_stats, (
+        "o_orderkey", "o_custkey", "roll_n", "roll_avg", "roll_max", "roll_min")),
+    "win_cumulative_distinct": (_replay_cumulative_distinct, (
+        "event_id", "user_id", "distinct_types_so_far")),
+    "win_islands_consecutive": (_replay_islands_consecutive, (
+        "user_id", "n_islands", "max_run", "active_days")),
+    "win_active_streak_latest": (_replay_active_streak_latest, (
+        "user_id", "last_day", "streak_days")),
+    "win_pattern_rises": (_replay_pattern_rises, ("o_custkey", "n_rise3")),
+    "win_drawdown": (_replay_drawdown, (
+        "user_id", "n_events", "peak_cents", "max_drawdown_cents", "max_dd_bp")),
+    "win_rolling_corr": (_replay_rolling_corr, (
+        "l_suppkey", "rid", "n_frame", "num", "denx", "deny", "corr4")),
+    "win_time_weighted_avg": (_replay_time_weighted_avg, (
+        "user_id", "n_segments", "weighted_bp_sec", "total_sec", "twap")),
+    "win_ratio_to_report": (_replay_ratio_to_report, (
+        "event_type", "day", "cents", "month_cents", "share_bp")),
+}
+
 # key -> (replay, output columns compared); float columns compare to 2e-6
 _SQL_REPLAYS = {
     "ts_pacf": (_replay_pacf, ("event_type", "pacf_1", "pacf_2", "pacf_3")),
@@ -6194,6 +6786,7 @@ _SQL_REPLAYS = {
         "week", "n_opened", "n_closed", "backlog_orders", "backlog_cents")),
     "pipeline_customer_distribution": (_replay_customer_distribution, (
         "c_count", "custdist")),
+    **_RELATIONAL_REPLAYS,
 }
 # keys whose replay reads another fixture than replay_dir
 _REPLAY_FIXTURES = {
@@ -6204,6 +6797,7 @@ _REPLAY_FIXTURES = {
     "pipeline_fill_rate": "warehouse_replay_dir",
     "pipeline_backlog_burndown": "warehouse_replay_dir",
     "pipeline_customer_distribution": "warehouse_replay_dir",
+    **dict.fromkeys(_RELATIONAL_REPLAYS, "relational_replay_dir"),
 }
 
 
