@@ -1,16 +1,17 @@
-"""Behavioral event analytics: retention cohorts and conversion funnels.
+"""Behavioral event analytics: cohorts, funnels, paths and segments.
 
-The reference ships a raw per-region event stream and its only analytic
-is a 30-second message count (/root/reference/regionSpout.go:102-117).
-The first two questions any consumer of that stream asks are the two
-canonical behavioral rollups this module provides:
+The reference ships a raw per-region event stream whose only analytic
+is a 30-second message count. This module holds the behavioral rollups
+a consumer of that stream asks for first: retention and LTV cohorts,
+funnels, baskets, RFM and ABC scoring, transition paths, stickiness,
+attribution, overlap, skylines, segment migration and lead times.
 
-- ``pipeline_retention_cohort`` — classic weekly retention triangle:
-  users bucketed by first-seen week (cohort), counted per week-offset
-  of later activity.
-- ``pipeline_funnel_conversion`` — ordered multi-stage funnel
-  (signup → click → purchase), each stage within 7 days of the
-  previous, counting users reaching each stage.
+Every op here but ``pipeline_retention_cohort`` is one SQL text run on
+both engines through ``sql_front``; ``pipeline_basket_affinity`` runs
+its distinct-basket frame as a checkpointed stage. The retention
+triangle keeps its DataFrame body: it builds each user's week set with
+``collect_set``/``array_min``/``explode``, which have no form both
+engines share, and a window form would add an exchange.
 
 Week arithmetic is integer epoch-week (``epoch_sec div 604800``) on
 both engines — pure int64 math, bit-identical between Spark and DuckDB,
@@ -21,19 +22,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from connor_fun_streamproducer_spark.catalog import (
-    dim_window,
-    epoch_div,
-    epoch_seconds,
-    load,
-)
+from connor_fun_streamproducer_spark.catalog import epoch_div, load
+from connor_fun_streamproducer_spark.operators.sql_front import duckdb_sql, run_sql
 from connor_fun_streamproducer_spark.registry import op
-
-_WEEK_S = 604_800
-# Funnel stage window: each stage must land within 7 days of the one before.
-_FUNNEL_WINDOW_S = 604_800
 
 _RETENTION_ORACLE = """
 WITH uw AS (
@@ -75,7 +67,7 @@ def pipeline_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events").select(
         "user_id",
-        epoch_div("ts", _WEEK_S).alias("week"),
+        epoch_div("ts", 604_800).alias("week"),
     )
     per_user = ev.groupBy("user_id").agg(F.collect_set("week").alias("weeks"))
     exploded = per_user.select(
@@ -87,25 +79,24 @@ def pipeline_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").alias("users"))
 
 
-_FUNNEL_ORACLE = f"""
+_FUNNEL_SQL = """
 WITH ev AS (
-    SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS sec
-    FROM events
+    SELECT user_id, event_type, {te} AS sec FROM {events}
 ), s AS (
-    SELECT user_id, min(sec) AS s_sec FROM ev
-    WHERE event_type = 'signup' GROUP BY 1
+    SELECT user_id, min(sec) AS s_sec
+    FROM ev WHERE event_type = 'signup' GROUP BY user_id
 ), c AS (
     SELECT e.user_id, min(e.sec) AS c_sec
     FROM ev e JOIN s ON e.user_id = s.user_id
     WHERE e.event_type = 'click'
-      AND e.sec > s.s_sec AND e.sec <= s.s_sec + {_FUNNEL_WINDOW_S}
-    GROUP BY 1
+      AND e.sec > s.s_sec AND e.sec <= s.s_sec + 604800
+    GROUP BY e.user_id
 ), p AS (
     SELECT e.user_id, min(e.sec) AS p_sec
     FROM ev e JOIN c ON e.user_id = c.user_id
     WHERE e.event_type = 'purchase'
-      AND e.sec > c.c_sec AND e.sec <= c.c_sec + {_FUNNEL_WINDOW_S}
-    GROUP BY 1
+      AND e.sec > c.c_sec AND e.sec <= c.c_sec + 604800
+    GROUP BY e.user_id
 ), reached AS (
     SELECT '1_signup' AS stage, user_id FROM s
     UNION ALL SELECT '2_click', user_id FROM c
@@ -117,7 +108,7 @@ SELECT stage, count(*) AS users FROM reached GROUP BY stage
 
 @op(
     "pipeline_funnel_conversion",
-    oracle=_FUNNEL_ORACLE,
+    oracle=duckdb_sql(_FUNNEL_SQL),
     tags=("ext", "pipeline", "behavior"),
 )
 def pipeline_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,86 +123,53 @@ def pipeline_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB design:
 
-    - every join and aggregate in the ladder keys on user_id, so
-      Catalyst reuses one hash partitioning end to end (plan shows a
-      single exchange per funnel arm, no re-shuffles between rungs);
+    - every join and aggregate in the ladder keys on user_id, so the
+      joins between rungs add no re-shuffle of their own;
+    - Spark inlines each rung CTE into every reader, so the signup rung
+      is derived three times and the click rung twice: the plan has 6
+      exchanges and 6 parquet scans of ``events`` (pinned in
+      ``test_plans._SQL_FRONT_PLAN_SHAPE``); a stage would read
+      ``events`` once at the cost of a checkpoint job at build time;
     - each rung's frame only SHRINKS (stage-k users ⊆ stage-k-1
       users), so join inputs decay down the funnel and AQE picks
       broadcast for the deep rungs at real-world conversion rates;
     - the final count is one union of (stage, user) markers + a
-      6-ish-row aggregate: counting users AT each rung via the union
-      trick costs one shuffle total, instead of three scalar count
-      jobs.
+      6-ish-row aggregate, instead of three scalar count jobs.
     """
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "event_type", epoch_seconds("ts").alias("sec")
-    )
-    s = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("sec").alias("s_sec"))
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(s, "user_id")
-        .filter(
-            (F.col("sec") > F.col("s_sec"))
-            & (F.col("sec") <= F.col("s_sec") + _FUNNEL_WINDOW_S)
-        )
-        .groupBy("user_id")
-        .agg(F.min("sec").alias("c_sec"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(
-            (F.col("sec") > F.col("c_sec"))
-            & (F.col("sec") <= F.col("c_sec") + _FUNNEL_WINDOW_S)
-        )
-        .groupBy("user_id")
-        .agg(F.min("sec").alias("p_sec"))
-    )
-    reached = (
-        s.select(F.lit("1_signup").alias("stage"), "user_id")
-        .unionAll(c.select(F.lit("2_click").alias("stage"), "user_id"))
-        .unionAll(p.select(F.lit("3_purchase").alias("stage"), "user_id"))
-    )
-    return reached.groupBy("stage").agg(F.count("*").alias("users"))
+    return run_sql(spark, sf_dir, _FUNNEL_SQL)
 
 
-_TOP_PAIRS = 20
-# Apriori-style item prune: a pair can only reach pair-support >= 2 if both
-# items appear in >= 2 baskets, so the pre-filter drops nothing qualifying.
-_MIN_ITEM_SUPPORT = 2
+# The distinct (basket, item) frame feeds four readers (the item counts,
+# both pair sides and the basket total): a checkpointed stage, so the
+# lineitem scan and the distinct run once.
+_BASKETS = "SELECT DISTINCT l_orderkey AS bid, l_partkey AS item FROM {lineitem}"
 
-_BASKET_ORACLE = f"""
-WITH baskets AS (
-    SELECT l_orderkey AS bid, l_partkey AS item
-    FROM lineitem GROUP BY 1, 2
-), item_n AS (
-    SELECT item, count(*) AS na FROM baskets GROUP BY 1
-    HAVING count(*) >= {_MIN_ITEM_SUPPORT}
+# the top 20 pairs; the apriori prune keeps items in >= 2 baskets, which
+# drops nothing a pair of support >= 2 needs
+_BASKET_SQL = """
+WITH item_n AS (
+    SELECT item, count(*) AS na FROM {baskets} GROUP BY item HAVING count(*) >= 2
 ), kept AS (
-    SELECT b.bid, b.item, i.na FROM baskets b JOIN item_n i USING (item)
+    SELECT b.bid, b.item, i.na FROM {baskets} b JOIN item_n i ON b.item = i.item
 ), pairs AS (
-    SELECT a.item AS item_a, b.item AS item_b,
-           max(a.na) AS na, max(b.na) AS nb, count(*) AS nab
-    FROM kept a JOIN kept b ON a.bid = b.bid AND a.item < b.item
-    GROUP BY 1, 2
+    SELECT a.item AS item_a, c.item AS item_b,
+           max(a.na) AS na, max(c.na) AS nb, count(*) AS nab
+    FROM kept a JOIN kept c ON a.bid = c.bid AND a.item < c.item
+    GROUP BY a.item, c.item
 ), total AS (
-    SELECT count(DISTINCT bid) AS n_baskets FROM baskets
+    SELECT count(DISTINCT bid) AS n_baskets FROM {baskets}
 )
-SELECT item_a, item_b, nab AS support,
+SELECT /*+ BROADCAST(total) */ item_a, item_b, nab AS support,
        round(CAST(nab AS DOUBLE) * n_baskets / (na * nb), 4) AS lift
-FROM pairs, total
+FROM pairs CROSS JOIN total
 ORDER BY support DESC, item_a, item_b
-LIMIT {_TOP_PAIRS}
+LIMIT 20
 """
 
 
 @op(
     "pipeline_basket_affinity",
-    oracle=_BASKET_ORACLE,
+    oracle=duckdb_sql(_BASKET_SQL, stages={"baskets": _BASKETS}),
     tags=("ext", "pipeline", "behavior"),
 )
 def pipeline_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -228,7 +186,7 @@ def pipeline_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
       map-side partials;
     - APRIORI PRUNE before pairing: items below pair-qualifying support
       are dropped by a pre-aggregate, provably lossless for pair
-      support >= {_MIN_ITEM_SUPPORT} (a pair needs both items in >= that
+      support >= 2 (a pair needs both items in >= that
       many baskets) — this is what keeps the self-join's fan-out from
       exploding on the long tail of one-off items;
     - the pair generator is a self-equi-join ON THE BASKET KEY with
@@ -241,63 +199,19 @@ def pipeline_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     - integer counts divide in double at the end, so both engines do
       the identical arithmetic — hash-exact despite the ratio.
     """
-    b = load(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("bid"), F.col("l_partkey").alias("item")
-    )
-    # The distinct-basket frame feeds FOUR consumers (item_n, both pair
-    # sides, the scalar total): checkpoint it once so the scan+distinct
-    # never replays (graph.py:318 discipline — r6 this op planned 5
-    # parquet scans, 0 reuse; now 1 scan). The pruned `kept` frame is NOT
-    # checkpointed: both pair sides re-derive it with one cheap broadcast
-    # join over the materialized baskets — a second sync barrier costs
-    # more than that replay at every tested scale. At 100 TB substitute
-    # persist(DISK_ONLY) if the lineage cut's re-derive is a concern.
-    baskets = b.distinct().localCheckpoint()
-    item_n = (
-        baskets.groupBy("item")
-        .agg(F.count("*").alias("na"))
-        .filter(F.col("na") >= _MIN_ITEM_SUPPORT)
-    )
-    kept = baskets.join(item_n, "item")
-    a = kept.select("bid", F.col("item").alias("item_a"), F.col("na").alias("na_a"))
-    c2 = kept.select("bid", F.col("item").alias("item_b"), F.col("na").alias("na_b"))
-    pairs = (
-        a.join(c2, "bid")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(
-            F.max("na_a").alias("na"),
-            F.max("na_b").alias("nb"),
-            F.count("*").alias("nab"),
-        )
-    )
-    total = baskets.select(F.countDistinct("bid").alias("n_baskets"))
-    return (
-        pairs.crossJoin(F.broadcast(total))
-        .select(
-            "item_a",
-            "item_b",
-            F.col("nab").alias("support"),
-            F.round(
-                F.col("nab").cast("double")
-                * F.col("n_baskets")
-                / (F.col("na") * F.col("nb")),
-                4,
-            ).alias("lift"),
-        )
-        .orderBy(F.desc("support"), "item_a", "item_b")
-        .limit(_TOP_PAIRS)
-    )
+    return run_sql(spark, sf_dir, _BASKET_SQL, stages={"baskets": _BASKETS})
 
 
-_RFM_ORACLE = """
+_RFM_SQL = """
 WITH rfm AS (
-    SELECT o.o_custkey AS c_custkey, c.c_mktsegment AS segment,
-           max(CAST(floor(epoch(o.o_orderdate)) AS BIGINT)) AS recency_sec,
-           CAST(count(*) AS BIGINT) AS frequency,
-           sum(CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT)) AS monetary_cents
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY 1, 2
+    SELECT o.c_custkey, c.c_mktsegment AS segment,
+           o.recency_sec, o.frequency, o.monetary_cents
+    FROM (SELECT o_custkey AS c_custkey,
+                 max({epoch[o_orderdate]}) AS recency_sec,
+                 CAST(count(*) AS BIGINT) AS frequency,
+                 sum(CAST(floor(o_totalprice * 100 + 5e-1) AS BIGINT)) AS monetary_cents
+          FROM {orders} GROUP BY o_custkey) o
+    JOIN {customer} c ON o.c_custkey = c.c_custkey
 )
 SELECT c_custkey, segment,
        CAST(ntile(5) OVER (PARTITION BY segment
@@ -312,7 +226,7 @@ FROM rfm
 
 @op(
     "pipeline_rfm_segments",
-    oracle=_RFM_ORACLE,
+    oracle=duckdb_sql(_RFM_SQL),
     tags=("ext", "pipeline", "behavior"),
 )
 def pipeline_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -342,52 +256,25 @@ def pipeline_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior (ORDER BY metric, custkey — a total order) is identical
     in DuckDB, making the scores hash-checkable.
     """
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    rfm = (
-        o.groupBy(F.col("o_custkey").alias("c_custkey"))
-        .agg(
-            F.max(epoch_seconds("o_orderdate")).alias("recency_sec"),
-            F.count("*").cast("bigint").alias("frequency"),
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-            ).alias("monetary_cents"),
-        )
-        .join(
-            c.select("c_custkey", F.col("c_mktsegment").alias("segment")),
-            "c_custkey",
-        )
-    )
-    w_r = Window.partitionBy("segment").orderBy("recency_sec", "c_custkey")
-    w_f = Window.partitionBy("segment").orderBy("frequency", "c_custkey")
-    w_m = Window.partitionBy("segment").orderBy("monetary_cents", "c_custkey")
-    return rfm.select(
-        "c_custkey",
-        "segment",
-        F.ntile(5).over(w_r).cast("bigint").alias("r_score"),
-        F.ntile(5).over(w_f).cast("bigint").alias("f_score"),
-        F.ntile(5).over(w_m).cast("bigint").alias("m_score"),
-    )
+    return run_sql(spark, sf_dir, _RFM_SQL)
 
 
-_ABC_ORACLE = """
+_ABC_SQL = """
 WITH pr AS (
-    SELECT l.l_partkey AS p_partkey, p.p_brand AS p_brand,
-           sum(CAST(floor(l.l_extendedprice * (1 - l.l_discount) * 100 + 0.5)
+    SELECT l.l_partkey AS p_partkey, p.p_brand,
+           sum(CAST(floor(l.l_extendedprice * (1 - l.l_discount) * 100 + 5e-1)
                     AS BIGINT)) AS cents
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    GROUP BY 1, 2
-),
-ranked AS (
-    SELECT p_partkey, p_brand, cents,
-           sum(cents) OVER (PARTITION BY p_brand
-                            ORDER BY cents DESC, p_partkey
-                            ROWS UNBOUNDED PRECEDING) AS cum,
+    FROM {lineitem} l JOIN {part} p ON l.l_partkey = p.p_partkey
+    GROUP BY l.l_partkey, p.p_brand
+), ranked AS (
+    SELECT p_brand, p_partkey, cents,
+           sum(cents) OVER (PARTITION BY p_brand ORDER BY cents DESC, p_partkey
+                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
            sum(cents) OVER (PARTITION BY p_brand) AS tot
     FROM pr
 )
 SELECT p_brand, p_partkey,
-       round(cents / 100.0, 2) AS revenue,
+       round(cents / 1e2, 2) AS revenue,
        CAST(cum * 10000 // tot AS BIGINT) AS cum_bp,
        CASE WHEN cum * 100 <= tot * 80 THEN 'A'
             WHEN cum * 100 <= tot * 95 THEN 'B'
@@ -398,7 +285,7 @@ FROM ranked
 
 @op(
     "pipeline_abc_pareto",
-    oracle=_ABC_ORACLE,
+    oracle=duckdb_sql(_ABC_SQL),
     tags=("ext", "pipeline", "behavior"),
 )
 def pipeline_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -422,66 +309,33 @@ def pipeline_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     part dim joins pre-aggregation to carry the brand key into the
     grouping — fact×dim equi-join, AQE picks broadcast.
     """
-    li = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part")
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(0.5)
-    ).cast("bigint")
-    pr = (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .groupBy(F.col("l_partkey").alias("p_partkey"), "p_brand")
-        .agg(F.sum(cents).alias("cents"))
-    )
-    w_run = (
-        Window.partitionBy("p_brand")
-        .orderBy(F.desc("cents"), F.asc("p_partkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_tot = Window.partitionBy("p_brand")
-    ranked = pr.select(
-        "p_brand",
-        "p_partkey",
-        "cents",
-        F.sum("cents").over(w_run).alias("cum"),
-        F.sum("cents").over(w_tot).alias("tot"),
-    )
-    return ranked.select(
-        "p_brand",
-        "p_partkey",
-        F.round(F.col("cents") / 100.0, 2).alias("revenue"),
-        F.expr("cum * 10000 div tot").cast("bigint").alias("cum_bp"),
-        F.when(F.col("cum") * 100 <= F.col("tot") * 80, F.lit("A"))
-        .when(F.col("cum") * 100 <= F.col("tot") * 95, F.lit("B"))
-        .otherwise(F.lit("C"))
-        .alias("abc_class"),
-    )
+    return run_sql(spark, sf_dir, _ABC_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Year-over-year growth (lag-window comparative analytics)
 
-_YOY_ORACLE = """
+_YOY_SQL = """
 WITH rev AS (
-    SELECT n.n_name,
-           year(o.o_orderdate) AS yr,
-           CAST(sum(CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-               AS rev_cents
-    FROM orders o
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    JOIN nation n   ON n.n_nationkey = c.c_nationkey
-    GROUP BY 1, 2
+    SELECT /*+ BROADCAST(c, n) */ n.n_name, o.yr,
+           CAST(sum(o.cents) AS BIGINT) AS rev_cents
+    FROM (SELECT o_custkey, year(o_orderdate) AS yr,
+                 CAST(floor(o_totalprice * 100 + 5e-1) AS BIGINT) AS cents
+          FROM {orders}) o
+    JOIN {customer} c ON o.o_custkey = c.c_custkey
+    JOIN {nation} n ON c.c_nationkey = n.n_nationkey
+    GROUP BY n.n_name, o.yr
+), prev AS (
+    SELECT n_name, yr, rev_cents,
+           CASE WHEN lag(yr) OVER w = yr - 1 THEN lag(rev_cents) OVER w END AS prev_cents
+    FROM rev WINDOW w AS (PARTITION BY n_name ORDER BY yr)
 )
-SELECT n_name, yr, rev_cents,
-       CASE WHEN lag(yr) OVER w = yr - 1
-            THEN lag(rev_cents) OVER w END                  AS prev_cents,
-       rev_cents - CASE WHEN lag(yr) OVER w = yr - 1
-                        THEN lag(rev_cents) OVER w END      AS delta_cents
-FROM rev
-WINDOW w AS (PARTITION BY n_name ORDER BY yr)
+SELECT n_name, yr, rev_cents, prev_cents, rev_cents - prev_cents AS delta_cents
+FROM prev
 """
 
 
-@op("pipeline_yoy_growth", oracle=_YOY_ORACLE, tags=("ext", "pipeline", "window"))
+@op("pipeline_yoy_growth", oracle=duckdb_sql(_YOY_SQL), tags=("ext", "pipeline", "window"))
 def pipeline_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Year-over-year revenue per nation — the lag-window comparative
     report every warehouse runs.
@@ -499,71 +353,48 @@ def pipeline_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the lag window runs on that tiny rollup — cost lives entirely
     in the first join, exactly where it should.
     """
-    o = load(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.year("o_orderdate").alias("yr"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    rev = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name", "yr")
-        .agg(F.sum("cents").cast("bigint").alias("rev_cents"))
-    )
-    w = Window.partitionBy("n_name").orderBy("yr")
-    prev = F.lag(F.struct("yr", "rev_cents")).over(w)
-    prev_cents = F.when(prev["yr"] == F.col("yr") - 1, prev["rev_cents"])
-    return rev.select(
-        "n_name",
-        "yr",
-        "rev_cents",
-        prev_cents.alias("prev_cents"),
-        (F.col("rev_cents") - prev_cents).alias("delta_cents"),
-    )
+    return run_sql(spark, sf_dir, _YOY_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Marketing-touch attribution (first/last touch in a bounded lookback)
 
-_ATTR_W = 172_800  # 2-day lookback
-_TOUCH_TYPES = ("click", "view", "signup")
-
-_ATTR_ORACLE = f"""
+# a 2-day (172,800 s) lookback over click, view and signup touches
+_ATTR_SQL = """
 WITH p AS (
-    SELECT event_id AS purchase_id, user_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS psec
-    FROM events WHERE event_type = 'purchase'
+    SELECT event_id AS purchase_id, user_id, {te} AS psec
+    FROM {events} WHERE event_type = 'purchase'
+), probes AS (
+    SELECT purchase_id, user_id, psec, pbin
+    FROM (SELECT purchase_id, user_id, psec,
+                 psec // 172800 - 1 AS before, psec // 172800 AS own
+          FROM p) b
+    UNPIVOT INCLUDE NULLS (pbin FOR probe IN (before, own))
 ), t AS (
-    SELECT user_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS tsec,
-           event_id AS tid, event_type AS ttype
-    FROM events WHERE event_type IN {_TOUCH_TYPES!r}
-), c AS (
-    SELECT p.purchase_id, p.user_id, p.psec, t.tsec, t.tid, t.ttype
-    FROM p JOIN t ON t.user_id = p.user_id
-               AND t.tsec <= p.psec AND t.tsec >= p.psec - {_ATTR_W}
-), f AS (
-    SELECT purchase_id, psec, tsec, tid, ttype,
-           row_number() OVER (PARTITION BY purchase_id
-                              ORDER BY tsec ASC, tid ASC)  AS rf,
-           row_number() OVER (PARTITION BY purchase_id
-                              ORDER BY tsec DESC, tid DESC) AS rl
-    FROM c
+    SELECT user_id AS t_user, {te} AS tsec, event_id AS tid, event_type AS ttype
+    FROM {events} WHERE event_type IN ('click', 'view', 'signup')
+), cand AS (
+    SELECT pr.purchase_id, pr.user_id, pr.psec,
+           CASE WHEN t.tsec <= pr.psec AND t.tsec >= pr.psec - 172800
+                THEN t.tsec END AS tsec,
+           CASE WHEN t.tsec <= pr.psec AND t.tsec >= pr.psec - 172800
+                THEN t.ttype END AS ttype,
+           -- (tsec, tid) as one exact number: tid is a BIGINT, so
+           -- tsec * 2^64 + tid orders as the pair does
+           CASE WHEN t.tsec <= pr.psec AND t.tsec >= pr.psec - 172800
+                THEN CAST(t.tsec AS {wide}) * 4294967296 * 4294967296 + t.tid END AS touch
+    FROM probes pr LEFT JOIN t ON t.t_user = pr.user_id AND t.tsec // 172800 = pr.pbin
 )
-SELECT p.purchase_id, p.user_id,
-       ff.ttype            AS first_type,
-       p.psec - ff.tsec    AS first_gap_sec,
-       ll.ttype            AS last_type,
-       p.psec - ll.tsec    AS last_gap_sec
-FROM p
-LEFT JOIN f ff ON ff.purchase_id = p.purchase_id AND ff.rf = 1
-LEFT JOIN f ll ON ll.purchase_id = p.purchase_id AND ll.rl = 1
+SELECT purchase_id, user_id,
+       min_by(ttype, touch) AS first_type,
+       psec - min(tsec) AS first_gap_sec,
+       max_by(ttype, touch) AS last_type,
+       psec - max(tsec) AS last_gap_sec
+FROM cand GROUP BY purchase_id, user_id, psec
 """
 
 
-@op("pipeline_attribution_touch", oracle=_ATTR_ORACLE, tags=("ext", "pipeline", "scale"))
+@op("pipeline_attribution_touch", oracle=duckdb_sql(_ATTR_SQL), tags=("ext", "pipeline", "scale"))
 def pipeline_attribution_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch / last-touch attribution: every purchase credited to
     the user's earliest and latest marketing touch (click/view/signup)
@@ -572,83 +403,42 @@ def pipeline_attribution_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     The range predicate (0 <= psec − tsec <= W) is turned into an
     EQUI-join by time binning at exactly the lookback width: a touch
     lives in bin tsec div W, a purchase probes its own bin and the one
-    before — any in-window touch is in one of those two, and each touch
-    matches at most one probe (the probes differ), so candidates need
-    no dedup. First/last selection is min/max over a struct
-    (tsec, tid, ttype) — lexicographic struct ordering makes the
-    tie-break (same-second touches → lowest/highest event id)
-    deterministic AND partial-aggregatable, so each task collapses its
-    local candidates before the one purchase-keyed exchange. The same
-    shape as join_range_bucketed, pointed at the attribution question;
-    never a theta join, never a window over raw events.
+    before (an unpivot of the two bin columns) — any in-window touch is
+    in one of those two, and each touch matches at most one probe (the
+    probes differ), so candidates need no dedup. First/last selection
+    is min_by/max_by over one exact key, tsec * 2^64 + tid, which
+    orders as the pair (tsec, tid) does — the tie-break (same-second
+    touches → lowest/highest event id) is deterministic AND
+    partial-aggregatable, so each task collapses its local candidates
+    before the one purchase-keyed exchange. The same shape as
+    join_range_bucketed, pointed at the attribution question; never a
+    theta join, never a window over raw events.
     """
-    e = load(spark, sf_dir, "events")
-    sec = epoch_seconds("ts")
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        sec.alias("psec"),
-    )
-    t = e.filter(F.col("event_type").isin(*_TOUCH_TYPES)).select(
-        F.col("user_id").alias("t_user"),
-        sec.alias("tsec"),
-        F.col("event_id").alias("tid"),
-        F.col("event_type").alias("ttype"),
-    ).withColumn("tbin", F.floor(F.col("tsec") / _ATTR_W).cast("bigint"))
-    probes = p.withColumn(
-        "pbin", F.explode(F.array(F.floor(F.col("psec") / _ATTR_W) - 1, F.floor(F.col("psec") / _ATTR_W)))
-    )
-    cand = probes.join(
-        t,
-        (F.col("t_user") == F.col("user_id")) & (F.col("tbin") == F.col("pbin")),
-        "left",
-    )
-    in_window = (
-        (F.col("tsec") <= F.col("psec")) & (F.col("tsec") >= F.col("psec") - _ATTR_W)
-    )
-    touch = F.when(in_window, F.struct("tsec", "tid", "ttype"))
-    agg = cand.groupBy("purchase_id", "user_id", "psec").agg(
-        F.min(touch).alias("first_t"),
-        F.max(touch).alias("last_t"),
-    )
-    return agg.select(
-        "purchase_id",
-        "user_id",
-        F.col("first_t.ttype").alias("first_type"),
-        (F.col("psec") - F.col("first_t.tsec")).alias("first_gap_sec"),
-        F.col("last_t.ttype").alias("last_type"),
-        (F.col("psec") - F.col("last_t.tsec")).alias("last_gap_sec"),
-    )
+    return run_sql(spark, sf_dir, _ATTR_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Event-transition (clickstream path) analysis
 
-_TRANSITION_ORACLE = """
-WITH e AS (
-    SELECT user_id, event_id, event_type,
-           CAST(floor(epoch(ts)) AS BIGINT) AS sec
-    FROM events
-), seq AS (
-    SELECT user_id, event_type,
-           lag(event_type) OVER (PARTITION BY user_id
-                                 ORDER BY sec, event_id) AS prev_type
-    FROM e
+_TRANSITION_SQL = """
+WITH seq AS (
+    SELECT event_type,
+           lag(event_type) OVER (PARTITION BY user_id ORDER BY {te}, event_id) AS prev_type
+    FROM {events}
+), counts AS (
+    SELECT prev_type, event_type AS next_type, CAST(count(*) AS BIGINT) AS n
+    FROM seq WHERE prev_type IS NOT NULL
+    GROUP BY prev_type, event_type
 )
-SELECT prev_type, event_type AS next_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(*) * 10000 //
-            sum(count(*)) OVER (PARTITION BY prev_type) AS BIGINT)
-           AS share_bp
-FROM seq
-WHERE prev_type IS NOT NULL
-GROUP BY prev_type, event_type
+SELECT prev_type, next_type, n,
+       CAST(n * 10000 // sum(n) OVER (PARTITION BY prev_type) AS BIGINT) AS share_bp
+FROM counts
 """
 
 
 @op(
     "pipeline_event_transitions",
-    oracle=_TRANSITION_ORACLE,
+    oracle=duckdb_sql(_TRANSITION_SQL),
     tags=("ext", "pipeline", "window"),
 )
 def pipeline_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -667,58 +457,31 @@ def pipeline_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift); each row of the matrix sums to ≤ 10000 with the remainder
     being truncation, which downstream consumers re-derive from n.
     """
-    e = load(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", epoch_seconds("ts").alias("sec")
-    )
-    order = Window.partitionBy("user_id").orderBy("sec", "event_id")
-    seq = e.withColumn("prev_type", F.lag("event_type").over(order))
-    counts = (
-        seq.filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-    row_total = Window.partitionBy("prev_type")
-    return counts.select(
-        "prev_type",
-        "next_type",
-        "n",
-        F.sum("n").over(row_total).alias("_tot"),
-    ).select(
-        "prev_type",
-        "next_type",
-        "n",
-        F.expr("n * 10000 div _tot").cast("bigint").alias("share_bp"),
-    )
+    return run_sql(spark, sf_dir, _TRANSITION_SQL)
 
 
 # ---------------------------------------------------------------------------
 # DAU/MAU stickiness
 
-_STICKINESS_ORACLE = """
+_STICKINESS_SQL = """
 WITH d AS (
-    SELECT DISTINCT
-           CAST(floor(epoch(ts)) AS BIGINT) // 86400  AS day,
-           user_id
-    FROM events
+    SELECT DISTINCT {te} // 86400 AS day, user_id FROM {events}
 ), daily AS (
-    SELECT day, count(*) AS dau FROM d GROUP BY day
+    SELECT day, CAST(count(*) AS BIGINT) AS dau FROM d GROUP BY day
 ), monthly AS (
     SELECT (day * 86400) // 2592000 AS mkey,
            CAST(count(DISTINCT user_id) AS BIGINT) AS mau
-    FROM d GROUP BY 1
+    FROM d GROUP BY (day * 86400) // 2592000
 )
-SELECT daily.day,
-       CAST(daily.dau AS BIGINT)     AS dau,
-       monthly.mau                   AS mau,
+SELECT /*+ BROADCAST(monthly) */ daily.day, daily.dau, monthly.mau,
        CAST(daily.dau * 10000 // monthly.mau AS BIGINT) AS stickiness_bp
-FROM daily
-JOIN monthly ON (daily.day * 86400) // 2592000 = monthly.mkey
+FROM daily JOIN monthly ON (daily.day * 86400) // 2592000 = monthly.mkey
 """
 
 
 @op(
     "pipeline_dau_mau_stickiness",
-    oracle=_STICKINESS_ORACLE,
+    oracle=duckdb_sql(_STICKINESS_SQL),
     tags=("ext", "pipeline", "behavior"),
 )
 def pipeline_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -737,59 +500,35 @@ def pipeline_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of a 30-day sliding distinct (which is what the HLL sketch
     tier is for when the product wants the sliding form).
     """
-    d = (
-        load(spark, sf_dir, "events")
-        .select(
-            epoch_div("ts", 86400).alias("day"),
-            "user_id",
-        )
-        .distinct()
-    )
-    daily = d.groupBy("day").agg(F.count("*").cast("bigint").alias("dau"))
-    monthly = d.groupBy(
-        F.expr("(day * 86400) div 2592000").alias("mkey")
-    ).agg(F.count_distinct("user_id").cast("bigint").alias("mau"))
-    out = daily.withColumn(
-        "mkey", F.expr("(day * 86400) div 2592000")
-    ).join(F.broadcast(monthly), "mkey")
-    return out.select(
-        "day",
-        "dau",
-        "mau",
-        F.expr("dau * 10000 div mau").cast("bigint").alias("stickiness_bp"),
-    )
+    return run_sql(spark, sf_dir, _STICKINESS_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Cohort LTV curves
 
-_LTV_ORACLE = """
+_LTV_SQL = """
 WITH e AS (
-    SELECT user_id,
-           CAST(floor(epoch(ts)) AS BIGINT) // 604800 AS week,
+    SELECT user_id, {te} // 604800 AS week,
            CASE WHEN event_type = 'purchase'
-                THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
-                ELSE 0 END AS cents
-    FROM events
+                THEN CAST(floor(value * 100 + 5e-1) AS BIGINT) ELSE 0 END AS cents
+    FROM {events}
 ), anchored AS (
-    SELECT user_id, week, cents,
-           min(week) OVER (PARTITION BY user_id) AS cohort_week
+    SELECT week, cents, min(week) OVER (PARTITION BY user_id) AS cohort_week
     FROM e
 ), cw AS (
     SELECT cohort_week, week - cohort_week AS week_offset,
            CAST(sum(cents) AS BIGINT) AS rev_cents
-    FROM anchored GROUP BY 1, 2
+    FROM anchored GROUP BY cohort_week, week - cohort_week
 )
 SELECT cohort_week, week_offset, rev_cents,
-       CAST(sum(rev_cents) OVER (PARTITION BY cohort_week
-                                 ORDER BY week_offset
-                                 ROWS UNBOUNDED PRECEDING) AS BIGINT)
-           AS cum_rev_cents
+       CAST(sum(rev_cents) OVER (PARTITION BY cohort_week ORDER BY week_offset
+                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+            AS BIGINT) AS cum_rev_cents
 FROM cw
 """
 
 
-@op("pipeline_cohort_ltv", oracle=_LTV_ORACLE, tags=("ext", "pipeline", "behavior"))
+@op("pipeline_cohort_ltv", oracle=duckdb_sql(_LTV_SQL), tags=("ext", "pipeline", "behavior"))
 def pipeline_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort lifetime-value curves: per signup-week cohort, revenue in
     each week-offset and its running cumulative — the money companion
@@ -807,52 +546,23 @@ def pipeline_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     week (filtering first would wrongly anchor purchase-less users'
     cohorts — the subtle bug this formulation avoids).
     """
-    e = load(spark, sf_dir, "events").select(
-        "user_id",
-        epoch_div("ts", 604800).alias("week"),
-        F.when(
-            F.col("event_type") == "purchase",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"),
-        )
-        .otherwise(F.lit(0))
-        .alias("cents"),
-    )
-    anchor = Window.partitionBy("user_id")
-    anchored = e.withColumn("cohort_week", F.min("week").over(anchor))
-    cw = anchored.groupBy(
-        "cohort_week", (F.col("week") - F.col("cohort_week")).alias("week_offset")
-    ).agg(F.sum("cents").cast("bigint").alias("rev_cents"))
-    cum = (
-        Window.partitionBy("cohort_week")
-        .orderBy("week_offset")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return cw.select(
-        "cohort_week",
-        "week_offset",
-        "rev_cents",
-        F.sum("rev_cents").over(cum).cast("bigint").alias("cum_rev_cents"),
-    )
+    return run_sql(spark, sf_dir, _LTV_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Inter-purchase intervals
 
-_INTERPURCHASE_ORACLE = """
-WITH p AS (
-    SELECT user_id, event_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS sec
-    FROM events WHERE event_type = 'purchase'
-), g AS (
+_INTERPURCHASE_SQL = """
+WITH g AS (
     SELECT user_id,
-           sec - lag(sec) OVER (PARTITION BY user_id
-                                ORDER BY sec, event_id) AS gap
-    FROM p
+           sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id) AS gap
+    FROM (SELECT user_id, event_id, {te} AS sec
+          FROM {events} WHERE event_type = 'purchase') p
 )
 SELECT user_id,
-       CAST(count(*) + 1 AS BIGINT)          AS n_purchases,
-       CAST(sum(gap) // count(*) AS BIGINT)  AS avg_gap_sec,
-       CAST(max(gap) AS BIGINT)              AS max_gap_sec
+       CAST(count(*) + 1 AS BIGINT) AS n_purchases,
+       CAST(sum(gap) // count(*) AS BIGINT) AS avg_gap_sec,
+       CAST(max(gap) AS BIGINT) AS max_gap_sec
 FROM g WHERE gap IS NOT NULL
 GROUP BY user_id
 """
@@ -860,7 +570,7 @@ GROUP BY user_id
 
 @op(
     "pipeline_interpurchase_time",
-    oracle=_INTERPURCHASE_ORACLE,
+    oracle=duckdb_sql(_INTERPURCHASE_SQL),
     tags=("ext", "behavior", "window"),
 )
 def pipeline_interpurchase_time(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -877,43 +587,26 @@ def pipeline_interpurchase_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mean uses integral division so the row hash-matches at any
     scale (the engine-wide `div`-not-floor(double) discipline).
     """
-    p = load(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    w = Window.partitionBy("user_id").orderBy("sec", "event_id")
-    g = p.select(
-        "user_id", "event_id", epoch_seconds("ts").alias("sec")
-    ).withColumn("gap", F.col("sec") - F.lag("sec").over(w))
-    return (
-        g.filter(F.col("gap").isNotNull())
-        .groupBy("user_id")
-        .agg(
-            (F.count("*") + 1).cast("bigint").alias("n_purchases"),
-            F.expr("sum(gap) div count(*)").cast("bigint").alias("avg_gap_sec"),
-            F.max("gap").cast("bigint").alias("max_gap_sec"),
-        )
-    )
+    return run_sql(spark, sf_dir, _INTERPURCHASE_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Session-scoped navigation paths
 
-_PATH_GAP_S = 1800  # 30-min inactivity gap (tighter than win_sessionize's 6h
-                    # batch sessions: navigation analysis wants visit-scale cuts)
-
-_SESSION_PATHS_ORACLE = f"""
-WITH e AS (
-    SELECT user_id, event_id, event_type,
-           CAST(floor(epoch(ts)) AS BIGINT) AS sec
-    FROM events
-), flagged AS (
+# a 30-min (1,800 s) inactivity gap ends a session: tighter than
+# win_sessionize's 6 h batch sessions, at the scale of one visit
+_SESSION_PATHS_SQL = """
+WITH flagged AS (
     SELECT user_id, event_id, event_type, sec,
-           CASE WHEN lag(sec) OVER w IS NULL
-                  OR sec - lag(sec) OVER w > {_PATH_GAP_S}
+           CASE WHEN lag(sec) OVER wu IS NULL OR sec - lag(sec) OVER wu > 1800
                 THEN 1 ELSE 0 END AS new_sess
-    FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)
+    FROM (SELECT user_id, event_id, event_type, {te} AS sec FROM {events}) e
+    WINDOW wu AS (PARTITION BY user_id ORDER BY sec, event_id)
 ), sess AS (
     SELECT user_id, event_id, event_type, sec,
            sum(new_sess) OVER (PARTITION BY user_id ORDER BY sec, event_id
-                               ROWS UNBOUNDED PRECEDING) AS session_seq
+                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS session_seq
     FROM flagged
 ), hops AS (
     SELECT event_type AS next_type,
@@ -926,14 +619,15 @@ WITH e AS (
     GROUP BY prev_type, next_type
 )
 SELECT prev_type, next_type, n,
-       CAST(n * 10000 // (SELECT sum(n) FROM counts) AS BIGINT) AS share_bp
+       -- dim_window: at most |event_types|^2 hop cells
+       CAST(n * 10000 // sum(n) OVER () AS BIGINT) AS share_bp
 FROM counts
 """
 
 
 @op(
     "pipeline_session_paths",
-    oracle=_SESSION_PATHS_ORACLE,
+    oracle=duckdb_sql(_SESSION_PATHS_SQL),
     tags=("ext", "behavior", "window"),
 )
 def pipeline_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -949,84 +643,40 @@ def pipeline_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     all partitioned by user (the lag adds session_seq to the partition
     key, a strict refinement hash(user) already satisfies), so the whole
     ladder rides ONE user exchange; the hop aggregate is its own small
-    exchange and the global total is a 1-row broadcast. Integral-div
-    share in basis points, the engine-wide discipline.
+    exchange and the global total is a window over the at most
+    |types|² hop cells (a scalar subquery would plan the hop ladder
+    twice). Integral-div share in basis points, the engine-wide
+    discipline.
     """
-    ev = load(spark, sf_dir, "events")
-    e = ev.select(
-        "user_id", "event_id", "event_type", epoch_seconds("ts").alias("sec")
-    )
-    wu = Window.partitionBy("user_id").orderBy("sec", "event_id")
-    flagged = e.withColumn(
-        "new_sess",
-        F.when(
-            F.lag("sec").over(wu).isNull()
-            | (F.col("sec") - F.lag("sec").over(wu) > _PATH_GAP_S),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    sess = flagged.withColumn(
-        "session_seq",
-        F.sum("new_sess").over(
-            wu.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    ws = Window.partitionBy("user_id", "session_seq").orderBy("sec", "event_id")
-    hops = sess.select(
-        F.col("event_type").alias("next_type"),
-        F.lag("event_type").over(ws).alias("prev_type"),
-    )
-    counts = (
-        hops.filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "next_type")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-    # Global total as an empty-frame window over the COUNTS table (at
-    # most |types|^2 rows — explicitly bounded), not a crossJoin of a
-    # re-aggregated subtree: the scalar-subquery form compiles the whole
-    # hop ladder TWICE; this form scans it once.
-    tot = dim_window(Window.partitionBy(), bound="\u2264|event_types|\u00b2 hop cells")
-    return counts.select(
-        "prev_type",
-        "next_type",
-        "n",
-        F.sum("n").over(tot).alias("_tot"),
-    ).select(
-        "prev_type",
-        "next_type",
-        "n",
-        F.expr("n * 10000 div _tot").cast("bigint").alias("share_bp"),
-    )
+    return run_sql(spark, sf_dir, _SESSION_PATHS_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Frequent 3-event sequences (sequence mining, funnels beyond pairs)
 # ---------------------------------------------------------------------------
 
-_TRIGRAM_TOPK = 10
-
-_TRIGRAM_ORACLE = f"""
+_TRIGRAM_SQL = """
 WITH seq AS (
-    SELECT user_id, event_type,
+    SELECT event_type,
            lag(event_type, 1) OVER w AS p1,
            lag(event_type, 2) OVER w AS p2
-    FROM events
-    WINDOW w AS (PARTITION BY user_id
-                 ORDER BY CAST(floor(epoch(ts)) AS BIGINT), event_id)
+    FROM {events}
+    WINDOW w AS (PARTITION BY user_id ORDER BY {te}, event_id)
 ), tri AS (
     SELECT p2 AS e1, p1 AS e2, event_type AS e3, count(*) AS n
-    FROM seq WHERE p2 IS NOT NULL GROUP BY 1, 2, 3
+    FROM seq WHERE p2 IS NOT NULL GROUP BY p2, p1, event_type
 ), ranked AS (
     SELECT e1, e2, e3, n,
+           -- dim_window: at most |event_types|^3 trigram cells
            row_number() OVER (ORDER BY n DESC, e1, e2, e3) AS rk
     FROM tri
 )
 SELECT e1, e2, e3, CAST(n AS BIGINT) AS n, CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= {_TRIGRAM_TOPK}
+FROM ranked WHERE rk <= 10
 """
 
 
-@op("pipeline_event_trigrams", oracle=_TRIGRAM_ORACLE, tags=("ext", "behavior"))
+@op("pipeline_event_trigrams", oracle=duckdb_sql(_TRIGRAM_SQL), tags=("ext", "behavior"))
 def pipeline_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 most frequent 3-event sequences across all users — the
     sequence-mining step past pipeline_event_transitions' pair matrix:
@@ -1044,67 +694,35 @@ def pipeline_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     every sessionization op here shares — then dimension-bounded
     aggregation; nothing downstream scales with rows.
     """
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(epoch_seconds("ts"), F.col("event_id"))
-    seq = ev.select(
-        "event_type",
-        F.lag("event_type", 1).over(w).alias("p1"),
-        F.lag("event_type", 2).over(w).alias("p2"),
-    )
-    tri = (
-        seq.filter(F.col("p2").isNotNull())
-        .groupBy(
-            F.col("p2").alias("e1"),
-            F.col("p1").alias("e2"),
-            F.col("event_type").alias("e3"),
-        )
-        .agg(F.count("*").alias("n"))
-    )
-    wr = dim_window(
-        Window.orderBy(F.desc("n"), "e1", "e2", "e3"),
-        bound="\u2264|event_types|\u00b3 trigram cells",
-    )
-    return (
-        tri.select("e1", "e2", "e3", "n", F.row_number().over(wr).alias("rk"))
-        .filter(F.col("rk") <= _TRIGRAM_TOPK)
-        .select(
-            "e1",
-            "e2",
-            "e3",
-            F.col("n").cast("bigint").alias("n"),
-            F.col("rk").cast("bigint").alias("rk"),
-        )
-    )
+    return run_sql(spark, sf_dir, _TRIGRAM_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Audience overlap matrix (distinct-user intersection per event-type pair)
 # ---------------------------------------------------------------------------
 
-_OVERLAP_ORACLE = """
+_OVERLAP_SQL = """
 WITH au AS (
-    SELECT DISTINCT event_type, user_id FROM events
+    SELECT DISTINCT event_type, user_id FROM {events}
 ), deg AS (
-    SELECT event_type, count(*) AS n FROM au GROUP BY 1
+    SELECT event_type, count(*) AS n FROM au GROUP BY event_type
 ), pair AS (
     SELECT x.event_type AS type_a, y.event_type AS type_b, count(*) AS n_both
-    FROM au x JOIN au y
-      ON x.user_id = y.user_id AND x.event_type < y.event_type
-    GROUP BY 1, 2
+    FROM au x JOIN au y ON x.user_id = y.user_id AND x.event_type < y.event_type
+    GROUP BY x.event_type, y.event_type
 )
-SELECT p.type_a, p.type_b,
+SELECT /*+ BROADCAST(da, db) */ p.type_a, p.type_b,
        CAST(da.n AS BIGINT) AS n_a,
        CAST(db.n AS BIGINT) AS n_b,
        CAST(p.n_both AS BIGINT) AS n_both,
-       CAST(p.n_both * 10000 // (da.n + db.n - p.n_both) AS BIGINT)
-           AS jaccard_bp
+       CAST(p.n_both * 10000 // (da.n + db.n - p.n_both) AS BIGINT) AS jaccard_bp
 FROM pair p
 JOIN deg da ON da.event_type = p.type_a
 JOIN deg db ON db.event_type = p.type_b
 """
 
 
-@op("pipeline_audience_overlap", oracle=_OVERLAP_ORACLE, tags=("ext", "behavior"))
+@op("pipeline_audience_overlap", oracle=duckdb_sql(_OVERLAP_SQL), tags=("ext", "behavior"))
 def pipeline_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audience overlap matrix: for every pair of event types, how many
     distinct users did BOTH, with the Jaccard share in basis points —
@@ -1125,60 +743,37 @@ def pipeline_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     type vocabulary you band the per-user type-set (the _pair_edges
     cap) — with 5 types the fanout bound is constant.
     """
-    au = load(spark, sf_dir, "events").select("event_type", "user_id").distinct()
-    deg = au.groupBy("event_type").agg(F.count("*").alias("n"))
-    x = au.select(F.col("event_type").alias("type_a"), "user_id")
-    y = au.select(F.col("event_type").alias("type_b"), "user_id")
-    pair = (
-        x.join(y, "user_id")
-        .filter(F.col("type_a") < F.col("type_b"))
-        .groupBy("type_a", "type_b")
-        .agg(F.count("*").alias("n_both"))
-    )
-    da = deg.select(F.col("event_type").alias("type_a"), F.col("n").alias("n_a"))
-    db = deg.select(F.col("event_type").alias("type_b"), F.col("n").alias("n_b"))
-    out = pair.join(F.broadcast(da), "type_a").join(F.broadcast(db), "type_b")
-    return out.select(
-        "type_a",
-        "type_b",
-        F.col("n_a").cast("bigint").alias("n_a"),
-        F.col("n_b").cast("bigint").alias("n_b"),
-        F.col("n_both").cast("bigint").alias("n_both"),
-        F.expr("n_both * 10000 div (n_a + n_b - n_both)")
-        .cast("bigint")
-        .alias("jaccard_bp"),
-    )
+    return run_sql(spark, sf_dir, _OVERLAP_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Skyline (Pareto frontier) of suppliers on (cost, volume)
 # ---------------------------------------------------------------------------
 
-_SKYLINE_ORACLE = """
+_SKYLINE_SQL = """
 WITH s AS (
     SELECT l_suppkey,
-           CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
-                AS BIGINT) AS cost_cents,
+           CAST(sum(CAST(floor(l_extendedprice * 100 + 5e-1) AS BIGINT)) AS BIGINT)
+               AS cost_cents,
            CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-    FROM lineitem GROUP BY 1
-), pairs AS (
-    SELECT cost_cents, total_qty FROM s GROUP BY 1, 2
+    FROM {lineitem} GROUP BY l_suppkey
 ), marked AS (
     SELECT cost_cents, total_qty,
+           -- dim_window: at most |suppliers| distinct (cost, qty) points
            max(total_qty) OVER (ORDER BY cost_cents, total_qty DESC
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING) AS prev_max
-    FROM pairs
+                                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+               AS prev_max
+    FROM (SELECT DISTINCT cost_cents, total_qty FROM s) pairs
 ), frontier AS (
     SELECT cost_cents, total_qty FROM marked
     WHERE prev_max IS NULL OR total_qty > prev_max
 )
-SELECT s.l_suppkey, s.cost_cents, s.total_qty
-FROM s JOIN frontier USING (cost_cents, total_qty)
+SELECT /*+ BROADCAST(f) */ s.l_suppkey, s.cost_cents, s.total_qty
+FROM s JOIN frontier f ON s.cost_cents = f.cost_cents AND s.total_qty = f.total_qty
 """
 
 
-@op("pipeline_skyline_frontier", oracle=_SKYLINE_ORACLE, tags=("ext", "behavior", "scale"))
+@op("pipeline_skyline_frontier", oracle=duckdb_sql(_SKYLINE_SQL), tags=("ext", "behavior", "scale"))
 def pipeline_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline (Pareto frontier) of suppliers on (total cost MIN, total
     volume MAX): a supplier survives iff no other is at-most-as-costly
@@ -1202,65 +797,35 @@ def pipeline_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     divide-and-conquer forms; the sort-window identity is exactly the
     2-D specialization worth hard-coding.
     """
-    li = load(spark, sf_dir, "lineitem")
-    s = li.groupBy("l_suppkey").agg(
-        F.sum(F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("cost_cents"),
-        F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("total_qty"),
-    )
-    pairs = s.select("cost_cents", "total_qty").distinct()
-    w = dim_window(
-        Window.orderBy(F.asc("cost_cents"), F.desc("total_qty")).rowsBetween(
-            Window.unboundedPreceding, -1
-        ),
-        bound="\u2264|suppliers| distinct (cost, qty) frontier points",
-    )
-    frontier = (
-        pairs.select(
-            "cost_cents", "total_qty", F.max("total_qty").over(w).alias("prev_max")
-        )
-        .filter(F.col("prev_max").isNull() | (F.col("total_qty") > F.col("prev_max")))
-        .select("cost_cents", "total_qty")
-    )
-    return s.join(F.broadcast(frontier), ["cost_cents", "total_qty"]).select(
-        "l_suppkey", "cost_cents", "total_qty"
-    )
+    return run_sql(spark, sf_dir, _SKYLINE_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Customer segment migration matrix between eras
 # ---------------------------------------------------------------------------
 
-_MIG_CUT = "1998-01-01"
-_MIG_LOW_CENTS = 20_000_000   # < $200k era spend -> low
-_MIG_HIGH_CENTS = 50_000_000  # >= $500k -> high
-
-_MIGRATION_ORACLE = f"""
-WITH spend AS (
-    SELECT o_custkey,
-           CASE WHEN o_orderdate < DATE '{_MIG_CUT}' THEN 'a' ELSE 'b' END AS era,
-           sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS cents
-    FROM orders GROUP BY 1, 2
-), seg AS (
+# eras split at 1998-01-01; spend tiers: low < $200k, mid < $500k, high
+_MIGRATION_SQL = """
+WITH seg AS (
     SELECT o_custkey, era,
-           CASE WHEN cents < {_MIG_LOW_CENTS} THEN 'low'
-                WHEN cents < {_MIG_HIGH_CENTS} THEN 'mid'
+           CASE WHEN cents < 20000000 THEN 'low'
+                WHEN cents < 50000000 THEN 'mid'
                 ELSE 'high' END AS seg
-    FROM spend
-), m AS (
-    SELECT coalesce(a.o_custkey, b.o_custkey) AS o_custkey,
-           coalesce(a.seg, 'none') AS seg_a,
-           coalesce(b.seg, 'none') AS seg_b
-    FROM (SELECT * FROM seg WHERE era = 'a') a
-    FULL OUTER JOIN (SELECT * FROM seg WHERE era = 'b') b USING (o_custkey)
+    FROM (SELECT o_custkey,
+                 CASE WHEN o_orderdate < '1998-01-01' THEN 'a' ELSE 'b' END AS era,
+                 sum(CAST(floor(o_totalprice * 100 + 5e-1) AS BIGINT)) AS cents
+          FROM {orders} GROUP BY 1, 2) spend
 )
-SELECT seg_a, seg_b, CAST(count(*) AS BIGINT) AS n_customers
-FROM m GROUP BY 1, 2
+SELECT coalesce(a.seg, 'none') AS seg_a, coalesce(b.seg, 'none') AS seg_b,
+       CAST(count(*) AS BIGINT) AS n_customers
+FROM (SELECT o_custkey, seg FROM seg WHERE era = 'a') a
+FULL OUTER JOIN (SELECT o_custkey, seg FROM seg WHERE era = 'b') b
+  ON a.o_custkey = b.o_custkey
+GROUP BY 1, 2
 """
 
 
-@op("pipeline_segment_migration", oracle=_MIGRATION_ORACLE, tags=("ext", "behavior"))
+@op("pipeline_segment_migration", oracle=duckdb_sql(_MIGRATION_SQL), tags=("ext", "behavior"))
 def pipeline_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer segment-migration matrix between two eras: each
     customer's spend tier (low/mid/high on fixed cent thresholds)
@@ -1281,61 +846,34 @@ def pipeline_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the customer partitioning, then a 16-cell count. Nothing after the
     first aggregation scales with row count.
     """
-    o = load(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.when(F.col("o_orderdate") < F.lit(_MIG_CUT).cast("date"), "a")
-        .otherwise("b")
-        .alias("era"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    spend = o.groupBy("o_custkey", "era").agg(F.sum("cents").alias("cents"))
-    seg = spend.select(
-        "o_custkey",
-        "era",
-        F.when(F.col("cents") < _MIG_LOW_CENTS, "low")
-        .when(F.col("cents") < _MIG_HIGH_CENTS, "mid")
-        .otherwise("high")
-        .alias("seg"),
-    )
-    a = seg.filter(F.col("era") == "a").select("o_custkey", F.col("seg").alias("sa"))
-    b = seg.filter(F.col("era") == "b").select("o_custkey", F.col("seg").alias("sb"))
-    m = a.join(b, "o_custkey", "full_outer").select(
-        F.coalesce(F.col("sa"), F.lit("none")).alias("seg_a"),
-        F.coalesce(F.col("sb"), F.lit("none")).alias("seg_b"),
-    )
-    return m.groupBy("seg_a", "seg_b").agg(
-        F.count("*").cast("bigint").alias("n_customers")
-    )
+    return run_sql(spark, sf_dir, _MIGRATION_SQL)
 
 
 # ---------------------------------------------------------------------------
 # New vs returning users per day (first-seen attribution)
 # ---------------------------------------------------------------------------
 
-_NEW_RET_ORACLE = """
-WITH e AS (
-    SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day FROM events
+_NEW_RET_SQL = """
+WITH daily AS (
+    SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day FROM {events}
 ), first_seen AS (
-    SELECT user_id, min(day) AS first_day FROM e GROUP BY user_id
-), daily AS (
-    SELECT DISTINCT e.user_id, e.day, f.first_day
-    FROM e JOIN first_seen f USING (user_id)
+    SELECT user_id, min(day) AS first_day FROM daily GROUP BY user_id
 )
-SELECT day,
-       CAST(count(*) AS BIGINT)                                   AS dau,
-       CAST(sum(CASE WHEN day = first_day THEN 1 ELSE 0 END) AS BIGINT)
-                                                                  AS new_users,
-       CAST(sum(CASE WHEN day > first_day THEN 1 ELSE 0 END) AS BIGINT)
-                                                                  AS returning_users,
-       CAST(sum(CASE WHEN day = first_day THEN 1 ELSE 0 END) * 10000
-            // count(*) AS BIGINT)                                AS new_share_bp
-FROM daily GROUP BY day
+SELECT d.day,
+       CAST(count(*) AS BIGINT) AS dau,
+       CAST(sum(CASE WHEN d.day = f.first_day THEN 1 ELSE 0 END) AS BIGINT) AS new_users,
+       CAST(sum(CASE WHEN d.day > f.first_day THEN 1 ELSE 0 END) AS BIGINT)
+           AS returning_users,
+       CAST(sum(CASE WHEN d.day = f.first_day THEN 1 ELSE 0 END) * 10000 // count(*)
+            AS BIGINT) AS new_share_bp
+FROM daily d JOIN first_seen f ON d.user_id = f.user_id
+GROUP BY d.day
 """
 
 
 @op(
     "pipeline_new_returning_users",
-    oracle=_NEW_RET_ORACLE,
+    oracle=duckdb_sql(_NEW_RET_SQL),
     tags=("ext", "pipeline", "behavior"),
 )
 def pipeline_new_returning_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1351,52 +889,29 @@ def pipeline_new_returning_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_ngram_novelty first-seen shape on the events axis); the daily
     rollup is |days|-bounded. All integers, integral share.
     """
-    e = load(spark, sf_dir, "events").select(
-        "user_id", F.date_trunc("day", F.col("ts")).cast("date").alias("day")
-    )
-    daily = e.distinct()
-    first_seen = daily.groupBy("user_id").agg(F.min("day").alias("first_day"))
-    j = daily.join(first_seen, "user_id")
-    return j.groupBy("day").agg(
-        F.count("*").cast("bigint").alias("dau"),
-        F.sum(F.when(F.col("day") == F.col("first_day"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("new_users"),
-        F.sum(F.when(F.col("day") > F.col("first_day"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("returning_users"),
-        F.expr(
-            "sum(CASE WHEN day = first_day THEN 1 ELSE 0 END) * 10000"
-            " div count(*)"
-        )
-        .cast("bigint")
-        .alias("new_share_bp"),
-    )
+    return run_sql(spark, sf_dir, _NEW_RET_SQL)
 
 
 # ---------------------------------------------------------------------------
 # Order-to-ship lead time (exact rank percentiles per order priority)
 # ---------------------------------------------------------------------------
 
-_LEAD_SLA_DAYS = 90  # order-to-ship SLA for the miss-rate column
-
-_LEAD_TIME_ORACLE = f"""
+# a 90-day order-to-ship SLA for the miss-rate column
+_LEAD_TIME_SQL = """
 WITH d AS (
-    SELECT o.o_orderpriority,
-           CAST(date_diff('day', o.o_orderdate, l.l_shipdate) AS BIGINT) AS lead_days,
-           CASE WHEN date_diff('day', o.o_orderdate, l.l_shipdate)
-                    > {_LEAD_SLA_DAYS} THEN 1 ELSE 0 END AS late,
-           row_number() OVER (
-               PARTITION BY o.o_orderpriority
-               ORDER BY CAST(date_diff('day', o.o_orderdate, l.l_shipdate) AS BIGINT),
-                        l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_suppkey
-           ) AS rk,
-           count(*) OVER (PARTITION BY o.o_orderpriority) AS n
-    FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+    SELECT o_orderpriority, lead_days,
+           CASE WHEN lead_days > 90 THEN 1 ELSE 0 END AS late,
+           row_number() OVER (PARTITION BY o_orderpriority
+                              ORDER BY lead_days, l_orderkey, l_linenumber,
+                                       l_partkey, l_suppkey) AS rk,
+           count(*) OVER (PARTITION BY o_orderpriority) AS n
+    FROM (SELECT o.o_orderpriority, l.l_orderkey, l.l_linenumber, l.l_partkey,
+                 l.l_suppkey,
+                 {epoch[l_shipdate]} // 86400 - {epoch[o_orderdate]} // 86400
+                     AS lead_days
+          FROM {lineitem} l JOIN {orders} o ON l.l_orderkey = o.o_orderkey) j
 ), cuts AS (
-    SELECT o_orderpriority,
-           max(n) AS n,
-           sum(late) AS n_late,
+    SELECT o_orderpriority, max(n) AS n, sum(late) AS n_late,
            min(CASE WHEN rk = (n + 1) // 2 THEN lead_days END) AS p50_days,
            min(CASE WHEN rk = (n * 9 + 9) // 10 THEN lead_days END) AS p90_days,
            min(CASE WHEN rk = (n * 99 + 99) // 100 THEN lead_days END) AS p99_days
@@ -1414,7 +929,7 @@ FROM cuts
 
 @op(
     "pipeline_order_lead_time",
-    oracle=_LEAD_TIME_ORACLE,
+    oracle=duckdb_sql(_LEAD_TIME_SQL),
     tags=("ext", "pipeline", "stats"),
 )
 def pipeline_order_lead_time(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1440,45 +955,4 @@ def pipeline_order_lead_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     same rank-pick form runs per (priority, week) when finer
     partitioning is needed), then a dim-bounded agg.
     """
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_shipdate"
-    )
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    j = li.join(o, li.l_orderkey == o.o_orderkey)
-    days = F.datediff("l_shipdate", "o_orderdate").cast("bigint")
-    wp = Window.partitionBy("o_orderpriority")
-    d = j.select(
-        "o_orderpriority",
-        days.alias("lead_days"),
-        F.when(days > _LEAD_SLA_DAYS, 1).otherwise(0).alias("late"),
-        F.row_number()
-        .over(
-            Window.partitionBy("o_orderpriority").orderBy(
-                days.asc(),
-                F.col("l_orderkey").asc(),
-                F.col("l_linenumber").asc(),
-                F.col("l_partkey").asc(),
-                F.col("l_suppkey").asc(),
-            )
-        )
-        .alias("rk"),
-        F.count("*").over(wp).alias("n"),
-    )
-    pick = lambda cond: F.min(F.when(cond, F.col("lead_days")))  # noqa: E731
-    cuts = d.groupBy("o_orderpriority").agg(
-        F.max("n").alias("n"),
-        F.sum("late").alias("n_late"),
-        pick(F.col("rk") == F.expr("(n + 1) div 2")).alias("p50_days"),
-        pick(F.col("rk") == F.expr("(n * 9 + 9) div 10")).alias("p90_days"),
-        pick(F.col("rk") == F.expr("(n * 99 + 99) div 100")).alias("p99_days"),
-    )
-    return cuts.select(
-        "o_orderpriority",
-        F.col("n").cast("bigint").alias("n"),
-        F.col("p50_days").cast("bigint").alias("p50_days"),
-        F.col("p90_days").cast("bigint").alias("p90_days"),
-        F.col("p99_days").cast("bigint").alias("p99_days"),
-        F.expr("n_late * 10000 div n").cast("bigint").alias("late_bp"),
-    )
+    return run_sql(spark, sf_dir, _LEAD_TIME_SQL)

@@ -2174,48 +2174,53 @@ def stats_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact Kendall tau-b of quantity vs discount per brand (bounded domains)
 # ---------------------------------------------------------------------------
 
-_TAU_ORACLE = """
-WITH b AS (
-    SELECT p.p_brand,
-           CAST(floor(l.l_discount * 10000 + 0.5) AS BIGINT) AS x,
-           CAST(floor(l.l_quantity + 0.5) AS BIGINT) AS y
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-), c AS (
-    SELECT p_brand, x, y, count(*) AS n FROM b GROUP BY 1, 2, 3
-), pairs AS (
+# The (brand, discount bp, quantity) contingency: at most 550 cells per
+# brand, read three times by Kendall's tau and by Spearman's rho, so
+# both run it as a checkpointed stage.
+_BRAND_CELLS = """
+SELECT /*+ BROADCAST(p) */ p.p_brand, l.x, l.y, count(*) AS n
+FROM (SELECT l_partkey,
+             CAST(floor(l_discount * 10000 + 5e-1) AS BIGINT) AS x,
+             CAST(floor(l_quantity + 5e-1) AS BIGINT) AS y
+      FROM {lineitem}) l
+JOIN {part} p ON l.l_partkey = p.p_partkey
+GROUP BY p.p_brand, l.x, l.y
+"""
+
+_TAU_SQL = """
+WITH pairs AS (
     SELECT a.p_brand,
-           sum(CASE WHEN (a.x < o.x AND a.y < o.y)
-                      OR (a.x > o.x AND a.y > o.y)
+           sum(CASE WHEN (a.x < o.x AND a.y < o.y) OR (a.x > o.x AND a.y > o.y)
                     THEN a.n * o.n ELSE 0 END) AS c2,
-           sum(CASE WHEN (a.x < o.x AND a.y > o.y)
-                      OR (a.x > o.x AND a.y < o.y)
+           sum(CASE WHEN (a.x < o.x AND a.y > o.y) OR (a.x > o.x AND a.y < o.y)
                     THEN a.n * o.n ELSE 0 END) AS d2
-    FROM c a JOIN c o ON a.p_brand = o.p_brand GROUP BY 1
+    FROM {cells} a JOIN {cells} o ON a.p_brand = o.p_brand
+    GROUP BY a.p_brand
 ), mx AS (
     SELECT p_brand, sum(nx * nx) AS sxx, sum(nx) AS nn
-    FROM (SELECT p_brand, x, sum(n) AS nx FROM c GROUP BY 1, 2) GROUP BY 1
+    FROM (SELECT p_brand, x, sum(n) AS nx FROM {cells} GROUP BY p_brand, x) v
+    GROUP BY p_brand
 ), my AS (
     SELECT p_brand, sum(ny * ny) AS syy
-    FROM (SELECT p_brand, y, sum(n) AS ny FROM c GROUP BY 1, 2) GROUP BY 1
+    FROM (SELECT p_brand, y, sum(n) AS ny FROM {cells} GROUP BY p_brand, y) v
+    GROUP BY p_brand
 ), f AS (
-    SELECT mx.p_brand, pairs.c2, pairs.d2, mx.nn,
-           mx.nn * mx.nn - mx.sxx AS denx,
-           mx.nn * mx.nn - my.syy AS deny
-    FROM pairs JOIN mx USING (p_brand) JOIN my USING (p_brand)
-    WHERE mx.nn >= 2
+    SELECT pairs.p_brand, c2, d2, nn, nn * nn - sxx AS denx, nn * nn - syy AS deny
+    FROM pairs JOIN mx ON pairs.p_brand = mx.p_brand JOIN my ON pairs.p_brand = my.p_brand
+    WHERE nn >= 2
 )
 SELECT p_brand,
        CAST(nn AS BIGINT) AS n_lines,
        CAST(c2 // 2 AS BIGINT) AS n_concordant,
        CAST(d2 // 2 AS BIGINT) AS n_discordant,
-       round(CAST(c2 - d2 AS DOUBLE)
-             / nullif(sqrt(CAST(denx AS DOUBLE) * deny), 0.0), 6) + 0.0
-           AS kendall_tau_b
+       round(CAST(c2 - d2 AS DOUBLE) / nullif(sqrt(CAST(denx AS DOUBLE) * deny), 0e0), 6)
+           + 0e0 AS kendall_tau_b
 FROM f
 """
 
 
-@op("stats_kendall_tau_binned", oracle=_TAU_ORACLE, tags=("ext", "stats"))
+@op("stats_kendall_tau_binned", oracle=duckdb_sql(_TAU_SQL, stages={"cells": _BRAND_CELLS}),
+    tags=("ext", "stats"))
 def stats_kendall_tau_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT Kendall tau-b between discount and quantity per brand — the
     rank-based monotonic-association companion to
@@ -2240,82 +2245,7 @@ def stats_kendall_tau_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     DOMAIN sizes, not the row count — the classic bounded-cardinality
     rewrite of a quadratic statistic.
     """
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.floor(F.col("l_discount") * 10000 + F.lit(0.5)).cast("bigint").alias("x"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("bigint").alias("y"),
-    )
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    c = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "x", "y")
-        .agg(F.count("*").alias("n"))
-        # the ≤550·|brands| cell frame feeds THREE consumers (pair join,
-        # x-marginals, y-marginals): checkpoint it so the fact scan +
-        # broadcast join run once, not once per consumer
-        .localCheckpoint()
-    )
-    a, o = c.alias("a"), c.alias("o")
-    conc = (
-        ((F.col("a.x") < F.col("o.x")) & (F.col("a.y") < F.col("o.y")))
-        | ((F.col("a.x") > F.col("o.x")) & (F.col("a.y") > F.col("o.y")))
-    )
-    disc = (
-        ((F.col("a.x") < F.col("o.x")) & (F.col("a.y") > F.col("o.y")))
-        | ((F.col("a.x") > F.col("o.x")) & (F.col("a.y") < F.col("o.y")))
-    )
-    pairs = (
-        a.join(o, F.col("a.p_brand") == F.col("o.p_brand"))
-        .groupBy(F.col("a.p_brand").alias("p_brand"))
-        .agg(
-            F.sum(F.when(conc, F.col("a.n") * F.col("o.n")).otherwise(0)).alias("c2"),
-            F.sum(F.when(disc, F.col("a.n") * F.col("o.n")).otherwise(0)).alias("d2"),
-        )
-    )
-    mx = (
-        c.groupBy("p_brand", "x")
-        .agg(F.sum("n").alias("nx"))
-        .groupBy("p_brand")
-        .agg(
-            F.sum(F.col("nx") * F.col("nx")).alias("sxx"),
-            F.sum("nx").alias("nn"),
-        )
-    )
-    my = (
-        c.groupBy("p_brand", "y")
-        .agg(F.sum("n").alias("ny"))
-        .groupBy("p_brand")
-        .agg(F.sum(F.col("ny") * F.col("ny")).alias("syy"))
-    )
-    f = (
-        pairs.join(mx, "p_brand")
-        .join(my, "p_brand")
-        .filter(F.col("nn") >= 2)
-        .select(
-            "p_brand",
-            "c2",
-            "d2",
-            "nn",
-            (F.col("nn") * F.col("nn") - F.col("sxx")).alias("denx"),
-            (F.col("nn") * F.col("nn") - F.col("syy")).alias("deny"),
-        )
-    )
-    return f.select(
-        "p_brand",
-        F.col("nn").cast("bigint").alias("n_lines"),
-        F.expr("c2 div 2").cast("bigint").alias("n_concordant"),
-        F.expr("d2 div 2").cast("bigint").alias("n_discordant"),
-        (
-            F.round(
-                (F.col("c2") - F.col("d2")).cast("double")
-                / F.nullif(
-                    F.sqrt(F.col("denx").cast("double") * F.col("deny")), F.lit(0.0)
-                ),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("kendall_tau_b"),
-    )
+    return run_sql(spark, sf_dir, _TAU_SQL, stages={"cells": _BRAND_CELLS})
 
 
 # ---------------------------------------------------------------------------
@@ -2654,50 +2584,44 @@ def stats_trend_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact tie-corrected Spearman rho over bounded domains (tau's rank sibling)
 # ---------------------------------------------------------------------------
 
-_SPEARMAN_ORACLE = """
-WITH li AS (
-    SELECT l_partkey,
-           CAST(floor(l_discount * 10000 + 0.5) AS BIGINT) AS x,
-           CAST(floor(l_quantity + 0.5) AS BIGINT) AS y
-    FROM lineitem
-), c AS (
-    SELECT p_brand, x, y, count(*) AS n
-    FROM li JOIN part ON l_partkey = p_partkey
-    GROUP BY 1, 2, 3
-), xr AS (
+_SPEARMAN_SQL = """
+WITH xr AS (
     SELECT p_brand, x,
-           2 * coalesce(sum(nx) OVER (PARTITION BY p_brand ORDER BY x
+           2 * coalesce(sum(nv) OVER (PARTITION BY p_brand ORDER BY x
                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           + nx + 1 AS rx2
-    FROM (SELECT p_brand, x, sum(n) AS nx FROM c GROUP BY 1, 2)
+           + nv + 1 AS rx2
+    FROM (SELECT p_brand, x, sum(n) AS nv FROM {cells} GROUP BY p_brand, x) v
 ), yr AS (
     SELECT p_brand, y,
-           2 * coalesce(sum(ny) OVER (PARTITION BY p_brand ORDER BY y
+           2 * coalesce(sum(nv) OVER (PARTITION BY p_brand ORDER BY y
                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           + ny + 1 AS ry2
-    FROM (SELECT p_brand, y, sum(n) AS ny FROM c GROUP BY 1, 2)
+           + nv + 1 AS ry2
+    FROM (SELECT p_brand, y, sum(n) AS nv FROM {cells} GROUP BY p_brand, y) v
 ), m AS (
     SELECT c.p_brand,
-           sum(CAST(n AS HUGEINT)) AS nn,
-           sum(CAST(n AS HUGEINT) * rx2) AS sx,
-           sum(CAST(n AS HUGEINT) * ry2) AS sy,
-           sum(CAST(n AS HUGEINT) * rx2 * rx2) AS sxx,
-           sum(CAST(n AS HUGEINT) * ry2 * ry2) AS syy,
-           sum(CAST(n AS HUGEINT) * rx2 * ry2) AS sxy
-    FROM c JOIN xr USING (p_brand, x) JOIN yr USING (p_brand, y)
-    GROUP BY 1 HAVING sum(n) >= 2
+           sum(CAST(n AS {wide})) AS nn,
+           sum(CAST(n AS {wide}) * rx2) AS sx,
+           sum(CAST(n AS {wide}) * ry2) AS sy,
+           sum(CAST(n AS {wide}) * rx2 * rx2) AS sxx,
+           sum(CAST(n AS {wide}) * ry2 * ry2) AS syy,
+           sum(CAST(n AS {wide}) * rx2 * ry2) AS sxy
+    FROM {cells} c
+    JOIN xr ON c.p_brand = xr.p_brand AND c.x = xr.x
+    JOIN yr ON c.p_brand = yr.p_brand AND c.y = yr.y
+    GROUP BY c.p_brand
 )
 SELECT p_brand,
        CAST(nn AS BIGINT) AS n_lines,
        round(CAST(nn * sxy - sx * sy AS DOUBLE)
              / nullif(sqrt(CAST(nn * sxx - sx * sx AS DOUBLE)
-                           * CAST(nn * syy - sy * sy AS DOUBLE)), 0.0),
-             6) + 0.0 AS spearman_rho
-FROM m
+                           * CAST(nn * syy - sy * sy AS DOUBLE)), 0e0), 6)
+           + 0e0 AS spearman_rho
+FROM m WHERE nn >= 2
 """
 
 
-@op("stats_spearman_binned", oracle=_SPEARMAN_ORACLE, tags=("ext", "stats"))
+@op("stats_spearman_binned", oracle=duckdb_sql(_SPEARMAN_SQL, stages={"cells": _BRAND_CELLS}),
+    tags=("ext", "stats"))
 def stats_spearman_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT tie-corrected Spearman rho between discount and quantity
     per brand — the rank-correlation sibling of stats_kendall_tau_binned
@@ -2722,66 +2646,7 @@ def stats_spearman_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT-VALUE rows (never row scale); moments fold on the cell
     frame.
     """
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.floor(F.col("l_discount") * 10000 + F.lit(0.5)).cast("bigint").alias("x"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("bigint").alias("y"),
-    )
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    c = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "x", "y")
-        .agg(F.count("*").alias("n"))
-        # bounded cell frame, three consumers — one fact scan (see tau)
-        .localCheckpoint()
-    )
-
-    def ranks(col: str, out: str) -> DataFrame:
-        per = c.groupBy("p_brand", col).agg(F.sum("n").alias("nv"))
-        w = (
-            Window.partitionBy("p_brand")
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        return per.select(
-            "p_brand",
-            col,
-            (
-                2 * F.coalesce(F.sum("nv").over(w), F.lit(0))
-                + F.col("nv")
-                + 1
-            ).alias(out),
-        )
-
-    d38 = "decimal(38,0)"
-    nC = F.col("n").cast(d38)
-    m = (
-        c.join(ranks("x", "rx2"), ["p_brand", "x"])
-        .join(ranks("y", "ry2"), ["p_brand", "y"])
-        .groupBy("p_brand")
-        .agg(
-            F.sum(nC).alias("nn"),
-            F.sum(nC * F.col("rx2")).alias("sx"),
-            F.sum(nC * F.col("ry2")).alias("sy"),
-            F.sum(nC * F.col("rx2") * F.col("rx2")).alias("sxx"),
-            F.sum(nC * F.col("ry2") * F.col("ry2")).alias("syy"),
-            F.sum(nC * F.col("rx2") * F.col("ry2")).alias("sxy"),
-        )
-        .filter(F.col("nn") >= 2)
-    )
-    nn = F.col("nn")
-    num = (nn * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den = F.sqrt(
-        (nn * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-        * (nn * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    )
-    return m.select(
-        "p_brand",
-        nn.cast("bigint").alias("n_lines"),
-        (F.round(num / F.nullif(den, F.lit(0.0)), 6) + F.lit(0.0)).alias(
-            "spearman_rho"
-        ),
-    )
+    return run_sql(spark, sf_dir, _SPEARMAN_SQL, stages={"cells": _BRAND_CELLS})
 
 
 # ---------------------------------------------------------------------------
@@ -2790,11 +2655,15 @@ def stats_spearman_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # chi-square 95% critical values, dof 1..8 — the verdict's literal table
 # (dof = observed groups - 1; the fixture has 5 event types -> dof 4).
-_CHI2_CRIT_BY_DOF = (
-    "CASE dof WHEN 1 THEN 3.841459 WHEN 2 THEN 5.991465 WHEN 3 THEN 7.814728"
-    " WHEN 4 THEN 9.487729 WHEN 5 THEN 11.070498 WHEN 6 THEN 12.591587"
-    " WHEN 7 THEN 14.06714 WHEN 8 THEN 15.507313 ELSE NULL END"
-)
+_CHI2_CRIT = {1: "3.841459e0", 2: "5.991465e0", 3: "7.814728e0", 4: "9.487729e0",
+              5: "11.070498e0", 6: "12.591587e0", 7: "14.06714e0", 8: "15.507313e0"}
+
+
+def _chi2_crit(dof: str) -> str:
+    """The SQL ``CASE`` that looks up the critical value of ``dof``."""
+    whens = " ".join(f"WHEN {k} THEN {v}" for k, v in _CHI2_CRIT.items())
+    return f"CASE {dof} {whens} ELSE NULL END"
+
 
 _KW_ORACLE = f"""
 WITH e AS (
@@ -2840,8 +2709,7 @@ SELECT CAST(k_groups AS BIGINT) AS k_groups,
              / nullif(1.0 - CAST(tie3 AS DOUBLE)
                       / (CAST(n_total AS DOUBLE) * n_total * n_total - n_total),
                       0.0), 6)
-       > (SELECT {_CHI2_CRIT_BY_DOF}
-          FROM (SELECT CAST(k_groups - 1 AS BIGINT) AS dof))
+       > ({_chi2_crit("k_groups - 1")})
            AS reject_equal_location
 FROM stat
 """
@@ -2926,7 +2794,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         (rh + F.lit(0.0)).alias("h_stat"),
         (
             rh
-            > F.expr(_CHI2_CRIT_BY_DOF.replace("CASE dof", "CASE k_groups - 1"))
+            > F.expr(_chi2_crit("k_groups - 1"))
         ).alias("reject_equal_location"),
     )
 
@@ -3644,57 +3512,55 @@ def stats_cvm_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Friedman test over (day block x event-type treatment) cells (round 14)
 # ---------------------------------------------------------------------------
 
-_FRIEDMAN_ORACLE = f"""
-WITH e AS (
-    SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day, event_type,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), cells AS (
-    SELECT day, event_type, count(*) AS n, CAST(sum(cents) AS BIGINT) AS sc
-    FROM e GROUP BY 1, 2
-), kg AS (SELECT count(DISTINCT event_type) AS k FROM cells),
-daycnt AS (SELECT day, count(*) AS ct FROM cells GROUP BY 1),
-keep AS (
-    SELECT c.day, c.event_type, CAST(c.sc AS DOUBLE) / c.n AS mval
-    FROM cells c JOIN daycnt d ON c.day = d.day CROSS JOIN kg
+# The (day, event type) cell frame, read three times: a checkpointed stage.
+_FRIEDMAN_CELLS = """
+SELECT {te} // 86400 AS day, event_type, count(*) AS n,
+       CAST(sum(CAST(floor(value * 100 + 5e-1) AS BIGINT)) AS BIGINT) AS sc
+FROM {events} GROUP BY 1, 2
+"""
+
+_FRIEDMAN_SQL = """
+WITH kg AS (
+    SELECT count(DISTINCT event_type) AS k FROM {cells}
+), daycnt AS (
+    SELECT day, count(*) AS ct FROM {cells} GROUP BY day
+), keep AS (
+    SELECT /*+ BROADCAST(d, kg) */ c.day, c.event_type, CAST(c.sc AS DOUBLE) / c.n AS mval
+    FROM {cells} c JOIN daycnt d ON c.day = d.day CROSS JOIN kg
     WHERE d.ct = kg.k
 ), rk AS (
     SELECT day, event_type, mval,
-           row_number() OVER (PARTITION BY day
-                              ORDER BY mval, event_type) AS rn
+           row_number() OVER (PARTITION BY day ORDER BY mval, event_type) AS rn
     FROM keep
 ), r2t AS (
     SELECT day, event_type,
-           min(rn) OVER (PARTITION BY day, mval)
-         + max(rn) OVER (PARTITION BY day, mval) AS r2
+           min(rn) OVER (PARTITION BY day, mval) + max(rn) OVER (PARTITION BY day, mval)
+               AS r2
     FROM rk
 ), per AS (
-    SELECT event_type, CAST(sum(r2) AS BIGINT) AS d2 FROM r2t GROUP BY 1
+    SELECT event_type, CAST(sum(r2) AS BIGINT) AS d2 FROM r2t GROUP BY event_type
 ), gl AS (
-    SELECT CAST(sum(r2 * r2) AS BIGINT) AS a2,
-           count(DISTINCT day) AS b
-    FROM r2t
-), sd AS (SELECT CAST(sum(d2 * d2) AS BIGINT) AS sd2 FROM per),
-stat AS (
-    SELECT g.b, kg.k,
-           (kg.k - 1) * CAST(s.sd2 - g.b * g.b * kg.k * (kg.k + 1)
-                             * (kg.k + 1) AS DOUBLE)
-           / nullif(CAST(g.a2 - g.b * kg.k * (kg.k + 1) * (kg.k + 1)
-                         AS DOUBLE), 0.0) AS chi2
+    SELECT CAST(sum(r2 * r2) AS BIGINT) AS a2, count(DISTINCT day) AS b FROM r2t
+), sd AS (
+    SELECT CAST(sum(d2 * d2) AS BIGINT) AS sd2 FROM per
+), stat AS (
+    SELECT /*+ BROADCAST(s, kg) */ g.b, kg.k,
+           (kg.k - 1) * CAST(s.sd2 - g.b * (g.b * kg.k * (kg.k + 1) * (kg.k + 1)) AS DOUBLE)
+           / nullif(CAST(g.a2 - g.b * kg.k * (kg.k + 1) * (kg.k + 1) AS DOUBLE), 0e0)
+               AS chi2
     FROM gl g CROSS JOIN sd s CROSS JOIN kg
 )
 SELECT CAST(b AS BIGINT) AS b_blocks,
        CAST(k AS BIGINT) AS k_treatments,
        CAST(k - 1 AS BIGINT) AS dof,
-       round(chi2, 6) + 0.0 AS chi2_friedman,
-       round(chi2, 6) > (SELECT {_CHI2_CRIT_BY_DOF}
-                         FROM (SELECT CAST(k - 1 AS BIGINT) AS dof FROM kg))
-           AS reject_equal_treatments
+       round(chi2, 6) + 0e0 AS chi2_friedman,
+       round(chi2, 6) > """ + _chi2_crit("k - 1") + """ AS reject_equal_treatments
 FROM stat
 """
 
 
-@op("stats_friedman", oracle=_FRIEDMAN_ORACLE, tags=("ext", "stats"))
+@op("stats_friedman", oracle=duckdb_sql(_FRIEDMAN_SQL, stages={"cells": _FRIEDMAN_CELLS}),
+    tags=("ext", "stats"))
 def stats_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Friedman test on the (epoch-day block x event-type treatment)
     design: do the k event types keep the same value LEVEL once every
@@ -3731,101 +3597,32 @@ def stats_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparisons are implicitly time-blocked; this is that design made
     explicit as a test.
     """
-    b0 = load(spark, sf_dir, "events").select(
-        epoch_seconds("ts").alias("te"),
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    cells = (
-        b0.select(
-            F.expr("te div 86400").alias("day"), "event_type", "cents"
-        )
-        .groupBy("day", "event_type")
-        .agg(F.count("*").alias("n"), F.sum("cents").cast("bigint").alias("sc"))
-        .localCheckpoint()
-    )
-    kg = cells.agg(F.countDistinct("event_type").alias("k"))
-    daycnt = cells.groupBy("day").agg(F.count("*").alias("ct"))
-    keep = (
-        cells.join(F.broadcast(daycnt), "day")
-        .crossJoin(F.broadcast(kg))
-        .filter(F.col("ct") == F.col("k"))
-        .select(
-            "day",
-            "event_type",
-            (F.col("sc").cast("double") / F.col("n")).alias("mval"),
-        )
-    )
-    w_day = dim_window(
-        Window.partitionBy("day").orderBy("mval", "event_type"),
-        bound="<= k treatments per day block (design constant)",
-    )
-    rk = keep.select(
-        "day",
-        "event_type",
-        "mval",
-        F.row_number().over(w_day).alias("rn"),
-    )
-    w_peer = dim_window(
-        Window.partitionBy("day", "mval"),
-        bound="<= k tied cells per (day, mval) peer group",
-    )
-    r2t = rk.select(
-        "day",
-        "event_type",
-        (F.min("rn").over(w_peer) + F.max("rn").over(w_peer)).alias("r2"),
-    )
-    per = r2t.groupBy("event_type").agg(
-        F.sum("r2").cast("bigint").alias("d2")
-    )
-    glob = r2t.agg(
-        F.sum(F.col("r2") * F.col("r2")).cast("bigint").alias("a2"),
-        F.countDistinct("day").alias("b"),
-    )
-    sd = per.agg(F.sum(F.col("d2") * F.col("d2")).cast("bigint").alias("sd2"))
-    s = glob.crossJoin(F.broadcast(sd)).crossJoin(F.broadcast(kg))
-    kk = F.col("k")
-    cterm = F.col("b") * kk * (kk + 1) * (kk + 1)
-    chi2 = (
-        (kk - 1)
-        * (F.col("sd2") - F.col("b") * cterm).cast("double")
-        / F.nullif((F.col("a2") - cterm).cast("double"), F.lit(0.0))
-    )
-    rc = F.round(chi2, 6)
-    return s.select(
-        F.col("b").cast("bigint").alias("b_blocks"),
-        kk.cast("bigint").alias("k_treatments"),
-        (kk - 1).cast("bigint").alias("dof"),
-        (rc + F.lit(0.0)).alias("chi2_friedman"),
-        (
-            rc > F.expr(_CHI2_CRIT_BY_DOF.replace("CASE dof", "CASE k - 1"))
-        ).alias("reject_equal_treatments"),
-    )
+    return run_sql(spark, sf_dir, _FRIEDMAN_SQL, stages={"cells": _FRIEDMAN_CELLS})
 
 # ---------------------------------------------------------------------------
 # Page's trend test across intraday time-of-day slots (round 14)
 # ---------------------------------------------------------------------------
 
-# One-sided 5% normal critical value (Phi^-1(0.95), stdlib NormalDist).
-_Z_ONE_SIDED_05 = 1.644854
+# The (day, 4-hour slot) cell frame, read four times: a checkpointed stage.
+_PAGE_CELLS = """
+SELECT {te} // 86400 AS day, ({te} % 86400) // 14400 AS slot, count(*) AS n,
+       CAST(sum(CAST(floor(value * 100 + 5e-1) AS BIGINT)) AS BIGINT) AS sc
+FROM {events} GROUP BY 1, 2
+"""
 
-_PAGE_ORACLE = f"""
-WITH e AS (
-    SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-           (CAST(floor(epoch(ts)) AS BIGINT) % 86400) // 14400 AS slot,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), cells AS (
-    SELECT day, slot, count(*) AS n, CAST(sum(cents) AS BIGINT) AS sc
-    FROM e GROUP BY 1, 2
-), kg AS (SELECT count(DISTINCT slot) AS k FROM cells),
-wts AS (
-    SELECT slot, row_number() OVER (ORDER BY slot) AS w
-    FROM (SELECT DISTINCT slot FROM cells)
-), daycnt AS (SELECT day, count(*) AS ct FROM cells GROUP BY 1),
-keep AS (
-    SELECT c.day, c.slot, CAST(c.sc AS DOUBLE) / c.n AS mval
-    FROM cells c JOIN daycnt d ON c.day = d.day CROSS JOIN kg
+_PAGE_SQL = """
+WITH kg AS (
+    SELECT count(DISTINCT slot) AS k FROM {cells}
+), wts AS (
+    SELECT slot,
+           -- dim_window: at most k distinct slots (the design constant 6)
+           row_number() OVER (ORDER BY slot) AS w
+    FROM (SELECT DISTINCT slot FROM {cells}) s
+), daycnt AS (
+    SELECT day, count(*) AS ct FROM {cells} GROUP BY day
+), keep AS (
+    SELECT /*+ BROADCAST(d, kg) */ c.day, c.slot, CAST(c.sc AS DOUBLE) / c.n AS mval
+    FROM {cells} c JOIN daycnt d ON c.day = d.day CROSS JOIN kg
     WHERE d.ct = kg.k
 ), rk AS (
     SELECT day, slot, mval,
@@ -3833,32 +3630,33 @@ keep AS (
     FROM keep
 ), r2t AS (
     SELECT day, slot,
-           min(rn) OVER (PARTITION BY day, mval)
-         + max(rn) OVER (PARTITION BY day, mval) AS r2
+           min(rn) OVER (PARTITION BY day, mval) + max(rn) OVER (PARTITION BY day, mval)
+               AS r2
     FROM rk
 ), gl AS (
-    SELECT CAST(sum(w.w * t.r2) AS BIGINT) AS l2,
+    SELECT /*+ BROADCAST(w) */ CAST(sum(w.w * t.r2) AS BIGINT) AS l2,
            count(DISTINCT t.day) AS b
     FROM r2t t JOIN wts w ON t.slot = w.slot
 ), stat AS (
-    SELECT g.b, kg.k, g.l2,
+    SELECT /*+ BROADCAST(kg) */ g.b, kg.k, g.l2,
            CAST(g.b * kg.k * (kg.k + 1) * (kg.k + 1) AS BIGINT) // 2 AS e2l,
-           CAST(g.b AS DOUBLE) * kg.k * kg.k * (kg.k + 1) * (kg.k + 1)
-               * (kg.k - 1) / 144.0 AS varl
+           CAST(g.b AS DOUBLE) * kg.k * kg.k * (kg.k + 1) * (kg.k + 1) * (kg.k - 1)
+               / 144e0 AS varl
     FROM gl g CROSS JOIN kg
 )
 SELECT CAST(b AS BIGINT) AS b_blocks,
        CAST(k AS BIGINT) AS k_slots,
        CAST(l2 AS BIGINT) AS l2_stat,
-       round(CAST(l2 - e2l AS DOUBLE) / nullif(2.0 * sqrt(varl), 0.0), 6)
-           + 0.0 AS z_page,
-       round(CAST(l2 - e2l AS DOUBLE) / nullif(2.0 * sqrt(varl), 0.0), 6)
-           > {_Z_ONE_SIDED_05} AS reject_increasing_trend
+       round(CAST(l2 - e2l AS DOUBLE) / nullif(2e0 * sqrt(varl), 0e0), 6) + 0e0 AS z_page,
+       -- the one-sided 5% critical value of the standard normal
+       round(CAST(l2 - e2l AS DOUBLE) / nullif(2e0 * sqrt(varl), 0e0), 6) > 1.644854e0
+           AS reject_increasing_trend
 FROM stat
 """
 
 
-@op("stats_page_trend", oracle=_PAGE_ORACLE, tags=("ext", "stats"))
+@op("stats_page_trend", oracle=duckdb_sql(_PAGE_SQL, stages={"cells": _PAGE_CELLS}),
+    tags=("ext", "stats"))
 def stats_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page's L test for an ORDERED intraday trend: does the event value
     level rise monotonically across the day's six 4-hour slots, judged
@@ -3890,122 +3688,38 @@ def stats_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     clock is the reference's only time structure; this op grades the
     intraday cycle that clock samples.
     """
-    b0 = load(spark, sf_dir, "events").select(
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    cells = (
-        b0.select(
-            F.expr("te div 86400").alias("day"),
-            F.expr("(te % 86400) div 14400").alias("slot"),
-            "cents",
-        )
-        .groupBy("day", "slot")
-        .agg(F.count("*").alias("n"), F.sum("cents").cast("bigint").alias("sc"))
-        .localCheckpoint()
-    )
-    kg = cells.agg(F.countDistinct("slot").alias("k"))
-    wts = (
-        cells.select("slot")
-        .distinct()
-        .select(
-            "slot",
-            F.row_number()
-            .over(
-                dim_window(
-                    Window.partitionBy().orderBy("slot"),
-                    bound="<= k distinct slots (design constant 6)",
-                )
-            )
-            .alias("w"),
-        )
-    )
-    daycnt = cells.groupBy("day").agg(F.count("*").alias("ct"))
-    keep = (
-        cells.join(F.broadcast(daycnt), "day")
-        .crossJoin(F.broadcast(kg))
-        .filter(F.col("ct") == F.col("k"))
-        .select(
-            "day",
-            "slot",
-            (F.col("sc").cast("double") / F.col("n")).alias("mval"),
-        )
-    )
-    w_day = dim_window(
-        Window.partitionBy("day").orderBy("mval", "slot"),
-        bound="<= k slots per day block (design constant)",
-    )
-    rk = keep.select(
-        "day", "slot", "mval", F.row_number().over(w_day).alias("rn")
-    )
-    w_peer = dim_window(
-        Window.partitionBy("day", "mval"),
-        bound="<= k tied cells per (day, mval) peer group",
-    )
-    r2t = rk.select(
-        "day",
-        "slot",
-        (F.min("rn").over(w_peer) + F.max("rn").over(w_peer)).alias("r2"),
-    )
-    gl = (
-        r2t.join(F.broadcast(wts), "slot")
-        .agg(
-            F.sum(F.col("w") * F.col("r2")).cast("bigint").alias("l2"),
-            F.countDistinct("day").alias("b"),
-        )
-    )
-    s = gl.crossJoin(F.broadcast(kg))
-    kk = F.col("k")
-    e2l = F.expr("CAST(b * k * (k + 1) * (k + 1) AS BIGINT) div 2")
-    varl = (
-        F.col("b").cast("double")
-        * kk
-        * kk
-        * (kk + 1)
-        * (kk + 1)
-        * (kk - 1)
-        / F.lit(144.0)
-    )
-    z = (F.col("l2") - e2l).cast("double") / F.nullif(
-        F.lit(2.0) * F.sqrt(varl), F.lit(0.0)
-    )
-    rz = F.round(z, 6)
-    return s.select(
-        F.col("b").cast("bigint").alias("b_blocks"),
-        kk.cast("bigint").alias("k_slots"),
-        F.col("l2").cast("bigint").alias("l2_stat"),
-        (rz + F.lit(0.0)).alias("z_page"),
-        (rz > F.lit(_Z_ONE_SIDED_05)).alias("reject_increasing_trend"),
-    )
+    return run_sql(spark, sf_dir, _PAGE_SQL, stages={"cells": _PAGE_CELLS})
 
 # ---------------------------------------------------------------------------
 # Jonckheere-Terpstra ordered-alternative test across epoch weeks (round 14)
 # ---------------------------------------------------------------------------
 
-_JT_ORACLE = f"""
-WITH e AS (
-    SELECT CAST(floor(epoch(ts)) AS BIGINT) // 604800 AS wk,
-           CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-    FROM events
-), pv AS (
-    SELECT wk, cents, count(*) AS c FROM e GROUP BY 1, 2
-), vals AS (
-    SELECT cents, CAST(sum(c) AS BIGINT) AS t FROM pv GROUP BY 1
-), wks AS (SELECT DISTINCT wk FROM pv),
-grid AS (
-    SELECT w.wk, v.cents, COALESCE(p.c, 0) AS c
-    FROM wks w CROSS JOIN vals v
-    LEFT JOIN pv p ON p.wk = w.wk AND p.cents = v.cents
-), gcum AS (
-    SELECT wk, cents, c,
-           COALESCE(sum(c) OVER (PARTITION BY wk ORDER BY cents
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                          AND 1 PRECEDING), 0) AS below
-    FROM grid
-), u AS (
-    SELECT COALESCE(CAST(sum(2 * h.c * g.below + g.c * h.c) AS BIGINT), 0)
-               AS u2
-    FROM gcum g JOIN gcum h ON g.cents = h.cents AND g.wk < h.wk
+# Two checkpointed stages: the (week, cents) count frame ``pv``, read by
+# the grid and by both marginals, and the dense (week x distinct cents)
+# grid with each week's strictly-below prefix count, read by both sides
+# of the week-pair join.
+_JT_STAGES = {
+    "pv": """
+SELECT {te} // 604800 AS wk, CAST(floor(value * 100 + 5e-1) AS BIGINT) AS cents,
+       count(*) AS c
+FROM {events} GROUP BY 1, 2
+""",
+    "grid": """
+SELECT wk, cents, c,
+       coalesce(sum(c) OVER (PARTITION BY wk ORDER BY cents
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           AS below
+FROM (SELECT w.wk, v.cents, coalesce(p.c, 0) AS c
+      FROM (SELECT DISTINCT wk FROM {pv}) w
+      CROSS JOIN (SELECT DISTINCT cents FROM {pv}) v
+      LEFT JOIN {pv} p ON p.wk = w.wk AND p.cents = v.cents) g
+""",
+}
+
+_JT_SQL = """
+WITH u AS (
+    SELECT CAST(coalesce(sum(2 * h.c * g.below + g.c * h.c), 0) AS BIGINT) AS u2
+    FROM {grid} g JOIN {grid} h ON g.cents = h.cents AND g.wk < h.wk
 ), ng AS (
     SELECT CAST(count(*) AS BIGINT) AS k_groups,
            CAST(sum(n) AS BIGINT) AS n_total,
@@ -4013,36 +3727,36 @@ grid AS (
            CAST(sum(n * (n - 1) * (2 * n + 5)) AS BIGINT) AS an,
            CAST(sum(n * (n - 1) * (n - 2)) AS BIGINT) AS bn,
            CAST(sum(n * (n - 1)) AS BIGINT) AS cn
-    FROM (SELECT wk, CAST(sum(c) AS BIGINT) AS n FROM pv GROUP BY wk)
+    FROM (SELECT wk, CAST(sum(c) AS BIGINT) AS n FROM {pv} GROUP BY wk) g
 ), tt AS (
     SELECT CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS at_,
            CAST(sum(t * (t - 1) * (t - 2)) AS BIGINT) AS bt,
            CAST(sum(t * (t - 1)) AS BIGINT) AS ct_
-    FROM vals
+    FROM (SELECT cents, CAST(sum(c) AS BIGINT) AS t FROM {pv} GROUP BY cents) v
 ), stat AS (
-    SELECT n.k_groups, n.n_total, u.u2,
+    SELECT /*+ BROADCAST(t, u) */ n.k_groups, n.n_total, u.u2,
            (n.n_total * n.n_total - n.sn2) // 2 AS e2u,
            (CAST(n.n_total AS DOUBLE) * (n.n_total - 1) * (2 * n.n_total + 5)
-            - CAST(n.an AS DOUBLE) - CAST(t.at_ AS DOUBLE)) / 72.0
+            - CAST(n.an AS DOUBLE) - CAST(t.at_ AS DOUBLE)) / 72e0
            + CAST(n.bn AS DOUBLE) * CAST(t.bt AS DOUBLE)
-             / nullif(36.0 * n.n_total * (n.n_total - 1.0)
-                      * (n.n_total - 2.0), 0.0)
+             / nullif(36e0 * n.n_total * (n.n_total - 1e0) * (n.n_total - 2e0), 0e0)
            + CAST(n.cn AS DOUBLE) * CAST(t.ct_ AS DOUBLE)
-             / nullif(8.0 * n.n_total * (n.n_total - 1.0), 0.0) AS varu
+             / nullif(8e0 * n.n_total * (n.n_total - 1e0), 0e0) AS varu
     FROM ng n CROSS JOIN tt t CROSS JOIN u
 )
 SELECT CAST(k_groups AS BIGINT) AS k_groups,
        CAST(n_total AS BIGINT) AS n_total,
        CAST(u2 AS BIGINT) AS u2_stat,
-       round(CAST(u2 - e2u AS DOUBLE) / nullif(2.0 * sqrt(varu), 0.0), 6)
-           + 0.0 AS z_jt,
-       round(CAST(u2 - e2u AS DOUBLE) / nullif(2.0 * sqrt(varu), 0.0), 6)
-           > {_Z_ONE_SIDED_05} AS reject_increasing_trend
+       round(CAST(u2 - e2u AS DOUBLE) / nullif(2e0 * sqrt(varu), 0e0), 6) + 0e0 AS z_jt,
+       -- the one-sided 5% critical value of the standard normal
+       round(CAST(u2 - e2u AS DOUBLE) / nullif(2e0 * sqrt(varu), 0e0), 6) > 1.644854e0
+           AS reject_increasing_trend
 FROM stat
 """
 
 
-@op("stats_jonckheere_terpstra", oracle=_JT_ORACLE, tags=("ext", "stats"))
+@op("stats_jonckheere_terpstra", oracle=duckdb_sql(_JT_SQL, stages=_JT_STAGES),
+    tags=("ext", "stats"))
 def stats_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jonckheere-Terpstra test for an ORDERED shift across the span's
     epoch weeks: is the event value distribution drifting upward week
@@ -4075,149 +3789,48 @@ def stats_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters over the run (regionSpout.go:151-163); JT is the ordered
     drift question those counters raise at week granularity.
     """
-    b0 = load(spark, sf_dir, "events").select(
-        epoch_seconds("ts").alias("te"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
-    )
-    pv = (
-        b0.select(F.expr("te div 604800").alias("wk"), "cents")
-        .groupBy("wk", "cents")
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint()
-    )
-    vals = pv.groupBy("cents").agg(F.sum("c").cast("bigint").alias("t"))
-    wks = pv.select("wk").distinct()
-    grid = (
-        wks.crossJoin(vals.select("cents"))
-        .join(pv, ["wk", "cents"], "left")
-        .select("wk", "cents", F.coalesce(F.col("c"), F.lit(0)).alias("c"))
-    )
-    w_cum = dim_window(
-        Window.partitionBy("wk")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, -1),
-        bound="<= cents domain (~5.6e4 generator constant) rows per week",
-    )
-    gcum = grid.select(
-        "wk",
-        "cents",
-        "c",
-        F.coalesce(F.sum("c").over(w_cum), F.lit(0)).alias("below"),
-    ).localCheckpoint()
-    g = gcum.select(
-        F.col("wk").alias("wk_g"),
-        "cents",
-        F.col("c").alias("c_g"),
-        F.col("below").alias("below_g"),
-    )
-    h = gcum.select(
-        F.col("wk").alias("wk_h"),
-        "cents",
-        F.col("c").alias("c_h"),
-    )
-    u = (
-        g.join(h, ["cents"])
-        .filter(F.col("wk_g") < F.col("wk_h"))
-        .agg(
-            F.coalesce(
-                F.sum(
-                    2 * F.col("c_h") * F.col("below_g")
-                    + F.col("c_g") * F.col("c_h")
-                ),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("u2")
-        )
-    )
-    ngrp = pv.groupBy("wk").agg(F.sum("c").cast("bigint").alias("n"))
-    nn = F.col("n")
-    ng = ngrp.agg(
-        F.count("*").cast("bigint").alias("k_groups"),
-        F.sum(nn).cast("bigint").alias("n_total"),
-        F.sum(nn * nn).cast("bigint").alias("sn2"),
-        F.sum(nn * (nn - 1) * (2 * nn + 5)).cast("bigint").alias("an"),
-        F.sum(nn * (nn - 1) * (nn - 2)).cast("bigint").alias("bn"),
-        F.sum(nn * (nn - 1)).cast("bigint").alias("cn"),
-    )
-    tcol = F.col("t")
-    tt = vals.agg(
-        F.sum(tcol * (tcol - 1) * (2 * tcol + 5)).cast("bigint").alias("at_"),
-        F.sum(tcol * (tcol - 1) * (tcol - 2)).cast("bigint").alias("bt"),
-        F.sum(tcol * (tcol - 1)).cast("bigint").alias("ct_"),
-    )
-    s = ng.crossJoin(F.broadcast(tt)).crossJoin(F.broadcast(u))
-    nt = F.col("n_total")
-    e2u = F.expr("(n_total * n_total - sn2) div 2")
-    ndd = nt.cast("double")
-    varu = (
-        (
-            ndd * (nt - 1) * (2 * nt + 5)
-            - F.col("an").cast("double")
-            - F.col("at_").cast("double")
-        )
-        / F.lit(72.0)
-        + F.col("bn").cast("double")
-        * F.col("bt").cast("double")
-        / F.nullif(
-            F.lit(36.0) * nt * (nt - F.lit(1.0)) * (nt - F.lit(2.0)),
-            F.lit(0.0),
-        )
-        + F.col("cn").cast("double")
-        * F.col("ct_").cast("double")
-        / F.nullif(F.lit(8.0) * nt * (nt - F.lit(1.0)), F.lit(0.0))
-    )
-    z = (F.col("u2") - e2u).cast("double") / F.nullif(
-        F.lit(2.0) * F.sqrt(varu), F.lit(0.0)
-    )
-    rz = F.round(z, 6)
-    return s.select(
-        F.col("k_groups").cast("bigint").alias("k_groups"),
-        nt.cast("bigint").alias("n_total"),
-        F.col("u2").cast("bigint").alias("u2_stat"),
-        (rz + F.lit(0.0)).alias("z_jt"),
-        (rz > F.lit(_Z_ONE_SIDED_05)).alias("reject_increasing_trend"),
-    )
+    return run_sql(spark, sf_dir, _JT_SQL, stages=_JT_STAGES)
 
 # ---------------------------------------------------------------------------
 # Cochran's Q over (user block x epoch-week condition) activity (round 14)
 # ---------------------------------------------------------------------------
 
-_COCHRAN_ORACLE = f"""
-WITH e AS (
-    SELECT DISTINCT user_id,
-           CAST(floor(epoch(ts)) AS BIGINT) // 604800 AS wk
-    FROM events WHERE event_type = 'purchase'
-), kg AS (SELECT count(DISTINCT wk) AS k FROM e),
-r AS (
-    SELECT user_id, CAST(count(*) AS BIGINT) AS ri FROM e GROUP BY 1
+# The distinct (user, purchase week) presence frame, read three times: a
+# checkpointed stage.
+_ACTIVE_WEEKS = """
+SELECT DISTINCT user_id, {te} // 604800 AS wk
+FROM {events} WHERE event_type = 'purchase'
+"""
+
+_COCHRAN_SQL = """
+WITH kg AS (
+    SELECT count(DISTINCT wk) AS k FROM {active}
 ), rs AS (
     SELECT CAST(count(*) AS BIGINT) AS n_users,
            CAST(sum(ri) AS BIGINT) AS n,
            CAST(sum(ri * ri) AS BIGINT) AS sr2
-    FROM r
-), c AS (
-    SELECT wk, CAST(count(*) AS BIGINT) AS cj FROM e GROUP BY 1
-), cs AS (SELECT CAST(sum(cj * cj) AS BIGINT) AS sc2 FROM c),
-stat AS (
-    SELECT kg.k, rs.n_users, rs.n,
+    FROM (SELECT user_id, CAST(count(*) AS BIGINT) AS ri FROM {active} GROUP BY user_id) r
+), cs AS (
+    SELECT CAST(sum(cj * cj) AS BIGINT) AS sc2
+    FROM (SELECT wk, CAST(count(*) AS BIGINT) AS cj FROM {active} GROUP BY wk) c
+), stat AS (
+    SELECT /*+ BROADCAST(rs, cs) */ kg.k, rs.n_users, rs.n,
            (kg.k - 1) * CAST(kg.k * cs.sc2 - rs.n * rs.n AS DOUBLE)
-           / nullif(CAST(kg.k * rs.n - rs.sr2 AS DOUBLE), 0.0) AS q
+           / nullif(CAST(kg.k * rs.n - rs.sr2 AS DOUBLE), 0e0) AS q
     FROM kg CROSS JOIN rs CROSS JOIN cs
 )
 SELECT CAST(k AS BIGINT) AS k_weeks,
        CAST(n_users AS BIGINT) AS n_users,
        CAST(n AS BIGINT) AS n_active_cells,
        CAST(k - 1 AS BIGINT) AS dof,
-       round(q, 6) + 0.0 AS q_cochran,
-       round(q, 6) > (SELECT {_CHI2_CRIT_BY_DOF}
-                      FROM (SELECT CAST(k - 1 AS BIGINT) AS dof FROM kg))
-           AS reject_equal_weeks
+       round(q, 6) + 0e0 AS q_cochran,
+       round(q, 6) > """ + _chi2_crit("k - 1") + """ AS reject_equal_weeks
 FROM stat
 """
 
 
-@op("stats_cochran_q", oracle=_COCHRAN_ORACLE, tags=("ext", "stats", "scale"))
+@op("stats_cochran_q", oracle=duckdb_sql(_COCHRAN_SQL, stages={"active": _ACTIVE_WEEKS}),
+    tags=("ext", "stats", "scale"))
 def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran's Q on the (user block x epoch-week condition) conversion
     matrix (active = logged at least one 'purchase' event): is a user's
@@ -4251,47 +3864,7 @@ def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (regionSpout.go:151-163) are presence streams per time slice; Q is
     the paired test over exactly that presence matrix.
     """
-    e = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("user_id", epoch_seconds("ts").alias("te"))
-        .select("user_id", F.expr("te div 604800").alias("wk"))
-        .distinct()
-        .localCheckpoint()
-    )
-    kg = e.agg(F.countDistinct("wk").alias("k"))
-    rs = (
-        e.groupBy("user_id")
-        .agg(F.count("*").cast("bigint").alias("ri"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_users"),
-            F.sum("ri").cast("bigint").alias("n"),
-            F.sum(F.col("ri") * F.col("ri")).cast("bigint").alias("sr2"),
-        )
-    )
-    cs = (
-        e.groupBy("wk")
-        .agg(F.count("*").cast("bigint").alias("cj"))
-        .agg(F.sum(F.col("cj") * F.col("cj")).cast("bigint").alias("sc2"))
-    )
-    s = kg.crossJoin(F.broadcast(rs)).crossJoin(F.broadcast(cs))
-    kk = F.col("k")
-    q = (
-        (kk - 1)
-        * (kk * F.col("sc2") - F.col("n") * F.col("n")).cast("double")
-        / F.nullif((kk * F.col("n") - F.col("sr2")).cast("double"), F.lit(0.0))
-    )
-    rq = F.round(q, 6)
-    return s.select(
-        kk.cast("bigint").alias("k_weeks"),
-        F.col("n_users").cast("bigint").alias("n_users"),
-        F.col("n").cast("bigint").alias("n_active_cells"),
-        (kk - 1).cast("bigint").alias("dof"),
-        (rq + F.lit(0.0)).alias("q_cochran"),
-        (
-            rq > F.expr(_CHI2_CRIT_BY_DOF.replace("CASE dof", "CASE k - 1"))
-        ).alias("reject_equal_weeks"),
-    )
+    return run_sql(spark, sf_dir, _COCHRAN_SQL, stages={"active": _ACTIVE_WEEKS})
 
 # ---------------------------------------------------------------------------
 # Cochran-Mantel-Haenszel stratified association (round 14)

@@ -9,15 +9,30 @@ keeps, in ``tests/test_plans.py``'s ``_SQL_FRONT_PLAN_SHAPE``.
 Two renderers turn a text into each engine's dialect, and one runner
 executes it on Spark:
 
-- ``duckdb_sql(text)`` runs once, at registration, and gives the op's
-  ``oracle=`` string.
+- ``duckdb_sql(text, stages=None)`` runs once, at registration, and
+  gives the op's ``oracle=`` string.
 - ``spark_sql(text, **literals)`` gives the text an op hands to
   ``spark.sql(rendered, <table>=<DataFrame>, ...)``. PySpark registers
   each DataFrame argument as a temp view for that one call and drops it
   again, so an op leaves no view behind in the caller's session.
-- ``run_sql(spark, sf_dir, text, **literals)`` is that call: it loads
-  every fixture table the text names and passes each as the DataFrame
-  argument of its placeholder.
+- ``run_sql(spark, sf_dir, text, stages=None, **literals)`` is that
+  call: it loads every fixture table the text names and passes each as
+  the DataFrame argument of its placeholder.
+
+Stages. ``stages={"cells": STAGE_TEXT, ...}`` names frames that the main
+text, and any later stage, reads through a ``{cells}`` placeholder. On
+Spark each stage text runs once through ``spark.sql`` and is
+``localCheckpoint``ed, so its jobs run while the op is built (AQE runs
+each shuffle or broadcast inside a stage as a job of its own); the
+checkpointed frame is the DataFrame argument of its placeholder. On
+DuckDB each stage leads the text as a ``cells AS MATERIALIZED (...)``
+CTE, joined to the main text's own ``WITH`` list. A stage is for a
+small frame that several readers share: Spark inlines a deterministic
+CTE into every reader, so each re-runs its scan and shuffles. Written
+as a plain CTE, ``pipeline_basket_affinity``'s distinct-basket frame
+planned 9 exchanges and 5 parquet scans at sf0.01; as a stage it plans
+5 and 0. The bare-decimal rule and the ``dim_window`` marker apply to
+stage texts as to main texts.
 
 Placeholders:
 
@@ -87,6 +102,16 @@ Forms both engines parse alike, and hazards with no shared form:
   A frame's length is a ``count(c)`` over the same frame; an op that
   must index an array keeps its DataFrame body.
 - ``median`` of a BIGINT column returns DOUBLE on both engines.
+- ``min_by(x, k)``/``max_by(x, k)`` parse alike and skip rows whose
+  ``k`` is null (DuckDB also skips a null ``x``). Neither engine's
+  struct constructor parses on the other (``struct``/``named_struct``
+  against ``row``/``struct_pack``), so an arg-min over a pair of keys
+  orders one exact number: ``pipeline_attribution_touch`` takes the
+  first touch by ``CAST(tsec AS {wide}) * 2^64 + tid``, which orders as
+  the pair (tsec, tid) does for any BIGINT ``tid``.
+- A row fanned out to a fixed set of values is an ``UNPIVOT`` of
+  computed columns (an Expand), not a ``CROSS JOIN (VALUES ...)``, which
+  Spark plans as a nested-loop join.
 
 The reference has no query language at all (SURVEY.md §3); this is part of
 the EXT "what its downstream analytics would run" surface.
@@ -103,6 +128,7 @@ from connor_fun_streamproducer_spark.registry import op
 
 _BARE_DECIMAL = re.compile(r"(?<![\w.])(?:\d+\.\d*|\.\d+)(?![\w.])")
 _PLACEHOLDER = re.compile(r"\{(\w+)\}")
+_LEADING_WITH = re.compile(r"\s*WITH\b", re.IGNORECASE)
 
 
 class _Epoch:
@@ -149,9 +175,21 @@ def _render(text: str, engine: str, literals: dict) -> str:
     return text.format(**_FRAGMENTS[engine], **literals)
 
 
-def duckdb_sql(text: str) -> str:
-    """``text`` in DuckDB's dialect, over the fixture views."""
-    return _render(text, "duckdb", {})
+def duckdb_sql(text: str, stages: dict[str, str] | None = None) -> str:
+    """``text`` in DuckDB's dialect, over the fixture views; each of
+    ``stages`` leads it as a ``<name> AS MATERIALIZED (...)`` CTE, in
+    order, so a later stage may read an earlier one."""
+    names = {n: n for n in stages or {}}
+    ctes = [
+        f"{n} AS MATERIALIZED (\n{_render(t, 'duckdb', names)}\n)"
+        for n, t in (stages or {}).items()
+    ]
+    main = _render(text, "duckdb", names)
+    if not ctes:
+        return main
+    head = "WITH " + ",\n".join(ctes)
+    lead = _LEADING_WITH.match(main)
+    return head + (",\n" + main[lead.end():] if lead else "\n" + main)
 
 
 def spark_sql(text: str, **literals) -> str:
@@ -161,15 +199,31 @@ def spark_sql(text: str, **literals) -> str:
     return _render(text, "spark", literals)
 
 
-def run_sql(spark: SparkSession, sf_dir: str, text: str, **literals) -> DataFrame:
+def run_sql(
+    spark: SparkSession,
+    sf_dir: str,
+    text: str,
+    stages: dict[str, str] | None = None,
+    **literals,
+) -> DataFrame:
     """Run ``text`` through ``spark.sql``: each fixture table it names
     is loaded from ``sf_dir`` and passed as its placeholder's DataFrame
     argument; ``literals`` fill the rest (``mid=``, ``te_min=``,
-    ``te_max=``)."""
-    tables = sorted({t for t in _PLACEHOLDER.findall(text) if t in TABLES})
-    return spark.sql(
-        spark_sql(text, **literals), **{t: load(spark, sf_dir, t) for t in tables}
-    )
+    ``te_max=``). Each of ``stages`` runs first, in order, and is
+    ``localCheckpoint``ed; the frame is then the DataFrame argument of
+    its ``{name}`` placeholder in the later stages and in ``text``."""
+    frames: dict[str, DataFrame] = {}
+    for name, stage in (stages or {}).items():
+        frames[name] = _spark_frame(spark, sf_dir, stage, frames, literals).localCheckpoint()
+    return _spark_frame(spark, sf_dir, text, frames, literals)
+
+
+def _spark_frame(spark, sf_dir, text, frames, literals) -> DataFrame:
+    named = set(_PLACEHOLDER.findall(text))
+    args = {t: load(spark, sf_dir, t) for t in sorted(named & set(TABLES))}
+    args.update({n: f for n, f in frames.items() if n in named})
+    keep = {n: "{%s}" % n for n in frames}
+    return spark.sql(spark_sql(text, **keep, **literals), **args)
 
 
 # Constraints that keep it dialect-portable: EXTRACT (not year()),

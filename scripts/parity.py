@@ -12,7 +12,9 @@ fixture each side reports:
   ``tests/conftest.py``'s ``_norm`` does for the oracle comparison
   (floats rounded to 6 places, timestamps in ISO form);
 - for information only, the pre-execution plan's ``Exchange`` and
-  ``Scan parquet`` counts and the py4j commands of a warm build.
+  ``Scan parquet`` counts, and the py4j commands and Spark jobs of a
+  warm build (jobs counted through a job group, as ``bench.py`` counts
+  ``build_jobs``).
 
 It prints one line per key, fixture and side, marks each key and
 fixture whose results differ, exits 1 if any do (or a side fails) and
@@ -22,6 +24,7 @@ removes the worktree.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import hashlib
 import json
 import os
@@ -31,6 +34,21 @@ import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 COMPARED = ("rows", "names", "dtypes", "nullable", "hash")
+
+
+@contextlib.contextmanager
+def worktree(rev: str):
+    """A temporary detached ``git worktree`` of ``rev``, removed (and
+    the repository's worktree list pruned) on exit."""
+    tree = tempfile.mkdtemp(prefix="parity-")
+    os.rmdir(tree)
+    subprocess.run(["git", "-C", ROOT, "worktree", "add", "--detach", "-q", tree, rev],
+                   check=True)
+    try:
+        yield tree
+    finally:
+        subprocess.run(["git", "-C", ROOT, "worktree", "remove", "--force", tree], check=False)
+        subprocess.run(["git", "-C", ROOT, "worktree", "prune"], check=False)
 
 
 def _child(checkout: str, keys: list[str], sf_dirs: list[str]) -> None:
@@ -43,6 +61,7 @@ def _child(checkout: str, keys: list[str], sf_dirs: list[str]) -> None:
 
     norm = _load_norm()
     spark = get_spark("parity", cpus="2")
+    sc = spark.sparkContext
     registry._ensure_loaded()
     for sf in sf_dirs:
         for key in keys:
@@ -50,9 +69,16 @@ def _child(checkout: str, keys: list[str], sf_dirs: list[str]) -> None:
             try:
                 fn = registry.OPS[key].fn
                 fn(spark, sf)
-                with py4j_commands(spark) as sent:
-                    df = fn(spark, sf)
+                group = f"parity-build:{sf}:{key}"
+                sc.setJobGroup(group, key)
+                try:
+                    with py4j_commands(spark) as sent:
+                        df = fn(spark, sf)
+                finally:
+                    sc._jsc.clearJobGroup()
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
                 rec["py4j"] = sent[0]
+                rec["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
                 rec["plan"] = [count_in_plan(df, "Exchange"), count_in_plan(df, "Scan parquet")]
                 rows = df.collect()
                 rec["rows"] = len(rows)
@@ -103,7 +129,7 @@ def _line(side: str, rec: dict | None) -> str:
         for n, t, nl in zip(rec["names"], rec["dtypes"], rec["nullable"])
     )
     return (f"  {side:6} rows={rec['rows']} hash={rec['hash']} plan={tuple(rec['plan'])}"
-            f" py4j={rec['py4j']} [{cols}]")
+            f" py4j={rec['py4j']} jobs={rec['jobs']} [{cols}]")
 
 
 def main() -> int:
@@ -121,15 +147,8 @@ def main() -> int:
     if not args.rev:
         ap.error("REV is required")
 
-    tree = tempfile.mkdtemp(prefix="parity-")
-    os.rmdir(tree)
-    subprocess.run(["git", "-C", ROOT, "worktree", "add", "--detach", "-q", tree, args.rev],
-                   check=True)
-    try:
+    with worktree(args.rev) as tree:
         base = _run_side(tree, args.keys, sf_dirs)
-    finally:
-        subprocess.run(["git", "-C", ROOT, "worktree", "remove", "--force", tree], check=False)
-        subprocess.run(["git", "-C", ROOT, "worktree", "prune"], check=False)
     head = _run_side(ROOT, args.keys, sf_dirs)
 
     n_diff = 0

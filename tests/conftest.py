@@ -33,13 +33,19 @@ def spark():
     s.stop()
 
 
-@pytest.fixture(scope="session")
-def oracle():
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with a view over each fixture table in ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(SF_DIR, t)}')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
         )
+    return con
+
+
+@pytest.fixture(scope="session")
+def oracle():
+    con = oracle_connection(SF_DIR)
     yield con
     con.close()
 
@@ -69,8 +75,9 @@ def _close(a, b) -> bool:
     return a == b
 
 
-def assert_df_matches_oracle(spark_df, oracle_con, sql: str, key: str = "?") -> None:
-    """Row-count + column-name + order-insensitive value comparison."""
+def assert_df_matches_oracle(spark_df, oracle_con, sql: str, key: str = "?") -> int:
+    """Row-count + column-name + order-insensitive value comparison;
+    returns the row count."""
     spark_rows = spark_df.collect()
     spark_cols = sorted(spark_df.columns)
 
@@ -91,3 +98,4 @@ def assert_df_matches_oracle(spark_df, oracle_con, sql: str, key: str = "?") -> 
         (i, a, b) for i, (a, b) in enumerate(zip(s_sorted, d_sorted)) if not _close(a, b)
     ]
     assert not mismatches, f"[{key}] first value mismatches (spark vs duck): {mismatches[:5]}"
+    return len(spark_rows)

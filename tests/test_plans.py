@@ -2097,6 +2097,32 @@ _SQL_FRONT_PLAN_SHAPE = {
     "win_time_weighted_avg": (1, 1),
     "win_ratio_to_report": (2, 1),
     "win_active_streak_latest": (2, 1),
+    # behavioral pipelines
+    "pipeline_funnel_conversion": (6, 6),
+    "pipeline_basket_affinity": (5, 0),
+    "pipeline_rfm_segments": (2, 2),
+    "pipeline_abc_pareto": (2, 2),
+    "pipeline_yoy_growth": (2, 3),
+    "pipeline_attribution_touch": (1, 2),
+    "pipeline_event_transitions": (3, 1),
+    "pipeline_dau_mau_stickiness": (4, 2),
+    "pipeline_cohort_ltv": (3, 1),
+    "pipeline_interpurchase_time": (1, 1),
+    "pipeline_session_paths": (3, 1),
+    "pipeline_event_trigrams": (2, 1),
+    "pipeline_audience_overlap": (7, 4),
+    "pipeline_skyline_frontier": (4, 2),
+    "pipeline_segment_migration": (5, 2),
+    "pipeline_new_returning_users": (3, 2),
+    "pipeline_order_lead_time": (1, 2),
+    # rank tests over a checkpointed cell frame (a run_sql stage): the
+    # main text reads the checkpoint, so it scans no parquet file
+    "stats_kendall_tau_binned": (6, 0),
+    "stats_spearman_binned": (9, 0),
+    "stats_friedman": (13, 0),
+    "stats_page_trend": (9, 0),
+    "stats_jonckheere_terpstra": (7, 0),
+    "stats_cochran_q": (6, 0),
 }
 
 
@@ -2203,26 +2229,37 @@ def test_every_whole_frame_window_is_dim_window_marked():
 
 def _run_sql_texts(root):
     """(``module.NAME``, text) for every ``run_sql(spark, sf_dir, NAME)``
-    call in the package, NAME resolved in the calling module."""
+    call in the package, NAME resolved in the calling module, and for
+    every stage text its ``stages=`` argument names (a dict literal of
+    names, or the name of a dict)."""
     import ast
     import importlib
 
     for path in sorted(root.rglob("*.py")):
         tree = ast.parse(path.read_text())
-        names = {
-            node.args[2].id
-            for node in ast.walk(tree)
-            if isinstance(node, ast.Call)
-            and getattr(node.func, "id", getattr(node.func, "attr", None)) == "run_sql"
-            and len(node.args) > 2
-            and isinstance(node.args[2], ast.Name)
-        }
-        if not names:
+        names, stage_args = set(), []
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", getattr(node.func, "attr", None)) == "run_sql"
+            ):
+                continue
+            if len(node.args) > 2 and isinstance(node.args[2], ast.Name):
+                names.add(node.args[2].id)
+            stage_args += [kw.value for kw in node.keywords if kw.arg == "stages"]
+        if not names and not stage_args:
             continue
         module = ".".join(path.relative_to(root.parent).with_suffix("").parts)
         mod = importlib.import_module(module)
         for name in sorted(names):
             yield f"{path.name}:{name}", getattr(mod, name)
+        for arg in stage_args:
+            if isinstance(arg, ast.Name):
+                for stage, text in getattr(mod, arg.id).items():
+                    yield f"{path.name}:{arg.id}[{stage!r}]", text
+            else:
+                for value in arg.values:
+                    yield f"{path.name}:{value.id}", getattr(mod, value.id)
 
 
 def _unmarked_whole_frame_specs(text):

@@ -6824,3 +6824,369 @@ def test_sql_text_ops_match_python_replays(spark, request, key):
                 assert abs(a - b) < 2e-6, (key, g, w)
             else:
                 assert a == b, (key, g, w)
+
+
+# ---------------------------------------------------------------------------
+# Python replays of the behavioral pipelines, over the Tier-1 fixture
+# ---------------------------------------------------------------------------
+# Each of these ops is one SQL text on both engines, so test_oracle compares
+# the text with itself; the replays recompute each op from the fixture's
+# rows, read with pyarrow, with no SQL at all.
+
+
+def _fx(table):
+    """The Tier-1 fixture's rows of ``table`` as dicts, each timestamp as
+    epoch seconds (floored, as both engines read it)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from connor_fun_streamproducer_spark.catalog import table_path
+
+    t = pq.read_table(table_path(SF_DIR, table))
+    cols = {}
+    for name in t.column_names:
+        col = t.column(name)
+        if pa.types.is_timestamp(col.type):
+            per_s = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[col.type.unit]
+            cols[name] = [None if v is None else v // per_s
+                          for v in col.cast(pa.int64()).to_pylist()]
+        else:
+            cols[name] = col.to_pylist()
+    return [dict(zip(cols, vals)) for vals in zip(*cols.values())]
+
+
+def _user_streams(types=None):
+    """user_id -> [(sec, event_id, event_type, value)] in (ts, event_id) order."""
+    out = {}
+    for e in _fx("events"):
+        if types is None or e["event_type"] in types:
+            out.setdefault(e["user_id"], []).append(
+                (e["ts"], e["event_id"], e["event_type"], e["value"]))
+    return {u: sorted(s) for u, s in out.items()}
+
+
+def _replay_funnel():
+    reached = {"1_signup": 0, "2_click": 0, "3_purchase": 0}
+    for s in _user_streams().values():
+        at = [sec for sec, _, et, _ in s if et == "signup"]
+        if not at:
+            continue
+        reached["1_signup"] += 1
+        at = [sec for sec, _, et, _ in s if et == "click" and at[0] < sec <= at[0] + 604800]
+        if not at:
+            continue
+        reached["2_click"] += 1
+        if any(et == "purchase" and at[0] < sec <= at[0] + 604800 for sec, _, et, _ in s):
+            reached["3_purchase"] += 1
+    return [(k, n) for k, n in reached.items() if n]
+
+
+def _replay_basket():
+    from itertools import combinations
+
+    baskets = {}
+    for li in _fx("lineitem"):
+        baskets.setdefault(li["l_orderkey"], set()).add(li["l_partkey"])
+    na = {}
+    for items in baskets.values():
+        for i in items:
+            na[i] = na.get(i, 0) + 1
+    nab = {}
+    for items in baskets.values():
+        for a, b in combinations(sorted(i for i in items if na[i] >= 2), 2):
+            nab[(a, b)] = nab.get((a, b), 0) + 1
+    top = sorted(nab.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
+    return [(a, b, n, _hu(n * len(baskets) / (na[a] * na[b]), 4)) for (a, b), n in top]
+
+
+def _ntiles(ordered, n_tiles=5):
+    """Standard ntile: the first len % n_tiles buckets hold one row more."""
+    q, r = divmod(len(ordered), n_tiles)
+    out = {}
+    for i, key in enumerate(ordered):
+        out[key] = i // (q + 1) + 1 if i < r * (q + 1) else (i - r * (q + 1)) // q + r + 1
+    return out
+
+
+def _replay_rfm():
+    seg = {c["c_custkey"]: c["c_mktsegment"] for c in _fx("customer")}
+    m = {}
+    for o in _fx("orders"):
+        rec, freq, cents = m.get(o["o_custkey"], (None, 0, 0))
+        m[o["o_custkey"]] = (max(rec or o["o_orderdate"], o["o_orderdate"]), freq + 1,
+                             cents + _cents(o["o_totalprice"]))
+    by_seg = {}
+    for c, v in m.items():
+        if c in seg:
+            by_seg.setdefault(seg[c], []).append((c, v))
+    rows = []
+    for s, cs in by_seg.items():
+        tiles = [_ntiles([c for c, v in sorted(cs, key=lambda cv: (cv[1][i], cv[0]))])
+                 for i in range(3)]
+        rows += [(c, s, tiles[0][c], tiles[1][c], tiles[2][c]) for c, _ in cs]
+    return rows
+
+
+def _replay_abc():
+    import math
+
+    brand = {p["p_partkey"]: p["p_brand"] for p in _fx("part")}
+    cents = {}
+    for li in _fx("lineitem"):
+        if li["l_partkey"] in brand:
+            k = (brand[li["l_partkey"]], li["l_partkey"])
+            cents[k] = cents.get(k, 0) + math.floor(
+                li["l_extendedprice"] * (1 - li["l_discount"]) * 100 + 0.5)
+    by_brand = {}
+    for (b, p), c in cents.items():
+        by_brand.setdefault(b, []).append((-c, p))
+    rows = []
+    for b, ps in by_brand.items():
+        tot, cum = -sum(c for c, _ in ps), 0
+        for c, p in sorted(ps):
+            cum -= c
+            cls = "A" if cum * 100 <= tot * 80 else "B" if cum * 100 <= tot * 95 else "C"
+            rows.append((b, p, _hu(-c / 100.0, 2), cum * 10000 // tot, cls))
+    return rows
+
+
+def _replay_yoy():
+    import datetime
+
+    nation = {n["n_nationkey"]: n["n_name"] for n in _fx("nation")}
+    cust = {c["c_custkey"]: nation[c["c_nationkey"]] for c in _fx("customer")}
+    rev = {}
+    for o in _fx("orders"):
+        if o["o_custkey"] in cust:
+            yr = datetime.datetime.fromtimestamp(o["o_orderdate"], datetime.timezone.utc).year
+            k = (cust[o["o_custkey"]], yr)
+            rev[k] = rev.get(k, 0) + _cents(o["o_totalprice"])
+    rows = []
+    for (n, yr), c in rev.items():
+        prev = rev.get((n, yr - 1))
+        rows.append((n, yr, c, prev, None if prev is None else c - prev))
+    return rows
+
+
+def _replay_attribution():
+    touches = _user_streams(("click", "view", "signup"))
+    rows = []
+    for e in _fx("events"):
+        if e["event_type"] != "purchase":
+            continue
+        psec = e["ts"]
+        hit = [t for t in touches.get(e["user_id"], []) if psec - 172800 <= t[0] <= psec]
+        if hit:
+            f, la = min(hit), max(hit)
+            rows.append((e["event_id"], e["user_id"], f[2], psec - f[0], la[2], psec - la[0]))
+        else:
+            rows.append((e["event_id"], e["user_id"], None, None, None, None))
+    return rows
+
+
+def _share_rows(counts, total_of):
+    return [(a, b, n, n * 10000 // total_of(a)) for (a, b), n in counts.items()]
+
+
+def _replay_transitions():
+    counts = {}
+    for s in _user_streams().values():
+        for x, y in zip(s, s[1:]):
+            counts[(x[2], y[2])] = counts.get((x[2], y[2]), 0) + 1
+    out_of = {}
+    for (a, _), n in counts.items():
+        out_of[a] = out_of.get(a, 0) + n
+    return _share_rows(counts, out_of.get)
+
+
+def _replay_stickiness():
+    d = {(e["ts"] // 86400, e["user_id"]) for e in _fx("events")}
+    dau, mau = {}, {}
+    for day, u in d:
+        dau[day] = dau.get(day, 0) + 1
+        mau.setdefault(day * 86400 // 2592000, set()).add(u)
+    return [(day, n, len(mau[day * 86400 // 2592000]),
+             n * 10000 // len(mau[day * 86400 // 2592000])) for day, n in dau.items()]
+
+
+def _replay_cohort_ltv():
+    cw = {}
+    for s in _user_streams().values():
+        cohort = min(sec for sec, *_ in s) // 604800
+        for sec, _, et, v in s:
+            k = (cohort, sec // 604800 - cohort)
+            cw[k] = cw.get(k, 0) + (_cents(v) if et == "purchase" else 0)
+    rows, cum = [], {}
+    for (c, off), rev in sorted(cw.items()):
+        cum[c] = cum.get(c, 0) + rev
+        rows.append((c, off, rev, cum[c]))
+    return rows
+
+
+def _replay_interpurchase():
+    rows = []
+    for u, s in _user_streams(("purchase",)).items():
+        gaps = [b[0] - a[0] for a, b in zip(s, s[1:])]
+        if gaps:
+            rows.append((u, len(gaps) + 1, sum(gaps) // len(gaps), max(gaps)))
+    return rows
+
+
+def _replay_session_paths():
+    counts = {}
+    for s in _user_streams().values():
+        for x, y in zip(s, s[1:]):
+            if y[0] - x[0] <= 1800:
+                counts[(x[2], y[2])] = counts.get((x[2], y[2]), 0) + 1
+    total = sum(counts.values())
+    return _share_rows(counts, lambda _: total)
+
+
+def _replay_trigrams():
+    counts = {}
+    for s in _user_streams().values():
+        for x, y, z in zip(s, s[1:], s[2:]):
+            k = (x[2], y[2], z[2])
+            counts[k] = counts.get(k, 0) + 1
+    top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
+    return [(a, b, c, n, rk) for rk, ((a, b, c), n) in enumerate(top, 1)]
+
+
+def _replay_audience_overlap():
+    from itertools import combinations
+
+    users = {}
+    for e in _fx("events"):
+        users.setdefault(e["event_type"], set()).add(e["user_id"])
+    rows = []
+    for a, b in combinations(sorted(users), 2):
+        both = len(users[a] & users[b])
+        if both:
+            na, nb = len(users[a]), len(users[b])
+            rows.append((a, b, na, nb, both, both * 10000 // (na + nb - both)))
+    return rows
+
+
+def _replay_skyline():
+    s = {}
+    for li in _fx("lineitem"):
+        cost, qty = s.get(li["l_suppkey"], (0, 0))
+        s[li["l_suppkey"]] = (cost + _cents(li["l_extendedprice"]), qty + int(li["l_quantity"]))
+
+    def dominated(c, q):
+        return any(c2 <= c and q2 >= q and (c2, q2) != (c, q) for c2, q2 in s.values())
+
+    return [(k, c, q) for k, (c, q) in s.items() if not dominated(c, q)]
+
+
+def _replay_segment_migration():
+    import datetime
+
+    cut = _esec(datetime.date(1998, 1, 1))
+    spend = {}
+    for o in _fx("orders"):
+        k = (o["o_custkey"], "a" if o["o_orderdate"] < cut else "b")
+        spend[k] = spend.get(k, 0) + _cents(o["o_totalprice"])
+    seg = {}
+    for (c, era), cents in spend.items():
+        seg.setdefault(c, {})[era] = (
+            "low" if cents < 20_000_000 else "mid" if cents < 50_000_000 else "high")
+    cells = {}
+    for eras in seg.values():
+        k = (eras.get("a", "none"), eras.get("b", "none"))
+        cells[k] = cells.get(k, 0) + 1
+    return [(a, b, n) for (a, b), n in cells.items()]
+
+
+def _replay_new_returning():
+    import datetime
+
+    days = {(e["user_id"], e["ts"] // 86400) for e in _fx("events")}
+    first = {}
+    for u, d in days:
+        first[u] = min(first.get(u, d), d)
+    per = {}
+    for u, d in days:
+        dau, new, ret = per.get(d, (0, 0, 0))
+        per[d] = (dau + 1, new + (d == first[u]), ret + (d > first[u]))
+    epoch = datetime.date(1970, 1, 1)
+    return [(epoch + datetime.timedelta(days=d), dau, new, ret, new * 10000 // dau)
+            for d, (dau, new, ret) in per.items()]
+
+
+def _replay_lead_time():
+    orders = {}
+    for o in _fx("orders"):
+        orders.setdefault(o["o_orderkey"], []).append(o)
+    per = {}
+    for li in _fx("lineitem"):
+        for o in orders.get(li["l_orderkey"], []):
+            lead = li["l_shipdate"] // 86400 - o["o_orderdate"] // 86400
+            per.setdefault(o["o_orderpriority"], []).append(
+                (lead, li["l_orderkey"], li["l_linenumber"], li["l_partkey"], li["l_suppkey"]))
+    rows = []
+    for prio, xs in per.items():
+        xs.sort()
+        n = len(xs)
+        late = sum(x[0] > 90 for x in xs)
+        rows.append((prio, n, xs[(n + 1) // 2 - 1][0], xs[(n * 9 + 9) // 10 - 1][0],
+                     xs[(n * 99 + 99) // 100 - 1][0], late * 10000 // n))
+    return rows
+
+
+# key -> (replay, output columns compared), over the Tier-1 fixture
+_BEHAVIOR_REPLAYS = {
+    "pipeline_funnel_conversion": (_replay_funnel, ("stage", "users")),
+    "pipeline_basket_affinity": (_replay_basket, ("item_a", "item_b", "support", "lift")),
+    "pipeline_rfm_segments": (_replay_rfm, (
+        "c_custkey", "segment", "r_score", "f_score", "m_score")),
+    "pipeline_abc_pareto": (_replay_abc, (
+        "p_brand", "p_partkey", "revenue", "cum_bp", "abc_class")),
+    "pipeline_yoy_growth": (_replay_yoy, (
+        "n_name", "yr", "rev_cents", "prev_cents", "delta_cents")),
+    "pipeline_attribution_touch": (_replay_attribution, (
+        "purchase_id", "user_id", "first_type", "first_gap_sec", "last_type",
+        "last_gap_sec")),
+    "pipeline_event_transitions": (_replay_transitions, (
+        "prev_type", "next_type", "n", "share_bp")),
+    "pipeline_dau_mau_stickiness": (_replay_stickiness, (
+        "day", "dau", "mau", "stickiness_bp")),
+    "pipeline_cohort_ltv": (_replay_cohort_ltv, (
+        "cohort_week", "week_offset", "rev_cents", "cum_rev_cents")),
+    "pipeline_interpurchase_time": (_replay_interpurchase, (
+        "user_id", "n_purchases", "avg_gap_sec", "max_gap_sec")),
+    "pipeline_session_paths": (_replay_session_paths, (
+        "prev_type", "next_type", "n", "share_bp")),
+    "pipeline_event_trigrams": (_replay_trigrams, ("e1", "e2", "e3", "n", "rk")),
+    "pipeline_audience_overlap": (_replay_audience_overlap, (
+        "type_a", "type_b", "n_a", "n_b", "n_both", "jaccard_bp")),
+    "pipeline_skyline_frontier": (_replay_skyline, ("l_suppkey", "cost_cents", "total_qty")),
+    "pipeline_segment_migration": (_replay_segment_migration, (
+        "seg_a", "seg_b", "n_customers")),
+    "pipeline_new_returning_users": (_replay_new_returning, (
+        "day", "dau", "new_users", "returning_users", "new_share_bp")),
+    "pipeline_order_lead_time": (_replay_lead_time, (
+        "o_orderpriority", "n", "p50_days", "p90_days", "p99_days", "late_bp")),
+}
+
+
+@pytest.mark.parametrize("key", sorted(_BEHAVIOR_REPLAYS))
+def test_behavior_ops_match_python_replays(spark, key):
+    """Each behavioral op's rows equal a direct Python replay over the
+    Tier-1 fixture's rows: exact for integers and strings, 2e-6 for the
+    rounded doubles."""
+    from connor_fun_streamproducer_spark import registry
+
+    registry._ensure_loaded()
+    replay, cols = _BEHAVIOR_REPLAYS[key]
+    got = sorted(
+        tuple(r[c] for c in cols) for r in registry.OPS[key].fn(spark, SF_DIR).collect()
+    )
+    want = sorted(replay())
+    assert len(got) == len(want) and len(want) > 0, (key, got, want)
+    for g, w in zip(got, want):
+        for a, b in zip(g, w):
+            if isinstance(b, float):
+                assert abs(a - b) < 2e-6, (key, g, w)
+            else:
+                assert a == b, (key, g, w)
